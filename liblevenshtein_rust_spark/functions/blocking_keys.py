@@ -7,8 +7,13 @@ same pruning is an **equi-join on blocking keys**: generate, for every term, a
 small set of keys such that any pair within edit distance n shares at least
 one key; then candidate generation is ``probe.join(dict, "key")``.
 
-Everything here is pure `pyspark.sql.functions` — JVM-side, whole-stage
-codegen, no Python in the path.
+Everything here is `pyspark.sql.functions` — JVM-side, no Python in the
+path.  The array-returning families (deletion, prefix-deletion, merge-split,
+d3 hybrid, q-grams) are built from higher-order functions (``transform``,
+``flatten``, ``array_distinct``), which Spark evaluates interpreted, outside
+whole-stage codegen.  Hot paths at depth <= 2 use
+:func:`deletion_key_rows` instead: the same deletion keys as generator rows
+over ``sequence`` + ``substr``, hashed to longs, all codegen.
 
 Key families:
 
@@ -27,7 +32,7 @@ Key families:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
@@ -317,3 +322,43 @@ def deletion_neighborhood_keys(col: Column, n: int = 1) -> Column:
     if n not in (1, 2, 3):
         raise ValueError("deletion_neighborhood_keys supports n in {1, 2, 3}")
     return _deletion_set(col, n)
+
+
+def deletion_key_rows(df: DataFrame, col: str, n: int = 1) -> DataFrame:
+    """``(col, key)`` rows carrying the depth-``n`` deletion keys of ``col``
+    (n in {1, 2}) as ``xxhash64`` longs — the hashes of exactly the strings
+    :func:`deletion_neighborhood_keys` returns, with repeats.
+
+    The HOF form builds one array per row in interpreted expressions; this
+    form enumerates deletion positions with chained ``explode(sequence)``
+    generators (0 = no deletion, ``j`` runs from ``i``) and cuts the string
+    with ``substr``, so the whole projection runs in whole-stage codegen.
+    Positions ``(i, j)`` keep ``i == 0 or i < j``: ``(0, 0)`` is the term,
+    ``(0, j)`` drops char j, ``(i, j)`` drops chars i and j.  A term with
+    repeated characters emits repeated keys; callers dedupe pairs after the
+    join.  A hash collision can only add a candidate pair, which the exact
+    kernel rejects.
+    """
+    if n not in (1, 2):
+        raise ValueError("deletion_key_rows supports n in {1, 2}")
+    s = F.col(col)
+    length = F.length(s)
+    j = F.col("_del_j")
+    if n == 1:
+        rows = df.select(col, F.explode(F.sequence(F.lit(0), length)).alias("_del_j"))
+        i = F.lit(0)
+    else:
+        i = F.col("_del_i")
+        rows = (
+            df.select(col, F.explode(F.sequence(F.lit(0), length)).alias("_del_i"))
+            .select(col, "_del_i", F.explode(F.sequence(i, length)).alias("_del_j"))
+            .where((i == 0) | (i < j))
+        )
+    # s minus chars i and j (1-based; position 0 deletes nothing): a
+    # negative substr length yields ""
+    kept = F.concat(
+        s.substr(F.lit(1), i - 1),
+        s.substr(i + 1, j - i - 1),
+        s.substr(j + 1, length),
+    )
+    return rows.select(col, F.xxhash64(kept).alias("key"))

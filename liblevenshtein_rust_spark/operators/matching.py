@@ -9,8 +9,10 @@ Spark-first restatement of the reference's query entry points
     →  pair dedupe  →  vectorized kernel accept/distance  →  rank / agg
 
 Design notes for 100 TB:
-- The blocking join is a shuffled equi-join on `key`; AQE splits skewed
-  keys at runtime and `candidate_cap` hard-bounds pathological keys.
+- The blocking join is an equi-join on `key`, run at the dictionary's
+  scan parallelism: no side is deduped before its key explode, pairs are
+  deduped once after the join.  Shuffled joins rely on AQE to split skewed
+  keys at runtime; nothing caps a pathological key's candidate list.
 - `dedupe_pairs` canonicalizes (least, greatest) before the kernel — the
   distributed analog of the reference's symmetric MemoCache
   (``src/distance/mod.rs:29-208``): d(a,b)=d(b,a), score each pair once.
@@ -26,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.blocking_keys import (
     d3_hybrid_keys,
+    deletion_key_rows,
     deletion_neighborhood_keys,
     merge_split_keys,
     ngram_keys_unpositioned,
@@ -36,11 +39,6 @@ from ..functions.udfs import edit_distance_udf, length_prefilter
 from ..kernel.distances import MERGE_AND_SPLIT, STANDARD, TRANSPOSITION
 
 
-def explode_keys(df: DataFrame, term_col: str, keys_col, out: str = "key") -> DataFrame:
-    """Attach + explode blocking keys for `term_col`."""
-    return df.withColumn(out, F.explode(keys_col))
-
-
 def candidate_pairs(
     probes: DataFrame,
     dictionary: DataFrame,
@@ -48,48 +46,44 @@ def candidate_pairs(
     probe_col: str = "query",
     term_col: str = "term",
     broadcast_probes: bool = True,
-    candidate_cap: int | None = None,
     use_deletion_keys: bool = True,
     key_budget: int | None = None,
     variant: str | None = None,
 ) -> DataFrame:
     """Join probes to dictionary on shared blocking keys.
 
-    Key scheme: deletion-neighborhood keys (exact for n<=2) when
-    ``use_deletion_keys``; at n=3 the length-banded depth-3-deletion /
-    positional-2-gram hybrid (:func:`d3_hybrid_keys` — exact for Standard
-    and OSA, band proof in ``functions/blocking_keys``); else unpositioned
-    n-grams (recall-complete only when both sides are long enough that n
-    edits can't destroy every gram — the n>=4 fallback, not exact for
-    short strings).
+    Key scheme: deletion-neighborhood keys (exact for n<=2, compiled and
+    hashed — :func:`deletion_key_rows`) when ``use_deletion_keys``; at n=3
+    the length-banded depth-3-deletion / positional-2-gram hybrid
+    (:func:`d3_hybrid_keys` — exact for Standard and OSA, band proof in
+    ``functions/blocking_keys``); else unpositioned n-grams
+    (recall-complete only when both sides are long enough that n edits
+    can't destroy every gram — the n>=4 fallback, not exact for short
+    strings).
 
     ``key_budget`` overrides the deletion-key depth when the variant's ops
     span more than one standard edit (merge/split count as up to two), while
     the length prefilter stays at ``max_distance`` (every variant op changes
     string length by at most 1).
 
-    Returns distinct (probe_col, term_col) candidate pairs.  ``candidate_cap``
-    truncates per-key candidate lists (logged via a `truncated` marker column
-    aggregated by the caller) — the explosion guard SURVEY.md §4 item 4.
+    Returns distinct (probe_col, term_col) candidate pairs.
 
-    ``variant`` defaults to Standard, EXCEPT at effective budget 3 where the
-    d3 band constants differ per variant (3 transpositions can kill up to 9
-    2-grams — the OSA band is wider): there the caller must pass its actual
+    ``variant`` only matters to deletion keys at effective budget 3, where
+    the d3 band constants differ per variant (3 transpositions can kill up
+    to 9 2-grams — the OSA band is wider): a d=3 caller must pass its actual
     variant explicitly or this raises, so a transposition caller can never
-    silently get the narrower Standard band (ADVICE r4).
+    silently get the narrower Standard band.
     """
     n = max_distance
     kb = key_budget if key_budget is not None else n
-    if kb == 3 and variant is None:
+    if use_deletion_keys and kb == 3 and variant is None:
         raise ValueError(
             "candidate_pairs with an effective key budget of 3 requires an "
             "explicit variant= (the d=3 hybrid band constants are "
             "variant-specific; Standard's band is incomplete for OSA)"
         )
-    variant = STANDARD if variant is None else variant
     if use_deletion_keys and kb <= 2:
-        pkeys = deletion_neighborhood_keys(F.col(probe_col), n=min(kb, 2) or 1)
-        dkeys = deletion_neighborhood_keys(F.col(term_col), n=min(kb, 2) or 1)
+        pkeys = dkeys = max(kb, 1)
     elif use_deletion_keys and kb == 3 and variant in (STANDARD, TRANSPOSITION):
         osa = variant == TRANSPOSITION
         pkeys = d3_hybrid_keys(F.col(probe_col), transposition=osa)
@@ -97,24 +91,26 @@ def candidate_pairs(
     else:
         pkeys = ngram_keys_unpositioned(F.col(probe_col))
         dkeys = ngram_keys_unpositioned(F.col(term_col))
+    return _keyed_candidate_pairs(
+        probes,
+        dictionary,
+        pkeys,
+        dkeys,
+        probe_col,
+        term_col,
+        broadcast_probes,
+        pair_filter=length_prefilter(F.col(probe_col), F.col(term_col), n),
+    )
 
-    p = probes.select(probe_col).where(F.col(probe_col).isNotNull()).distinct()
-    p = p.withColumn("key", F.explode(pkeys))
-    d = dictionary.select(term_col).where(F.col(term_col).isNotNull()).distinct()
-    d = d.withColumn("key", F.explode(dkeys))
 
-    if candidate_cap is not None:
-        w = Window.partitionBy("key").orderBy(term_col)
-        d = (
-            d.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") <= candidate_cap)
-            .drop("_rk")
-        )
-
-    if broadcast_probes:
-        p = F.broadcast(p)
-    pairs = p.join(d, "key").select(probe_col, term_col).distinct()
-    return pairs.where(length_prefilter(F.col(probe_col), F.col(term_col), n))
+def _key_rows(df: DataFrame, col: str, keys) -> DataFrame:
+    """(col, key) rows for the non-null values of ``col``: ``keys`` is an
+    array Column of string keys to explode, or an int depth for the
+    compiled, hashed deletion keys of :func:`deletion_key_rows`."""
+    df = df.select(col).where(F.col(col).isNotNull())
+    if isinstance(keys, int):
+        return deletion_key_rows(df, col, keys)
+    return df.select(col, F.explode(keys).alias("key"))
 
 
 def _keyed_candidate_pairs(
@@ -127,13 +123,19 @@ def _keyed_candidate_pairs(
     broadcast_probes: bool,
     pair_filter=None,
 ) -> DataFrame:
-    """Generic blocked candidate generation: explode per-side key arrays,
-    equi-join on key, dedupe, optional length filter.  All key families are
-    recall-complete supersets; the kernel is the exact filter."""
-    p = probes.select(probe_col).where(F.col(probe_col).isNotNull()).distinct()
-    p = p.withColumn("key", F.explode(probe_keys))
-    d = dictionary.select(term_col).where(F.col(term_col).isNotNull()).distinct()
-    d = d.withColumn("key", F.explode(term_keys))
+    """Generic blocked candidate generation: key each side (both sides the
+    same key form, see :func:`_key_rows`), equi-join on key, dedupe,
+    optional pair filter.  All key families are recall-complete supersets;
+    the kernel is the exact filter.
+
+    Pairs are deduped once, after the join.  Neither side is deduped before
+    its key explode: a pre-explode ``distinct()`` shuffles the terms, and
+    AQE coalesces that small shuffle to one partition, so the explode and
+    the join would run in a single task instead of at scan parallelism.
+    Repeated terms or keys only repeat join rows, which the pair
+    ``distinct()`` removes."""
+    p = _key_rows(probes, probe_col, probe_keys)
+    d = _key_rows(dictionary, term_col, term_keys)
     if broadcast_probes:
         p = F.broadcast(p)
     pairs = p.join(d, "key").select(probe_col, term_col).distinct()

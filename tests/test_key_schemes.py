@@ -1,6 +1,5 @@
-"""Blocking-completeness tests for the keyed prefix / substring /
-merge-split candidate paths (round-2 replacement of the full-scan
-fallback).
+"""Blocking-completeness tests for the keyed standard / transposition /
+prefix / substring / merge-split candidate paths.
 
 Strategy: seeded random vocab + probes over a tiny alphabet (maximal
 collision pressure), brute-force Python DP as ground truth, then assert the
@@ -158,3 +157,65 @@ def test_d3_hybrid_keys_share_key_across_band(spark):
         )
         ka, kb = [set(r["k"]) for r in df.collect()]
         assert ka & kb, (osa, a, b)
+
+
+EDGE_TERMS = ["", "aaaa", "é", "aéb", "naïve"]
+
+
+def test_standard_and_osa_blocked_completeness(spark):
+    """Plain d<=2 (compiled, hashed deletion keys; no pre-join dedupe):
+    exactly the brute-force match set, one row per (query, term), over
+    duplicate terms and probes, the empty string, a character run and
+    non-ASCII terms."""
+    rng = random.Random(19)
+    terms = _rand_words(rng, 150, 1, 8, alphabet="abé") + EDGE_TERMS
+    terms += terms[:30] + ["aaaa"]
+    probes = _rand_words(rng, 25, 1, 8, alphabet="abé") + ["", "aaa", "é"]
+    probes += probes[:5]
+    p = spark.createDataFrame([(x,) for x in probes], "query string")
+    d = spark.createDataFrame([(x,) for x in terms], "term string")
+    for variant in ("standard", "transposition"):
+        for n in (1, 2):
+            rows = [
+                (r["query"], r["term"], r["distance"])
+                for r in matching.fuzzy_query(p, d, n, variant).collect()
+            ]
+            pairs = [(q, t) for q, t, _ in rows]
+            assert len(pairs) == len(set(pairs)), f"{variant} n={n}: repeated rows"
+            want = {
+                (q, t, D.distance(q, t, variant))
+                for q in set(probes)
+                for t in set(terms)
+                if D.distance(q, t, variant) <= n
+            }
+            assert set(rows) == want, f"{variant} n={n}"
+
+
+def test_deletion_key_rows_match_hof_keys(spark):
+    """The compiled key rows carry, per term, exactly the hashes of the HOF
+    deletion neighborhood — the HOF form still serves the bucketed index,
+    incremental, linkage and CLI paths, so the two must not drift."""
+    from pyspark.sql import functions as F
+
+    from liblevenshtein_rust_spark.functions.blocking_keys import (
+        deletion_key_rows,
+        deletion_neighborhood_keys,
+    )
+
+    rng = random.Random(23)
+    terms = _rand_words(rng, 60, 0, 10, alphabet="abé") + EDGE_TERMS + ["aaaa"]
+    df = spark.createDataFrame([(t,) for t in terms], "term string")
+
+    def by_term(rows):
+        out = {}
+        for r in rows:
+            out.setdefault(r["term"], set()).add(r["key"])
+        return out
+
+    for n in (1, 2):
+        got = by_term(deletion_key_rows(df, "term", n).collect())
+        hof = df.select(
+            "term", F.explode(deletion_neighborhood_keys(F.col("term"), n)).alias("k")
+        )
+        want = by_term(hof.select("term", F.xxhash64("k").alias("key")).collect())
+        assert got == want, f"n={n}"

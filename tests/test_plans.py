@@ -60,6 +60,25 @@ def test_probe_broadcast_in_fuzzy_join(spark):
     assert "BroadcastHashJoin" in plan  # dictionary side never shuffles
 
 
+def test_deletion_blocking_keys_dictionary_at_scan(spark):
+    """The d<=2 blocking path keys the dictionary in the stage that scans
+    it: no Exchange on the dictionary side of the join (a pre-explode
+    ``distinct()`` shuffled the terms, AQE coalesced that small shuffle to
+    one partition, and the key explode and join then ran in one task), and
+    no interpreted higher-order function in its key derivation."""
+    probes = spark.createDataFrame([("spark",), ("spark",)], "query string")
+    terms = tables.documents(spark, SF).select(
+        F.explode(F.split(F.lower("text"), " ")).alias("term")
+    )
+    plan = _plan(matching.candidate_pairs(probes, terms, 2))
+    below_join = plan[plan.index("BroadcastHashJoin"):].splitlines()[1:]
+    # the broadcast (probe) child's lines carry the ":" tree rail
+    dict_side = "\n".join(l for l in below_join if not l.lstrip().startswith(":"))
+    assert "Generate explode(sequence" in dict_side and "FileScan" in dict_side
+    assert "Exchange" not in dict_side
+    assert "lambdafunction" not in dict_side
+
+
 def test_blocking_stage_is_jvm_only(spark):
     docs = tables.documents(spark, SF).withColumnRenamed("text", "t").selectExpr(
         "cast(doc_id as string) as doc_id",
