@@ -15,6 +15,10 @@ whole-stage codegen.  Hot paths at depth <= 2 use
 :func:`deletion_key_rows` instead: the same deletion keys as generator rows
 over ``sequence`` + ``substr``, hashed to longs, all codegen.
 
+:func:`blocking_key_rows` is the single place that maps a (variant,
+distance) key budget to an exact key family; the ER, linkage and fuzzy-query
+joins all call it.
+
 Key families:
 
 - **prefix keys** (``prefix_key``): first p chars — the literal trie-walk
@@ -34,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..kernel.distances import MERGE_AND_SPLIT, STANDARD, TRANSPOSITION
 
 # ---------------------------------------------------------------------------
 # normalization
@@ -362,3 +368,53 @@ def deletion_key_rows(df: DataFrame, col: str, n: int = 1) -> DataFrame:
         s.substr(j + 1, length),
     )
     return rows.select(col, F.xxhash64(kept).alias("key"))
+
+
+def variant_key_budget(variant: str | None, max_distance: int) -> int:
+    """Deletion depth that blocks ``variant`` at ``max_distance`` exactly:
+    a merge or split spans up to two standard edits, so MergeAndSplit needs
+    twice the depth.  At least 1, so d=0 still joins equal terms."""
+    span = 2 if variant == MERGE_AND_SPLIT else 1
+    return max(max_distance * span, 1)
+
+
+def blocking_key_rows(
+    df: DataFrame, col: str, budget: int, variant: str | None = None
+) -> DataFrame:
+    """``(col, key: long)`` rows such that two values of ``col`` within key
+    budget ``budget`` (see :func:`variant_key_budget`) share a key — the one
+    place that picks the key family for every blocked vocabulary or
+    dictionary join:
+
+    - budget <= 2: the compiled deletion keys of :func:`deletion_key_rows`;
+    - budget 3 under Standard or OSA: ``xxhash64`` of :func:`d3_hybrid_keys`
+      (its band constants are variant-specific, so ``variant`` must be
+      passed: Standard's band is incomplete for OSA);
+    - anything else raises ``ValueError``: no exact family exists, and a
+      blocked join must not lose pairs silently.
+
+    Keys are 8-byte longs: half the exchange bytes and join hashing cost of
+    string keys.  A hash collision ADDS candidate pairs (the kernel rejects
+    them; ~2^-44 odds per key pair), with one theoretical asterisk: a
+    collision that merges a benign key into a key already past a caller's
+    extreme-fan-out threshold could drop that key's pairs with the extreme
+    band.  At 2^-44 per pair of keys this is astronomically unlikely (and
+    bounded by one key's pairs); completeness is probabilistic only in that
+    sense.
+
+    Rows can repeat (a term with repeated characters reaches a deletion key
+    through several positions): dedupe ``(col, key)`` before counting
+    per-key fan-out, and dedupe pairs after the join.
+    """
+    if budget <= 2:
+        return deletion_key_rows(df, col, budget)
+    if budget == 3 and variant in (STANDARD, TRANSPOSITION):
+        keys = d3_hybrid_keys(F.col(col), transposition=variant == TRANSPOSITION)
+        return df.select(col, F.explode(keys).alias("_k")).select(
+            col, F.xxhash64("_k").alias("key")
+        )
+    raise ValueError(
+        f"no exact blocking-key scheme for variant={variant!r} at key budget "
+        f"{budget}; supported: any variant with budget <= 2, "
+        "standard/transposition at 3"
+    )

@@ -21,7 +21,7 @@ reference's phonetic dictionary wrapper.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # ordered rewrite chain; RE2-compatible (no lookahead/backrefs) so the
@@ -155,11 +155,3 @@ def phonetic_rules_sql(expr: str, ruleset: str = "default") -> str:
         return _skeleton_sql(expr)
     raise ValueError(f"unknown ruleset {ruleset!r}; one of {PHONETIC_RULESETS}")
 
-
-def phonetic_keys(
-    docs: DataFrame, text_col: str = "term", ruleset: str = "default"
-) -> DataFrame:
-    """Attach the phonetic key column — sound-alike terms collide."""
-    return docs.withColumn(
-        "phonetic_key", phonetic_normalize(F.col(text_col), ruleset)
-    )

@@ -15,11 +15,12 @@ Stages:
    keys; dropping them is both a recall no-op and the first line of skew
    defense.  This is the value-filtered traversal analog
    (``src/transducer/value_filtered_query.rs``): filter *before* exploring.
-4. ``blocking_keys_for_tokens`` — symmetric-deletion keys (exact for d<=2)
+4. ``token_blocking_keys`` — symmetric-deletion keys (exact for d<=2)
    or n-gram keys.
-5. ``salt_hot_keys`` — explicit skew handling (north rule): keys whose
-   candidate list exceeds ``hot_threshold`` are split into ``n_salt``
-   sub-keys; both sides replicate accordingly (probe side joins all salts).
+
+Hot-key salting lives with its one caller, the ER vocabulary self-join
+(``pipeline/er.vocab_token_matches`` via
+``plans.rewrites.salted_self_join_pairs``).
 """
 
 from __future__ import annotations
@@ -124,51 +125,6 @@ def token_blocking_keys(
     return tok.select("doc_id", "token", F.explode(keys).alias("key"))
 
 
-def candidate_doc_pairs(
-    keyed: DataFrame,
-    hot_threshold: int = 200,
-    candidate_cap: int | None = 2000,
-) -> DataFrame:
-    """Self-join on blocking key → canonical (left_id, right_id[, token pair]).
-
-    Skew handling: keys with more than ``hot_threshold`` docs are *dropped
-    with logging semantics* (returned via the `hot_keys` attribute pattern:
-    callers can inspect `hot_key_stats`); a key shared by thousands of docs
-    carries no discriminative signal (its pairs blow up quadratically while
-    contributing only stopword-grade evidence).  This is the candidate-cap
-    guard of SURVEY.md §4 item 4 — the cap is explicit and logged, never
-    silent.
-    """
-    counts = keyed.groupBy("key").agg(F.countDistinct("doc_id").alias("n_docs"))
-    hot = counts.where(F.col("n_docs") > hot_threshold).select("key")
-    # broadcast the (small) hot-key set and anti-join; the cold set is the
-    # whole key universe and must never be a broadcast build side
-    k = keyed.join(F.broadcast(hot), "key", "left_anti")
-    left = k.select(
-        "key",
-        F.col("doc_id").alias("left_id"),
-        F.col("token").alias("left_token"),
-    )
-    right = k.select(
-        "key",
-        F.col("doc_id").alias("right_id"),
-        F.col("token").alias("right_token"),
-    )
-    pairs = left.join(right, "key").where(F.col("left_id") < F.col("right_id"))
-    pairs = pairs.select("left_id", "right_id", "left_token", "right_token").distinct()
-    if candidate_cap is not None:
-        # bound per-doc fan-out deterministically (ordered, logged truncation)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("left_id").orderBy("right_id", "left_token", "right_token")
-        pairs = (
-            pairs.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") <= candidate_cap)
-            .drop("_rk")
-        )
-    return pairs
-
-
 def sorted_neighborhood_pairs(
     df: DataFrame,
     key_col: str,
@@ -252,16 +208,6 @@ def sorted_neighborhood_pairs(
         )
         .where(F.col("left_id") != F.col("right_id"))
         .distinct()
-    )
-
-
-def hot_key_stats(keyed: DataFrame, hot_threshold: int = 200) -> DataFrame:
-    """Keys excluded by the skew guard, with their fan-out — the 'logged
-    truncation' record persisted by the pipeline's metrics stage."""
-    return (
-        keyed.groupBy("key")
-        .agg(F.countDistinct("doc_id").alias("n_docs"))
-        .where(F.col("n_docs") > hot_threshold)
     )
 
 
@@ -361,9 +307,9 @@ def pair_block_weights(
     Scale (10^12 docs): the weight aggregation is the SAME shuffle candidate
     generation performs (self-join on key → groupBy pair); no extra pass
     over the corpus.  The hot-key guard drops keys shared by more than
-    ``hot_threshold`` records first — identical policy + broadcast anti-join
-    shape as candidate_doc_pairs, so the quadratic blow-up of stopword-grade
-    keys never reaches the shuffle.
+    ``hot_threshold`` records first (a broadcast anti-join against the small
+    hot-key set), so the quadratic blow-up of stopword-grade keys never
+    reaches the shuffle.
     """
     k = keyed.select(
         F.col(id_col).alias("_id"), F.col(key_col).alias("_k")

@@ -130,25 +130,6 @@ def _shingle_base(docs: DataFrame, text_col: str, id_col: str, k: int) -> DataFr
     return base
 
 
-def minhash_signature(shingles_col, num_hashes: int = 16):
-    """array<string> of ``num_hashes`` lexicographic min-hashes.
-
-    hash_i(s) = md5(s || ':' || i); the min over the shingle set of each
-    salted hash is one signature component.  All columnar — per row this is
-    num_hashes * |shingles| md5 calls inside codegen, no explode.
-    """
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    shingles_col, lambda s: F.md5(F.concat(s, F.lit(f":{i}")))
-                )
-            )
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def minhash_bands(sig_col, bands: int = 4, rows: int = 4):
     """array<struct<band:int, bucket:string>> — LSH band buckets."""
     return F.array(

@@ -13,9 +13,9 @@ Design notes for 100 TB:
   scan parallelism: no side is deduped before its key explode, pairs are
   deduped once after the join.  Shuffled joins rely on AQE to split skewed
   keys at runtime; nothing caps a pathological key's candidate list.
-- `dedupe_pairs` canonicalizes (least, greatest) before the kernel — the
-  distributed analog of the reference's symmetric MemoCache
-  (``src/distance/mod.rs:29-208``): d(a,b)=d(b,a), score each pair once.
+- The key family of plain fuzzy queries is chosen in one place,
+  ``functions.blocking_keys.blocking_key_rows``, shared with the ER and
+  linkage vocabulary joins.
 - The length prefilter runs JVM-side *before* Arrow serialization.
 - Small probe sets are broadcast (`F.broadcast`) so the dictionary never
   shuffles for interactive queries.
@@ -23,20 +23,18 @@ Design notes for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.blocking_keys import (
-    d3_hybrid_keys,
-    deletion_key_rows,
+    blocking_key_rows,
     deletion_neighborhood_keys,
     merge_split_keys,
-    ngram_keys_unpositioned,
-    normalize_term,
     prefix_deletion_keys,
+    variant_key_budget,
 )
 from ..functions.udfs import edit_distance_udf, length_prefilter
-from ..kernel.distances import MERGE_AND_SPLIT, STANDARD, TRANSPOSITION
+from ..kernel.distances import MERGE_AND_SPLIT, STANDARD
 
 
 def candidate_pairs(
@@ -46,87 +44,59 @@ def candidate_pairs(
     probe_col: str = "query",
     term_col: str = "term",
     broadcast_probes: bool = True,
-    use_deletion_keys: bool = True,
     key_budget: int | None = None,
     variant: str | None = None,
 ) -> DataFrame:
     """Join probes to dictionary on shared blocking keys.
 
-    Key scheme: deletion-neighborhood keys (exact for n<=2, compiled and
-    hashed — :func:`deletion_key_rows`) when ``use_deletion_keys``; at n=3
-    the length-banded depth-3-deletion / positional-2-gram hybrid
-    (:func:`d3_hybrid_keys` — exact for Standard and OSA, band proof in
-    ``functions/blocking_keys``); else unpositioned n-grams
-    (recall-complete only when both sides are long enough that n edits
-    can't destroy every gram — the n>=4 fallback, not exact for short
-    strings).
+    The key family is :func:`blocking_key_rows`'s choice for the key
+    budget, which defaults to ``variant_key_budget(variant, max_distance)``;
+    a budget with no exact family raises ``ValueError``.  ``variant`` matters only there:
+    at budget 3 the d3 band constants are variant-specific, so a d=3 caller
+    must pass its actual variant or this raises, and a transposition caller
+    can never silently get the narrower Standard band.
 
-    ``key_budget`` overrides the deletion-key depth when the variant's ops
-    span more than one standard edit (merge/split count as up to two), while
-    the length prefilter stays at ``max_distance`` (every variant op changes
+    ``key_budget`` overrides the budget when a caller's ops are not one of
+    the three variants (the weighted query derives it from op shapes); the
+    length prefilter stays at ``max_distance`` (every variant op changes
     string length by at most 1).
 
     Returns distinct (probe_col, term_col) candidate pairs.
-
-    ``variant`` only matters to deletion keys at effective budget 3, where
-    the d3 band constants differ per variant (3 transpositions can kill up
-    to 9 2-grams — the OSA band is wider): a d=3 caller must pass its actual
-    variant explicitly or this raises, so a transposition caller can never
-    silently get the narrower Standard band.
     """
-    n = max_distance
-    kb = key_budget if key_budget is not None else n
-    if use_deletion_keys and kb == 3 and variant is None:
-        raise ValueError(
-            "candidate_pairs with an effective key budget of 3 requires an "
-            "explicit variant= (the d=3 hybrid band constants are "
-            "variant-specific; Standard's band is incomplete for OSA)"
-        )
-    if use_deletion_keys and kb <= 2:
-        pkeys = dkeys = max(kb, 1)
-    elif use_deletion_keys and kb == 3 and variant in (STANDARD, TRANSPOSITION):
-        osa = variant == TRANSPOSITION
-        pkeys = d3_hybrid_keys(F.col(probe_col), transposition=osa)
-        dkeys = d3_hybrid_keys(F.col(term_col), transposition=osa)
-    else:
-        pkeys = ngram_keys_unpositioned(F.col(probe_col))
-        dkeys = ngram_keys_unpositioned(F.col(term_col))
+    kb = key_budget
+    if kb is None:
+        kb = variant_key_budget(variant, max_distance)
     return _keyed_candidate_pairs(
-        probes,
-        dictionary,
-        pkeys,
-        dkeys,
+        blocking_key_rows(_values(probes, probe_col), probe_col, kb, variant),
+        blocking_key_rows(_values(dictionary, term_col), term_col, kb, variant),
         probe_col,
         term_col,
         broadcast_probes,
-        pair_filter=length_prefilter(F.col(probe_col), F.col(term_col), n),
+        pair_filter=length_prefilter(F.col(probe_col), F.col(term_col), max_distance),
     )
 
 
-def _key_rows(df: DataFrame, col: str, keys) -> DataFrame:
-    """(col, key) rows for the non-null values of ``col``: ``keys`` is an
-    array Column of string keys to explode, or an int depth for the
-    compiled, hashed deletion keys of :func:`deletion_key_rows`."""
-    df = df.select(col).where(F.col(col).isNotNull())
-    if isinstance(keys, int):
-        return deletion_key_rows(df, col, keys)
-    return df.select(col, F.explode(keys).alias("key"))
+def _values(df: DataFrame, col: str) -> DataFrame:
+    """The non-null values of ``col``, one column."""
+    return df.select(col).where(F.col(col).isNotNull())
+
+
+def _exploded(df: DataFrame, col: str, keys: Column) -> DataFrame:
+    """(col, key) rows from an array Column of string keys."""
+    return _values(df, col).select(col, F.explode(keys).alias("key"))
 
 
 def _keyed_candidate_pairs(
-    probes: DataFrame,
-    dictionary: DataFrame,
-    probe_keys,
-    term_keys,
+    probe_keys: DataFrame,
+    term_keys: DataFrame,
     probe_col: str,
     term_col: str,
     broadcast_probes: bool,
     pair_filter=None,
 ) -> DataFrame:
-    """Generic blocked candidate generation: key each side (both sides the
-    same key form, see :func:`_key_rows`), equi-join on key, dedupe,
-    optional pair filter.  All key families are recall-complete supersets;
-    the kernel is the exact filter.
+    """Generic blocked candidate generation: equi-join the two sides'
+    (col, key) rows on key, dedupe, optional pair filter.  All key families
+    are recall-complete supersets; the kernel is the exact filter.
 
     Pairs are deduped once, after the join.  Neither side is deduped before
     its key explode: a pre-explode ``distinct()`` shuffles the terms, and
@@ -134,11 +104,9 @@ def _keyed_candidate_pairs(
     the join would run in a single task instead of at scan parallelism.
     Repeated terms or keys only repeat join rows, which the pair
     ``distinct()`` removes."""
-    p = _key_rows(probes, probe_col, probe_keys)
-    d = _key_rows(dictionary, term_col, term_keys)
     if broadcast_probes:
-        p = F.broadcast(p)
-    pairs = p.join(d, "key").select(probe_col, term_col).distinct()
+        probe_keys = F.broadcast(probe_keys)
+    pairs = probe_keys.join(term_keys, "key").select(probe_col, term_col).distinct()
     if pair_filter is not None:
         pairs = pairs.where(pair_filter)
     return pairs
@@ -168,10 +136,12 @@ def prefix_candidate_pairs(
         row = probes.agg(F.max(F.length(probe_col))).first()
         max_probe_len = int(row[0] or 0)
     return _keyed_candidate_pairs(
-        probes,
-        dictionary,
-        deletion_neighborhood_keys(F.col(probe_col), n=n),
-        prefix_deletion_keys(F.col(term_col), n=n, max_prefix_len=max_probe_len + n),
+        _exploded(probes, probe_col, deletion_neighborhood_keys(F.col(probe_col), n=n)),
+        _exploded(
+            dictionary,
+            term_col,
+            prefix_deletion_keys(F.col(term_col), n=n, max_prefix_len=max_probe_len + n),
+        ),
         probe_col,
         term_col,
         broadcast_probes,
@@ -198,10 +168,8 @@ def substring_candidate_pairs(
     deletion variants plays the automaton's role."""
     n = max_distance
     return _keyed_candidate_pairs(
-        probes,
-        dictionary,
-        prefix_deletion_keys(F.col(probe_col), n=n),
-        deletion_neighborhood_keys(F.col(term_col), n=n),
+        _exploded(probes, probe_col, prefix_deletion_keys(F.col(probe_col), n=n)),
+        _exploded(dictionary, term_col, deletion_neighborhood_keys(F.col(term_col), n=n)),
         probe_col,
         term_col,
         broadcast_probes,
@@ -223,15 +191,30 @@ def merge_split_candidate_pairs(
     Each op changes length by at most 1, so the length prefilter holds at
     n."""
     return _keyed_candidate_pairs(
-        probes,
-        dictionary,
-        merge_split_keys(F.col(probe_col), n=2),
-        merge_split_keys(F.col(term_col), n=2),
+        _exploded(probes, probe_col, merge_split_keys(F.col(probe_col), n=2)),
+        _exploded(dictionary, term_col, merge_split_keys(F.col(term_col), n=2)),
         probe_col,
         term_col,
         broadcast_probes,
         pair_filter=length_prefilter(F.col(probe_col), F.col(term_col), 2),
     )
+
+
+def _scan_pairs(
+    probes: DataFrame,
+    dictionary: DataFrame,
+    probe_col: str,
+    term_col: str,
+    broadcast_probes: bool,
+) -> DataFrame:
+    """Every (probe, term) pair: the cross join against (broadcast) probes
+    that serves combinations without an exact key family.  Correct but not
+    scale-safe; the kernel rejects cheaply."""
+    p = probes.select(probe_col).distinct()
+    if broadcast_probes:
+        p = F.broadcast(p)
+    pairs = dictionary.select(term_col).distinct().join(p)
+    return pairs.select(probe_col, term_col)
 
 
 def fuzzy_query(
@@ -249,25 +232,22 @@ def fuzzy_query(
     """`Transducer::query_with_distance` as a DataFrame op.
 
     Output: (query, term, distance) for every dictionary term within
-    ``max_distance`` of each probe.  Every mode is key-blocked (equi-join,
-    never a dictionary scan):
+    ``max_distance`` of each probe.  Blocking is exact in every mode:
 
-    - standard/transposition: symmetric-deletion keys at depth n (n<=2) —
-      exact for OSA distance n (SymSpell property); at n=3 the
-      length-banded depth-3-deletion / positional-2-gram hybrid
-      (:func:`d3_hybrid_keys`), exact for both variants;
+    - standard/transposition at n <= 3 and MergeAndSplit at n = 1:
+      :func:`candidate_pairs`, i.e. the key family
+      :func:`blocking_key_rows` picks for the variant's key budget;
     - prefix mode: probe deletion keys × term *prefix*-deletion keys
       (:func:`prefix_candidate_pairs`);
     - substring mode: the mirror — probe prefix-deletion keys × term
       deletion keys (:func:`substring_candidate_pairs`);
-    - MergeAndSplit: an op spans up to two standard edits, so n=1 doubles
-      the deletion-key depth and n=2 uses the hybrid depth-4/3-gram family
+    - MergeAndSplit n = 2: the hybrid depth-4/3-gram family
       (:func:`merge_split_candidate_pairs`).
 
-    The broadcast-probe dictionary scan survives only as the fallback for
-    combinations without a key scheme (MergeAndSplit n>2, and prefix/
-    substring under MergeAndSplit) — correct but not scale-safe; callers at
-    cluster scale should stay inside the keyed modes.
+    Everything else (standard/transposition n >= 4, MergeAndSplit n > 2,
+    prefix/substring under MergeAndSplit or outside 1 <= n <= 2) falls back
+    to the broadcast-probe dictionary scan — correct but not scale-safe;
+    callers at cluster scale should stay inside the keyed modes.
     """
     n = max_distance
     keyed_variant = variant != MERGE_AND_SPLIT
@@ -279,38 +259,27 @@ def fuzzy_query(
         pairs = substring_candidate_pairs(
             probes, dictionary, n, probe_col, term_col, broadcast_probes
         )
-    elif (
-        variant == MERGE_AND_SPLIT
-        and n == 2
-        and not (prefix_mode or substring_mode)
-    ):
+    elif prefix_mode or substring_mode:
+        pairs = _scan_pairs(probes, dictionary, probe_col, term_col, broadcast_probes)
+    elif variant == MERGE_AND_SPLIT and n == 2:
         pairs = merge_split_candidate_pairs(
             probes, dictionary, probe_col, term_col, broadcast_probes
         )
-    elif prefix_mode or substring_mode or (
-        variant == MERGE_AND_SPLIT and 2 * n > 2
-    ):
-        # fallback: cross join against (broadcast) probes; kernel rejects
-        # cheaply.  Only reachable for mode combinations listed above.
-        p = probes.select(probe_col).distinct()
-        if broadcast_probes:
-            p = F.broadcast(p)
-        pairs = dictionary.select(term_col).distinct().join(p)
-        if not (prefix_mode or substring_mode):
-            pairs = pairs.where(
-                length_prefilter(F.col(probe_col), F.col(term_col), max_distance)
-            )
     else:
-        pairs = candidate_pairs(
-            probes,
-            dictionary,
-            max_distance,
-            probe_col,
-            term_col,
-            broadcast_probes=broadcast_probes,
-            key_budget=2 * max_distance if variant == MERGE_AND_SPLIT else None,
-            variant=variant,
-        )
+        try:
+            pairs = candidate_pairs(
+                probes,
+                dictionary,
+                n,
+                probe_col,
+                term_col,
+                broadcast_probes=broadcast_probes,
+                variant=variant,
+            )
+        except ValueError:  # no exact key family at this budget
+            pairs = _scan_pairs(
+                probes, dictionary, probe_col, term_col, broadcast_probes
+            ).where(length_prefilter(F.col(probe_col), F.col(term_col), n))
     dist = edit_distance_udf(
         max_distance,
         variant,
@@ -395,7 +364,6 @@ def fuzzy_query_weighted(
       unbounded): broadcast-probe scan, correct but not scale-safe.
 
     The length prefilter uses the op-derived drift bound ``max_delta``."""
-    from ..functions.blocking_keys import merge_split_keys
     from ..functions.udfs import generalized_distance_udf
 
     b = _weighted_blocking_bounds(weights, float(max_distance))
@@ -416,10 +384,8 @@ def fuzzy_query_weighted(
         and b["max_ops"] * (b["max_seg"] + 2) <= 8
     ):
         pairs = _keyed_candidate_pairs(
-            probes,
-            dictionary,
-            merge_split_keys(F.col(probe_col), n=2),
-            merge_split_keys(F.col(term_col), n=2),
+            _exploded(probes, probe_col, merge_split_keys(F.col(probe_col), n=2)),
+            _exploded(dictionary, term_col, merge_split_keys(F.col(term_col), n=2)),
             probe_col,
             term_col,
             broadcast_probes,
@@ -428,10 +394,7 @@ def fuzzy_query_weighted(
             ),
         )
     else:
-        p = probes.select(probe_col).distinct()
-        if broadcast_probes:
-            p = F.broadcast(p)
-        pairs = dictionary.select(term_col).distinct().join(p)
+        pairs = _scan_pairs(probes, dictionary, probe_col, term_col, broadcast_probes)
         if not b["unbounded"]:
             pairs = pairs.where(
                 length_prefilter(F.col(probe_col), F.col(term_col), b["max_delta"])
@@ -496,14 +459,3 @@ def fuzzy_multimap_query(
         F.sort_array(F.collect_set(value_col)).alias("values"),
     )
 
-
-def dedupe_pairs(df: DataFrame, a: str, b: str) -> DataFrame:
-    """Canonicalize + dedupe symmetric pairs (MemoCache analog)."""
-    return (
-        df.select(
-            F.least(F.col(a), F.col(b)).alias(a),
-            F.greatest(F.col(a), F.col(b)).alias(b),
-        )
-        .where(F.col(a) < F.col(b))
-        .distinct()
-    )

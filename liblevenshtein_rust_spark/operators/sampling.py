@@ -37,13 +37,6 @@ def rate_threshold_hex(rate: float) -> str:
     return format(max(0, min(int(rate * _SPACE), _SPACE - 1)), "08x")
 
 
-def hash_keep(key_col, rate: float):
-    """Boolean column: deterministic Bernoulli(rate) membership of a key."""
-    return F.substring(F.md5(key_col.cast("string")), 1, 8) < F.lit(
-        rate_threshold_hex(rate)
-    )
-
-
 def stratified_sample(
     docs: DataFrame,
     strata_col: str,

@@ -26,17 +26,6 @@ def whitespace_token_count(col):
     )
 
 
-def bpe_ish_token_count(col):
-    """Sub-word-ish count: runs of letters, runs of digits, single
-    punctuation — the standard pre-BPE pretokenizer regex family."""
-    return F.size(
-        F.filter(
-            F.split(col, r"(?<=[a-zA-Z0-9])(?=[^a-zA-Z0-9])|(?<=[^a-zA-Z0-9])(?=[a-zA-Z0-9])|\s+"),
-            lambda s: F.length(F.trim(s)) > 0,
-        )
-    )
-
-
 def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     return docs.select(
         F.col(id_col),

@@ -23,13 +23,16 @@ Scale design (each stage annotated for the 10^12-doc target):
   filter of ``value_filtered_query.rs`` — stopword-grade tokens are both
   skew bombs (hottest keys) and signal-free; dropping them bounds every
   downstream fan-out by ``max_df``.
-- **Deletion-neighborhood blocking** (SymSpell family) is *exact* for
-  distance <= 2: any OSA-d<=2 pair shares a depth-2 deletion variant, so
-  blocking loses no recall — candidate generation mirrors automaton-guided
-  trie intersection (bounded-error neighborhood enumeration, not scans).
-- **Skew**: hot keys are dropped with logged stats (``hot_keys`` manifest
-  metric); AQE skew-join splits what remains.  Evidence-join fan-out is
-  bounded by ``max_df`` per token by construction.
+- **Deletion-neighborhood blocking** (SymSpell family) is *exact*: any
+  OSA-d<=2 pair shares a depth-2 deletion variant, and d=3 uses the
+  length-banded hybrid (``blocking_keys.blocking_key_rows`` picks the
+  family), so blocking loses no recall — candidate generation mirrors
+  automaton-guided trie intersection (bounded-error neighborhood
+  enumeration, not scans).
+- **Skew**: hot keys are salted and kept; only extreme keys are dropped.
+  Both are counted (``hot_keys_salted`` / ``extreme_keys_dropped``
+  manifest metrics); AQE skew-join splits what remains.  Evidence-join
+  fan-out is bounded by ``max_df`` per token by construction.
 - **Per-stage parquet checkpoints** (:mod:`.runstate`) give resumability +
   per-partition lineage; the CC loop additionally ``localCheckpoint``s per
   iteration (lineage truncation inside the fixpoint).
@@ -75,27 +78,19 @@ def vocab_token_matches(
     toks: DataFrame, cfg: ERConfig, hot_stats: list | None = None
 ) -> DataFrame:
     """All (tok_a <= tok_b, distance) pairs within ``max_distance`` over the
-    distinct token vocabulary, via deletion-neighborhood blocking + kernel.
+    distinct token vocabulary, via key blocking + kernel.  The key family
+    is :func:`blocking_key_rows`'s exact choice for ``cfg.variant`` at
+    ``cfg.max_distance``; a combination without one raises ``ValueError``.
 
     The d=0 diagonal (tok, tok, 0) is included without touching the kernel.
+    ``hot_stats``, when given, receives ``[hot_keys_salted,
+    extreme_keys_dropped]``.
     """
-    from ..functions.blocking_keys import deletion_neighborhood_keys
+    from ..functions.blocking_keys import blocking_key_rows, variant_key_budget
 
     vocab = toks.select("token").distinct()
-    n = min(cfg.max_distance, 2)
-    keyed = vocab.select(
-        "token",
-        F.explode(deletion_neighborhood_keys(F.col("token"), n=max(n, 1))).alias("key"),
-    )
-    # Hash the string keys to 8-byte longs before the shuffle-heavy part:
-    # halves exchange bytes and join hashing cost.  A hash collision ADDS
-    # candidate pairs (kernel rejects them; ~2^-44 odds per key pair), with
-    # one theoretical asterisk: a collision that merges a benign key into a
-    # key already at extreme_key_threshold could drop that key's pairs with
-    # the extreme band.  At 2^-44 per pair of keys this is astronomically
-    # unlikely (and bounded by one key's pairs); the completeness guarantee
-    # is probabilistic only in that sense.
-    keyed = keyed.select("token", F.xxhash64("key").alias("key"))
+    budget = variant_key_budget(cfg.variant, cfg.max_distance)
+    keyed = blocking_key_rows(vocab, "token", budget, cfg.variant)
     # The exploded key table feeds three consumers (hot count, cold filter,
     # self-join sides); without persisting, the O(len^2)-per-token deletion
     # expression is recomputed for each — persist once, reuse everywhere
@@ -111,9 +106,13 @@ def vocab_token_matches(
     # probe side, and BOTH self-join sides satisfy the join's distribution
     # requirement straight from cached partitions: one data-sized exchange
     # total, paid at materialization.
+    #
+    # A token can reach one key through several deletion positions: the
+    # distinct makes the per-key counts count tokens, and it needs no
+    # exchange of its own on the key-partitioned rows.
     from ..session import pooled_persist
 
-    keyed = pooled_persist(keyed.repartition("key"))
+    keyed = pooled_persist(keyed.repartition("key").distinct())
     # skew guard on the vocab self-join: a deletion variant shared by
     # thousands of tokens (e.g. every 3-char fragment) explodes quadratically
     # The per-key fan-out table feeds three consumers (hot set, extreme set,
@@ -125,19 +124,21 @@ def vocab_token_matches(
     #   hot     (.. extreme_key_threshold]   → SALTED self-join (triangle
     #             decomposition, plans.rewrites.salted_self_join_pairs):
     #             every pair kept, no shuffle partition gets a whole bucket
-    #   extreme (> extreme_key_threshold)    → dropped with logged stats (a
+    #   extreme (> extreme_key_threshold)    → dropped and counted (a
     #             key shared by 10^5+ tokens carries no pair-level signal
     #             and its pair count is quadratically catastrophic)
+    n = F.col("n_toks")
     band = counts.agg(
-        F.coalesce(
-            F.sum((F.col("n_toks") > cfg.hot_key_threshold).cast("long")), F.lit(0)
-        ).alias("hx")
+        F.count_if(
+            (n > cfg.hot_key_threshold) & (n <= cfg.extreme_key_threshold)
+        ).alias("hot"),
+        F.count_if(n > cfg.extreme_key_threshold).alias("extreme"),
     ).first()
-    n_hot_or_extreme = int(band["hx"])
+    n_hot, n_extreme = int(band["hot"]), int(band["extreme"])
     if hot_stats is not None:
-        hot_stats.append(n_hot_or_extreme)
+        hot_stats.extend([n_hot, n_extreme])
 
-    if n_hot_or_extreme == 0:
+    if n_hot == n_extreme == 0:
         # Data-adaptive fast path: the pre-count proved there is no skew
         # band, so the salting machinery (broadcast anti-join, hot-marker
         # join, triangle union) would be three extra passes over the key
@@ -327,7 +328,9 @@ def _run_stages(
                 F.sum((F.col("tok_a") != F.col("tok_b")).cast("long")), F.lit(0)
             )
         },
-        metrics=lambda d: {"hot_keys_dropped": hot_stats[0] if hot_stats else 0},
+        metrics=lambda d: dict(
+            zip(("hot_keys_salted", "extreme_keys_dropped"), hot_stats or (0, 0))
+        ),
     )
     # the stage above is parquet-materialized — the pooled key/count caches
     # inside vocab_token_matches are dead weight from here on
@@ -387,12 +390,10 @@ def pairwise_f1(
     lab = labels
     n_total = lab.count()
     if toks is not None:
-        from ..functions.blocking_keys import deletion_neighborhood_keys
+        from ..functions.blocking_keys import deletion_key_rows
 
-        keyed = toks.select(
-            "doc_id",
-            F.explode(deletion_neighborhood_keys(F.col("token"), n=2)).alias("key"),
-        ).distinct()
+        keys = deletion_key_rows(toks.select("token").distinct(), "token", 2)
+        keyed = toks.join(keys, "token").select("doc_id", "key").distinct()
         a = keyed.select(F.col("doc_id").alias("left_doc_id"), "key")
         b = keyed.select(F.col("doc_id").alias("right_doc_id"), "key")
         shared = a.join(b, "key").select("left_doc_id", "right_doc_id").distinct()

@@ -9,11 +9,11 @@ Same engineering altitude as the ER pipeline, restated for two sides:
   vocabularies are joined through shared deletion-neighborhood keys —
   an A-vocab × B-vocab blocked join (no self-join, no canonicalization,
   no triangle salting: the sides are disjoint by construction).  The key
-  scheme is budget-dispatched like ``operators/matching.py`` — deletion
-  neighborhood (exact for budget ≤ 2), the d3 hybrid for standard/OSA at
-  distance 3, and a RAISE outside the exact envelope — so no recall is
-  lost vs the reference's trie-intersection traversal
-  (``dictionary/dawg.rs``).
+  family is ``blocking_keys.blocking_key_rows``'s, shared with ER and
+  ``operators/matching.py`` — deletion neighborhood (exact for budget ≤ 2),
+  the d3 hybrid for standard/OSA at distance 3, and a RAISE outside the
+  exact envelope — so no recall is lost vs the reference's
+  trie-intersection traversal (``dictionary/dawg.rs``).
 - **Evidence join bounded by max_df per side**: each matched token pair
   touches ≤ max_df_a × max_df_b doc pairs — linear in vocabulary, never
   |A|×|B|.
@@ -34,7 +34,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.blocking_keys import deletion_neighborhood_keys, normalize_term
+from ..functions.blocking_keys import (
+    blocking_key_rows,
+    normalize_term,
+    variant_key_budget,
+)
 from ..functions.udfs import edit_distance_udf, length_prefilter
 from ..kernel.distances import TRANSPOSITION
 from ..operators import blocking
@@ -88,38 +92,19 @@ def cross_vocab_matches(
     ``max_distance`` — blocked through shared keys, kernel-scored.  Exact
     A∩B tokens fall out of the same join (same keys, distance 0).
 
-    Key scheme by budget (same dispatch as ``operators/matching.py``):
-    merge/split ops span up to TWO standard edits, so the key budget is
-    ``2 × max_distance`` for that variant; budget ≤ 2 → deletion
-    neighborhood (exact), budget 3 for standard/OSA → ``d3_hybrid_keys``
-    (exact, length-banded).  Anything beyond that envelope RAISES rather
-    than silently losing pairs — the linkage contract promises every
-    within-distance pair, and an incomplete key family would bias the
-    learned EM weights invisibly.
+    Keys are :func:`blocking_key_rows`'s exact family for the variant's key
+    budget (the same choice ER and ``operators/matching.py`` make).  A
+    combination without one RAISES rather than silently losing pairs — the
+    linkage contract promises every within-distance pair, and an incomplete
+    key family would bias the learned EM weights invisibly.
     """
-    from ..functions.blocking_keys import d3_hybrid_keys
-    from ..kernel.distances import MERGE_AND_SPLIT, STANDARD
-
-    span = 2 if cfg.variant == MERGE_AND_SPLIT else 1
-    budget = max(cfg.max_distance * span, 1)
-    if budget <= 2:
-        keys_of = lambda c: deletion_neighborhood_keys(c, n=budget)  # noqa: E731
-    elif budget == 3 and cfg.variant in (STANDARD, TRANSPOSITION):
-        osa = cfg.variant == TRANSPOSITION
-        keys_of = lambda c: d3_hybrid_keys(c, transposition=osa)  # noqa: E731
-    else:
-        raise ValueError(
-            "cross_vocab_matches has no exact blocking-key scheme for "
-            f"variant={cfg.variant!r} at max_distance={cfg.max_distance} "
-            f"(key budget {budget}); supported: any variant with budget <= 2, "
-            "standard/transposition at 3"
-        )
+    budget = variant_key_budget(cfg.variant, cfg.max_distance)
 
     def keyed(vocab: DataFrame, col: str) -> DataFrame:
-        return vocab.select(
-            F.col("token").alias(col),
-            F.explode(keys_of(F.col("token"))).alias("k"),
-        ).select(col, F.xxhash64("k").alias("key"))
+        # distinct: the per-key counts below count tokens, not the
+        # deletion positions that reach one key
+        rows = vocab.select(F.col("token").alias(col))
+        return blocking_key_rows(rows, col, budget, cfg.variant).distinct()
 
     ka = keyed(vocab_a, "tok_a")
     kb = keyed(vocab_b, "tok_b")

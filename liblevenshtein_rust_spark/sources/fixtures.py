@@ -140,30 +140,6 @@ DOCS_SCHEMA = StructType(
 _CLUSTER_SIZES = [1, 1, 1, 1, 2, 2, 3, 3, 4, 5]  # drawn uniformly → mean 2.2
 
 
-def _cluster_of(seed: int, doc_index: int) -> tuple[int, int]:
-    """Map a doc index to (entity_id, member_rank) deterministically.
-
-    Docs are laid out in contiguous clusters; the cluster size sequence is a
-    pure function of the seed via a per-entity RNG, so membership can be
-    recomputed from the index alone by walking the size sequence — but to
-    stay O(1) per doc we instead derive cluster boundaries arithmetically:
-    entity e covers indices [start(e), start(e)+size(e)) where size(e) is
-    drawn from _CLUSTER_SIZES by hash(seed, e).  We invert by binary search
-    over a cumulative layout computed lazily per task (cheap: sizes are
-    derived, not stored).
-    """
-    # average size
-    # walk in blocks of 64 entities to keep the scan bounded per task
-    e = 0
-    start = 0
-    while True:
-        size = _CLUSTER_SIZES[random.Random((seed << 20) ^ e).randrange(len(_CLUSTER_SIZES))]
-        if doc_index < start + size:
-            return e, doc_index - start
-        start += size
-        e += 1
-
-
 def _entity_layout(seed: int, max_doc: int) -> list[tuple[int, int, int]]:
     """[(entity_id, start, size)] covering [0, max_doc)."""
     out = []

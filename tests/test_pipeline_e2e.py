@@ -141,7 +141,8 @@ def test_manifest_lineage_and_metrics(spark, docs, run):
         assert m["partitions"] >= 1
         assert m["wall_s"] >= 0
     assert "kernel_pairs" in ms["token_matches"]["metrics"]
-    assert "hot_keys_dropped" in ms["token_matches"]["metrics"]
+    assert "hot_keys_salted" in ms["token_matches"]["metrics"]
+    assert "extreme_keys_dropped" in ms["token_matches"]["metrics"]
 
 
 def test_link_tables_cross_corpus(spark):
