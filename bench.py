@@ -1,60 +1,50 @@
-"""Benchmark harness — scaling evidence FIRST, then headline queries + ER.
+"""Benchmark harness on one fixed measurement protocol.
 
-Prints a CUMULATIVE compact JSON line after EVERY completed phase (the
-round harness keeps the last ~2000 stdout chars and parses the LAST line),
-so a timeout kill at any point still leaves a complete, parseable record of
-everything that finished.  The final line on a full run:
+Prints a CUMULATIVE compact JSON line after every phase (the round harness
+keeps the last ~2000 stdout chars and parses the LAST line), so a kill at any
+point still leaves a parseable record of everything that finished; the full
+record goes to the detail file.  The final line on a full run:
 
     {"sf": ..., "queries": {...}, "er": {...}, "english_dict": {...},
      "scaling": {...}, "metric": "headline_total", "value": N, "unit": "sec"}
 
-Phase order (the round-2 lesson: BENCH_r02.json came back rc=124 with the
-scaling campaign truncated off the driver's record — the ONE north-rule gate
-not yet on a driver artifact ran last):
+Phases, always this list in this order, each a subprocess with one constant
+hard time box (cut only to what is left of the run budget).  Workers print a
+cumulative line per reading, so a phase killed by its box keeps its readings.
 
-1. ``scaling``  — the north rule's two-cluster-size criterion, evidenced in
-   sandbox by the kernel pair-scoring job (the BASELINE.json throughput
-   metric: candidate-pairs-scored/sec) on the SAME parquet input at three
-   pinned core counts (2 / 8 / 32 at CPUS=32).  Each measurement runs in a
-   subprocess whose CPU affinity is pinned BEFORE the JVM forks
-   (``sched_setaffinity`` — inherited by executor threads and Python
-   workers; without pinning a local[8] run on a 32-core box quietly uses up
-   to 16 cores and the comparison measures nothing).  Efficiency
-   = (T_N / T_4N) / 4 for both N-vs-4N pairs (2->8 headline: both sizes
-   compute-rich at 16M pairs; 8->32 measured at BIG_PAIRS=64M when the
-   window allows — at 16M the 32-core wall is ~1/3 fixed cost and the
-   reading understates; the high pair additionally hits the single-box
-   shared-DRAM ceiling, measured 0.79 for 32-way pure NumPy — it
-   understates a real cluster by construction).
-2. ``er_mini`` — the ER-PIPELINE 2-vs-8-core pair on a reduced pre-staged
-   corpus, adaptively sized to the remaining budget (round 5: runs BEFORE
-   the elastic headline worker; flagged as a floor on the committed
-   1.2M-doc campaign gate).
-3. ``queries``  — per-query wall seconds for every
-   ``__spark_entry__.queries()`` entry at ``$SPARK_GRAFT_SF_DIR`` (default
-   /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``.
-4. ``er`` / ``english_dict`` — headline ER pipeline at 8k docs; fuzzy query
-   against the reference's real 123,985-word dictionary.
-5. top-up — with remaining budget: extra scaling reps (per-size min over
-   all passes is the host-noise-robust estimator) and a second query pass.
+1. ``--gen-input`` (box 150 s): stage the shared 16M-pair score-job input
+   parquet, cached across runs behind its ``_SUCCESS`` marker.
+2. ``--scale-worker N`` for N in CPUS//16, CPUS//4, CPUS (floor 1, deduped;
+   box 300 s each, 2400 s in campaign mode): pin CPU affinity to N cores,
+   warm up, then two full score passes, cold then steady.  Skipped when
+   phase 1 failed.
+3. ``--main-worker`` (box 420 s): the ER pipeline at 8k docs, the English
+   dictionary fuzzy query, one pass over every ``__spark_entry__.queries()``
+   entry.  headline_total = query walls + ER wall.
 
-The whole run fits a HARD deadline (``SPARK_GRAFT_BENCH_BUDGET_S``, default
-520 s): phases that don't fit the remaining budget are skipped with a note,
-and the process exits rc=0 before any plausible driver timeout.
+Readings are stamped with the host probes (``perfbench.host.host_probe``,
+page-fault bandwidth) taken just before and after each.  A reading whose
+probe reads < 300 MB/s is kept in the detail file with ``rejected:
+"throttled"`` and never enters an efficiency.  Each size reports the reading
+fixed in advance, its steady (second full) pass; the cold pass is recorded,
+never aggregated, and nothing is min- or max-merged.  An N -> 4N pair's
+efficiency is (T_N / T_4N) / 4, null when a side is rejected; the headline
+pair is the lowest one.
 
-The full ER-PIPELINE scaling campaign (1.2M docs; the 2-core passes alone
-are ~600 s each, physics: showing >=0.8 over a 4x core ratio requires the
-slow size's wall to be >=3.2x the fast one's) cannot fit a driver budget —
-it runs in campaign mode (``SPARK_GRAFT_BENCH_SCALE_ER=1`` +
-``SPARK_GRAFT_BENCH_BUDGET_S=7200``) and its committed artifact is
-referenced from BASELINE.md.  Campaign detail files are written under the
-name ``$SPARK_GRAFT_BENCH_DETAIL_NAME`` so they never clobber the
-driver-run BENCH_DETAIL.json.
+Env knobs, the only five:
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_DOCS,
-SPARK_GRAFT_BENCH_BUDGET_S, SPARK_GRAFT_BENCH_SCALE_PAIRS,
-SPARK_GRAFT_BENCH_SCALING=0 to skip scaling, SPARK_GRAFT_BENCH_SCALE_ER=1
-for the ER campaign (+ SPARK_GRAFT_BENCH_SCALE_DOCS / _REPS).
+- ``SPARK_GRAFT_SF_DIR``: query input directory (an ``sf0.1`` dir by default).
+- ``SPARK_GRAFT_CPUS``: cores of the largest size (default 32).
+- ``SPARK_GRAFT_BENCH_BUDGET_S``: hard run deadline in seconds (default 620).
+- ``SPARK_GRAFT_BENCH_DETAIL_NAME``: detail file name (default
+  BENCH_DETAIL.json, or BENCH_DETAIL_smoke.json off the default SF dir,
+  budget or campaign gate).
+- ``SPARK_GRAFT_BENCH_SCALE_ER=1``: campaign mode.  Each scale worker also
+  runs the ER pipeline at 1.2M docs, cold then steady; 2-core passes take
+  ~600 s each, so give it a 7200 s budget and its own detail name.
+
+``--gen-er-docs N`` and ``--er-mini-worker CORES N`` are not driver-run
+phases: they are the entries ``scripts/er_floor_curve.py`` uses.
 """
 
 from __future__ import annotations
@@ -62,6 +52,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import subprocess
 import sys
 import tempfile
 import time
@@ -69,57 +60,85 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from perfbench.host import host_probe  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "8000"))
-DO_SCALING = os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0"
-# 16M pairs: big enough that the 2-core wall (~50 s) dwarfs per-pass fixed
-# cost (~2 s scheduling) so the 2->8 efficiency reading is not
-# overhead-dominated (measured: 0.836-0.844 at 16M vs 0.803 at 12M — the
-# extra margin matters under throttle windows), small enough that the
-# 3-size campaign fits ~290 s of the driver budget single-pass (measured
-# per-worker walls at 16M: 158/81/48 s for 2/8/32 cores incl.
-# JVM+warm+probe-gate+two passes; the worker drops to one pass when its
-# allowance is tight).
-SCALE_PAIRS = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE_PAIRS", "16000000"))
 # 620 s: the round-2 driver run completed a ~650 s headline phase before
 # its kill landed mid-campaign, so the driver timeout is provably > 650 s;
-# 620 exits (rc=0) safely under it while fitting scaling + one full query
-# pass + ER + english, with top-up passes when the budget allows.
+# 620 exits (rc=0) safely under it.
 BUDGET_S = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "620"))
-# campaign mode: also measure the full ER pipeline at every size (~35-70
-# min — committed-artifact evidence, never inside a driver budget)
 SCALE_ER = os.environ.get("SPARK_GRAFT_BENCH_SCALE_ER", "0") == "1"
+# a non-default run must not clobber the committed full-run BENCH_DETAIL.json
+DETAIL_NAME = os.environ.get("SPARK_GRAFT_BENCH_DETAIL_NAME") or (
+    "BENCH_DETAIL.json" if BUDGET_S == 620 and not SCALE_ER and "sf0.1" in SF_DIR
+    else "BENCH_DETAIL_smoke.json"
+)
+N_DOCS = 8000
+# 16M pairs: big enough that the 2-core wall (~50 s) dwarfs per-pass fixed
+# cost (~2 s scheduling) so the 2->8 efficiency reading is not
+# overhead-dominated (measured: 0.836-0.844 at 16M vs 0.803 at 12M), small
+# enough that the three sizes fit the driver budget with both passes
+# (measured per-worker walls at 16M: 158/81/48 s for 2/8/32 cores).
+SCALE_PAIRS = 16_000_000
 # 1.2M docs: at 480k the 2->8 pair measured 0.62-0.68 — the pipeline's
 # ~45 s of size-invariant cost (stage barriers, checkpoint write+read, CC
 # rounds) is a third of the 8-core wall.  At 1.2M the parallel work is 2.5x
 # while the fixed term barely moves, putting both sizes of the headline
 # 2->8 pair in the compute-dominated regime a real cluster runs in (the
 # plan is identical: scale_partitions still floors at 128).
-SCALE_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE_DOCS", "1200000"))
-SCALE_REPS = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE_REPS", "1"))
-# opportunistic DRIVER-budget ER scaling pair (round 4, VERDICT r3 task 9):
-# 300k docs is the largest size whose 2-core pass (~200 s) + 8-core pass
-# can ride a favorable window of the 620 s budget; it UNDERSTATES the
-# campaign number (fixed per-stage cost is a bigger share than at 1.2M —
-# the 480k pair measured 0.62-0.68 vs 0.905 at 1.2M), so the committed
-# campaign artifact stays the headline ER gate and this block is the
-# driver-record corroboration when it fits.
-ER_MINI_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_ER_MINI_DOCS", "300000"))
-_DEADLINE = [float("inf")]  # set by main(); workers get theirs via env
+SCALE_DOCS = 1_200_000
+# pair-count-suffixed so a small test invocation can never clobber the
+# shared input of a concurrently-running full-size measurement (observed:
+# a 400k-pair smoke run silently replaced the 24M-pair input mid-campaign)
+SCALE_INPUT = f"/tmp/spark_graft_scale_pairs_{SCALE_PAIRS}.parquet"
+
+# Hard time box per phase (s).  Sized from measured walls: a cold 16M-pair
+# gen ~40 s; scale workers 158/81/48 s at 2/8/32 cores with both passes on
+# a 32-core host, ~245 s for the 1-core worker of a 4-vCPU VM (107 s per
+# pass); the main worker ~230 s.
+GEN_BOX_S = 150.0
+SCALE_BOX_S = 2400.0 if SCALE_ER else 300.0
+MAIN_BOX_S = 420.0
+
+# A shared host can throttle fresh-page faults to ~10 MB/s (normal: >2000)
+# for minutes at a time, and those swings are larger than any code effect.
+THROTTLED_MB_S = 300.0
+AGGREGATION = (
+    "steady (second full) pass per size, fixed in advance; readings with a "
+    f"bracketing probe < {THROTTLED_MB_S:.0f} MB/s rejected; cold pass never used"
+)
 
 
-def time_left() -> float:
-    return _DEADLINE[0] - time.time()
+def stamp(rec: dict, key: str, before: float) -> float:
+    """Stamp reading ``rec[key]`` with the probes just before it (``before``)
+    and just after it (taken now).  A throttled reading stays in ``rec``,
+    marked ``rec["rejected"][key] = "throttled"``.  Returns the after-probe:
+    the before-probe of a reading taken right after this one."""
+    after = host_probe()
+    rec.setdefault("probes_mb_s", {})[key] = [before, after]
+    if min(before, after) < THROTTLED_MB_S:
+        rec.setdefault("rejected", {})[key] = "throttled"
+    return after
+
+
+def accepted(rec: dict, key: str) -> float | None:
+    """The reading ``rec[key]``, or None when it is missing or rejected."""
+    return None if key in rec.get("rejected", {}) else rec.get(key)
+
+
+def take_readings(rec: dict, readings: dict) -> None:
+    """Take the readings back to back, ``rec[key] = take()``, each stamped,
+    printing the cumulative record after each so a time-box kill keeps
+    every reading that finished."""
+    p = host_probe()
+    for key, take in readings.items():
+        rec[key] = take()
+        p = stamp(rec, key, p)
+        print(json.dumps(rec), flush=True)
 
 
 def _fresh_spark(cores: int, shuffle_partitions: int | None = None):
-    from pyspark.sql import SparkSession
-
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-        SparkSession.builder._options = {}
     from liblevenshtein_rust_spark.session import get_spark
 
     return get_spark(
@@ -127,22 +146,9 @@ def _fresh_spark(cores: int, shuffle_partitions: int | None = None):
     )
 
 
-# --------------------------------------------------------------------------
-# headline phase: queries + ER + english dict (one subprocess)
-# --------------------------------------------------------------------------
-
-
-def bench_queries(spark, on_progress=None) -> tuple[dict, dict, dict]:
-    """One pass over every query (returns the live query dict too, so the
-    caller can run a second pass after the other headline jobs — host
-    throttle windows make single cold passes 3-5x noisy; the reported wall
-    is the per-query MIN, the cold pass stays in the detail file).
-
-    ``on_progress(out, cold)`` is invoked every few queries so the caller
-    can checkpoint a partial record — a parent timeout kill mid-pass then
-    salvages most of the query walls instead of losing the whole pass
-    (round 5: a severely throttled window stretched the cold pass past
-    the worker's remaining budget)."""
+def bench_queries(spark, on_progress) -> dict[str, float]:
+    """One pass over every query.  ``on_progress(walls)`` runs every 8
+    queries so a time-box kill mid-pass still salvages most of the walls."""
     import __spark_entry__ as entry
 
     # Warm the session once: JVM codegen for the (large) deletion-key
@@ -165,32 +171,14 @@ def bench_queries(spark, on_progress=None) -> tuple[dict, dict, dict]:
     matching.fuzzy_query(probes, terms, 2).count()
 
     out: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    qs = entry.queries()
-    for i, (name, fn) in enumerate(qs.items()):
+    for i, (name, fn) in enumerate(entry.queries().items()):
         t0 = time.time()
         fn(spark, SF_DIR).count()
-        w = time.time() - t0
-        cold[name] = round(w, 3)
-        out[name] = round(w, 3)
+        out[name] = round(time.time() - t0, 3)
         release_pooled()  # pooled operator caches die with the timing window
-        if on_progress is not None and i % 8 == 7:
-            on_progress(out, cold)
-    return out, cold, qs
-
-
-def bench_queries_second_pass(spark, out: dict, qs: dict, deadline: float) -> None:
-    """Opportunistic min-merge pass, slowest-first (they profit most from a
-    warm re-read), while the worker's deadline allows."""
-    from liblevenshtein_rust_spark.session import release_pooled
-
-    for name in sorted(out, key=out.get, reverse=True):
-        if time.time() > deadline - out[name] - 5:
-            continue
-        t0 = time.time()
-        qs[name](spark, SF_DIR).count()
-        out[name] = round(min(out[name], time.time() - t0), 3)
-        release_pooled()
+        if i % 8 == 7:
+            on_progress(out)
+    return out
 
 
 ENGLISH_WORDS = "/root/reference/data/english_words.txt"
@@ -240,24 +228,19 @@ def bench_english_dict(spark) -> dict:
 def bench_er(
     spark,
     n_docs: int,
-    run_dir: str,
+    prefix: str,
     partitions: int | None = None,
     docs_path: str | None = None,
 ) -> dict:
-    """Full pipeline over the synthetic interleaved corpus; fresh run_dir.
+    """One ER pipeline pass over the synthetic interleaved corpus in a fresh
+    run dir, removed afterwards (checkpoint dirs are ~400 MB each).
 
     ``partitions`` pins the generator's task count AND the pipeline's static
-    shuffle-partition count (data-sized, not cluster-sized) so scaling runs
-    execute the identical physical plan at every cluster size — see
-    :func:`scale_partitions` and ``ERConfig.static_shuffle_partitions``
-    (AQE's parallelism-first coalescing would otherwise re-size every
-    exchange to the local core count).
-
-    ``docs_path``: read a pre-staged docs parquet instead of generating
-    in-session — the er-mini scaling pair stages its input ONCE at full
-    width so (a) generation cost stops billing the timed window and (b)
-    every cluster size reads byte-identical input files (the north rule's
-    same-input requirement, matching the score job's shared parquet)."""
+    shuffle-partition count (see :func:`scale_partitions`) so every cluster
+    size runs the identical physical plan; AQE would otherwise re-size every
+    exchange to the local core count.  ``docs_path`` reads a pre-staged
+    docs parquet, so generation stays out of the timed window and every
+    size reads byte-identical input (the north rule's same-input rule)."""
     from liblevenshtein_rust_spark.pipeline import er
     from liblevenshtein_rust_spark.sources import fixtures
 
@@ -268,102 +251,58 @@ def bench_er(
         docs = spark.read.parquet(docs_path)
     else:
         docs = fixtures.generate_docs(spark, n_docs, seed=42, partitions=partitions)
-    t0 = time.time()
-    er.run_pipeline(spark, docs, run_dir, cfg)
-    wall = time.time() - t0
-    rs = er.Runstate(spark, run_dir, er.asdict(cfg)).manifests()
-    pairs = rs["token_matches"]["metrics"].get("kernel_pairs", 0)
+    run_dir = tempfile.mkdtemp(prefix=prefix)
+    try:
+        t0 = time.time()
+        er.run_pipeline(spark, docs, run_dir, cfg)
+        wall = time.time() - t0
+        rs = er.Runstate(spark, run_dir, er.asdict(cfg)).manifests()
+    finally:
+        shutil.rmtree(run_dir, ignore_errors=True)
     return {
         "n_docs": n_docs,
         "wall_s": round(wall, 3),
         "docs_per_sec": round(n_docs / wall, 1),
-        "kernel_pairs": pairs,
+        "kernel_pairs": rs["token_matches"]["metrics"].get("kernel_pairs", 0),
         "stage_wall_s": {s: m["wall_s"] for s, m in rs.items()},
     }
 
 
 def main_worker() -> None:
-    """Queries + headline ER + english dict, one subprocess.  Honors the
-    deadline handed down by the parent (epoch seconds).  Order: one query
-    pass, then ER + english (so they are never starved), then opportunistic
-    second query passes until the deadline.
+    """ER headline, english dict, then one query pass, in one subprocess.
 
-    Emits a CUMULATIVE JSON line after EVERY sub-phase (same contract as
-    the parent's own emit loop): if the parent's timeout kill lands
-    mid-worker, the partial stdout still carries a complete record of
-    everything that finished — the parent salvages its last line (round
-    5: this is what lets the er-mini phase spend budget ahead of this
-    worker without a kill risking the whole query record)."""
-    deadline = float(os.environ.get("SPARK_GRAFT_BENCH_WORKER_DEADLINE", "1e18"))
+    ER + english run FIRST: they are cheap (~25 s) and atomic, and without
+    ``er`` the headline value is null.  The query pass emits partial
+    records, so it is the phase that absorbs a time-box kill."""
     spark = _fresh_spark(CPUS)
     out: dict = {}
 
-    def step() -> None:
-        print(json.dumps(out), flush=True)
+    def partial(q: dict) -> None:
+        print(json.dumps(dict(out, queries=q, _partial=True)), flush=True)
 
-    def partial(q_part: dict, cold_part: dict) -> None:
-        merged = dict(out)
-        merged.update(queries=q_part, queries_cold=cold_part, _partial=True)
-        print(json.dumps(merged), flush=True)
-
-    # ER + english FIRST (round 5 reorder): they are cheap (~25 s) and
-    # ATOMIC — behind the ~170 s query pass they were the first casualties
-    # of a truncation, and without `er` the headline value is null.  The
-    # query pass is the salvage-friendly phase (partial emission every 8
-    # queries), so it absorbs the truncation risk instead.
-    tmp = tempfile.mkdtemp(prefix="bench_er_")
-    try:
-        out["er"] = bench_er(spark, N_DOCS, os.path.join(tmp, "run"))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    step()
-    out["english_dict"] = bench_english_dict(spark)
-    step()
-    q, q_cold, qs = bench_queries(spark, on_progress=partial)
-    out.update(queries=q, queries_cold=q_cold)
-    step()
-    bench_queries_second_pass(spark, q, qs, deadline - 10)
-    step()
+    take_readings(out, {
+        "er": lambda: bench_er(spark, N_DOCS, "bench_er_"),
+        "english_dict": lambda: bench_english_dict(spark),
+        "queries": lambda: bench_queries(spark, on_progress=partial),
+    })
 
 
-# --------------------------------------------------------------------------
-# scaling phase
-# --------------------------------------------------------------------------
-
-# pair-count-suffixed so a small test invocation can never clobber the
-# shared input of a concurrently-running full-size measurement (observed:
-# a 400k-pair smoke run silently replaced the 24M-pair input mid-campaign)
-SCALE_INPUT = os.environ.get(
-    "SPARK_GRAFT_SCALE_INPUT",
-    f"/tmp/spark_graft_scale_pairs_{SCALE_PAIRS}.parquet",
-)
-
-# big-pair input for the 8->32 reading (VERDICT r4 task 5): at 16M pairs
-# the 32-core wall is fixed-cost-bound (~5 s — JVM scheduling + Arrow
-# batch spin-up are a third of it) and 8->32 reads ~0.51; the committed
-# 64M campaign measured 0.609 in the compute-dominated regime.  The big
-# pass reuses the same generator at 4x rows so the driver record carries
-# the compute-bound number when the window allows (16M stays the 2->8
-# headline input — a 2-core 64M pass would cost ~160 s for no new
-# information).
-BIG_PAIRS = int(os.environ.get("SPARK_GRAFT_BENCH_BIG_PAIRS", "64000000"))
+def _stage(path: str, build) -> None:
+    """Write ``build()``'s DataFrame to ``path`` unless already there.  Only
+    a _SUCCESS marker makes it "there": a kill mid job-commit leaves partial
+    files, and fewer rows than requested would overstate every rate."""
+    cached = os.path.exists(os.path.join(path, "_SUCCESS"))
+    if not cached:
+        build().write.mode("overwrite").parquet(path)
+    print(json.dumps({"ok": True, "cached": cached}))
 
 
-def _scale_input_path(n_pairs: int) -> str:
-    return (
-        SCALE_INPUT
-        if n_pairs == SCALE_PAIRS
-        else f"/tmp/spark_graft_scale_pairs_{n_pairs}.parquet"
-    )
-
-
-def _gen_scale_input(spark, n_pairs: int | None = None) -> None:
-    """Write the shared scaling-job input (every cluster size reads the
-    SAME parquet — the north rule's same-input requirement)."""
+def scale_pairs_df():
+    """The shared scaling-job input (every cluster size reads the SAME
+    parquet — the north rule's same-input requirement)."""
     from pyspark.sql import functions as F
 
-    n_pairs = n_pairs or SCALE_PAIRS
-    base = spark.range(0, n_pairs, 1, 128)
+    base = _fresh_spark(CPUS).range(0, SCALE_PAIRS, 1, 128)
 
     # deterministic pseudo-words from the id: base-26 digits of two mixes
     def word(col, salt):
@@ -371,7 +310,7 @@ def _gen_scale_input(spark, n_pairs: int | None = None) -> None:
         return F.lower(F.translate(h, "0123456789abcdefghijklmnop",
                                    "abcdefghijklmnopqrstuvwxyz"))
 
-    pairs = base.select(
+    return base.select(
         word(F.col("id"), 1).alias("a"),
         # second string: same word for half the rows (accept path), an
         # unrelated word otherwise (reject path)
@@ -379,274 +318,122 @@ def _gen_scale_input(spark, n_pairs: int | None = None) -> None:
         .otherwise(word(F.col("id"), 2))
         .alias("b"),
     )
-    pairs.write.mode("overwrite").parquet(_scale_input_path(n_pairs))
 
 
-def gen_scale_input_worker(n_pairs: int | None = None) -> None:
-    # trust the cache only with its _SUCCESS marker: a deadline kill mid
-    # job-commit leaves partial part files, and measuring fewer than
-    # the requested pairs would silently overstate pairs_per_sec
-    path = _scale_input_path(n_pairs or SCALE_PAIRS)
-    if os.path.isdir(path) and os.path.exists(os.path.join(path, "_SUCCESS")):
-        print(json.dumps({"ok": True, "cached": True}))
-        return
-    _gen_scale_input(_fresh_spark(CPUS), n_pairs)
-    print(json.dumps({"ok": True, "cached": False}))
-
-
-def _score_job(
-    spark, cores: int, limit: int | None = None, n_pairs: int | None = None
-) -> tuple[float, int]:
-    """Kernel pair-scoring throughput: shared parquet -> repartition to
+def _score_job(spark, cores: int, limit: int | None = None) -> float:
+    """Kernel pair-scoring wall (s): shared parquet -> repartition to
     cores*4 (the shuffle is part of the measured job) -> vectorized
-    transposition distance -> count.  ``n_pairs`` selects which shared
-    input to read (default SCALE_PAIRS; BIG_PAIRS for the 8->32 pass)."""
+    transposition distance -> count."""
     from pyspark.sql import functions as F
 
     from liblevenshtein_rust_spark.functions.udfs import edit_distance_udf
 
-    df = spark.read.parquet(_scale_input_path(n_pairs or SCALE_PAIRS))
+    df = spark.read.parquet(SCALE_INPUT)
     if limit:
         df = df.limit(limit)
     pairs = df.repartition(cores * 4)
     dist = edit_distance_udf(2, "transposition")
     t0 = time.time()
-    n = pairs.select(dist(F.col("a"), F.col("b")).alias("d")).where(F.col("d") >= 0).count()
-    return time.time() - t0, n
-
-
-def host_probe() -> float:
-    """First-touch page-fault bandwidth in MB/s — the sandbox host
-    intermittently throttles fresh-page faults to ~10 MB/s (normal: >2000)
-    and the swings are larger than any code effect.  Recorded with every
-    scaling sample so degraded windows are visible in the output."""
-    import numpy as np
-
-    a = np.empty(12_500_000, dtype=np.float64)  # 100 MB untouched
-    t0 = time.time()
-    a.fill(1.0)
-    return round(100.0 / max(time.time() - t0, 1e-9), 1)
+    pairs.select(dist(F.col("a"), F.col("b")).alias("d")).where(F.col("d") >= 0).count()
+    return round(time.time() - t0, 3)
 
 
 def scale_partitions(n_docs: int) -> int:
     """Shuffle-partition count for the ER scaling runs, sized to the DATA
-    and therefore identical at every cluster size — the cluster model: a
-    real job targets ~128 MB per shuffle partition regardless of executor
-    count, and more executors means fewer task WAVES over the same
-    partitions.  Sizing partitions to cores (the interactive default) makes
-    the two cluster sizes run different plans.  Floor of 4x the largest
-    tested size (128) keeps every wave full at 32 cores; the data term
-    takes over at ~2M docs."""
+    and so identical at every cluster size: a real job targets ~128 MB per
+    shuffle partition whatever its executor count, and more executors mean
+    fewer task WAVES over the same partitions.  The floor of 128 (4x the
+    largest size) keeps every wave full at 32 cores."""
     return max(128, min(1024, n_docs // 15_000))
 
 
-def _er_pass(
-    spark, n_docs: int, prefix: str, n_part: int | None,
-    docs_path: str | None = None,
-) -> dict:
-    """One disposable ER pass: checkpoint dirs are ~400 MB each and a full
-    scaling campaign runs many passes — leaving them behind fills /tmp."""
-    d = tempfile.mkdtemp(prefix=prefix)
-    try:
-        return bench_er(spark, n_docs, d, partitions=n_part, docs_path=docs_path)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def er_docs_path(n_docs: int) -> str:
-    """Pre-staged er-mini input corpus (doc-count-suffixed like the score
-    input so a smoke size can never clobber a full-size measurement)."""
-    return f"/tmp/spark_graft_er_docs_{n_docs}.parquet"
-
-
-def gen_er_docs_worker(n_docs: int) -> None:
-    """Stage the er-mini docs parquet at FULL width, OUTSIDE any timed
-    window (VERDICT r4 task 1): generation was previously billed to the
-    2-core pass it preceded.  _SUCCESS-gated cache like the score input."""
-    from liblevenshtein_rust_spark.sources import fixtures
-
-    path = er_docs_path(n_docs)
-    if os.path.isdir(path) and os.path.exists(os.path.join(path, "_SUCCESS")):
-        print(json.dumps({"ok": True, "cached": True}))
-        return
-    spark = _fresh_spark(CPUS)
-    fixtures.generate_docs(
-        spark, n_docs, seed=42, partitions=scale_partitions(n_docs)
-    ).write.mode("overwrite").parquet(path)
-    print(json.dumps({"ok": True, "cached": False}))
-
-
-def _wait_clean(bound_s: float, min_mb_s: float = 300.0) -> float:
-    """Bounded probe-gate before a measured pass: throttle windows flip on
-    minute scales, so a short wait sharply raises the odds the pass lands
-    clean (the bracketing probes still record what happened)."""
-    t0 = time.time()
-    p = host_probe()
-    while p < min_mb_s and time.time() - t0 < bound_s:
-        time.sleep(10)
-        p = host_probe()
-    return p
-
-
 def scale_worker(cores: int) -> None:
-    """Subprocess entry: emulate a `cores`-core cluster by pinning affinity
-    BEFORE the JVM starts (inherited by executor threads + Python workers),
-    run the scaling job(s), print one JSON line.
+    """Subprocess entry: emulate a ``cores``-core cluster by pinning
+    affinity BEFORE the JVM starts (inherited by executor threads and Python
+    workers; unpinned, a local[8] run on a 32-core box quietly uses up to 16
+    cores and the comparison measures nothing), then take its readings.
 
-    Score job always (cold + steady full pass; per-size min over all passes
-    is the host-noise-robust estimator).  ER pipeline only in campaign mode
-    (SPARK_GRAFT_BENCH_SCALE_ER=1) — its 2-core passes are ~600 s each and
-    belong in the committed campaign artifact, not the driver budget."""
-    probe = host_probe()
+    The first full pass faults every executor/worker page once; first-touch
+    of fresh pages is 10-100x slower than steady state on a shared host and
+    SERIALIZES, so it anti-scales with cores.  The steady pass stands in for
+    a long-running cluster executor and is the one reading reported."""
     os.sched_setaffinity(0, set(range(cores)))
     n_part = scale_partitions(SCALE_DOCS) if SCALE_ER else None
     spark = _fresh_spark(cores, shuffle_partitions=n_part)
-    globals()["CPUS"] = cores  # partition counts follow the cluster size
-    out: dict = {"cores": cores, "host_probe_mb_s": probe}
+    out: dict = {"cores": cores}
+
+    def er_wall() -> float:
+        er = bench_er(spark, SCALE_DOCS, f"er_scale{cores}_", n_part)
+        out.update(er_stage_wall_s=er["stage_wall_s"],
+                   er_kernel_pairs=er["kernel_pairs"])
+        return er["wall_s"]
+
     if SCALE_ER:
         # ER runs FIRST: the score job's long-lived Python workers degrade a
         # shared session's later stages (observed 6-8x slowdowns).  Small
         # warm pass first (JVM heap growth, codegen, Arrow init, worker
         # spawn all fault fresh pages — a long-lived cluster executor is
-        # always warm; measure that regime), then cold + steady full passes.
-        _er_pass(spark, max(SCALE_DOCS // 25, 2000), f"er_warm{cores}_", n_part)
-        out["host_probe_pre_er_mb_s"] = _wait_clean(240)
-        er_cold = _er_pass(spark, SCALE_DOCS, f"er_cold{cores}_", n_part)
-        out["host_probe_mid_er_mb_s"] = _wait_clean(240)
-        er = _er_pass(spark, SCALE_DOCS, f"er_scale{cores}_", n_part)
-        out["host_probe_post_er_mb_s"] = host_probe()
-        out.update(
-            er_wall_s=er["wall_s"], er_wall_cold_s=er_cold["wall_s"],
-            er_stage_wall_s=er["stage_wall_s"],
-            er_kernel_pairs=er["kernel_pairs"],
-        )
-    # standalone invocation (the SKILL.md re-sample recipe) must not
-    # depend on a prior --gen-input phase: regenerate the shared input if
-    # the cache is missing/partial (one-time cost, before any measurement)
-    if not os.path.exists(os.path.join(SCALE_INPUT, "_SUCCESS")):
-        _gen_scale_input(spark)
+        # always warm; measure that regime).
+        bench_er(spark, max(SCALE_DOCS // 25, 2000), f"er_warm{cores}_", n_part)
+        take_readings(out, {"er_wall_cold_s": er_wall, "er_wall_s": er_wall})
     _score_job(spark, cores, limit=SCALE_PAIRS // 10)  # warm JIT/Arrow
-    # bounded probe gate: 12 s in driver-budget mode (under a sustained
-    # throttle window the old 20 s bound burned 60 s across the three
-    # workers for nothing — the per-size-min aggregation plus the second
-    # er-mini chance are the throttle defenses the budget can afford)
-    out["host_probe_pre_score_mb_s"] = _wait_clean(12 if not SCALE_ER else 120)
-    # First full pass faults every executor/worker page once — on this
-    # sandbox host first-touch of fresh pages is 10-100x slower than steady
-    # state and SERIALIZES host-side, so it anti-scales with cores.  The
-    # steady-state pass is the honest stand-in for a long-running cluster
-    # executor at the 10^12-doc regime; the cold pass is reported alongside.
-    # The steady pass runs only if the worker's deadline allowance (set by
-    # the parent from the remaining budget) covers it — the parent's
-    # per-size MIN aggregation works with whatever passes exist.
-    deadline = float(os.environ.get("SPARK_GRAFT_BENCH_WORKER_DEADLINE", "1e18"))
-    t_cold, _ = _score_job(spark, cores)
-    out["score_wall_cold_s"] = round(t_cold, 3)
-    # big-pair pass (8/32 cores only — the 8->32 compute-dominated reading,
-    # VERDICT r4 task 5): runs only when the big input is already staged
-    # with _SUCCESS (the parent gen phase, or a previous round's cache) and
-    # the projected wall fits this worker's allowance.  BEFORE the steady
-    # 16M pass: under a tight allowance the big reading is the one with no
-    # substitute (per-size min already has the cold 16M wall).  2 cores
-    # skip it: their 16M wall is already compute-bound and a 64M pass
-    # would cost ~160 s for no new information.
-    big_path = _scale_input_path(BIG_PAIRS)
-    if (
-        cores >= 8
-        and BIG_PAIRS > SCALE_PAIRS
-        and os.path.exists(os.path.join(big_path, "_SUCCESS"))
-        and time.time() + t_cold * (BIG_PAIRS / SCALE_PAIRS) * 1.05 < deadline
-    ):
-        out["host_probe_pre_big_mb_s"] = host_probe()
-        t_big, _ = _score_job(spark, cores, n_pairs=BIG_PAIRS)
-        out["score_wall_big_s"] = round(t_big, 3)
-        out["score_big_pairs"] = BIG_PAIRS
-    if time.time() + t_cold * 1.1 < deadline:
-        t, _ = _score_job(spark, cores)
-        out["score_wall_s"] = round(t, 3)
-    out["host_probe_after_mb_s"] = host_probe()
-    print(json.dumps(out))
+    score = lambda: _score_job(spark, cores)  # noqa: E731
+    take_readings(out, {"score_wall_cold_s": score, "score_wall_s": score})
 
 
-def er_mini_worker(cores: int, n_docs: int | None = None) -> None:
-    """Subprocess entry for the driver-budget reduced-corpus ER pair: pin
-    affinity, one small warm pass (JVM/codegen/Arrow/worker spawn), one
-    measured pass at ``n_docs`` (argv-passed so the parent's adaptive size
-    pick never touches the env-based smoke guard).  Same partition rule as
-    the campaign (data-sized, identical at every cluster size).  The
-    measured pass reads the pre-staged docs parquet (``gen_er_docs_worker``
-    — same input files at both sizes, generation outside the timing);
-    generated inline as a fallback only if the parent's staging phase was
-    skipped."""
-    n_docs = n_docs or ER_MINI_DOCS
-    probe = host_probe()
-    os.sched_setaffinity(0, set(range(cores)))
-    n_part = scale_partitions(n_docs)
-    spark = _fresh_spark(cores, shuffle_partitions=n_part)
-    globals()["CPUS"] = cores
-    docs = er_docs_path(n_docs)
-    if not os.path.exists(os.path.join(docs, "_SUCCESS")):
-        from liblevenshtein_rust_spark.sources import fixtures
+def er_docs_path(n_docs: int) -> str:
+    """Pre-staged ER input corpus, doc-count-suffixed like the score input."""
+    return f"/tmp/spark_graft_er_docs_{n_docs}.parquet"
 
-        fixtures.generate_docs(
-            spark, n_docs, seed=42, partitions=n_part
-        ).write.mode("overwrite").parquet(docs)
-    # smaller warm pass than the campaign's (n_docs//25): it exists only to
-    # fault JVM/Arrow/worker pages and trigger codegen — 1,200 docs do that
-    # and the saving (~25 s at 2 cores) is what lets the pair fit a driver
-    # window at all
-    _er_pass(spark, max(n_docs // 100, 1200), f"er_mini_warm{cores}_", n_part)
-    pre = host_probe()
-    er = _er_pass(spark, n_docs, f"er_mini{cores}_", n_part, docs_path=docs)
-    print(
-        json.dumps(
-            {
-                "cores": cores,
-                "n_docs": n_docs,
-                "wall_s": er["wall_s"],
-                "stage_wall_s": er.get("stage_wall_s"),
-                "host_probe_mb_s": probe,
-                "host_probe_pre_mb_s": pre,
-                "host_probe_post_mb_s": host_probe(),
-            }
-        )
+
+def er_docs_df(n_docs: int):
+    """The ER docs corpus at FULL width, staged by ``--gen-er-docs`` outside
+    any timed window so generation is never billed to a measured pass."""
+    from liblevenshtein_rust_spark.sources import fixtures
+
+    return fixtures.generate_docs(
+        _fresh_spark(CPUS), n_docs, seed=42, partitions=scale_partitions(n_docs)
     )
 
 
-def _run_worker(*args: str, timeout: float = 3600,
-                worker_deadline: float | None = None) -> dict:
-    """Run one measurement phase in a fresh subprocess.  The parent NEVER
-    starts a JVM: a lingering 48 GB driver JVM from an earlier phase was
-    measured to slow a concurrent subprocess's stages 3-6x (GC/memory
-    pressure), inverting scaling results.
+def er_mini_worker(cores: int, n_docs: int) -> None:
+    """Subprocess entry for one reduced-corpus ER reading: pin affinity,
+    one small warm pass (JVM/codegen/Arrow/worker spawn), one stamped pass
+    at ``n_docs`` over the docs staged by ``--gen-er-docs`` (same input
+    files at every size).  Same partition rule as the campaign."""
+    os.sched_setaffinity(0, set(range(cores)))
+    n_part = scale_partitions(n_docs)
+    spark = _fresh_spark(cores, shuffle_partitions=n_part)
+    # the warm pass only faults JVM/Arrow/worker pages and triggers codegen;
+    # 1,200 docs do that
+    bench_er(spark, max(n_docs // 100, 1200), f"er_mini_warm{cores}_", n_part)
+    out: dict = {"cores": cores, "n_docs": n_docs}
 
-    ``worker_deadline`` is this phase's budget ALLOWANCE (epoch seconds):
-    workers use it to decide optional second passes, so an early phase
-    can't greedily spend budget later phases need."""
-    import subprocess
+    def wall() -> float:
+        er = bench_er(spark, n_docs, f"er_mini{cores}_", n_part,
+                      docs_path=er_docs_path(n_docs))
+        out["stage_wall_s"] = er["stage_wall_s"]
+        return er["wall_s"]
 
-    env = dict(os.environ,
-               SPARK_GRAFT_BENCH_SCALE_PAIRS=str(SCALE_PAIRS),
-               SPARK_GRAFT_BENCH_DOCS=str(N_DOCS),
-               SPARK_GRAFT_BENCH_WORKER_DEADLINE=str(
-                   worker_deadline if worker_deadline is not None
-                   else _DEADLINE[0] - 15))
+    take_readings(out, {"wall_s": wall})
+
+
+def _run_worker(*args: str, timeout: float) -> dict:
+    """Run one phase in a fresh subprocess and return its last JSON line
+    (the parent NEVER starts a JVM: a lingering driver JVM was measured to
+    slow a concurrent subprocess's stages 3-6x).  On a time-box kill, the
+    last complete line of the partial stdout, with ``_truncated`` set."""
     try:
         out = subprocess.run(
             [sys.executable, os.path.abspath(__file__), *args],
-            capture_output=True, text=True, env=env,
-            timeout=max(timeout, 60), check=True,
+            capture_output=True, text=True, timeout=timeout, check=True,
         )
-        stdout = out.stdout
+        return json.loads(out.stdout.strip().splitlines()[-1])
     except subprocess.TimeoutExpired as exc:
-        # salvage: workers emit cumulative JSON lines per sub-phase, so a
-        # timeout kill mid-worker still leaves a complete record of what
-        # finished — parse the last complete line of the partial stdout
-        # (bytes in text mode on the TimeoutExpired path)
+        # bytes, even in text mode, on the TimeoutExpired path
         raw = exc.stdout or b""
         stdout = raw.decode(errors="replace") if isinstance(raw, bytes) else raw
-        lines = [ln for ln in stdout.strip().splitlines() if ln.strip()]
-        for ln in reversed(lines):
+        for ln in reversed(stdout.strip().splitlines()):
             try:
                 salvaged = json.loads(ln)
             except ValueError:
@@ -655,167 +442,60 @@ def _run_worker(*args: str, timeout: float = 3600,
                 salvaged["_truncated"] = True
                 return salvaged
         raise
-    return json.loads(stdout.strip().splitlines()[-1])
 
 
-def build_scaling(samples: dict[int, list], errors: list) -> dict:
-    """Aggregate worker samples into the scaling block.  Per-size min over
-    all full-size passes (cold + steady, all reps): the minimum is the
-    observation closest to an unthrottled host; every sample stays in the
-    detail file so degraded windows are visible."""
-    sizes = sorted(c for c in samples if samples[c])
-    if not sizes:
-        return {"errors": errors}
+def _efficiency(sizes: list[int], walls: dict, n: int, rate: str) -> dict:
+    """Walls, rates and N -> 4N pair efficiencies over the planned
+    ``sizes``; a size without an accepted wall nulls its pairs."""
+    ok = [c for c in sizes if walls.get(c) is not None]
+    pairs = {
+        f"{a}->{b}": round((walls[a] / walls[b]) / (b / a), 3)
+        if a in ok and b in ok else None
+        for a, b in zip(sizes, sizes[1:])
+    }
+    # headline = the compute-rich low pair (the high pair runs into the
+    # single-box fixed floor + shared-DRAM ceiling, measured 0.79 for 32-way
+    # pure NumPy on a 32-core box — it understates a real cluster)
+    head = f"{sizes[0]}->{sizes[1]}" if len(sizes) > 1 else None
+    return {
+        "walls_s": {str(c): walls[c] for c in ok},
+        rate: {str(c): round(n / walls[c], 1) for c in ok},
+        "pairs": pairs,
+        "efficiency": pairs.get(head),
+        "headline_pair": head,
+    }
 
-    def best(cores: int, key: str, cold_key: str) -> float | None:
-        walls = [
-            w
-            for s in samples[cores]
-            for w in (s.get(key), s.get(cold_key))
-            if w is not None
-        ]
-        return min(walls) if walls else None
 
-    score_wall = {c: best(c, "score_wall_s", "score_wall_cold_s") for c in sizes}
-    score_sz = [c for c in sizes if score_wall.get(c) is not None]
+def build_scaling(samples: list[dict], errors: list[dict]) -> dict:
+    """Aggregate the scale workers' samples (one per size) into the scaling
+    block by the rule fixed in advance: each size reports its steady-pass
+    wall (``score_wall_s``; ``er_wall_s`` in campaign mode) unless that
+    reading was rejected.  No other field is read, so cold walls never
+    count and nothing is chosen across readings.  Sizes whose worker failed
+    (``errors``) stay in the plan, so the headline pair never shifts."""
+    sizes = sorted({s["cores"] for s in samples} | {e["cores"] for e in errors})
     out: dict = {
         "cores": sizes,
         "affinity_pinned": True,
-        "aggregation": "per-size min over all full-size passes "
-        "(cold+steady, all reps — host-noise robust)",
-        "samples": [s for c in sizes for s in samples[c]],
+        "aggregation": AGGREGATION,
+        "samples": samples,
         "errors": errors,
-        "score_job": {
-            "pairs_scored": SCALE_PAIRS,
-            "walls_s": {str(c): score_wall[c] for c in score_sz},
-            "pairs_per_sec": {
-                str(c): round(SCALE_PAIRS / score_wall[c]) for c in score_sz
-            },
-            # every adjacent pair is an N -> 4N comparison; headline = the
-            # compute-rich low pair (the high pair runs into the single-box
-            # fixed floor + shared-DRAM ceiling, measured 0.79 for 32-way
-            # pure NumPy on this host — it understates a real cluster)
-            "pairs": {
-                f"{a}->{b}": round((score_wall[a] / score_wall[b]) / (b / a), 3)
-                for a, b in zip(score_sz, score_sz[1:])
-            },
-            "efficiency": round(
-                (score_wall[score_sz[0]] / score_wall[score_sz[1]])
-                / (score_sz[1] / score_sz[0]), 3,
-            ) if len(score_sz) > 1 else None,
-            "headline_pair": f"{score_sz[0]}->{score_sz[1]}"
-            if len(score_sz) > 1 else None,
-        },
+        "score_job": {"pairs_scored": SCALE_PAIRS, **_efficiency(
+            sizes, {s["cores"]: accepted(s, "score_wall_s") for s in samples},
+            SCALE_PAIRS, "pairs_per_sec",
+        )},
+        "er_pipeline": "campaign artifact: BASELINE.md §scaling",
     }
-    # big-pair pass aggregation (8->32 in the compute-dominated regime):
-    # when two sizes carry a BIG_PAIRS wall, their pairwise reading
-    # replaces the 16M one in `pairs` (with the pair count recorded per
-    # pair in `pair_pairs_scored`) — at 16M the 32-core wall is ~1/3 fixed
-    # cost and 8->32 understates; the 2->8 headline stays at SCALE_PAIRS.
-    # Replace ONLY when the big reading is the better one: a big pass that
-    # landed in a throttle window (page-fault bandwidth collapses 10-100x
-    # and serializes host-side; measured 87 s for a 32-core 64M pass whose
-    # clean-window wall is ~18 s) is evidence about the HOST, not about
-    # scaling — both readings stay in the artifact either way.
-    big_wall = {
-        c: min(s["score_wall_big_s"] for s in samples[c] if "score_wall_big_s" in s)
-        for c in sizes
-        if any("score_wall_big_s" in s for s in samples[c])
-    }
-    if len(big_wall) > 1:
-        bs = sorted(big_wall)
-        n_big = next(
-            s["score_big_pairs"]
-            for c in bs
-            for s in samples[c]
-            if "score_big_pairs" in s
-        )
-        sj = out["score_job"]
-        sj["big"] = {
-            "pairs_scored": n_big,
-            "walls_s": {str(c): big_wall[c] for c in bs},
-            "pairs": {
-                f"{a}->{b}": round((big_wall[a] / big_wall[b]) / (b / a), 3)
-                for a, b in zip(bs, bs[1:])
-            },
-        }
-        sj["pair_pairs_scored"] = {k: SCALE_PAIRS for k in sj["pairs"]}
-        for k, v in sj["big"]["pairs"].items():
-            if k not in sj["pairs"] or v > sj["pairs"][k]:
-                sj["pairs"][k] = v
-                sj["pair_pairs_scored"][k] = n_big
-    er_sz = [c for c in sizes if any("er_wall_s" in s for s in samples[c])]
-    if er_sz:
-        er_wall = {c: best(c, "er_wall_s", "er_wall_cold_s") for c in er_sz}
-
-        def er_min_sample(cores: int) -> dict:
-            # stage breakdown must come from the SAME sample (host window)
-            # that produced the reported min er_wall
-            return min(
-                (s for s in samples[cores] if "er_wall_s" in s),
-                key=lambda s: min(
-                    s["er_wall_s"], s.get("er_wall_cold_s") or s["er_wall_s"]
-                ),
-            )
-
-        out["er_pipeline"] = {
-            "n_docs": SCALE_DOCS,
-            "walls_s": {str(c): er_wall[c] for c in er_sz},
-            "docs_per_sec": {
-                str(c): round(SCALE_DOCS / er_wall[c], 1) for c in er_sz
-            },
-            "stage_wall_s": {
-                str(c): er_min_sample(c).get("er_stage_wall_s") for c in er_sz
-            },
-            "pairs": {
-                f"{a}->{b}": round((er_wall[a] / er_wall[b]) / (b / a), 3)
-                for a, b in zip(er_sz, er_sz[1:])
-            },
-            "efficiency": round(
-                (er_wall[er_sz[0]] / er_wall[er_sz[1]])
-                / (er_sz[1] / er_sz[0]), 3,
-            ) if len(er_sz) > 1 else None,
-            "headline_pair": f"{er_sz[0]}->{er_sz[1]}" if len(er_sz) > 1 else None,
-        }
-    else:
-        out["er_pipeline"] = "campaign artifact: BASELINE.md §scaling"
+    if any("er_wall_s" in s for s in samples):
+        out["er_pipeline"] = {"n_docs": SCALE_DOCS, **_efficiency(
+            sizes, {s["cores"]: accepted(s, "er_wall_s") for s in samples},
+            SCALE_DOCS, "docs_per_sec",
+        )}
     return out
 
 
-# --------------------------------------------------------------------------
-# orchestration
-# --------------------------------------------------------------------------
-
-# per-worker single-pass wall estimates (s) for the budget guard:
-# JVM spin-up + warm + probe-gate + ONE full scoring pass, calibrated from
-# measured throttled-window worker walls at 16M pairs (158/81/48 s for
-# 2/8/32 incl. the second pass); scaled linearly in SCALE_PAIRS
-_SCORE_EST = {1: 180.0, 2: 95.0, 4: 70.0, 8: 55.0, 16: 45.0, 32: 40.0}
-
-
-def _score_est(cores: int) -> float:
-    base = _SCORE_EST.get(cores, 60.0)
-    return 20.0 + (base - 20.0) * (SCALE_PAIRS / 12_000_000)
-
-
-# budget to reserve for the headline phase: JVM ~15 s + warm ~45 s + one
-# query pass ~155 s + ER 8k ~20 s — english + second passes ride any
-# surplus.  Round 5: the main worker emits cumulative lines per sub-phase
-# and the parent salvages partial stdout on a timeout kill, so a shortfall
-# here degrades the record gracefully (loses second passes, then english)
-# instead of catastrophically (losing the whole query record) — which is
-# what lets the er-mini phase spend ahead of it.
-_RESERVE_MAIN = 235.0
-
-# budget the scale workers must leave for the er-mini pair's smallest
-# worthwhile size (gen ~25 s + 2-core ~55 s + 8-core ~42 s + slack) — an
-# ALLOWANCE cap on their optional steady/big passes, not a skip-guard term
-# (score scaling outranks er-mini under a degraded window)
-_ER_MINI_RESERVE = 140.0
-
-
 def main() -> None:
-    _DEADLINE[0] = time.time() + BUDGET_S
+    deadline = time.time() + BUDGET_S
     result: dict = {"sf": SF_DIR.rstrip("/").split("sf")[-1], "queries": {}}
     notes: list[str] = []
 
@@ -826,343 +506,65 @@ def main() -> None:
         if notes:
             result["notes"] = notes[-3:]
         result["metric"] = "headline_total"
+        ok = result["queries"] and result.get("er") and "queries_partial" not in result
         result["value"] = (
             round(sum(result["queries"].values()) + result["er"]["wall_s"], 3)
-            if result.get("queries")
-            and result.get("er")
-            and not result.get("queries_partial")
-            else None
+            if ok else None
         )
         result["unit"] = "sec"
-        # smoke guard: any shrunken knob (or non-default SF dir) must not
-        # clobber the committed full-run BENCH_DETAIL.json
-        smoke = any(
-            os.environ.get(k)
-            for k in (
-                "SPARK_GRAFT_BENCH_SCALE_PAIRS",
-                "SPARK_GRAFT_BENCH_SCALE_DOCS",
-                "SPARK_GRAFT_BENCH_SCALE_REPS",
-                "SPARK_GRAFT_BENCH_SCALING",
-                "SPARK_GRAFT_BENCH_BUDGET_S",
-                "SPARK_GRAFT_BENCH_SCALE_ER",
-                "SPARK_GRAFT_BENCH_ER_MINI_DOCS",
-            )
-        ) or "sf0.1" not in SF_DIR
-        detail_name = os.environ.get(
-            "SPARK_GRAFT_BENCH_DETAIL_NAME",
-            "BENCH_DETAIL_smoke.json" if smoke else "BENCH_DETAIL.json",
-        )
         try:
-            (Path(__file__).resolve().parent / detail_name).write_text(
+            (Path(__file__).resolve().parent / DETAIL_NAME).write_text(
                 json.dumps(result, indent=1) + "\n"
             )
         except OSError:
             pass
         print(json.dumps(compact_result(result), separators=(",", ":")), flush=True)
 
-    samples: dict[int, list] = {}
-    errors: list[dict] = []
+    def phase(box_s: float, *args: str) -> dict:
+        """One phase inside its time box, cut to the run's deadline."""
+        box = min(box_s, deadline - time.time() - 10)
+        if box < 30:
+            raise TimeoutError(f"{int(box)} s of budget left")
+        return _run_worker(*args, timeout=box)
 
-    def run_scale(cores: int, reserve_after: float) -> None:
-        # allowance: the worker may take its optional steady pass only out
-        # of budget not reserved for later phases
-        allowance = max(
-            _score_est(cores), time_left() - reserve_after
-        )
-        try:
-            s = _run_worker("--scale-worker", str(cores),
-                            timeout=max(time_left() - 10, 60),
-                            worker_deadline=time.time() + allowance)
-        except Exception as exc:  # noqa: BLE001
-            errors.append({"cores": cores, "error": repr(exc)[:200],
-                           "stderr_tail": str(getattr(exc, "stderr", "") or "")[-1200:]})
-        else:
-            samples.setdefault(cores, []).append(s)
-        sc = build_scaling(samples, errors)
-        if isinstance(result.get("scaling"), dict):
-            for k in ("er_mini", "er_mini_partial"):
-                if k in result["scaling"]:
-                    sc[k] = result["scaling"][k]
-        result["scaling"] = sc
-
-    if DO_SCALING:
-        try:
-            _run_worker("--gen-input", timeout=max(time_left() - _RESERVE_MAIN, 120))
-        except Exception as exc:  # noqa: BLE001
-            notes.append(f"gen-input failed: {repr(exc)[:120]}")
-            emit()
-        else:
-            if BIG_PAIRS > SCALE_PAIRS and time_left() > _RESERVE_MAIN + 250:
-                # stage the 64M input for the 8/32 big passes (cached with
-                # _SUCCESS across rounds — instant when present); generous
-                # budget guard because a cold gen is a full parquet write.
-                # Its failure must not take the 16M scaling phase with it —
-                # the workers simply skip the big pass when _SUCCESS is
-                # absent.
-                try:
-                    _run_worker(
-                        "--gen-input", str(BIG_PAIRS),
-                        timeout=max(time_left() - _RESERVE_MAIN - 120, 120),
-                    )
-                except Exception as exc:  # noqa: BLE001
-                    notes.append(f"gen-big-input failed: {repr(exc)[:100]}")
-            tiny, low = max(CPUS // 16, 1), max(CPUS // 4, 1)
-            sizes = sorted({tiny, low, CPUS})
-            # headline pair (tiny, low) first: if the budget dies early the
-            # compute-rich N->4N comparison is already on record; dedup
-            # preserves that order (at CPUS=4, tiny == low == 1)
-            order = list(dict.fromkeys([tiny, low, CPUS]))
-            reserve = _RESERVE_MAIN if not SCALE_ER else 0.0
-            # er-mini rides AFTER the scale workers but BEFORE the main
-            # worker (round 5): keep its smallest worthwhile pair out of
-            # the scale workers' luxury-spend allowance (steady + big
-            # passes), but NOT out of the skip guard — score scaling
-            # outranks er-mini when the window is degraded
-            er_allow = _ER_MINI_RESERVE if not SCALE_ER else 0.0
-            for i, cores in enumerate(order):
-                later = sum(_score_est(c) for c in order[i + 1:])
-                if (
-                    cores == CPUS
-                    and len(order) > 2
-                    and not SCALE_ER
-                    and host_probe() < 300.0
-                ):
-                    # throttle-window triage: the north rule's two-size
-                    # criterion is the 2->8 pair already on record; the
-                    # CPUS-size worker is the bonus third point (its 16M
-                    # 8->32 reading is fixed-cost-bound anyway, and the
-                    # compute-dominated 64M evidence lives in the
-                    # committed campaign artifact).  Under a throttled
-                    # window its ~55 s is exactly the margin the er-mini
-                    # ER-pipeline pair is missing — yield it.
-                    notes.append(
-                        f"scale size {cores} yielded to er-mini (throttle)"
-                    )
-                    continue
-                if time_left() < _score_est(cores) + reserve:
-                    notes.append(f"scale size {cores} skipped (budget)")
-                    continue
-                run_scale(cores, reserve + later + er_allow)
-                emit()
-            # campaign mode reps: alternate sizes so they sample comparable
-            # host windows; per-size min rescues throttled samples
-            for _rep in range(SCALE_REPS - 1):
-                for cores in sizes:
-                    if time_left() < _score_est(cores) + reserve:
-                        continue
-                    run_scale(cores, reserve)
-                    emit()
-
-    # Reduced-corpus ER scaling pair — ON the driver record (VERDICT r4
-    # task 1).  Round-4 lesson: this phase sat AFTER the main worker,
-    # whose elastic second-pass loop + a reserve that required a 300 s
-    # surplus meant it fired with 16 s left; it now runs BEFORE the main
-    # worker, which is the one phase that can absorb whatever remains.
-    # Input docs are PRE-STAGED at full width (gen worker, _SUCCESS-gated
-    # cache) so both timed passes read byte-identical parquet and
-    # generation never bills the 2-core window.  Size picked adaptively
-    # from the real remaining budget; the smallest sizes are
-    # fixed-cost-dominated and UNDERSTATE the campaign number — the block
-    # is flagged as a floor, the committed 1.2M-doc campaign artifact
-    # stays the headline ER gate.  (docs, est_2core_s, est_8core_s) incl.
-    # JVM + warm pass, calibrated round 5 with pre-staged input.
-    # WORKER-TOTAL estimates (JVM ~12 s + trimmed warm + measured pass),
-    # calibrated round 5 with pre-staged input under a mildly throttled
-    # window (2-core 120k measured pass 88-95 s, worker total ~180 s with
-    # the old n/25 warm; the n/100 warm saves ~25 s at 2 cores)
-    # clean-window worker-TOTAL estimates (JVM ~12 s + trimmed warm +
-    # measured pass + teardown), re-calibrated against the round-5 floor
-    # curve's measured walls; the throttle probe scales them 1.5x
-    ER_MINI_SIZES = (
-        (300_000, 215.0, 110.0),
-        (200_000, 165.0, 90.0),
-        (120_000, 115.0, 70.0),
-        (60_000, 85.0, 55.0),
-        (30_000, 70.0, 50.0),
-    )
-    # completed er-mini passes survive across attempts: the pre-main try
-    # often lands the expensive 2-core pass and then runs out of room for
-    # the 8-core one — the post-main retry completes the PAIR for ~50 s
-    # instead of re-spending the 2-core wall (samples from different host
-    # windows are already the norm: the two sizes run sequentially anyway,
-    # and both probe brackets stay in the samples)
-    er_mini_cache: dict[tuple[int, int], dict] = {}
-
-    def try_er_mini(reserve: float) -> bool:
-        """One attempt at the pair against `reserve` (the budget later
-        phases still need).  Returns True when the pair landed."""
-        pick = None
-        # probe-aware sizing: under an active throttle window (first-touch
-        # bandwidth < ~300 MB/s) the measured er-mini walls run ~1.5-2x the
-        # clean estimates — run-4 lesson: a pass admitted on thin margins
-        # outran its timeout AND starved the main worker.  Inflate the
-        # estimates instead of trusting them.
-        throttle_scale = 1.5 if host_probe() < 300.0 else 1.0
-        if os.environ.get("SPARK_GRAFT_BENCH_ER_MINI_DOCS"):
-            pick = (ER_MINI_DOCS, 200.0 * throttle_scale, 95.0 * throttle_scale)
-        else:
-            for raw in ER_MINI_SIZES:
-                # a size with one side already sampled only needs the
-                # missing side's budget — the retry completes the pair
-                size = (
-                    raw[0],
-                    0.0 if (raw[0], 2) in er_mini_cache
-                    else raw[1] * throttle_scale,
-                    0.0 if (raw[0], 8) in er_mini_cache
-                    else raw[2] * throttle_scale,
-                )
-                # gen margin is cache-aware: with the _SUCCESS-staged docs
-                # parquet already on disk (pre-seeded, or any earlier round
-                # of this host) the gen worker is a ~3 s no-JVM check — a
-                # flat 45 s margin skipped a fitting pair by 13 s in the
-                # first round-5 driver-shaped run
-                staged = os.path.exists(
-                    os.path.join(er_docs_path(size[0]), "_SUCCESS")
-                )
-                if time_left() - reserve > size[1] + size[2] + (
-                    8 if staged else 45
-                ):
-                    pick = size
-                    break
-        if pick is None:
-            # visible on the driver record: the phase was considered, the
-            # window didn't fit even the smallest pair on top of the
-            # reserve still owed to later phases
-            notes.append(f"er-mini skipped (window {int(time_left())}s)")
-            emit()
-            return False
-        docs, est2, est8 = pick
-        try:
-            _run_worker(
-                "--gen-er-docs", str(docs),
-                timeout=max(time_left() - reserve - est2 - est8, 60),
-            )
-        except Exception as exc:  # noqa: BLE001
-            notes.append(f"gen-er-docs failed: {repr(exc)[:100]}")
-        mini: dict[int, dict] = {
-            c: er_mini_cache[(docs, c)]
-            for c in (2, 8)
-            if (docs, c) in er_mini_cache
-        }
-        for cores, est, later in ((2, est2, est8), (8, est8, 0.0)):
-            if cores in mini:
-                continue
-            if time_left() - reserve < est + later:
-                notes.append(f"er-mini {cores} skipped (budget)")
-                break
-            try:
-                mini[cores] = _run_worker(
-                    "--er-mini-worker", str(cores), str(docs),
-                    timeout=max(min(est * 3, time_left() - reserve + 30), 60),
-                )
-                er_mini_cache[(docs, cores)] = mini[cores]
-            except Exception as exc:  # noqa: BLE001
-                notes.append(f"er-mini {cores} failed: {repr(exc)[:100]}")
-                break
-        if len(mini) != 2:
-            if mini:
-                # one-sided evidence stays on the record (and in the cache
-                # for a later attempt to complete)
-                result.setdefault("scaling", {})["er_mini_partial"] = {
-                    str(c): {"n_docs": docs, "wall_s": s["wall_s"]}
-                    for c, s in mini.items()
-                }
-            return False
-        w2, w8 = mini[2]["wall_s"], mini[8]["wall_s"]
-        result.setdefault("scaling", {}).pop("er_mini_partial", None)
-        result["scaling"]["er_mini"] = {
-            "n_docs": docs,
-            "walls_s": {"2": w2, "8": w8},
-            "efficiency_2_8": round(w2 / w8 / 4, 3),
-            "floor": True,
-            "samples": mini,
-            "note": (
-                "driver-budget reduced-corpus pair over pre-staged "
-                "shared input; a FLOOR on the campaign number "
-                "(fixed per-stage cost share grows as docs shrink) "
-                "- see bench_artifacts/ for the "
-                "1.2M-doc gate"
-            ),
-        }
-        emit()
-        return True
-
-    er_mini_done = not (DO_SCALING and not SCALE_ER)
-    if not er_mini_done and time_left() > 60:
-        er_mini_done = try_er_mini(_RESERVE_MAIN)
-
-    # headline phase — LAST of the mandatory phases: its second-pass loop
-    # is the one elastic consumer, so it absorbs whatever the scaling +
-    # er-mini phases left (round-5 reorder; r4's trailing er-mini starved
-    # at 16 s behind this worker's elastic loop).
-    if time_left() > 60:
-        # if the pre-main er-mini attempt landed ONE side (the 2-core pass
-        # typically — a throttle window stretched it past its estimate and
-        # starved the other), carve the missing side's budget out of the
-        # main worker's ELASTIC deadline so the post-main retry can
-        # complete the pair from the cache: without this the second-pass
-        # loop runs to deadline-10 and the retry is dead code (observed:
-        # two runs ended with a one-sided er_mini_partial and ~5 s left)
-        retry_reserve = (
-            110.0 if (not er_mini_done and er_mini_cache) else 0.0
-        )
-        try:
-            head = _run_worker(
-                "--main-worker",
-                # the reserve must come out of the parent KILL timeout too,
-                # not only the worker's soft deadline — the first query
-                # pass ignores the deadline and would otherwise run to the
-                # kill, leaving the retry its usual ~5 s (run-9 lesson);
-                # a truncated pass degrades gracefully (partial salvage)
-                timeout=max(time_left() - 5 - retry_reserve, 60),
-                worker_deadline=time.time()
-                + max(time_left() - 5 - retry_reserve, 120),
-            )
-        except Exception as exc:  # noqa: BLE001
-            notes.append(f"main-worker failed: {repr(exc)[:120]}")
-        else:
-            if head.pop("_truncated", False):
-                if head.pop("_partial", False):
-                    # mid-query-pass kill: the walls on record are a
-                    # partial set — keep them, but a headline_total summed
-                    # over a partial set would READ AS faster-than-baseline
-                    result["queries_partial"] = True
-                    notes.append(
-                        "main-worker truncated mid-pass - partial query set,"
-                        " headline_total withheld"
-                    )
-                else:
-                    notes.append(
-                        "main-worker truncated (budget) - partial record"
-                    )
-            result["queries"] = head.get("queries", {})
-            result["queries_cold"] = head.get("queries_cold", {})
-            if "er" in head:
-                result["er"] = head["er"]
-            result["english_dict"] = head.get("english_dict", {})
-            sw = (result.get("scaling") or {}).get("score_job", {}).get("walls_s", {})
-            if str(CPUS) in sw and result.get("er"):
-                result["er"]["pairs_per_sec"] = round(SCALE_PAIRS / sw[str(CPUS)])
-        emit()
+    try:
+        phase(GEN_BOX_S, "--gen-input")
+    except Exception as exc:  # noqa: BLE001
+        notes.append(f"gen-input failed: {repr(exc)[:120]}")
     else:
-        notes.append("main-worker skipped (budget)")
-        emit()
-
-    # er-mini second chance: a throttled scaling phase often leaves a
-    # surplus below the pre-main gate but the main worker then underruns
-    # its reserve — retry the pair on whatever actually remains before
-    # the (optional) top-up reps get it
-    if not er_mini_done and time_left() > 100:
-        er_mini_done = try_er_mini(20.0)
-
-    # top-up: extra scaling reps with whatever budget remains (per-size min
-    # over more samples = more robust efficiency estimate)
-    if DO_SCALING and samples:
-        for cores in sorted(samples, key=lambda c: len(samples[c])):
-            if time_left() < _score_est(cores) + 15:
-                continue
-            run_scale(cores, 15)
+        samples: list[dict] = []
+        errors: list[dict] = []
+        # headline pair (tiny, low) first; dedup keeps that order (at
+        # CPUS=4, tiny == low == 1)
+        for cores in dict.fromkeys([max(CPUS // 16, 1), max(CPUS // 4, 1), CPUS]):
+            try:
+                s = phase(SCALE_BOX_S, "--scale-worker", str(cores))
+            except Exception as exc:  # noqa: BLE001
+                stderr = str(getattr(exc, "stderr", "") or "")
+                errors.append({"cores": cores, "error": repr(exc)[:200],
+                               "stderr_tail": stderr[-1200:]})
+            else:
+                samples.append(s)
+                if accepted(s, "score_wall_s") is None:
+                    why = s.get("rejected", {}).get("score_wall_s", "missing")
+                    notes.append(f"scale size {cores}: steady pass {why}")
+            result["scaling"] = build_scaling(samples, errors)
             emit()
+
+    try:
+        head = phase(MAIN_BOX_S, "--main-worker")
+    except Exception as exc:  # noqa: BLE001
+        notes.append(f"main-worker failed: {repr(exc)[:120]}")
+    else:
+        if head.pop("_truncated", False):
+            notes.append("main-worker truncated by its time box")
+        if head.pop("_partial", False):
+            # mid-query-pass kill: the walls on record are a partial set —
+            # keep them, but a headline_total summed over a partial set
+            # would READ AS faster-than-baseline
+            result["queries_partial"] = True
+        result.update(head)
+    emit()
 
 
 def compact_result(result: dict) -> dict:
@@ -1172,81 +574,47 @@ def compact_result(result: dict) -> dict:
     the END of the serialized line (the part a bounded stdout tail
     preserves — the round harness stores only the last ~2000 chars and
     JSON-parses the final line)."""
+    def pick(d: dict, keys: str) -> dict:
+        return {k: d[k] for k in keys.split() if k in d}
+
     out: dict = {"sf": result.get("sf")}
     out["queries"] = {k: round(v, 1) for k, v in result.get("queries", {}).items()}
-    er = result.get("er", {})
-    out["er"] = {
-        k: er[k]
-        for k in ("n_docs", "wall_s", "docs_per_sec", "kernel_pairs", "pairs_per_sec")
-        if k in er
-    }
+    out["er"] = pick(result.get("er", {}), "n_docs wall_s docs_per_sec kernel_pairs")
     if result.get("english_dict"):
         out["english_dict"] = result["english_dict"]
     if result.get("notes"):
         out["notes"] = result["notes"]
     if isinstance(result.get("scaling"), dict):
         s = result["scaling"]
-        sj = s.get("score_job", {})
-        out["scaling"] = {
-            "detail": "BENCH_DETAIL.json",
-            # pairs_per_sec per size = pairs_scored / walls_s (detail file);
-            # compact keeps the walls + both pairwise efficiencies
-            "score_job": {
-                k: sj[k]
-                for k in (
-                    "pairs_scored", "walls_s", "pairs", "pair_pairs_scored",
-                    "efficiency", "headline_pair",
-                )
-                if k in sj
-            },
-        }
+        # pairs_per_sec per size = pairs_scored / walls_s (detail file);
+        # compact keeps the walls + both pairwise efficiencies
+        out["scaling"] = {"detail": "BENCH_DETAIL.json", "score_job": pick(
+            s.get("score_job", {}),
+            "pairs_scored walls_s pairs efficiency headline_pair",
+        )}
         ep = s.get("er_pipeline")
         if isinstance(ep, dict):
-            out["scaling"]["er_pipeline"] = {
-                k: ep[k]
-                for k in (
-                    "n_docs", "walls_s", "pairs", "efficiency", "headline_pair",
-                )
-                if k in ep
-            }
-        elif ep:
+            ep = pick(ep, "n_docs walls_s pairs efficiency headline_pair")
+        if ep:
             out["scaling"]["er_pipeline"] = ep
-        em = s.get("er_mini")
-        if isinstance(em, dict):
-            out["scaling"]["er_mini"] = {
-                k: em[k]
-                for k in ("n_docs", "walls_s", "efficiency_2_8", "floor")
-                if k in em
-            }
-        emp = s.get("er_mini_partial")
-        if isinstance(emp, dict):
-            out["scaling"]["er_mini_partial"] = emp
     for k in ("metric", "value", "unit"):
         out[k] = result.get(k)
     # hard guard on the ~1900-char stdout contract: fold the FASTEST queries
     # into an "_others" aggregate one at a time until the line fits — the
     # slow walls a reader actually wants stay named; the full set stays in
     # the detail file
-    def _len(d: dict) -> int:
-        return len(json.dumps(d, separators=(",", ":")))
-
-    if _len(out) > 1900 and out["queries"]:
-        by_wall = sorted(out["queries"], key=lambda k: (out["queries"][k], k))
-        dropped: list[str] = []
-        while _len(out) > 1900 and len(dropped) < len(by_wall):
-            name = by_wall[len(dropped)]
-            dropped.append(name)
-            kept = {
-                k: v for k, v in out["queries"].items() if k not in dropped
-            }
-            kept["_others"] = {
-                "n": len(dropped),
-                "total_s": round(
-                    sum(result["queries"][k] for k in dropped), 1
-                ),
-                "detail": "BENCH_DETAIL.json",
-            }
-            out["queries"] = kept
+    q = out["queries"]
+    by_wall = sorted(q, key=lambda k: (q[k], k))
+    n = 0
+    while len(json.dumps(out, separators=(",", ":"))) > 1900 and n < len(by_wall):
+        n += 1
+        gone = set(by_wall[:n])
+        out["queries"] = {k: v for k, v in q.items() if k not in gone}
+        out["queries"]["_others"] = {
+            "n": n,
+            "total_s": round(sum(result["queries"][k] for k in gone), 1),
+            "detail": "BENCH_DETAIL.json",
+        }
     return out
 
 
@@ -1255,16 +623,12 @@ if __name__ == "__main__":
         scale_worker(int(sys.argv[2]))
     elif len(sys.argv) >= 2 and sys.argv[1] == "--main-worker":
         main_worker()
-    elif len(sys.argv) >= 3 and sys.argv[1] == "--er-mini-worker":
-        er_mini_worker(
-            int(sys.argv[2]),
-            int(sys.argv[3]) if len(sys.argv) >= 4 else None,
-        )
+    elif len(sys.argv) >= 4 and sys.argv[1] == "--er-mini-worker":
+        er_mini_worker(int(sys.argv[2]), int(sys.argv[3]))
     elif len(sys.argv) >= 2 and sys.argv[1] == "--gen-input":
-        gen_scale_input_worker(
-            int(sys.argv[2]) if len(sys.argv) >= 3 else None
-        )
+        _stage(SCALE_INPUT, scale_pairs_df)
     elif len(sys.argv) >= 3 and sys.argv[1] == "--gen-er-docs":
-        gen_er_docs_worker(int(sys.argv[2]))
+        n = int(sys.argv[2])
+        _stage(er_docs_path(n), lambda: er_docs_df(n))
     else:
         main()

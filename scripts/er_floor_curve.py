@@ -1,6 +1,6 @@
 """Measure the ER-pipeline 2-vs-8-core scaling pair at several corpus
-sizes — the FLOOR CURVE behind the driver-budget er-mini block's
-``"floor": true`` flag.
+sizes — the FLOOR CURVE: how far a reduced corpus understates the 1.2M-doc
+campaign number.
 
 The pipeline has ~40-55 s of size-invariant cost per run (stage barriers,
 checkpoint write+read, CC fixpoint rounds, JVM/Arrow warmup leakage into
@@ -10,10 +10,14 @@ the measured stages).  At small corpus sizes that fixed term dominates the
 1.2M-doc campaigns (BASELINE.md §scaling) measure the compute-dominated
 regime a real cluster runs in.  This script makes that model MEASURED
 rather than asserted: one pair per size, reusing bench.py's own
-pinned-affinity er-mini worker (pre-staged shared-input parquet, warm
-pass, data-sized partitions — identical methodology to the driver-budget
-block), plus a least-squares fit of walls to  T(n) = F + c·n/cores  whose
-fixed term F is reported per core count.
+pinned-affinity ``--er-mini-worker`` (pre-staged shared-input parquet, warm
+pass, data-sized partitions), plus a least-squares fit of walls to
+T(n) = F + c·n/cores  whose fixed term F is reported per core count.
+
+Each pass is stamped with bench.py's bracketing host probes and rejected
+when a probe reads throttled (``bench.stamp``).  A size with a rejected
+pass keeps its walls and probes in the artifact, marked
+``rejected: "throttled"``, but has no efficiency and stays out of the fit.
 
 Run (NOT inside a driver budget — ~15-30 min at the default sizes):
 
@@ -35,9 +39,6 @@ import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
-
-import bench  # noqa: E402  (bench.py at repo root)
 
 
 def run_worker(*args: str, timeout: float = 3600) -> dict:
@@ -59,27 +60,27 @@ def main() -> None:
     rows = []
     for n in sizes:
         run_worker("--gen-er-docs", str(n))  # staged OUTSIDE the timed passes
-        pair = {}
-        for cores in (2, 8):
-            bench._wait_clean(120)
-            pair[cores] = run_worker("--er-mini-worker", str(cores), str(n))
+        pair = {
+            cores: run_worker("--er-mini-worker", str(cores), str(n))
+            for cores in (2, 8)
+        }
         w2, w8 = pair[2]["wall_s"], pair[8]["wall_s"]
-        rows.append(
-            {
-                "n_docs": n,
-                "walls_s": {"2": w2, "8": w8},
-                "efficiency_2_8": round(w2 / w8 / 4, 3),
-                "samples": pair,
-            }
-        )
+        row = {"n_docs": n, "walls_s": {"2": w2, "8": w8}, "samples": pair}
+        if any(s.get("rejected") for s in pair.values()):
+            row.update(efficiency_2_8=None, rejected="throttled")
+        else:
+            row["efficiency_2_8"] = round(w2 / w8 / 4, 3)
+        rows.append(row)
         print(json.dumps(rows[-1]["walls_s"] | {"n": n, "eff": rows[-1]["efficiency_2_8"]}),
               flush=True)
 
-    # least-squares fit per core count: T = F + c * n  (c absorbs 1/cores)
+    # least-squares fit per core count: T = F + c * n  (c absorbs 1/cores),
+    # over the sizes with no rejected pass
     fit = {}
-    for cores in ("2", "8"):
-        xs = [r["n_docs"] for r in rows]
-        ys = [r["walls_s"][cores] for r in rows]
+    clean = [r for r in rows if "rejected" not in r]
+    for cores in ("2", "8") if len(clean) > 1 else ():
+        xs = [r["n_docs"] for r in clean]
+        ys = [r["walls_s"][cores] for r in clean]
         nmean, tmean = sum(xs) / len(xs), sum(ys) / len(ys)
         c = sum((x - nmean) * (y - tmean) for x, y in zip(xs, ys)) / max(
             sum((x - nmean) ** 2 for x in xs), 1e-9
@@ -93,7 +94,9 @@ def main() -> None:
         "method": (
             "bench.py --er-mini-worker at each (size, cores): pinned "
             "affinity, pre-staged shared docs parquet, warm pass, "
-            "data-sized partitions; probe-gated (<=120 s wait) per pass"
+            "data-sized partitions; each pass stamped with bracketing host "
+            "probes, a size with a pass below 300 MB/s rejected (no "
+            "efficiency, not fitted)"
         ),
         "generated_unix": int(time.time()),
         "rows": rows,
@@ -102,8 +105,7 @@ def main() -> None:
             "efficiency rises with corpus size as the fixed per-run cost "
             "share shrinks; the committed 1.2M-doc campaign is the "
             "compute-dominated asymptote the north rule's >=0.8 gate is "
-            "measured at, and every driver-budget er_mini block is a "
-            "floor on it"
+            "measured at, and every reduced-corpus pair is a floor on it"
         ),
     }
     Path(args.out).write_text(json.dumps(out, indent=1) + "\n")
