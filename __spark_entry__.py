@@ -139,7 +139,7 @@ D3_PROBES = ["cln", "qy", "jin", "bath", "windw", "vectr", "strem", "zzzzzzzzzz"
 def q_fuzzy_query_d3_standard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transducer::query_with_distance, standard variant, n=3, through the
     round-4 length-banded blocked path (depth-3 deletion keys for short
-    strings, positional 2-grams for long ones — ``d3_hybrid_keys``).  The
+    strings, positional 2-grams for long ones — ``blocking_key_rows``).  The
     oracle replays the SAME result UNBLOCKED (DuckDB levenshtein over the
     full probe x vocab cross product), so value-equality proves the
     blocked path lossless at d=3 — the same oracle style as
@@ -2562,7 +2562,7 @@ def q_typo_corpus_recall_osa(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving adjacent transposition — standard distance strictly greater
     than the OSA band for all pairs, `scripts/gen_typo_corpus_osa.py`)
     through the FULL blocked TRANSPOSITION path at n=3: the OSA flavor of
-    `d3_hybrid_keys` (wider band — 3 transpositions can kill up to 9
+    the d=3 banded key rows (wider band — 3 transpositions can kill up to 9
     2-grams) + the OSA kernel.  Closes VERDICT r4 task 7: the d=3 OSA
     band's exactness now has an oracle row, not just the pytest
     completeness gate.  Every pair is generation-verified to agree with

@@ -72,15 +72,11 @@ def cmd_query(spark, args) -> None:
 
 
 def cmd_info(spark, args) -> None:
-    from pyspark.sql import functions as F
-
-    from .functions.blocking_keys import deletion_neighborhood_keys
+    from .functions.blocking_keys import deletion_key_rows
 
     df = _read(spark, args.dict, args.format, args.term_col)
     n = df.count()
-    keys = df.select(
-        F.explode(deletion_neighborhood_keys(F.col(args.term_col), 1)).alias("k")
-    )
+    keys = deletion_key_rows(df, args.term_col, 1).select("key")
     out = {
         "rows": n,
         "schema": df.schema.simpleString(),

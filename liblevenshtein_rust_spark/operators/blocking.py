@@ -15,12 +15,13 @@ Stages:
    keys; dropping them is both a recall no-op and the first line of skew
    defense.  This is the value-filtered traversal analog
    (``src/transducer/value_filtered_query.rs``): filter *before* exploring.
-4. ``token_blocking_keys`` — symmetric-deletion keys (exact for d<=2)
-   or n-gram keys.
 
-Hot-key salting lives with its one caller, the ER vocabulary self-join
-(``pipeline/er.vocab_token_matches`` via
-``plans.rewrites.salted_self_join_pairs``).
+Blocking keys for the surviving vocabulary come from the one key-row
+generator, ``functions.blocking_keys.blocking_key_rows`` (compiled
+``(token, key: long)`` rows), called by the ER vocabulary self-join
+(``pipeline/er.vocab_token_matches``) and the linkage cross join.  Hot-key
+salting lives with the ER self-join
+(``plans.rewrites.salted_self_join_pairs``).
 """
 
 from __future__ import annotations
@@ -28,11 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.blocking_keys import (
-    deletion_neighborhood_keys,
-    ngram_keys_unpositioned,
-    normalize_term,
-)
+from ..functions.blocking_keys import normalize_term
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:
@@ -110,19 +107,6 @@ def rare_tokens(tok: DataFrame, max_df: int = 50) -> DataFrame:
     return tok.join(F.broadcast(frequent), "token", "left_anti").select(
         "doc_id", "token"
     )
-
-
-def token_blocking_keys(
-    tok: DataFrame, scheme: str = "deletion", n: int = 2
-) -> DataFrame:
-    """(doc_id, token, key) — one row per blocking key."""
-    if scheme == "deletion":
-        keys = deletion_neighborhood_keys(F.col("token"), n=n)
-    elif scheme == "ngram":
-        keys = ngram_keys_unpositioned(F.col("token"), q=3)
-    else:
-        raise ValueError(f"unknown blocking scheme: {scheme}")
-    return tok.select("doc_id", "token", F.explode(keys).alias("key"))
 
 
 def sorted_neighborhood_pairs(

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.blocking_keys import deletion_neighborhood_keys
+from ..functions.blocking_keys import deletion_key_rows
 
 
 def apply_upserts(
@@ -58,12 +58,11 @@ def blocking_key_delta(
     The full key table is partitioned by key; this delta appends/deletes
     just the changed terms' key rows (O(|delta| * keys-per-term)), the
     distributed analog of DynamicDawg's suffix-sharing local repair
-    (~O(changed-path) instead of O(dictionary)).
+    (~O(changed-path) instead of O(dictionary)).  Rows are
+    ``(term, key: long)`` from ``blocking_keys.deletion_key_rows``, one per
+    distinct pair.
     """
-    return changed_terms.select(
-        term_col,
-        F.explode(deletion_neighborhood_keys(F.col(term_col), n=n)).alias("key"),
-    )
+    return deletion_key_rows(changed_terms, term_col, n).distinct()
 
 
 def incremental_update(

@@ -13,9 +13,12 @@ Design notes for 100 TB:
   scan parallelism: no side is deduped before its key explode, pairs are
   deduped once after the join.  Shuffled joins rely on AQE to split skewed
   keys at runtime; nothing caps a pathological key's candidate list.
-- The key family of plain fuzzy queries is chosen in one place,
-  ``functions.blocking_keys.blocking_key_rows``, shared with the ER and
-  linkage vocabulary joins.
+- Both sides are keyed with compiled ``(col, key: long)`` rows from
+  ``functions.blocking_keys`` (codegen generators, no interpreted HOF).
+  Every variant's family, the weighted query's included, is chosen in one
+  place, ``blocking_key_rows``, shared with the ER and linkage vocabulary
+  joins; prefix and substring modes pair deletion rows with
+  prefix-deletion rows.
 - The length prefilter runs JVM-side *before* Arrow serialization.
 - Small probe sets are broadcast (`F.broadcast`) so the dictionary never
   shuffles for interactive queries.
@@ -23,14 +26,13 @@ Design notes for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.blocking_keys import (
     blocking_key_rows,
-    deletion_neighborhood_keys,
-    merge_split_keys,
-    prefix_deletion_keys,
+    deletion_key_rows,
+    prefix_deletion_key_rows,
     variant_key_budget,
 )
 from ..functions.udfs import edit_distance_udf, length_prefilter
@@ -81,11 +83,6 @@ def _values(df: DataFrame, col: str) -> DataFrame:
     return df.select(col).where(F.col(col).isNotNull())
 
 
-def _exploded(df: DataFrame, col: str, keys: Column) -> DataFrame:
-    """(col, key) rows from an array Column of string keys."""
-    return _values(df, col).select(col, F.explode(keys).alias("key"))
-
-
 def _keyed_candidate_pairs(
     probe_keys: DataFrame,
     term_keys: DataFrame,
@@ -124,7 +121,7 @@ def prefix_candidate_pairs(
     """PREFIX-mode blocking: probe emits its deletion neighborhood, term
     emits the deletion neighborhoods of its prefixes up to length
     ``max_probe_len + n`` (exact — a prefix match at distance n can't use a
-    longer prefix; see :func:`prefix_deletion_keys`).  The reference walks
+    longer prefix; see :func:`prefix_deletion_key_rows`).  The reference walks
     the trie for this (``ordered_query.rs:320``); prefix keys are the join
     form of the same prefix-sharing.
 
@@ -136,11 +133,9 @@ def prefix_candidate_pairs(
         row = probes.agg(F.max(F.length(probe_col))).first()
         max_probe_len = int(row[0] or 0)
     return _keyed_candidate_pairs(
-        _exploded(probes, probe_col, deletion_neighborhood_keys(F.col(probe_col), n=n)),
-        _exploded(
-            dictionary,
-            term_col,
-            prefix_deletion_keys(F.col(term_col), n=n, max_prefix_len=max_probe_len + n),
+        deletion_key_rows(_values(probes, probe_col), probe_col, n),
+        prefix_deletion_key_rows(
+            _values(dictionary, term_col), term_col, n, max_prefix_len=max_probe_len + n
         ),
         probe_col,
         term_col,
@@ -168,35 +163,12 @@ def substring_candidate_pairs(
     deletion variants plays the automaton's role."""
     n = max_distance
     return _keyed_candidate_pairs(
-        _exploded(probes, probe_col, prefix_deletion_keys(F.col(probe_col), n=n)),
-        _exploded(dictionary, term_col, deletion_neighborhood_keys(F.col(term_col), n=n)),
+        prefix_deletion_key_rows(_values(probes, probe_col), probe_col, n),
+        deletion_key_rows(_values(dictionary, term_col), term_col, n),
         probe_col,
         term_col,
         broadcast_probes,
         pair_filter=F.length(probe_col) >= F.length(term_col) - n,
-    )
-
-
-def merge_split_candidate_pairs(
-    probes: DataFrame,
-    dictionary: DataFrame,
-    probe_col: str = "query",
-    term_col: str = "term",
-    broadcast_probes: bool = True,
-) -> DataFrame:
-    """MergeAndSplit n=2 blocking via the hybrid depth-4-deletion / 3-gram
-    key family (:func:`merge_split_keys`): every op is bridged by <= 2
-    deletions per side, so depth-2n deletion keys are exact; long strings
-    switch to 3-grams (see the band proof in ``functions/blocking_keys``).
-    Each op changes length by at most 1, so the length prefilter holds at
-    n."""
-    return _keyed_candidate_pairs(
-        _exploded(probes, probe_col, merge_split_keys(F.col(probe_col), n=2)),
-        _exploded(dictionary, term_col, merge_split_keys(F.col(term_col), n=2)),
-        probe_col,
-        term_col,
-        broadcast_probes,
-        pair_filter=length_prefilter(F.col(probe_col), F.col(term_col), 2),
     )
 
 
@@ -234,15 +206,13 @@ def fuzzy_query(
     Output: (query, term, distance) for every dictionary term within
     ``max_distance`` of each probe.  Blocking is exact in every mode:
 
-    - standard/transposition at n <= 3 and MergeAndSplit at n = 1:
+    - standard/transposition at n <= 3 and MergeAndSplit at n <= 2:
       :func:`candidate_pairs`, i.e. the key family
       :func:`blocking_key_rows` picks for the variant's key budget;
     - prefix mode: probe deletion keys × term *prefix*-deletion keys
       (:func:`prefix_candidate_pairs`);
     - substring mode: the mirror — probe prefix-deletion keys × term
-      deletion keys (:func:`substring_candidate_pairs`);
-    - MergeAndSplit n = 2: the hybrid depth-4/3-gram family
-      (:func:`merge_split_candidate_pairs`).
+      deletion keys (:func:`substring_candidate_pairs`).
 
     Everything else (standard/transposition n >= 4, MergeAndSplit n > 2,
     prefix/substring under MergeAndSplit or outside 1 <= n <= 2) falls back
@@ -261,10 +231,6 @@ def fuzzy_query(
         )
     elif prefix_mode or substring_mode:
         pairs = _scan_pairs(probes, dictionary, probe_col, term_col, broadcast_probes)
-    elif variant == MERGE_AND_SPLIT and n == 2:
-        pairs = merge_split_candidate_pairs(
-            probes, dictionary, probe_col, term_col, broadcast_probes
-        )
     else:
         try:
             pairs = candidate_pairs(
@@ -357,9 +323,9 @@ def fuzzy_query_weighted(
 
     - ``max(dq, dt) <= 2``: plain deletion keys at that depth;
     - depths <= 4, length drift <= 2, and total gram damage
-      ``max_ops * (max_seg + 2) <= 8``: the merge-split hybrid
-      depth-4-deletion / 3-gram family (its band proof needs exactly those
-      bounds — see ``functions/blocking_keys``);
+      ``max_ops * (max_seg + 2) <= 8``: the MergeAndSplit n=2 rows of
+      :func:`blocking_key_rows` (depth-4 deletion / 3-gram hybrid; its band
+      proof needs exactly those bounds — see ``functions/blocking_keys``);
     - otherwise (incl. any zero-weight op, whose application count is
       unbounded): broadcast-probe scan, correct but not scale-safe.
 
@@ -383,15 +349,15 @@ def fuzzy_query_weighted(
         and b["max_delta"] <= 2
         and b["max_ops"] * (b["max_seg"] + 2) <= 8
     ):
-        pairs = _keyed_candidate_pairs(
-            _exploded(probes, probe_col, merge_split_keys(F.col(probe_col), n=2)),
-            _exploded(dictionary, term_col, merge_split_keys(F.col(term_col), n=2)),
+        pairs = candidate_pairs(
+            probes,
+            dictionary,
+            b["max_delta"],
             probe_col,
             term_col,
-            broadcast_probes,
-            pair_filter=length_prefilter(
-                F.col(probe_col), F.col(term_col), b["max_delta"]
-            ),
+            broadcast_probes=broadcast_probes,
+            key_budget=4,
+            variant=MERGE_AND_SPLIT,
         )
     else:
         pairs = _scan_pairs(probes, dictionary, probe_col, term_col, broadcast_probes)

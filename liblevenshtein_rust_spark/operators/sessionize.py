@@ -16,8 +16,8 @@ across the two windows and the groupBy).  A per-user sort is inherent to
 sessionization (running counts need full per-key order, so the hot-key
 prefix-filter trick of ``per_source_cap`` cannot apply); per-user event
 volume is organically bounded in clickstreams, and a pathological key is
-exactly what the pipeline's skew ledger (``plans/rewrites.capped_pairs``
-pattern) would surface upstream.  All arithmetic is integer microseconds
+exactly what the ER pipeline's skew counters (``hot_keys_salted`` /
+``extreme_keys_dropped``) would surface upstream.  All arithmetic is integer microseconds
 (``unix_micros`` ↔ DuckDB ``epoch_us``) — no float drift between engines.
 """
 

@@ -25,10 +25,11 @@ Scale design (each stage annotated for the 10^12-doc target):
   downstream fan-out by ``max_df``.
 - **Deletion-neighborhood blocking** (SymSpell family) is *exact*: any
   OSA-d<=2 pair shares a depth-2 deletion variant, and d=3 uses the
-  length-banded hybrid (``blocking_keys.blocking_key_rows`` picks the
-  family), so blocking loses no recall — candidate generation mirrors
-  automaton-guided trie intersection (bounded-error neighborhood
-  enumeration, not scans).
+  length-banded hybrid, so blocking loses no recall — candidate
+  generation mirrors automaton-guided trie intersection (bounded-error
+  neighborhood enumeration, not scans).  ``blocking_keys.blocking_key_rows``
+  picks the family and emits it as compiled ``(token, key: long)`` rows,
+  the same generator the linkage and fuzzy-query joins use.
 - **Skew**: hot keys are salted and kept; only extreme keys are dropped.
   Both are counted (``hot_keys_salted`` / ``extreme_keys_dropped``
   manifest metrics); AQE skew-join splits what remains.  Evidence-join

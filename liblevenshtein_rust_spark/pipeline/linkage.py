@@ -8,11 +8,12 @@ Same engineering altitude as the ER pipeline, restated for two sides:
 - **Vocabulary-level matching, cross form**: the two RARE-token
   vocabularies are joined through shared deletion-neighborhood keys —
   an A-vocab × B-vocab blocked join (no self-join, no canonicalization,
-  no triangle salting: the sides are disjoint by construction).  The key
-  family is ``blocking_keys.blocking_key_rows``'s, shared with ER and
-  ``operators/matching.py`` — deletion neighborhood (exact for budget ≤ 2),
-  the d3 hybrid for standard/OSA at distance 3, and a RAISE outside the
-  exact envelope — so no recall is lost vs the reference's
+  no triangle salting: the sides are disjoint by construction).  Both
+  sides are keyed with ``blocking_keys.blocking_key_rows``'s compiled
+  ``(token, key: long)`` rows, shared with ER and ``operators/matching.py``
+  — deletion keys (exact for budget ≤ 2), the length-banded hybrids for
+  standard/OSA at distance 3 and MergeAndSplit at distance 2, and a RAISE
+  outside the exact envelope — so no recall is lost vs the reference's
   trie-intersection traversal (``dictionary/dawg.rs``).
 - **Evidence join bounded by max_df per side**: each matched token pair
   touches ≤ max_df_a × max_df_b doc pairs — linear in vocabulary, never

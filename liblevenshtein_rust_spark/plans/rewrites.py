@@ -1,16 +1,12 @@
 """Deliberate plan rewrites — the 'custom optimizer strategies' layer.
 
-Catalyst handles pushdown/pruning/reordering; these are the rewrites it
+Catalyst handles pushdown/pruning/reordering; this is the rewrite it
 cannot know about (SURVEY.md §4 'Needs a custom Spark strategy'):
-
-1. :func:`canonicalize_pairs` — symmetric-pair dedupe before any pairwise
-   kernel (MemoCache analog, ``/root/reference/src/distance/mod.rs:29-208``).
-2. :func:`salted_self_join_pairs` — explicit skew-key salting for the
-   blocking self-join (north rule: "skew-key salting on hot blocking
-   keys").  AQE's skew-join splitting handles the *sort-merge* case at
-   runtime, but a Zipfian key whose single bucket exceeds an executor's
-   memory needs the key space split *before* the shuffle.
-3. :func:`capped_pairs` — per-key candidate caps with logged truncation.
+:func:`salted_self_join_pairs` — explicit skew-key salting for the
+blocking self-join (north rule: "skew-key salting on hot blocking keys").
+AQE's skew-join splitting handles the *sort-merge* case at runtime, but a
+Zipfian key whose single bucket exceeds an executor's memory needs the key
+space split *before* the shuffle.
 
 Salting a self-join correctly: a hot key k with documents D(k) must still
 produce ALL |D|·(|D|-1)/2 pairs.  We split D(k) into s salt groups by
@@ -24,18 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def canonicalize_pairs(df: DataFrame, a: str, b: str) -> DataFrame:
-    """(least, greatest) + distinct: score each unordered pair once."""
-    return (
-        df.select(
-            F.least(F.col(a), F.col(b)).alias(a),
-            F.greatest(F.col(a), F.col(b)).alias(b),
-        )
-        .where(F.col(a) < F.col(b))
-        .distinct()
-    )
 
 
 def salted_self_join_pairs(
@@ -96,27 +80,3 @@ def salted_self_join_pairs(
     )
     return cold_pairs.unionByName(hot_pairs).distinct()
 
-
-def capped_pairs(
-    pairs: DataFrame,
-    cap: int,
-    left_col: str = "left_id",
-    right_col: str = "right_id",
-) -> tuple[DataFrame, DataFrame]:
-    """Bound per-left-id fan-out deterministically; returns (kept, stats).
-
-    stats = (left_id, n_dropped) for every truncated id — the 'logged
-    truncation' record the pipeline persists (never silent).
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(left_col).orderBy(right_col)
-    ranked = pairs.withColumn("_rk", F.row_number().over(w))
-    kept = ranked.where(F.col("_rk") <= cap).drop("_rk")
-    stats = (
-        ranked.groupBy(left_col)
-        .agg(F.max("_rk").alias("_n"))
-        .where(F.col("_n") > cap)
-        .select(left_col, (F.col("_n") - cap).alias("n_dropped"))
-    )
-    return kept, stats

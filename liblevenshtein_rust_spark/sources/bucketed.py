@@ -6,7 +6,8 @@ Spark-first analog of the reference's ahead-of-time index construction
 ``DawgDictionary`` minimal build, ``src/dictionary/dawg.rs:108``): the
 reference pays construction cost once (3.2 ms for 10K words) so every query
 walks a prepared structure.  Here the prepared structure is the
-deletion-neighborhood key table **written bucketed and sorted by key**:
+deletion-key table (``blocking_keys.deletion_key_rows`` at the index
+depth: ``(term, key: long)`` rows) **written bucketed and sorted by key**:
 
 - the O(len^2)-per-term key explosion is computed once at write time, not
   per query;
@@ -27,14 +28,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.blocking_keys import deletion_neighborhood_keys
+from ..functions.blocking_keys import deletion_key_rows, variant_key_budget
 from ..functions.udfs import edit_distance_udf, length_prefilter
 from ..kernel.distances import STANDARD
 
-#: key depth baked into a default-built index; queries at any
-#: max_distance <= depth are recall-complete on the same index
-#: (depth-d deletion neighborhoods are supersets of depth-d' ones, d' <= d,
-#: and the kernel is the exact filter).
+#: key depth baked into a default-built index; a query whose key budget
+#: (``variant_key_budget``: max_distance, doubled under MergeAndSplit) is
+#: <= depth is recall-complete on the same index (depth-d deletion
+#: neighborhoods are supersets of depth-d' ones, d' <= d, and the kernel is
+#: the exact filter).
 DEFAULT_DEPTH = 2
 
 
@@ -54,14 +56,10 @@ def write_bucketed_index(
     probe joins (the probe side is shuffled to exactly this count): size it
     to the DATA (~128 MB/bucket at target scale), not to any one cluster.
     """
-    keyed = (
-        dictionary.select(term_col)
-        .where(F.col(term_col).isNotNull())
-        .distinct()
-        .withColumn(
-            "key", F.explode(deletion_neighborhood_keys(F.col(term_col), n=depth))
-        )
-    )
+    terms = dictionary.select(term_col).where(F.col(term_col).isNotNull())
+    # distinct: a term with repeated characters reaches one key through
+    # several deletion positions; the index stores each (term, key) once
+    keyed = deletion_key_rows(terms, term_col, depth).distinct()
     writer = (
         keyed.write.format("parquet")
         .mode(mode)
@@ -85,28 +83,29 @@ def fuzzy_query_bucketed(
     broadcast_probes: bool = False,
 ) -> DataFrame:
     """``fuzzy_query`` against a prepared bucketed index: identical results
-    to the standard keyed path (same deletion-key family, same kernel), but
-    the dictionary side is read pre-keyed and pre-partitioned — the physical
-    plan carries no Exchange below the dictionary scan.
+    to the standard keyed path (deletion key rows from the same generator,
+    at the index depth; same kernel), but the dictionary side is read
+    pre-keyed and pre-partitioned — the physical plan carries no Exchange
+    below the dictionary scan.  The query's key budget must fit the index
+    depth, or pairs would be lost: MergeAndSplit at d=2 needs a depth-4
+    index.
 
     ``broadcast_probes`` defaults to False: this path exists for probe
     tables too large to broadcast (otherwise use :func:`~..operators.
     matching.fuzzy_query`, which broadcasts).
     """
-    if max_distance > index_depth:
+    budget = variant_key_budget(variant, max_distance)
+    if budget > index_depth:
         raise ValueError(
-            f"index depth {index_depth} < max_distance {max_distance}: "
+            f"index depth {index_depth} < key budget {budget} "
+            f"({variant} at max_distance {max_distance}): "
             "rebuild the index at the larger depth"
         )
     d = spark.table(table)
-    p = (
-        probes.select(probe_col)
-        .where(F.col(probe_col).isNotNull())
-        .distinct()
-        .withColumn(
-            "key",
-            F.explode(deletion_neighborhood_keys(F.col(probe_col), n=index_depth)),
-        )
+    p = deletion_key_rows(
+        probes.select(probe_col).where(F.col(probe_col).isNotNull()).distinct(),
+        probe_col,
+        index_depth,
     )
     if broadcast_probes:
         p = F.broadcast(p)

@@ -64,7 +64,7 @@ def run_incremental_ingest(
             k = spark.read.parquet(key_path)
         except Exception:  # first batch: empty dictionary
             d = spark.createDataFrame([], f"{term_col} string")
-            k = spark.createDataFrame([], f"{term_col} string, key string")
+            k = spark.createDataFrame([], f"{term_col} string, key bigint")
         nd, nk = incremental.incremental_update(
             d, k, upserts=batch, term_col=term_col, value_col=None, n=n
         )

@@ -14,7 +14,7 @@ Output format is Mitton ($correct header, then `misspelling [freq]` lines,
 parses.  Scale rationale (VERDICT r3 task 4): the reference's recall gates
 run on 1,791-36,133 misspellings; the 43-pair mini corpus was too small to
 be statistically meaningful — this one commits ~3k pairs including the
-short-word d=3 band that the round-4 `d3_hybrid_keys` scheme exists for.
+short-word d=3 band that the round-4 d=3 banded key scheme exists for.
 
 Run: python scripts/gen_typo_corpus.py   (idempotent, overwrites the file)
 """

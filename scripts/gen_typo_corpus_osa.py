@@ -2,7 +2,7 @@
 `data/corpora/typo_corpus_osa.dat` (VERDICT r4 task 7).
 
 The standard corpus (`gen_typo_corpus.py`) gates the Standard-variant
-blocked path at d=1..3; `d3_hybrid_keys` ALSO claims OSA exactness
+blocked path at d=1..3; the d=3 banded keys ALSO claim OSA exactness
 (wider band: 3 transpositions can kill up to 9 2-grams) but round 4 had
 no oracle row recalling a transposition-planted corpus through the
 blocked OSA path at d=3.  This file closes that: every misspelling

@@ -3,12 +3,14 @@
 self-join, the linkage cross-vocabulary join and ``fuzzy_query`` must each
 return exactly the UNBLOCKED cross product scored by the scalar
 ``kernel.distances.distance`` — for every (variant, distance) with an exact
-key family — and raise where none exists.
+key family — and ER and linkage raise where none exists (``fuzzy_query``
+scans there instead).
 
 The planted vocabulary carries the pairs the key choice decides:
 ``projection``/``prujeftiom`` (three substitutions on a long token: depth-2
 deletion keys share nothing, so Standard/OSA d=3 needs the d3 hybrid) and
-``corner``/``comer`` (one merge: MergeAndSplit d=1 needs depth-2 keys).
+``corner``/``comer`` (one merge: MergeAndSplit d=1 needs depth-2 keys,
+and d=2 the depth-4 / 3-gram hybrid).
 Seeded short words over a three-letter alphabet add collision pressure.
 """
 
@@ -40,7 +42,8 @@ VOCAB_B = sorted(set(PLANTED_B + NOISE[1::2]))
 VOCAB = sorted(set(VOCAB_A + VOCAB_B))
 
 EXACT_CASES = [(v, d) for v in (STANDARD, TRANSPOSITION) for d in (1, 2, 3)] + [
-    (MERGE_AND_SPLIT, 1)
+    (MERGE_AND_SPLIT, 1),
+    (MERGE_AND_SPLIT, 2),
 ]
 
 
@@ -79,14 +82,21 @@ def test_er_and_linkage_equal_unblocked(spark, variant, d):
     )
     assert got_er == want_er
 
-    got_link = sorted(tuple(r) for r in _link(spark, variant, d).collect())
     want_link = sorted(
         (a, b, distance(a, b, variant))
         for a in VOCAB_A
         for b in VOCAB_B
         if distance(a, b, variant) <= d
     )
+    got_link = sorted(tuple(r) for r in _link(spark, variant, d).collect())
     assert got_link == want_link
+
+    # fuzzy_query keys through the same dispatch: A-vocab probes against
+    # the B vocabulary return the linkage pair set
+    p = spark.createDataFrame([(q,) for q in VOCAB_A], "query string")
+    t = spark.createDataFrame([(w,) for w in VOCAB_B], "term string")
+    got_fuzzy = sorted(tuple(r) for r in matching.fuzzy_query(p, t, d, variant).collect())
+    assert got_fuzzy == want_link
 
 
 def test_planted_pairs_reach_the_cases_they_test(spark):
@@ -99,9 +109,10 @@ def test_planted_pairs_reach_the_cases_they_test(spark):
 
 def test_no_exact_key_family_raises(spark):
     with pytest.raises(ValueError, match="key budget 4"):
-        _er(spark, MERGE_AND_SPLIT, 2)
+        _er(spark, STANDARD, 4)
     with pytest.raises(ValueError, match="key budget 4"):
-        _link(spark, MERGE_AND_SPLIT, 2)
+        _link(spark, STANDARD, 4)
+
 
 
 def test_fuzzy_query_d4_equals_unblocked(spark):

@@ -9,6 +9,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from liblevenshtein_rust_spark.kernel.distances import MERGE_AND_SPLIT
 from liblevenshtein_rust_spark.operators import matching
 from liblevenshtein_rust_spark.session import get_spark
 from liblevenshtein_rust_spark.sources import bucketed
@@ -52,6 +53,31 @@ def test_depth_guard(spark, index):
     p = spark.createDataFrame([("x",)], "query string")
     with pytest.raises(ValueError, match="index depth"):
         bucketed.fuzzy_query_bucketed(spark, p, index, 3)
+
+
+def test_merge_split_needs_key_budget_depth(spark, index):
+    """MergeAndSplit d=2 needs key budget 4: a depth-2 index must refuse it
+    (its keys lose ``spark``/``sxk`` and ``abcd``/``xy``, both at MS
+    distance 2), and a depth-4 index must match ``fuzzy_query`` exactly."""
+    terms = TERMS + ["sxk", "xy"]
+    probes = PROBES + ["abcd"]
+    p = spark.createDataFrame([(q,) for q in probes], "query string")
+    d = spark.createDataFrame([(t,) for t in terms], "term string")
+    with pytest.raises(ValueError, match="key budget 4"):
+        bucketed.fuzzy_query_bucketed(spark, p, index, 2, MERGE_AND_SPLIT)
+    with tempfile.TemporaryDirectory() as tmp:
+        bucketed.write_bucketed_index(d, "test_dict_idx4", n_buckets=4, depth=4, path=tmp)
+        try:
+            got = _rows(
+                bucketed.fuzzy_query_bucketed(
+                    spark, p, "test_dict_idx4", 2, MERGE_AND_SPLIT, index_depth=4
+                )
+            )
+        finally:
+            spark.sql("DROP TABLE IF EXISTS test_dict_idx4")
+    want = _rows(matching.fuzzy_query(p, d, 2, MERGE_AND_SPLIT))
+    assert got == want
+    assert ("spark", "sxk", 2) in got and ("abcd", "xy", 2) in got
 
 
 def test_dictionary_side_never_shuffles(spark, index):

@@ -104,7 +104,7 @@ def test_typo_corpus_blocked_recall_d3(spark):
     must be fully recalled through the blocked n=3 path — the round-4
     analog of the reference's Holbrook 100% @ d<=3 gate
     (tests/corpus_validation.rs:25-26).  recall_d3 < 1.0 means the
-    d3_hybrid_keys family lost a pair before the kernel saw it."""
+    d=3 banded key family lost a pair before the kernel saw it."""
     from liblevenshtein_rust_spark.sources.corpus import (
         blocked_misspelling_recall,
         load_mitton_pairs,

@@ -14,7 +14,9 @@ banding would get wrong.
 
 from __future__ import annotations
 
+import itertools
 import random
+from collections import Counter
 
 import pytest
 
@@ -92,20 +94,24 @@ def test_merge_split_n2_blocked_completeness(spark):
     assert got == want
 
 
+def _keys_by_value(rows, col="s"):
+    out = {}
+    for r in rows:
+        out.setdefault(r[col], set()).add(r["key"])
+    return out
+
+
 def test_merge_split_keys_share_key_across_band(spark):
     """A length-13 (deletion+gram band) and length-15 (gram band) pair
-    within merge-split distance 2 must share a key."""
-    from pyspark.sql import functions as F
-
-    from liblevenshtein_rust_spark.functions.blocking_keys import merge_split_keys
+    within merge-split distance 2 must share a key in the MergeAndSplit
+    n=2 rows of ``blocking_key_rows``."""
+    from liblevenshtein_rust_spark.functions.blocking_keys import blocking_key_rows
 
     a, b = "abcabcabcabca", "abcabcabcabcabc"  # split+split: distance 2
     assert D.merge_and_split_distance(a, b) <= 2
-    df = spark.createDataFrame([(a,), (b,)], "s string").select(
-        merge_split_keys(F.col("s")).alias("k")
-    )
-    ka, kb = [set(r["k"]) for r in df.collect()]
-    assert ka & kb
+    df = spark.createDataFrame([(a,), (b,)], "s string")
+    keys = _keys_by_value(blocking_key_rows(df, "s", 4, D.MERGE_AND_SPLIT).collect())
+    assert keys[a] & keys[b]
 
 
 def test_d3_blocked_completeness_standard_and_osa(spark):
@@ -142,21 +148,18 @@ def test_d3_blocked_completeness_standard_and_osa(spark):
 
 def test_d3_hybrid_keys_share_key_across_band(spark):
     """A deletion-band and a gram-band string within distance 3 must share
-    a key (the band-overlap proof's crossing case), for both variants."""
-    from pyspark.sql import functions as F
+    a key in the d=3 rows of ``blocking_key_rows`` (the band-overlap
+    proof's crossing case), for both variants."""
+    from liblevenshtein_rust_spark.functions.blocking_keys import blocking_key_rows
 
-    from liblevenshtein_rust_spark.functions.blocking_keys import d3_hybrid_keys
-
-    for osa, a, b in (
-        (False, "abcabcab", "abcabcabcab"),    # len 8 vs 11: ins x3
-        (True, "abcabcabcab", "abcabcabcabcab"),  # len 11 vs 14: ins x3
+    for variant, a, b in (
+        (D.STANDARD, "abcabcab", "abcabcabcab"),    # len 8 vs 11: ins x3
+        (D.TRANSPOSITION, "abcabcabcab", "abcabcabcabcab"),  # len 11 vs 14: ins x3
     ):
         assert D.standard_distance(a, b) <= 3
-        df = spark.createDataFrame([(a,), (b,)], "s string").select(
-            d3_hybrid_keys(F.col("s"), transposition=osa).alias("k")
-        )
-        ka, kb = [set(r["k"]) for r in df.collect()]
-        assert ka & kb, (osa, a, b)
+        df = spark.createDataFrame([(a,), (b,)], "s string")
+        keys = _keys_by_value(blocking_key_rows(df, "s", 3, variant).collect())
+        assert keys[a] & keys[b], (variant, a, b)
 
 
 EDGE_TERMS = ["", "aaaa", "é", "aéb", "naïve"]
@@ -191,31 +194,56 @@ def test_standard_and_osa_blocked_completeness(spark):
             assert set(rows) == want, f"{variant} n={n}"
 
 
-def test_deletion_key_rows_match_hof_keys(spark):
-    """The compiled key rows carry, per term, exactly the hashes of the HOF
-    deletion neighborhood — the HOF form still serves the bucketed index,
-    incremental, linkage and CLI paths, so the two must not drift."""
+def _deletions(s: str, n: int) -> list[str]:
+    """Pure-Python oracle: ``s`` minus every set of at most ``n`` positions,
+    one entry per position set."""
+    return [
+        "".join(c for i, c in enumerate(s) if i not in drop)
+        for k in range(n + 1)
+        for drop in itertools.combinations(range(len(s)), k)
+    ]
+
+
+def test_deletion_key_rows_match_combinations_oracle(spark):
+    """The compiled key rows carry, per term, exactly one row per deleted
+    position set, hashed from the string ``itertools.combinations``
+    predicts — at depths 1-4 and in the prefix form (every prefix up to
+    ``max_prefix_len``, the empty one included)."""
     from pyspark.sql import functions as F
 
     from liblevenshtein_rust_spark.functions.blocking_keys import (
         deletion_key_rows,
-        deletion_neighborhood_keys,
+        prefix_deletion_key_rows,
     )
 
     rng = random.Random(23)
     terms = _rand_words(rng, 60, 0, 10, alphabet="abé") + EDGE_TERMS + ["aaaa"]
+    terms = sorted(set(terms))
     df = spark.createDataFrame([(t,) for t in terms], "term string")
 
-    def by_term(rows):
-        out = {}
-        for r in rows:
-            out.setdefault(r["term"], set()).add(r["key"])
-        return out
-
-    for n in (1, 2):
-        got = by_term(deletion_key_rows(df, "term", n).collect())
-        hof = df.select(
-            "term", F.explode(deletion_neighborhood_keys(F.col("term"), n)).alias("k")
+    def hashed(oracle: dict) -> dict:
+        rows = [(t, k) for t, ks in oracle.items() for k in ks]
+        keyed = spark.createDataFrame(rows, "term string, k string").select(
+            "term", F.xxhash64("k").alias("key")
         )
-        want = by_term(hof.select("term", F.xxhash64("k").alias("key")).collect())
-        assert got == want, f"n={n}"
+        return _keys_by_value(keyed.collect(), "term")
+
+    for n in (1, 2, 3, 4):
+        oracle = {t: _deletions(t, n) for t in terms}
+        rows = deletion_key_rows(df, "term", n).collect()
+        assert _keys_by_value(rows, "term") == hashed(oracle), f"n={n}"
+        assert Counter(r["term"] for r in rows) == {t: len(v) for t, v in oracle.items()}
+
+    for n, max_prefix_len in ((1, None), (2, None), (2, 4), (3, 5)):
+        oracle = {
+            t: [
+                k
+                for p in range(min(len(t), max_prefix_len or len(t)) + 1)
+                for k in _deletions(t[:p], n)
+            ]
+            for t in terms
+        }
+        case = (n, max_prefix_len)
+        rows = prefix_deletion_key_rows(df, "term", n, max_prefix_len).collect()
+        assert _keys_by_value(rows, "term") == hashed(oracle), case
+        assert Counter(r["term"] for r in rows) == {t: len(v) for t, v in oracle.items()}

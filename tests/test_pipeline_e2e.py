@@ -180,15 +180,12 @@ def test_link_tables_cross_corpus(spark):
 
 def test_cross_vocab_matches_d3_and_budget_guard(spark):
     """Round-4 review fix: the vocab join must honor max_distance=3 via
-    d3_hybrid_keys (it used to clamp key depth to 2, silently losing
+    the d=3 banded key rows (it used to clamp key depth to 2, silently losing
     long-token d=3 pairs), and must RAISE outside the exact-key envelope
     instead of losing pairs silently."""
     import pytest as _pytest
 
-    from liblevenshtein_rust_spark.kernel.distances import (
-        MERGE_AND_SPLIT,
-        STANDARD,
-    )
+    from liblevenshtein_rust_spark.kernel.distances import STANDARD
     from liblevenshtein_rust_spark.pipeline import linkage
 
     va = spark.createDataFrame([("projection",)], "token string")
@@ -205,7 +202,7 @@ def test_cross_vocab_matches_d3_and_budget_guard(spark):
     ]
     with _pytest.raises(ValueError, match="key budget"):
         linkage.cross_vocab_matches(
-            va, vb, linkage.LinkConfig(max_distance=2, variant=MERGE_AND_SPLIT)
+            va, vb, linkage.LinkConfig(max_distance=4, variant=STANDARD)
         )
 
 

@@ -6,7 +6,8 @@ Checks (via executedPlan/explain text):
   reaches the source);
 - small probe sides broadcast (no shuffle of the dictionary for
   interactive queries);
-- the blocking stage contains no Python UDF (JVM-only until the kernel);
+- the blocking stage contains no Python UDF (JVM-only until the kernel)
+  and its key derivation no interpreted higher-order function;
 - whole-stage codegen covers the key-generation projections.
 """
 
@@ -15,6 +16,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from liblevenshtein_rust_spark.functions.blocking_keys import blocking_key_rows
 from liblevenshtein_rust_spark.operators import blocking, matching
 from liblevenshtein_rust_spark.session import get_spark
 from liblevenshtein_rust_spark.sources import tables
@@ -78,6 +80,26 @@ def test_deletion_blocking_keys_dictionary_at_scan(spark):
     assert "Exchange" not in dict_side
     assert "lambdafunction" not in dict_side
 
+    # every other key family comes from the same compiled generator: no
+    # interpreted higher-order function anywhere in its key derivation
+    others = {
+        "prefix": matching.prefix_candidate_pairs(probes, terms, 2),
+        "substring": matching.substring_candidate_pairs(probes, terms, 2),
+        **{
+            f"{v} d={d}": matching.candidate_pairs(probes, terms, d, variant=v)
+            for v, d in (
+                ("standard", 3),
+                ("transposition", 3),
+                ("merge_and_split", 1),
+                ("merge_and_split", 2),
+            )
+        },
+    }
+    for name, pairs in others.items():
+        plan = _plan(pairs)
+        assert "Generate explode(sequence" in plan, name
+        assert "lambdafunction" not in plan, name
+
 
 def test_blocking_stage_is_jvm_only(spark):
     docs = tables.documents(spark, SF).withColumnRenamed("text", "t").selectExpr(
@@ -85,7 +107,8 @@ def test_blocking_stage_is_jvm_only(spark):
         "array(struct('text' as kind, t as text, '' as media_ref, 0 as offset)) as spans",
     )
     toks = blocking.doc_tokens(docs)
-    keyed = blocking.token_blocking_keys(toks)
+    vocab = toks.select("token").distinct()
+    keyed = blocking_key_rows(vocab, "token", 2, "transposition")
     plan = _plan(keyed)
     # the entire blocking stage is JVM expressions: explode/generate +
     # hash aggregate, zero Python evaluation nodes
