@@ -406,28 +406,3 @@ def _batch_distance_impl(
         unsorted[order] = res
         res = unsorted
     return res
-
-
-def batch_accepts(
-    queries,
-    terms,
-    max_distance: int,
-    variant: str = STANDARD,
-    prefix_mode: bool = False,
-    substring_mode: bool = False,
-    allowed_subs: frozenset | None = None,
-) -> np.ndarray:
-    """Boolean accept per pair — the vectorized
-    ``UniversalAutomaton::accepts`` (``universal/automaton.rs:242-283``)."""
-    return (
-        batch_distance(
-            queries,
-            terms,
-            max_distance,
-            variant,
-            prefix_mode,
-            substring_mode,
-            allowed_subs,
-        )
-        >= 0
-    )

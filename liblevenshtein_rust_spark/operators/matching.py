@@ -6,7 +6,8 @@ Spark-first restatement of the reference's query entry points
 ``src/cache/multimap.rs:288``):
 
     probes ⋈ blocking-keys ⋈ dictionary  →  length prefilter (JVM)
-    →  pair dedupe  →  vectorized kernel accept/distance  →  rank / agg
+    →  pair dedupe  →  distance + accept: JVM ``levenshtein`` for plain
+       Standard, vectorized Arrow kernel otherwise  →  rank / agg
 
 Design notes for 100 TB:
 - The blocking join is an equi-join on `key`, run at the dictionary's
@@ -20,6 +21,9 @@ Design notes for 100 TB:
   joins; prefix and substring modes pair deletion rows with
   prefix-deletion rows.
 - The length prefilter runs JVM-side *before* Arrow serialization.
+  Plain Standard scoring never leaves the JVM: its accept filter is
+  pushed into the join condition, so the pair dedupe shuffles only
+  accepted pairs.
 - Small probe sets are broadcast (`F.broadcast`) so the dictionary never
   shuffles for interactive queries.
 """

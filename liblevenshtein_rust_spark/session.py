@@ -18,6 +18,35 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+# cgroup v2, then v1: a container's memory limit ("max" or a huge v1
+# value when unlimited); physical pages report the host, not the container
+CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def host_memory_bytes() -> int:
+    """Physical memory, or the cgroup memory limit when that is smaller."""
+    mem = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    for path in CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            mem = min(mem, int(limit))
+    return mem
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEM`` is unset: 48g, or
+    half of the host's (or container's) memory when that is smaller — a
+    local-mode driver heap sized past it invites the kernel's OOM killer."""
+    return f"{min(48 << 10, host_memory_bytes() // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "liblevenshtein_rust_spark",
     cores: int | None = None,
@@ -46,7 +75,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32768")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     )

@@ -12,7 +12,7 @@ from liblevenshtein_rust_spark.kernel.automaton import (
     automaton_accepts,
     automaton_distance,
 )
-from liblevenshtein_rust_spark.kernel.batch import batch_accepts, batch_distance
+from liblevenshtein_rust_spark.kernel.batch import batch_distance
 from liblevenshtein_rust_spark.kernel.distances import (
     merge_and_split_distance,
     standard_distance,
@@ -72,7 +72,7 @@ def test_scalar_automaton_golden(word, cand, n, variant, expected):
 
 @pytest.mark.parametrize("word,cand,n,variant,expected", GOLDEN)
 def test_batch_kernel_golden(word, cand, n, variant, expected):
-    assert bool(batch_accepts([word], [cand], n, variant)[0]) == expected
+    assert bool(batch_distance([word], [cand], n, variant)[0] >= 0) == expected
 
 
 def test_distance_values_match_reference_examples():

@@ -129,10 +129,11 @@ def test_exact_contains_is_semi_join(spark):
 def test_length_prefilter_below_kernel(spark):
     """The |len(a)-len(b)|<=n guard must sit in the join/filter, evaluated
     before any Arrow exchange (no pairs cross into Python just to be
-    length-rejected)."""
+    length-rejected).  On the JVM Standard path, whose accept filter is
+    pushed into the join condition, the guard precedes ``levenshtein``."""
     probes = spark.createDataFrame([("spark",)], "query string")
     terms = spark.createDataFrame([("sprak",), ("a",)], "term string")
-    q = matching.fuzzy_query(probes, terms, 1)
+    q = matching.fuzzy_query(probes, terms, 1, "transposition")
     opt = _optimized(q)
     kernel_pos = opt.find("_dist")
     len_pos = opt.find("abs((length(")
@@ -140,6 +141,31 @@ def test_length_prefilter_below_kernel(spark):
     # optimized plan is printed top-down: the length filter must be BELOW
     # (after in text) the kernel projection — i.e. evaluated earlier
     assert len_pos > kernel_pos
+
+    opt = _optimized(matching.fuzzy_query(probes, terms, 1, "standard"))
+    join = next(line for line in opt.splitlines() if "Join Inner" in line)
+    assert -1 < join.find("abs((length(") < join.find("levenshtein(")
+
+
+def test_standard_scoring_stays_in_jvm(spark):
+    """Plain Standard scoring is the codegen'd ``levenshtein`` expression:
+    no Python worker.  Every other variant, mode or substitution policy
+    keeps the Arrow kernel, evaluated once per distinct pair (one
+    ArrowEvalPython node: the nondeterministic fence keeps the accept
+    filter from being pushed below the pair-distinct)."""
+    probes = spark.createDataFrame([("spark",)], "query string")
+    terms = spark.createDataFrame([("sprak",), ("spork",), ("a",)], "term string")
+    plan = _plan(matching.fuzzy_query(probes, terms, 2, "standard"))
+    assert "levenshtein(" in plan
+    assert "ArrowEvalPython" not in plan and "PythonUDF" not in plan
+    for kwargs in (
+        {"variant": "transposition"},
+        {"prefix_mode": True},
+        {"allowed_subs": frozenset({("o", "a")})},
+    ):
+        plan = _plan(matching.fuzzy_query(probes, terms, 2, **kwargs))
+        assert plan.count("ArrowEvalPython") == 1, kwargs
+        assert "levenshtein(" not in plan, kwargs
 
 
 def test_vocab_self_join_consumes_one_cached_exchange(spark):
