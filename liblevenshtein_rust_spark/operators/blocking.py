@@ -19,9 +19,19 @@ Stages:
 Blocking keys for the surviving vocabulary come from the one key-row
 generator, ``functions.blocking_keys.blocking_key_rows`` (compiled
 ``(token, key: long)`` rows), called by the ER vocabulary self-join
-(``pipeline/er.vocab_token_matches``) and the linkage cross join.  Hot-key
-salting lives with the ER self-join
-(``plans.rewrites.salted_self_join_pairs``).
+(``pipeline/er.vocab_token_matches``) and the linkage cross joins.
+
+Skew policy — its one statement; :func:`blocked_pairs` implements it for
+ER's self-join and linkage's edit and phonetic cross joins.  A key's join
+cost is its pair count, n(n−1)/2 in a self-join and n_a·n_b in a cross
+join (the multiplicity estimate of the ICDE 2021 join-size paper,
+PAPERS.md).  Keys above ``HOT_KEY_PAIRS`` are salted into ``N_SALT``
+groups and kept (``plans.rewrites``); keys above ``EXTREME_KEY_PAIRS``
+are dropped and counted, ``key_pairs_dropped`` bounding the true pairs
+lost.  In a self-join the bands are n > 1,000 and n > 100,000.  With no
+hot or extreme key the join is the band-free plan (no anti-join).
+``fuzzy_query``'s broadcast join and :func:`pair_block_weights` are
+outside this policy.
 """
 
 from __future__ import annotations
@@ -30,6 +40,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.blocking_keys import normalize_term
+
+HOT_KEY_PAIRS = 499_500  # n(n-1)/2 at n = 1,000: above this a key is salted
+EXTREME_KEY_PAIRS = 4_999_950_000  # n(n-1)/2 at n = 100,000: dropped + counted
+N_SALT = 8  # salt groups per hot key
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:
@@ -107,6 +121,64 @@ def rare_tokens(tok: DataFrame, max_df: int = 50) -> DataFrame:
     return tok.join(F.broadcast(frequent), "token", "left_anti").select(
         "doc_id", "token"
     )
+
+
+def blocked_pairs(
+    left: DataFrame, right: DataFrame | None = None
+) -> tuple[DataFrame, dict]:
+    """Skew-guarded distinct ``(left_id, right_id)`` pairs of a blocked
+    join on ``key``, and the band record ``{hot_keys_salted,
+    extreme_keys_dropped, key_pairs_dropped}`` (policy in the module
+    docstring).
+
+    ``left`` / ``right``: distinct ``(id, key)`` rows; ``right=None`` is the
+    self-join of ``left``, with ``left_id < right_id``.  The band count is
+    one driver action over the key rows, so callers persist rows they do
+    not want recomputed.
+    """
+    if right is None:
+        n = F.count("*")
+        per_key = left.groupBy("key").agg(F.shiftright(n * (n - 1), 1).alias("pairs"))
+    else:
+        sides = left.select("key", F.lit(True).alias("_l")).unionByName(
+            right.select("key", F.lit(False).alias("_l"))
+        )
+        per_key = sides.groupBy("key").agg(
+            (F.count_if("_l") * F.count_if(~F.col("_l"))).alias("pairs")
+        )
+    p = F.col("pairs")
+    is_hot = (p > HOT_KEY_PAIRS) & (p <= EXTREME_KEY_PAIRS)
+    is_extreme = p > EXTREME_KEY_PAIRS
+    band = per_key.agg(
+        F.count_if(is_hot).alias("hot_keys_salted"),
+        F.count_if(is_extreme).alias("extreme_keys_dropped"),
+        F.coalesce(F.sum(F.when(is_extreme, p)), F.lit(0)).alias("key_pairs_dropped"),
+    ).first()
+    record = {k: int(v) for k, v in band.asDict().items()}
+
+    if record["hot_keys_salted"] == record["extreme_keys_dropped"] == 0:
+        lk = left.select("key", F.col("id").alias("left_id"))
+        if right is None:
+            # shuffle_hash: a caller's key-partitioned cache feeds both
+            # sides, so the hint only swaps the per-partition algorithm — a
+            # build-side hash map instead of sorting both sides
+            rk = left.select("key", F.col("id").alias("right_id")).hint("shuffle_hash")
+            pairs = lk.join(rk, "key").where(F.col("left_id") < F.col("right_id"))
+        else:
+            pairs = lk.join(right.select("key", F.col("id").alias("right_id")), "key")
+    else:
+        from ..plans import rewrites
+
+        # hot and extreme key sets are small: broadcast them; the cold side
+        # is nearly the whole key table and must never be a broadcast build
+        hot = per_key.where(is_hot).select("key")
+        extreme = per_key.where(is_extreme).select("key")
+        kept = left.join(F.broadcast(extreme), "key", "left_anti")
+        if right is None:
+            pairs = rewrites.salted_self_join_pairs(kept, hot, N_SALT)
+        else:
+            pairs = rewrites.salted_cross_join_pairs(kept, right, hot, N_SALT)
+    return pairs.select("left_id", "right_id").distinct(), record
 
 
 def sorted_neighborhood_pairs(

@@ -303,55 +303,6 @@ def simhash_fingerprints(
     )
 
 
-def simhash_fingerprints_exploded(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Bit-identical to :func:`simhash_fingerprints` via a different plan:
-    explode tokens → 63 whole-stage-codegen sum aggregates per doc → sign →
-    fingerprint.  Trades the interpreted array-HOF expression (63
-    ``F.aggregate`` lambdas per row, no codegen) for one shuffle whose
-    map-side partial agg compresses each task to one 63-column row per doc.
-    Kept alongside the HOF plan so the two stay benchmark-comparable
-    (BASELINE.md records the measured winner per regime)."""
-    toks = docs.select(
-        F.col(id_col),
-        F.explode_outer(
-            F.filter(
-                F.split(normalize_text(F.col(text_col)), r"\s+"),
-                lambda t: F.length(t) > 0,
-            )
-        ).alias("tok"),
-    )
-    hx = F.substring(F.md5(F.col("tok")), 1, 16)
-    contribs = []
-    for i in range(SIMHASH_BITS):
-        digit, shift = i // 4, 3 - i % 4
-        bit = (
-            F.floor(
-                (F.instr(F.lit("0123456789abcdef"), F.substring(hx, digit + 1, 1)) - 1)
-                / (2 ** shift)
-            )
-            % 2
-        )
-        # explode_outer yields a NULL token for empty docs → contribution 0,
-        # so token-less docs keep fingerprint 0 exactly like the HOF plan
-        contribs.append(
-            F.when(F.col("tok").isNull(), F.lit(0).cast("bigint"))
-            .otherwise((bit * 2 - 1).cast("bigint"))
-            .alias(f"c{i}")
-        )
-    per_tok = toks.select(F.col(id_col), *contribs)
-    agg = per_tok.groupBy(id_col).agg(
-        *[F.sum(f"c{i}").alias(f"s{i}") for i in range(SIMHASH_BITS)]
-    )
-    fp = F.lit(0).cast("bigint")
-    for i in range(SIMHASH_BITS):
-        fp = fp + F.when(
-            F.col(f"s{i}") > 0, F.lit(2 ** i).cast("bigint")
-        ).otherwise(F.lit(0).cast("bigint"))
-    return agg.select(F.col(id_col), fp.alias("simhash"))
-
-
 def simhash_near_pairs(
     docs: DataFrame,
     text_col: str = "text",

@@ -347,13 +347,6 @@ def frame_sample(docs: DataFrame, every: int = 2) -> DataFrame:
     )
 
 
-def docs_with_media_features(docs: DataFrame) -> DataFrame:
-    """Join features back to (doc_id, offset) — media_ref-keyed broadcast or
-    shuffle join; the span invariant is untouched (original docs unmodified)."""
-    feats = media_features(docs)
-    return extract_media_refs(docs).join(feats, "media_ref")
-
-
 def modality_stats(docs: DataFrame) -> DataFrame:
     """Per-document modality profile of an interleaved span table — the
     first question a multimodal curation pipeline asks of every doc (how

@@ -30,10 +30,10 @@ Scale design (each stage annotated for the 10^12-doc target):
   neighborhood enumeration, not scans).  ``blocking_keys.blocking_key_rows``
   picks the family and emits it as compiled ``(token, key: long)`` rows,
   the same generator the linkage and fuzzy-query joins use.
-- **Skew**: hot keys are salted and kept; only extreme keys are dropped.
-  Both are counted (``hot_keys_salted`` / ``extreme_keys_dropped``
-  manifest metrics); AQE skew-join splits what remains.  Evidence-join
-  fan-out is bounded by ``max_df`` per token by construction.
+- **Skew**: the vocabulary self-join is ``blocking.blocked_pairs`` (the
+  skew policy is stated in that module); its band record is the
+  ``token_matches`` manifest's skew counters.  Evidence-join fan-out is
+  bounded by ``max_df`` per token by construction.
 - **Per-stage parquet checkpoints** (:mod:`.runstate`) give resumability +
   per-partition lineage; the CC loop additionally ``localCheckpoint``s per
   iteration (lineage truncation inside the fixpoint).
@@ -58,9 +58,6 @@ class ERConfig:
     variant: str = TRANSPOSITION     # typos include adjacent swaps
     min_token_len: int = 3
     max_df: int = 50                 # rare-token document-frequency cutoff
-    hot_key_threshold: int = 1000    # above this fan-out a key gets SALTED
-    extreme_key_threshold: int = 100_000  # above this a key is dropped+logged
-    n_salt: int = 8                  # salt groups for hot keys
     min_token_matches: int = 2       # doc-pair evidence threshold
     num_partitions: int | None = None
     # When set, the whole pipeline runs with exactly this many shuffle
@@ -76,7 +73,7 @@ class ERConfig:
 
 
 def vocab_token_matches(
-    toks: DataFrame, cfg: ERConfig, hot_stats: list | None = None
+    toks: DataFrame, cfg: ERConfig, band: dict | None = None
 ) -> DataFrame:
     """All (tok_a <= tok_b, distance) pairs within ``max_distance`` over the
     distinct token vocabulary, via key blocking + kernel.  The key family
@@ -84,18 +81,20 @@ def vocab_token_matches(
     ``cfg.max_distance``; a combination without one raises ``ValueError``.
 
     The d=0 diagonal (tok, tok, 0) is included without touching the kernel.
-    ``hot_stats``, when given, receives ``[hot_keys_salted,
-    extreme_keys_dropped]``.
+    ``band``, when given, receives :func:`blocking.blocked_pairs`' band
+    record (``hot_keys_salted``, ``extreme_keys_dropped``,
+    ``key_pairs_dropped``).
     """
     from ..functions.blocking_keys import blocking_key_rows, variant_key_budget
 
     vocab = toks.select("token").distinct()
     budget = variant_key_budget(cfg.variant, cfg.max_distance)
-    keyed = blocking_key_rows(vocab, "token", budget, cfg.variant)
-    # The exploded key table feeds three consumers (hot count, cold filter,
-    # self-join sides); without persisting, the O(len^2)-per-token deletion
-    # expression is recomputed for each — persist once, reuse everywhere
-    # (pooled: run_pipeline releases after the stage checkpoint is written).
+    keyed = blocking_key_rows(
+        vocab.select(F.col("token").alias("id")), "id", budget, cfg.variant
+    )
+    # The exploded key table feeds the band count and both self-join sides:
+    # persist once (pooled: run_pipeline releases after the stage checkpoint
+    # is written) instead of recomputing the deletion expression for each.
     #
     # Hash-partition by `key` BEFORE the persist: the self-join's two sides
     # are alias-projections of this same table, which Spark treats as
@@ -103,8 +102,8 @@ def vocab_token_matches(
     # its own full exchange and the join re-read both (measured at 1.2M
     # docs: 2 x 2.2 GB shuffle writes + a 4.4 GB shuffle read — the
     # pipeline's single largest cost center).  With the cache already
-    # HashPartitioning(key), the pre-count aggregate, the extreme anti-join
-    # probe side, and BOTH self-join sides satisfy the join's distribution
+    # HashPartitioning(key), the band count, the extreme anti-join probe
+    # side, and BOTH self-join sides satisfy the join's distribution
     # requirement straight from cached partitions: one data-sized exchange
     # total, paid at materialization.
     #
@@ -114,70 +113,12 @@ def vocab_token_matches(
     from ..session import pooled_persist
 
     keyed = pooled_persist(keyed.repartition("key").distinct())
-    # skew guard on the vocab self-join: a deletion variant shared by
-    # thousands of tokens (e.g. every 3-char fragment) explodes quadratically
-    # The per-key fan-out table feeds three consumers (hot set, extreme set,
-    # stats agg) — persist the aggregate once instead of re-running the
-    # groupBy shuffle for each.
-    counts = pooled_persist(keyed.groupBy("key").agg(F.count("*").alias("n_toks")))
-    # three bands, per the north rule's explicit skew handling:
-    #   cold    (<= hot_key_threshold)       → plain equi self-join
-    #   hot     (.. extreme_key_threshold]   → SALTED self-join (triangle
-    #             decomposition, plans.rewrites.salted_self_join_pairs):
-    #             every pair kept, no shuffle partition gets a whole bucket
-    #   extreme (> extreme_key_threshold)    → dropped and counted (a
-    #             key shared by 10^5+ tokens carries no pair-level signal
-    #             and its pair count is quadratically catastrophic)
-    n = F.col("n_toks")
-    band = counts.agg(
-        F.count_if(
-            (n > cfg.hot_key_threshold) & (n <= cfg.extreme_key_threshold)
-        ).alias("hot"),
-        F.count_if(n > cfg.extreme_key_threshold).alias("extreme"),
-    ).first()
-    n_hot, n_extreme = int(band["hot"]), int(band["extreme"])
-    if hot_stats is not None:
-        hot_stats.extend([n_hot, n_extreme])
-
-    if n_hot == n_extreme == 0:
-        # Data-adaptive fast path: the pre-count proved there is no skew
-        # band, so the salting machinery (broadcast anti-join, hot-marker
-        # join, triangle union) would be three extra passes over the key
-        # table for nothing.  The skewed path stays fully exercised by the
-        # hot-key fixtures and tests.
-        cl = keyed.select("key", F.col("token").alias("left_id"))
-        cr = keyed.select("key", F.col("token").alias("right_id"))
-        # shuffle_hash: both sides arrive co-partitioned from the cache, so
-        # the hint only swaps the per-partition algorithm — a build-side hash
-        # map instead of sorting BOTH sides (SMJ), with partition size
-        # bounded by data/num_partitions
-        raw = cl.join(cr.hint("shuffle_hash"), "key").where(
-            F.col("left_id") < F.col("right_id")
-        )
-    else:
-        hot = counts.where(
-            (F.col("n_toks") > cfg.hot_key_threshold)
-            & (F.col("n_toks") <= cfg.extreme_key_threshold)
-        ).select("key")
-        extreme = counts.where(
-            F.col("n_toks") > cfg.extreme_key_threshold
-        ).select("key")
-        # Broadcast the HOT/EXTREME sides (small by construction) and
-        # anti-join: the cold side is nearly the whole key table —
-        # broadcasting it would serialize a multi-GB hash build on the
-        # driver (measured: the stage went flat at any core count until
-        # this was inverted).
-        k = keyed.join(F.broadcast(extreme), "key", "left_anti")
-
-        from ..plans.rewrites import salted_self_join_pairs
-
-        raw = salted_self_join_pairs(
-            k, hot, n_salt=cfg.n_salt, key_col="key", id_col="token"
-        )
+    raw, record = blocking.blocked_pairs(keyed)
+    if band is not None:
+        band.update(record)
 
     pairs = (
         raw.select(F.col("left_id").alias("tok_a"), F.col("right_id").alias("tok_b"))
-        .distinct()
         .where(length_prefilter(F.col("tok_a"), F.col("tok_b"), cfg.max_distance))
     )
     dist = edit_distance_udf(cfg.max_distance, cfg.variant)
@@ -319,22 +260,20 @@ def _run_stages(
     # only backed the stage build
     release_pooled()
 
-    hot_stats: list = []
+    band: dict = {}
     tok_matches = rs.stage(
         "token_matches",
-        lambda: vocab_token_matches(toks, cfg, hot_stats),
+        lambda: vocab_token_matches(toks, cfg, band),
         inputs=("tokens",),
         observe={
             "kernel_pairs": F.coalesce(
                 F.sum((F.col("tok_a") != F.col("tok_b")).cast("long")), F.lit(0)
             )
         },
-        metrics=lambda d: dict(
-            zip(("hot_keys_salted", "extreme_keys_dropped"), hot_stats or (0, 0))
-        ),
+        metrics=lambda d: band,
     )
-    # the stage above is parquet-materialized — the pooled key/count caches
-    # inside vocab_token_matches are dead weight from here on
+    # the stage above is parquet-materialized — the pooled key cache inside
+    # vocab_token_matches is dead weight from here on
     release_pooled()
 
     edges = rs.stage(

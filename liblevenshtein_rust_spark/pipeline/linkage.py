@@ -7,8 +7,8 @@ Same engineering altitude as the ER pipeline, restated for two sides:
 
 - **Vocabulary-level matching, cross form**: the two RARE-token
   vocabularies are joined through shared deletion-neighborhood keys —
-  an A-vocab × B-vocab blocked join (no self-join, no canonicalization,
-  no triangle salting: the sides are disjoint by construction).  Both
+  an A-vocab × B-vocab blocked join (no self-join, no canonicalization:
+  the sides are disjoint by construction).  Both
   sides are keyed with ``blocking_keys.blocking_key_rows``'s compiled
   ``(token, key: long)`` rows, shared with ER and ``operators/matching.py``
   — deletion keys (exact for budget ≤ 2), the length-banded hybrids for
@@ -23,9 +23,10 @@ Same engineering altitude as the ER pipeline, restated for two sides:
   engines, which is what lets the DuckDB oracle replay the full linkage
   including the final assignment.
 
-Skew: the same hashed-key + extreme-fanout drop policy as
-`er.vocab_token_matches`; a cross join's per-key cost is n_a × n_b, so the
-guard multiplies the two side counts.
+Skew: both the edit and the phonetic channel join through
+``operators.blocking.blocked_pairs``, whose module docstring states the
+one skew policy (per-key cost n_a·n_b; hot keys salted and kept, extreme
+keys dropped and counted).
 """
 
 from __future__ import annotations
@@ -52,7 +53,6 @@ class LinkConfig:
     min_token_len: int = 3
     max_df: int = 50                 # per-side rare-token DF cutoff
     min_token_matches: int = 2       # evidence threshold per linked pair
-    extreme_key_product: int = 1_000_000  # drop keys with n_a*n_b above
     # second evidence channel: token pairs with EQUAL phonetic codes that
     # the edit channel missed (name-matching ER's classic OR-blocking —
     # reference analog: the phonetic rewrite engine feeding the transducer,
@@ -87,7 +87,7 @@ def _tokens(docs: DataFrame, cfg: LinkConfig) -> DataFrame:
 
 
 def cross_vocab_matches(
-    vocab_a: DataFrame, vocab_b: DataFrame, cfg: LinkConfig
+    vocab_a: DataFrame, vocab_b: DataFrame, cfg: LinkConfig, band: dict | None = None
 ) -> DataFrame:
     """(tok_a, tok_b, distance) for every A-vocab × B-vocab pair within
     ``max_distance`` — blocked through shared keys, kernel-scored.  Exact
@@ -97,39 +97,48 @@ def cross_vocab_matches(
     budget (the same choice ER and ``operators/matching.py`` make).  A
     combination without one RAISES rather than silently losing pairs — the
     linkage contract promises every within-distance pair, and an incomplete
-    key family would bias the learned EM weights invisibly.
+    key family would bias the learned EM weights invisibly.  ``band``, when
+    given, receives :func:`blocking.blocked_pairs`' band record.
     """
     budget = variant_key_budget(cfg.variant, cfg.max_distance)
 
-    def keyed(vocab: DataFrame, col: str) -> DataFrame:
-        # distinct: the per-key counts below count tokens, not the
-        # deletion positions that reach one key
-        rows = vocab.select(F.col("token").alias(col))
-        return blocking_key_rows(rows, col, budget, cfg.variant).distinct()
+    def keyed(vocab: DataFrame) -> DataFrame:
+        # distinct: the per-key counts count tokens, not the deletion
+        # positions that reach one key
+        rows = vocab.select(F.col("token").alias("id"))
+        return blocking_key_rows(rows, "id", budget, cfg.variant).distinct()
 
-    ka = keyed(vocab_a, "tok_a")
-    kb = keyed(vocab_b, "tok_b")
-    # cross-join skew guard: per-key cost is n_a * n_b, so the band is on
-    # the PRODUCT of the two side fan-outs (same logged-drop policy as the
-    # ER pipeline's extreme band)
-    ca = ka.groupBy("key").agg(F.count("*").alias("na"))
-    cb = kb.groupBy("key").agg(F.count("*").alias("nb"))
-    extreme = (
-        ca.join(cb, "key")
-        .where(F.col("na") * F.col("nb") > cfg.extreme_key_product)
-        .select("key")
-    )
-    ka = ka.join(F.broadcast(extreme), "key", "left_anti")
+    raw, record = blocking.blocked_pairs(keyed(vocab_a), keyed(vocab_b))
+    if band is not None:
+        band.update(record)
     pairs = (
-        ka.join(kb, "key")
-        .select("tok_a", "tok_b")
-        .distinct()
+        raw.select(F.col("left_id").alias("tok_a"), F.col("right_id").alias("tok_b"))
         .where(length_prefilter(F.col("tok_a"), F.col("tok_b"), cfg.max_distance))
     )
     dist = edit_distance_udf(cfg.max_distance, cfg.variant)
     return pairs.withColumn("distance", dist(F.col("tok_a"), F.col("tok_b"))).where(
         F.col("distance") >= 0
     )
+
+
+def phonetic_vocab_matches(
+    vocab_a: DataFrame, vocab_b: DataFrame, cfg: LinkConfig, band: dict | None = None
+) -> DataFrame:
+    """(tok_a, tok_b) for every A × B vocabulary pair with EQUAL phonetic
+    codes (``cfg.phonetic_ruleset``); ``band`` as in
+    :func:`cross_vocab_matches`."""
+    from ..functions.phonetic import phonetic_normalize
+
+    def coded(vocab: DataFrame) -> DataFrame:
+        return vocab.select(
+            F.col("token").alias("id"),
+            phonetic_normalize(F.col("token"), cfg.phonetic_ruleset).alias("key"),
+        )
+
+    raw, record = blocking.blocked_pairs(coded(vocab_a), coded(vocab_b))
+    if band is not None:
+        band.update(record)
+    return raw.select(F.col("left_id").alias("tok_a"), F.col("right_id").alias("tok_b"))
 
 
 def link_tables(
@@ -219,29 +228,8 @@ def score_pairs(
         ).alias("w"),
     )
     if cfg.use_phonetic:
-        from ..functions.phonetic import phonetic_normalize
-
-        pa = va.select(
-            F.col("token").alias("tok_a"),
-            phonetic_normalize(F.col("token"), cfg.phonetic_ruleset).alias("code"),
-        )
-        pb = vb.select(
-            F.col("token").alias("tok_b"),
-            phonetic_normalize(F.col("token"), cfg.phonetic_ruleset).alias("code"),
-        )
-        # hot-code guard: the phonetic channel's per-key cost is also a
-        # product of side fan-outs (same band policy as the deletion keys)
-        hot = (
-            pa.groupBy("code").agg(F.count("*").alias("na"))
-            .join(pb.groupBy("code").agg(F.count("*").alias("nb")), "code")
-            .where(F.col("na") * F.col("nb") > cfg.extreme_key_product)
-            .select("code")
-        )
         ph = (
-            pa.join(F.broadcast(hot), "code", "left_anti")
-            .join(pb, "code")
-            .select("tok_a", "tok_b")
-            .distinct()
+            phonetic_vocab_matches(va, vb, cfg)
             # only pairs the edit channel MISSED: the union stays a set and
             # an edit match never gets double-counted or down-weighted
             .join(tm.select("tok_a", "tok_b"), ["tok_a", "tok_b"], "left_anti")

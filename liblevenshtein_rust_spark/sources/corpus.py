@@ -1,12 +1,13 @@
 """Corpus loaders — reference parity for ``src/corpus/parser.rs``.
 
-Two formats (documented in the reference's ``data/corpora/README.md:145-171``):
+Formats (documented in the reference's ``data/corpora/README.md:145-171``):
 
-- **big.txt style**: free text; the dictionary is the distinct word list.
 - **Mitton .dat style**: lines of ``$correct`` followed by misspelling
   lines; parses to (correct, misspelling) pairs.
+- **word lists**: one word per line (``load_word_list``; ``cli.py
+  --format text`` reads the same layout).
 
-Both are Spark reads — text source + columnar transforms — so a 100 GB
+All are Spark reads — text source + columnar transforms — so a 100 GB
 corpus parses distributed.  (The Mitton format is line-order-dependent:
 the `$`-header applies to following lines.  Order-dependence across
 splits is handled the standard Spark way: tag each line with its file
@@ -19,15 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-
-def load_bigtxt_words(spark: SparkSession, path: str, min_len: int = 1) -> DataFrame:
-    """Distinct lowercase word list of a free-text corpus → (term)."""
-    lines = spark.read.text(path)
-    words = lines.select(
-        F.explode(F.split(F.regexp_replace(F.lower("value"), "[^a-z]+", " "), " ")).alias("term")
-    )
-    return words.where(F.length("term") >= min_len).distinct()
 
 
 def load_mitton_pairs(spark: SparkSession, path: str) -> DataFrame:

@@ -131,3 +131,143 @@ def test_fuzzy_query_d4_equals_unblocked(spark):
         if distance(q, w, STANDARD) <= 4
     )
     assert got == want
+
+
+# ---------------------------------------------------------------------------
+# skew bands: salting loses nothing, dropping loses only what it counts
+# ---------------------------------------------------------------------------
+
+_VOWELS = "aeiou"
+# 26 tokens whose only shared d=1 key is "kz" (one substitution apart);
+# 25 tokens with the phonetic skeleton "btn" and 9 with "mrk"; all three
+# families also share deletion keys among themselves
+SKEW_PLANTED = (
+    [f"k{c}z" for c in "abcdefghijklmnopqrstuvwxyz"]
+    + [f"b{u}t{v}n" for u in _VOWELS for v in _VOWELS]
+    + [f"m{u}r{v}k" for u in _VOWELS[:3] for v in _VOWELS[:3]]
+)
+_srng = random.Random(23)
+SKEW_VOCAB = sorted(
+    set(SKEW_PLANTED)
+    | {"".join(_srng.choice("abcd") for _ in range(_srng.randint(3, 6))) for _ in range(40)}
+)
+SKEW_A, SKEW_B = SKEW_VOCAB[::2], SKEW_VOCAB[1::2]
+SKEW_D, SKEW_VARIANT = 1, TRANSPOSITION
+
+
+def _key_sets(spark, words, variant, d):
+    from liblevenshtein_rust_spark.functions.blocking_keys import (
+        blocking_key_rows,
+        variant_key_budget,
+    )
+
+    rows = blocking_key_rows(
+        _vocab_df(spark, words), "token", variant_key_budget(variant, d), variant
+    ).collect()
+    keys: dict = {w: set() for w in words}
+    for r in rows:
+        keys[r["token"]].add(r["key"])
+    return keys
+
+
+def _phonetic_codes(spark, words, ruleset):
+    from pyspark.sql import functions as F
+
+    from liblevenshtein_rust_spark.functions.phonetic import phonetic_normalize
+
+    df = _vocab_df(spark, words).select(
+        "token", phonetic_normalize(F.col("token"), ruleset).alias("code")
+    )
+    return {r["token"]: {r["code"]} for r in df.collect()}
+
+
+def _dropped(keys_a, keys_b, extreme):
+    """Keys whose pair count exceeds ``extreme``: n(n-1)/2 when ``keys_b``
+    is None (self-join), n_a*n_b otherwise."""
+    from collections import Counter
+
+    na = Counter(k for ks in keys_a.values() for k in ks)
+    if keys_b is None:
+        return {k for k, n in na.items() if n * (n - 1) // 2 > extreme}
+    nb = Counter(k for ks in keys_b.values() for k in ks)
+    return {k for k in na if na[k] * nb.get(k, 0) > extreme}
+
+
+def _check_loss(got, want, keys_a, keys_b, dropped, band):
+    """got ⊆ want; every missing pair shares a dropped key; the number
+    missing is bounded by the counted pairs; no drop → no loss."""
+    assert got <= want
+    missing = want - got
+    for a, b in missing:
+        assert keys_a[a] & keys_b[b] & dropped, (a, b)
+    assert len(missing) <= band["key_pairs_dropped"]
+    assert band["extreme_keys_dropped"] == len(dropped)
+    if not dropped:
+        assert got == want and band["key_pairs_dropped"] == 0
+    return missing
+
+
+@pytest.mark.parametrize("extreme", [10**12, 50])
+def test_skew_bands_lose_only_counted_pairs(spark, monkeypatch, extreme):
+    """With the two band constants monkeypatched small, ER's self-join and
+    linkage's edit and phonetic cross joins against the unblocked scalar
+    cross product: hot keys are salted and lose nothing; extreme keys lose
+    at most ``key_pairs_dropped`` pairs, each through a dropped key."""
+    from liblevenshtein_rust_spark.operators import blocking
+
+    monkeypatch.setattr(blocking, "HOT_KEY_PAIRS", 3)
+    monkeypatch.setattr(blocking, "EXTREME_KEY_PAIRS", extreme)
+    keys = _key_sets(spark, SKEW_VOCAB, SKEW_VARIANT, SKEW_D)
+
+    # ER vocabulary self-join (off-diagonal pairs; the diagonal is unblocked)
+    band: dict = {}
+    cfg = er.ERConfig(max_distance=SKEW_D, variant=SKEW_VARIANT, max_df=100)
+    toks = spark.createDataFrame(list(enumerate(SKEW_VOCAB)), "doc_id long, token string")
+    got = {
+        (r["tok_a"], r["tok_b"])
+        for r in er.vocab_token_matches(toks, cfg, band).collect()
+        if r["tok_a"] != r["tok_b"]
+    }
+    want = {
+        (a, b)
+        for a in SKEW_VOCAB
+        for b in SKEW_VOCAB
+        if a < b and distance(a, b, SKEW_VARIANT) <= SKEW_D
+    }
+    assert band["hot_keys_salted"] > 0
+    missing = _check_loss(got, want, keys, keys, _dropped(keys, None, extreme), band)
+    assert bool(missing) == (extreme == 50)
+
+    # linkage, edit channel
+    band = {}
+    lcfg = linkage.LinkConfig(max_distance=SKEW_D, variant=SKEW_VARIANT)
+    got = {
+        (r["tok_a"], r["tok_b"])
+        for r in linkage.cross_vocab_matches(
+            _vocab_df(spark, SKEW_A), _vocab_df(spark, SKEW_B), lcfg, band
+        ).collect()
+    }
+    want = {
+        (a, b) for a in SKEW_A for b in SKEW_B if distance(a, b, SKEW_VARIANT) <= SKEW_D
+    }
+    ka = {w: keys[w] for w in SKEW_A}
+    kb = {w: keys[w] for w in SKEW_B}
+    assert band["hot_keys_salted"] > 0
+    missing = _check_loss(got, want, ka, kb, _dropped(ka, kb, extreme), band)
+    assert bool(missing) == (extreme == 50)
+
+    # linkage, phonetic channel: the code is the key and equality the match
+    band = {}
+    codes = _phonetic_codes(spark, SKEW_VOCAB, lcfg.phonetic_ruleset)
+    got = {
+        (r["tok_a"], r["tok_b"])
+        for r in linkage.phonetic_vocab_matches(
+            _vocab_df(spark, SKEW_A), _vocab_df(spark, SKEW_B), lcfg, band
+        ).collect()
+    }
+    want = {(a, b) for a in SKEW_A for b in SKEW_B if codes[a] == codes[b]}
+    ca = {w: codes[w] for w in SKEW_A}
+    cb = {w: codes[w] for w in SKEW_B}
+    assert band["hot_keys_salted"] > 0
+    missing = _check_loss(got, want, ca, cb, _dropped(ca, cb, extreme), band)
+    assert bool(missing) == (extreme == 50)

@@ -124,13 +124,6 @@ def test_cli_clear(spark, tmp_path, capsys):
 # ---------------------------------------------------------------------------
 
 
-def test_bigtxt_words(spark, tmp_path):
-    f = tmp_path / "big.txt"
-    f.write_text("The quick brown Fox. The FOX!\nquick-thinking fox\n")
-    words = {r["term"] for r in corpus.load_bigtxt_words(spark, str(f)).collect()}
-    assert words == {"the", "quick", "brown", "fox", "thinking"}
-
-
 def test_mitton_pairs(spark, tmp_path):
     f = tmp_path / "missp.dat"
     f.write_text("$apple\napple1\napples\n$banana\nbananna\n")

@@ -71,21 +71,6 @@ def test_simhash_identical_and_near(spark):
     assert pairs[(1, 2)] == 0
 
 
-def test_simhash_exploded_parity(spark):
-    """The explode+groupBy-sum plan is bit-identical to the HOF plan,
-    including the empty-document fingerprint-0 case."""
-    docs = _docs(spark, [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "pack my box with five dozen liquor jugs"),
-        (3, ""),
-        (4, "singleton"),
-    ])
-    a = {r["doc_id"]: r["simhash"] for r in dedup.simhash_fingerprints(docs).collect()}
-    b = {r["doc_id"]: r["simhash"]
-         for r in dedup.simhash_fingerprints_exploded(docs).collect()}
-    assert a == b
-
-
 def test_embedding_lsh_recall_vs_bruteforce(spark):
     import random
 
@@ -414,13 +399,6 @@ def test_frame_sample_keeps_order(spark, media_docs):
     assert len(j) > 0
     for r in j:
         assert r["k"] == (r["n"] + 1) // 2
-
-
-def test_docs_with_media_features_join(spark, media_docs):
-    out = multimodal.docs_with_media_features(media_docs)
-    n_refs = multimodal.extract_media_refs(media_docs).count()
-    assert out.count() == n_refs
-    assert set(out.columns) == {"media_ref", "doc_id", "offset", "n_bytes", "feature"}
 
 
 # ---------------------------------------------------------------------------

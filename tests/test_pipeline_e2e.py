@@ -141,8 +141,11 @@ def test_manifest_lineage_and_metrics(spark, docs, run):
         assert m["partitions"] >= 1
         assert m["wall_s"] >= 0
     assert "kernel_pairs" in ms["token_matches"]["metrics"]
-    assert "hot_keys_salted" in ms["token_matches"]["metrics"]
-    assert "extreme_keys_dropped" in ms["token_matches"]["metrics"]
+    # the band record of blocking.blocked_pairs, all three counters
+    band = ms["token_matches"]["metrics"]
+    for k in ("hot_keys_salted", "extreme_keys_dropped", "key_pairs_dropped"):
+        assert isinstance(band[k], int) and band[k] >= 0, k
+    assert (band["extreme_keys_dropped"] == 0) == (band["key_pairs_dropped"] == 0)
 
 
 def test_link_tables_cross_corpus(spark):

@@ -196,3 +196,40 @@ def test_vocab_self_join_consumes_one_cached_exchange(spark):
     from liblevenshtein_rust_spark.session import release_pooled
 
     release_pooled()
+
+
+def test_band_free_vocab_join_has_no_skew_machinery(spark, monkeypatch):
+    """With no hot or extreme key, the ER vocabulary join is the band-free
+    plan: no LeftAnti join and no key Exchange beyond the persisted
+    ``repartition("key")`` (reprinted under each InMemoryRelation).  Forcing
+    every key extreme brings the anti-join in, so the audit has teeth."""
+    from liblevenshtein_rust_spark.pipeline import er
+    from liblevenshtein_rust_spark.session import release_pooled
+
+    words = ["batch", "bacth", "battch", "join", "jion", "joins", "merge",
+             "mrege", "spark", "spork", "sparc", "window"]
+    toks = spark.createDataFrame(list(enumerate(words)), "doc_id long, token string")
+
+    def plan():
+        band: dict = {}
+        tm = er.vocab_token_matches(toks, er.ERConfig(max_df=100), band)
+        tm.count()
+        out = _plan(tm)
+        release_pooled()
+        return out, band
+
+    text, band = plan()
+    assert band["hot_keys_salted"] == band["extreme_keys_dropped"] == 0
+    assert "LeftAnti" not in text
+    key_exchanges = [
+        ln for ln in text.splitlines() if "Exchange hashpartitioning(key#" in ln
+    ]
+    assert key_exchanges
+    assert all("REPARTITION_BY_COL" in ln for ln in key_exchanges)
+
+    from liblevenshtein_rust_spark.operators import blocking
+
+    monkeypatch.setattr(blocking, "EXTREME_KEY_PAIRS", 0)
+    text, band = plan()
+    assert band["extreme_keys_dropped"] > 0
+    assert "LeftAnti" in text

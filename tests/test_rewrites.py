@@ -35,26 +35,56 @@ def test_salted_self_join_equals_unsalted(spark):
         got = _pairs(rewrites.salted_self_join_pairs(keyed, hot, n_salt=n_salt))
         assert got == expected, n_salt
 
+    # the cross twin: split left, replicate right — the same (key, left_id,
+    # right_id) multiset as the plain equi-join, for a hot key on both sides
+    right = spark.createDataFrame(
+        [("hot", f"e{i:02d}") for i in range(25)] + [("cold1", "z"), ("cold3", "w")],
+        "key string, id string",
+    )
+    plain = plain_l.join(right.select("key", F.col("id").alias("right_id")), "key")
+
+    def triples(df):
+        return sorted((r["key"], r["left_id"], r["right_id"]) for r in df.collect())
+
+    want = triples(plain)
+    assert len(want) == 40 * 25 + 3
+    for n_salt in (2, 3, 8):
+        got = triples(rewrites.salted_cross_join_pairs(keyed, right, hot, n_salt=n_salt))
+        assert got == want, n_salt
+
 
 def test_salting_distributes_hot_bucket(spark):
-    """No (key, _i, _j) task of the salted join may carry the whole bucket."""
-    rows = [("hot", f"d{i:03d}") for i in range(60)]
+    """No salt-group task of the triangle carries more than a small share
+    of the hot bucket: each output pair is attributed to its task
+    (min group, max group) by the rewrite's own salt expression."""
+    from collections import Counter
+
+    n, n_salt = 60, 4
+    rows = [("hot", f"d{i:03d}") for i in range(n)]
     keyed = spark.createDataFrame(rows, "key string, id string")
     hot = spark.createDataFrame([("hot",)], "key string")
-    out = rewrites.salted_self_join_pairs(keyed, hot, n_salt=4)
-    full = 60 * 59 // 2
-    assert len(_pairs(out)) == full
-    # triangle decomposition: largest per-task pair count << full bucket
-    # (4 salts → ~10 tasks → expect <= ~3x the ideal full/10 share)
-    per_group = full / 10
-    assert per_group * 3 < full
+    out = _pairs(rewrites.salted_self_join_pairs(keyed, hot, n_salt=n_salt))
+    full = n * (n - 1) // 2
+    assert len(out) == full
+    group = {
+        r["id"]: r["g"]
+        for r in keyed.select("id", rewrites.salt_group("id", n_salt).alias("g")).collect()
+    }
+    assert set(group.values()) == set(range(n_salt))
+    per_task = Counter(
+        (min(group[a], group[b]), max(group[a], group[b])) for a, b in out
+    )
+    assert len(per_task) == n_salt * (n_salt + 1) // 2
+    # 10 tasks share the bucket; the largest holds well under a quarter of it
+    assert max(per_task.values()) * 4 < full
 
 
-def test_vocab_token_matches_salted_band_equals_fast_path(spark):
+def test_vocab_token_matches_salted_band_equals_fast_path(spark, monkeypatch):
     """vocab_token_matches must produce the same scored pair set whether the
-    skew pre-count routes it down the fast path (no hot keys) or the salted
-    band (hot_key_threshold forced tiny) — salting is pair-set-preserving
+    band count routes it down the band-free path (no hot keys) or the
+    salted band (HOT_KEY_PAIRS forced tiny) — salting is pair-set-preserving
     end-to-end, not just in the rewrite unit test."""
+    from liblevenshtein_rust_spark.operators import blocking
     from liblevenshtein_rust_spark.pipeline import er
 
     toks = spark.createDataFrame(
@@ -64,19 +94,20 @@ def test_vocab_token_matches_salted_band_equals_fast_path(spark):
         )],
         "doc_id long, token string",
     )
-    base = er.ERConfig(max_df=100)
-    hotcfg = er.ERConfig(max_df=100, hot_key_threshold=1, extreme_key_threshold=10**9, n_salt=3)
+    cfg = er.ERConfig(max_df=100)
 
-    def result(cfg):
-        stats: list = []
-        out = er.vocab_token_matches(toks, cfg, stats)
+    def result():
+        band: dict = {}
+        out = er.vocab_token_matches(toks, cfg, band)
         rows = sorted(
             (r["tok_a"], r["tok_b"], r["distance"]) for r in out.collect()
         )
-        return rows, stats[0]
+        return rows, band
 
-    fast_rows, fast_hot = result(base)
-    salted_rows, salted_hot = result(hotcfg)
-    assert fast_hot == 0            # fast path taken
-    assert salted_hot > 0           # salted band actually exercised
+    fast_rows, fast_band = result()
+    monkeypatch.setattr(blocking, "HOT_KEY_PAIRS", 0)
+    salted_rows, salted_band = result()
+    assert fast_band["hot_keys_salted"] == 0       # band-free path taken
+    assert salted_band["hot_keys_salted"] > 0      # salted band exercised
+    assert salted_band["extreme_keys_dropped"] == 0
     assert salted_rows == fast_rows
