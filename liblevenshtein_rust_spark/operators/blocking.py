@@ -15,6 +15,9 @@ Stages:
    keys; dropping them is both a recall no-op and the first line of skew
    defense.  This is the value-filtered traversal analog
    (``src/transducer/value_filtered_query.rs``): filter *before* exploring.
+   The DF is one window count per token over the token table, so the filter
+   is a single pass with no broadcast job of its own, and an optional
+   ``Observation`` on the same pass counts what the guard dropped.
 
 Blocking keys for the surviving vocabulary come from the one key-row
 generator, ``functions.blocking_keys.blocking_key_rows`` (compiled
@@ -36,7 +39,7 @@ outside this policy.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.blocking_keys import normalize_term
@@ -106,21 +109,41 @@ def doc_tokens(docs: DataFrame, min_len: int = 3) -> DataFrame:
     return toks.where(F.length("token") >= min_len).distinct()
 
 
-def rare_tokens(tok: DataFrame, max_df: int = 50) -> DataFrame:
+def rare_tokens(
+    tok: DataFrame, max_df: int = 50, dropped: Observation | None = None
+) -> DataFrame:
     """Drop stopword-like tokens by corpus document frequency.
 
-    ``max_df`` is absolute here (testdata scale); at corpus scale it becomes
-    a fraction of N. The DF pass is one cheap aggregation reused from the
-    token table (map-side combine, no extra scan of the raw docs).
+    ``tok``: distinct ``(doc_id, token)`` rows, so a token's row count is
+    its document frequency.  Rows whose token has df > ``max_df`` are
+    dropped.  ``max_df`` is absolute here (testdata scale); at corpus scale
+    it becomes a fraction of N.
+
+    The DF is ``count(*) over (partition by token)``: one exchange and sort
+    on ``token`` inside the consuming job, no job of its own, and ``tok``
+    is read once, so a caller need not persist it.  ``dropped``, when
+    given, observes the pre-filter window frame in the same job:
+    ``rare_tokens_dropped`` counts the distinct tokens dropped (one row per
+    token has ``doc_id == min(doc_id)`` over the window — exact, no sort)
+    and ``rare_token_rows_dropped`` their ``(doc_id, token)`` rows.
     """
-    df_counts = tok.groupBy("token").agg(F.count("*").alias("df"))
-    # stopword-grade tokens are FEW (Zipf head) — broadcast those and
-    # anti-join; the keep-set is nearly the whole vocabulary and must not
-    # be a broadcast build side
-    frequent = df_counts.where(F.col("df") > max_df).select("token")
-    return tok.join(F.broadcast(frequent), "token", "left_anti").select(
-        "doc_id", "token"
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("token")
+    counted = tok.select(
+        "doc_id",
+        "token",
+        F.count(F.lit(1)).over(w).alias("_df"),
+        (F.col("doc_id") == F.min("doc_id").over(w)).alias("_first"),
     )
+    if dropped is not None:
+        rare = F.col("_df") > max_df
+        counted = counted.observe(
+            dropped,
+            F.count_if(rare & F.col("_first")).alias("rare_tokens_dropped"),
+            F.count_if(rare).alias("rare_token_rows_dropped"),
+        )
+    return counted.where(F.col("_df") <= max_df).select("doc_id", "token")
 
 
 def blocked_pairs(

@@ -43,7 +43,7 @@ from __future__ import annotations
 
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import edit_distance_udf, length_prefilter
@@ -244,21 +244,20 @@ def _run_stages(
         observe={"n_docs": F.count(F.lit(1))},
     )
 
-    def build_tokens() -> DataFrame:
-        from ..session import pooled_persist
-
-        t = blocking.doc_tokens(docs_ck, min_len=cfg.min_token_len)
-        # rare_tokens consumes t twice — once to build the broadcast
-        # frequent-token set (a separate broadcast-exchange job) and once as
-        # the anti-join probe side.  Without a persist the explode + distinct
-        # (the stage's whole cost) runs twice: ReuseExchange cannot span the
-        # broadcast subquery boundary (verified on the executed plan).
-        return blocking.rare_tokens(pooled_persist(t), max_df=cfg.max_df)
-
-    toks = rs.stage("tokens", build_tokens, inputs=("docs",))
-    # tokens is parquet-materialized; the persisted pre-filter token table
-    # only backed the stage build
-    release_pooled()
+    # the token table has one consumer, rare_tokens' window pass, so it
+    # needs no persist; ``rare`` counts what the max_df guard drops, in the
+    # stage's write job
+    rare = Observation()
+    toks = rs.stage(
+        "tokens",
+        lambda: blocking.rare_tokens(
+            blocking.doc_tokens(docs_ck, min_len=cfg.min_token_len),
+            max_df=cfg.max_df,
+            dropped=rare,
+        ),
+        inputs=("docs",),
+        metrics=lambda: rare.get,
+    )
 
     band: dict = {}
     tok_matches = rs.stage(
@@ -270,7 +269,7 @@ def _run_stages(
                 F.sum((F.col("tok_a") != F.col("tok_b")).cast("long")), F.lit(0)
             )
         },
-        metrics=lambda d: band,
+        metrics=lambda: band,
     )
     # the stage above is parquet-materialized — the pooled key cache inside
     # vocab_token_matches is dead weight from here on

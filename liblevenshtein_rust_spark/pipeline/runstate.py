@@ -18,15 +18,24 @@ manifest ``<run_dir>/<stage>/manifest.json`` recording
 - ``wall_s``          — stage wall time,
 - ``metrics``         — stage-specific counters (hot keys dropped,
                         candidate pairs scored, ...),
+- ``schema``          — the written frame's schema (``StructType`` JSON),
 - ``fingerprint``     — config fingerprint; a resume with a different
                         config refuses to reuse the stage.
 
 ``Runstate.stage(...)`` is idempotent: if the manifest exists and the
 fingerprint matches, the stage is *skipped* and its parquet is read back —
 so a killed run resumes exactly where it stopped (tested by
-``tests/test_pipeline_e2e.py::test_resume``).  Writes go to a temp dir and
-are renamed only after the manifest is durably written, so a crash
+``tests/test_pipeline_e2e.py::test_resume``).  Writes go to a temp dir
+that is renamed before the manifest is durably written, so a crash
 mid-stage never leaves a half-stage that a resume would trust.
+
+One read per stage: a fresh stage writes once and reads its output back
+once, after the rename, with the schema it wrote; a resumed stage reads
+with the manifest's ``schema``.  A read with a given schema starts no
+Spark job (a schema-less ``read.parquet`` runs one footer-merge job), so a
+fresh stage runs only its write's jobs and a resumed one runs none.  Run
+dirs written before manifests carried ``schema`` have no such field: their
+stages re-run, exactly as after a config change.
 """
 
 from __future__ import annotations
@@ -89,23 +98,24 @@ class Runstate:
         name: str,
         build: Callable[[], DataFrame],
         inputs: tuple[str, ...] = (),
-        metrics: Callable[[DataFrame], dict] | None = None,
-        partition_by: str | None = None,
+        metrics: Callable[[], dict] | None = None,
         observe: dict | None = None,
         shuffle_partitions: int | None = None,
     ) -> DataFrame:
         """Run (or resume) one stage; returns its output DataFrame.
 
         On a fresh run: ``build()`` → write parquet → write manifest.
-        On resume: manifest present + fingerprint match → read parquet back
-        (lineage is truncated at the checkpoint, exactly like the
-        reference's resumable contexts).
+        On resume: manifest present + fingerprint match + recorded schema →
+        read parquet back with that schema (lineage is truncated at the
+        checkpoint, exactly like the reference's resumable contexts).
 
         ``observe`` maps metric name → aggregate Column; these are collected
-        *during the write job itself* (``df.observe``) — zero extra scans,
-        unlike ``metrics`` which runs follow-up jobs on the written output.
-        Prefer ``observe`` for anything expressible as an aggregate: at the
-        latency floor every extra per-stage job is pure fixed cost.
+        *during the write job itself* (``df.observe``) — zero extra scans.
+        ``metrics`` is called once after the write and its dict merged into
+        the manifest's ``metrics``: it reports counters the build gathered
+        on the side (a band record, an ``Observation`` of its own), and must
+        not start Spark jobs — at the latency floor every extra per-stage
+        job is pure fixed cost.
 
         ``shuffle_partitions`` scopes ``spark.sql.shuffle.partitions`` around
         this stage's build AND write: stages whose output is far smaller than
@@ -115,31 +125,36 @@ class Runstate:
         execution, which happens in the write below — an override inside the
         build closure would be restored too early).
         """
-        base, dpath, mpath = self._paths(name)
+        from pyspark.sql.types import StructType
+
+        _, dpath, _ = self._paths(name)
         m = self.manifest(name)
-        if m is not None and m.get("fingerprint") == self.fingerprint:
+        if (
+            m is not None
+            and m.get("fingerprint") == self.fingerprint
+            and "schema" in m
+        ):
             self.completed[name] = m
-            return self.spark.read.parquet(dpath)
+            return self.spark.read.schema(StructType.fromJson(m["schema"])).parquet(
+                dpath
+            )
 
         if shuffle_partitions is not None:
             key = "spark.sql.shuffle.partitions"
             saved = self.spark.conf.get(key)
             self.spark.conf.set(key, str(shuffle_partitions))
             try:
-                return self._run_stage(
-                    name, build, inputs, metrics, partition_by, observe
-                )
+                return self._run_stage(name, build, inputs, metrics, observe)
             finally:
                 self.spark.conf.set(key, saved)
-        return self._run_stage(name, build, inputs, metrics, partition_by, observe)
+        return self._run_stage(name, build, inputs, metrics, observe)
 
     def _run_stage(
         self,
         name: str,
         build: Callable[[], DataFrame],
         inputs: tuple[str, ...],
-        metrics: Callable[[DataFrame], dict] | None,
-        partition_by: str | None,
+        metrics: Callable[[], dict] | None,
         observe: dict | None,
     ) -> DataFrame:
         base, dpath, mpath = self._paths(name)
@@ -157,12 +172,9 @@ class Runstate:
         cols = dict(observe or {})
         cols.setdefault("__rows", F.count(F.lit(1)))
         df = df.observe(obs, *[c.alias(k) for k, c in cols.items()])
+        schema = df.schema
         tmp = dpath + ".tmp"
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(tmp)
-        out = self.spark.read.parquet(tmp)
+        df.write.mode("overwrite").parquet(tmp)
         n_files = len(
             [
                 f
@@ -177,7 +189,7 @@ class Runstate:
         rows = int(observed.pop("__rows") or 0)
         stage_metrics: dict = observed
         if metrics:
-            stage_metrics.update(metrics(out))
+            stage_metrics.update(metrics())
         man = {
             "stage": name,
             "rows": rows,
@@ -186,6 +198,7 @@ class Runstate:
             "wall_s": round(time.time() - t0, 3),
             "fingerprint": self.fingerprint,
             "metrics": stage_metrics,
+            "schema": schema.jsonValue(),
             "ts": time.time(),
         }
         os.rename(tmp, dpath)
@@ -193,4 +206,5 @@ class Runstate:
             json.dump(man, f, indent=1)
         os.replace(mpath + ".tmp", mpath)
         self.completed[name] = man
-        return self.spark.read.parquet(dpath)
+        # with the written schema the read back starts no footer-merge job
+        return self.spark.read.schema(schema).parquet(dpath)

@@ -59,17 +59,22 @@ def test_offsets_strictly_increasing(spark):
     assert bad.count() == 0
 
 
-def test_er_hot_side_broadcast_in_token_matches(spark):
+def test_er_hot_side_broadcast_in_token_matches(spark, monkeypatch):
     """The skew guard's plan must broadcast the HOT side as a LeftAnti
-    build — never the near-universe cold side."""
-    from liblevenshtein_rust_spark.pipeline import er
-
-    docs = fixtures.generate_docs(spark, 300, seed=7)
+    build — never the near-universe cold side.  A 300-doc corpus has no
+    hot key at the default bands, so every shared key is made hot here."""
     from liblevenshtein_rust_spark.operators import blocking
+    from liblevenshtein_rust_spark.pipeline import er
+    from liblevenshtein_rust_spark.session import release_pooled
 
+    monkeypatch.setattr(blocking, "HOT_KEY_PAIRS", 0)
+    docs = fixtures.generate_docs(spark, 300, seed=7)
     toks = blocking.rare_tokens(blocking.doc_tokens(docs), max_df=10)
-    out = er.vocab_token_matches(toks, er.ERConfig(max_df=10))
+    band: dict = {}
+    out = er.vocab_token_matches(toks, er.ERConfig(max_df=10), band)
     plan = out._jdf.queryExecution().executedPlan().toString()
+    release_pooled()
+    assert band["hot_keys_salted"] > 0
     assert "LeftAnti, BuildRight" in plan or (
         "LeftAnti" in plan and "BroadcastHashJoin" in plan
     )

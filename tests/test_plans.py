@@ -233,3 +233,71 @@ def test_band_free_vocab_join_has_no_skew_machinery(spark, monkeypatch):
     text, band = plan()
     assert band["extreme_keys_dropped"] > 0
     assert "LeftAnti" in text
+
+
+def test_rare_tokens_window_matches_pandas_reference(spark):
+    """The window-count filter keeps exactly the rows a DF group-by keeps,
+    at the cutoff (df == max_df kept, df == max_df + 1 dropped), and its
+    Observation counts the dropped tokens and rows."""
+    import random
+
+    import pandas as pd
+    from pyspark.sql import Observation
+
+    max_df = 6
+    rng = random.Random(11)
+    vocab = [f"w{i:03d}" for i in range(60)]
+    rows = {(d, rng.choice(vocab)) for d in range(80) for _ in range(rng.randint(1, 8))}
+    rows |= {(d, "atcutoff") for d in range(max_df)}
+    rows |= {(d, "overcutoff") for d in range(10, 10 + max_df + 1)}
+    pdf = pd.DataFrame(sorted(rows), columns=["doc_id", "token"])
+    df_ = pdf.groupby("token")["doc_id"].transform("size")
+    kept, dropped = pdf[df_ <= max_df], pdf[df_ > max_df]
+    assert "atcutoff" in set(kept["token"]) and "overcutoff" in set(dropped["token"])
+
+    obs = Observation()
+    tok = spark.createDataFrame(pdf, "doc_id long, token string").repartition(3)
+    got = blocking.rare_tokens(tok, max_df=max_df, dropped=obs).collect()
+    assert sorted(tuple(r) for r in got) == sorted(
+        kept.itertuples(index=False, name=None)
+    )
+    assert obs.get == {
+        "rare_tokens_dropped": dropped["token"].nunique(),
+        "rare_token_rows_dropped": len(dropped),
+    }
+
+
+def test_tokens_stage_has_no_broadcast_or_cache(spark, tmp_path, monkeypatch):
+    """The ER ``tokens`` stage is one window pass over an unpersisted token
+    table (no broadcast-exchange job, no InMemoryRelation), and its
+    manifest counts what the ``max_df`` guard dropped."""
+    from liblevenshtein_rust_spark.pipeline import er
+    from liblevenshtein_rust_spark.sources import fixtures
+
+    built = []
+    real = blocking.rare_tokens
+
+    def spy(*a, **kw):
+        built.append(real(*a, **kw))
+        return built[-1]
+
+    monkeypatch.setattr(blocking, "rare_tokens", spy)
+    docs = fixtures.generate_docs(spark, 300, seed=7, partitions=4).select(
+        "doc_id", "spans"
+    )
+    cfg = er.ERConfig(max_df=10)
+    run_dir = str(tmp_path / "run")
+    er.run_pipeline(spark, docs, run_dir, cfg)
+    plan = _plan(built[0])
+    assert "Window" in plan
+    assert "BroadcastExchange" not in plan
+    assert "InMemoryRelation" not in plan
+
+    t = blocking.doc_tokens(docs, min_len=cfg.min_token_len).toPandas()
+    dropped = t[t.groupby("token")["doc_id"].transform("size") > cfg.max_df]
+    assert len(dropped) > 0
+    metrics = er.Runstate(spark, run_dir, er.asdict(cfg)).manifest("tokens")["metrics"]
+    assert metrics == {
+        "rare_tokens_dropped": dropped["token"].nunique(),
+        "rare_token_rows_dropped": len(dropped),
+    }
