@@ -21,8 +21,10 @@ Stages:
 
 Blocking keys for the surviving vocabulary come from the one key-row
 generator, ``functions.blocking_keys.blocking_key_rows`` (compiled
-``(token, key: long)`` rows), called by the ER vocabulary self-join
-(``pipeline/er.vocab_token_matches``) and the linkage cross joins.
+``(token, key: long)`` rows).  :func:`vocab_matches` is the one blocked
+vocabulary match — keys, :func:`blocked_pairs`, length prefilter, kernel —
+for ER's vocabulary self-join (``pipeline/er.vocab_token_matches``) and
+linkage's A × B cross join.
 
 Skew policy — its one statement; :func:`blocked_pairs` implements it for
 ER's self-join and linkage's edit and phonetic cross joins.  A key's join
@@ -32,7 +34,8 @@ PAPERS.md).  Keys above ``HOT_KEY_PAIRS`` are salted into ``N_SALT``
 groups and kept (``plans.rewrites``); keys above ``EXTREME_KEY_PAIRS``
 are dropped and counted, ``key_pairs_dropped`` bounding the true pairs
 lost.  In a self-join the bands are n > 1,000 and n > 100,000.  With no
-hot or extreme key the join is the band-free plan (no anti-join).
+hot or extreme key the join is the band-free plan (no anti-join).  It
+persists its own inputs; the caller releases them (``release_pooled``).
 ``fuzzy_query``'s broadcast join and :func:`pair_block_weights` are
 outside this policy.
 """
@@ -42,7 +45,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..functions.blocking_keys import normalize_term
+from ..functions.blocking_keys import (
+    blocking_key_rows, normalize_term, variant_key_budget,
+)
+from ..functions.udfs import edit_distance_udf, length_prefilter
 
 HOT_KEY_PAIRS = 499_500  # n(n-1)/2 at n = 1,000: above this a key is salted
 EXTREME_KEY_PAIRS = 4_999_950_000  # n(n-1)/2 at n = 100,000: dropped + counted
@@ -114,25 +120,25 @@ def rare_tokens(
 ) -> DataFrame:
     """Drop stopword-like tokens by corpus document frequency.
 
-    ``tok``: distinct ``(doc_id, token)`` rows, so a token's row count is
-    its document frequency.  Rows whose token has df > ``max_df`` are
+    ``tok``: distinct ``(doc_id, <group>…)`` rows — ``(doc_id, token)`` for
+    ER, ``(doc_id, field, token)`` for field-wise linkage — so a group's row
+    count is its document frequency; groups with df > ``max_df`` are
     dropped.  ``max_df`` is absolute here (testdata scale); at corpus scale
     it becomes a fraction of N.
 
-    The DF is ``count(*) over (partition by token)``: one exchange and sort
-    on ``token`` inside the consuming job, no job of its own, and ``tok``
-    is read once, so a caller need not persist it.  ``dropped``, when
-    given, observes the pre-filter window frame in the same job:
-    ``rare_tokens_dropped`` counts the distinct tokens dropped (one row per
-    token has ``doc_id == min(doc_id)`` over the window — exact, no sort)
-    and ``rare_token_rows_dropped`` their ``(doc_id, token)`` rows.
+    The DF is ``count(*) over (partition by <every column but doc_id>)``:
+    one exchange and sort inside the consuming job, no job of its own, and
+    ``tok`` is read once, so a caller need not persist it.  ``dropped``,
+    when given, observes the pre-filter window frame in the same job:
+    ``rare_tokens_dropped`` counts the distinct groups dropped (one row
+    per group has ``doc_id == min(doc_id)`` over the window — exact, no
+    sort) and ``rare_token_rows_dropped`` their rows.
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy("token")
+    w = Window.partitionBy(*[c for c in tok.columns if c != "doc_id"])
     counted = tok.select(
-        "doc_id",
-        "token",
+        *tok.columns,
         F.count(F.lit(1)).over(w).alias("_df"),
         (F.col("doc_id") == F.min("doc_id").over(w)).alias("_first"),
     )
@@ -143,7 +149,7 @@ def rare_tokens(
             F.count_if(rare & F.col("_first")).alias("rare_tokens_dropped"),
             F.count_if(rare).alias("rare_token_rows_dropped"),
         )
-    return counted.where(F.col("_df") <= max_df).select("doc_id", "token")
+    return counted.where(F.col("_df") <= max_df).select(*tok.columns)
 
 
 def blocked_pairs(
@@ -154,15 +160,28 @@ def blocked_pairs(
     extreme_keys_dropped, key_pairs_dropped}`` (policy in the module
     docstring).
 
-    ``left`` / ``right``: distinct ``(id, key)`` rows; ``right=None`` is the
+    ``left`` / ``right``: ``(id, key)`` rows; ``right=None`` is the
     self-join of ``left``, with ``left_id < right_id``.  The band count is
-    one driver action over the key rows, so callers persist rows they do
-    not want recomputed.
+    one driver action over the key rows and the join reads them again, so
+    each side is persisted here (pooled: the caller releases it with
+    ``session.release_pooled`` after the consuming plan has run).
     """
+    from ..session import pooled_persist
+
+    # Hash-partition by `key` BEFORE the persist: the self-join's two sides
+    # are alias-projections of one table, distinct plans to ReuseExchange,
+    # so each paid its own full exchange (measured at 1.2M docs: 2 x 2.2 GB
+    # shuffle writes + a 4.4 GB read, ER's largest cost center).  From a
+    # HashPartitioning(key) cache the band count, the extreme anti-join and
+    # both join sides read without another exchange.  The distinct (no
+    # exchange of its own here) makes per-key counts count ids, not the
+    # deletion positions that reach one key.
+    left = pooled_persist(left.repartition("key").distinct())
     if right is None:
         n = F.count("*")
         per_key = left.groupBy("key").agg(F.shiftright(n * (n - 1), 1).alias("pairs"))
     else:
+        right = pooled_persist(right.repartition("key").distinct())
         sides = left.select("key", F.lit(True).alias("_l")).unionByName(
             right.select("key", F.lit(False).alias("_l"))
         )
@@ -182,8 +201,8 @@ def blocked_pairs(
     if record["hot_keys_salted"] == record["extreme_keys_dropped"] == 0:
         lk = left.select("key", F.col("id").alias("left_id"))
         if right is None:
-            # shuffle_hash: a caller's key-partitioned cache feeds both
-            # sides, so the hint only swaps the per-partition algorithm — a
+            # shuffle_hash: the key-partitioned cache feeds both sides, so
+            # the hint only swaps the per-partition algorithm — a
             # build-side hash map instead of sorting both sides
             rk = left.select("key", F.col("id").alias("right_id")).hint("shuffle_hash")
             pairs = lk.join(rk, "key").where(F.col("left_id") < F.col("right_id"))
@@ -202,6 +221,38 @@ def blocked_pairs(
         else:
             pairs = rewrites.salted_cross_join_pairs(kept, right, hot, N_SALT)
     return pairs.select("left_id", "right_id").distinct(), record
+
+
+def vocab_matches(
+    left: DataFrame,
+    right: DataFrame | None = None,
+    *,
+    max_distance: int,
+    variant: str,
+    band: dict | None = None,
+) -> DataFrame:
+    """``(tok_a, tok_b, distance)`` for every pair of distinct ``token``
+    rows within ``max_distance``: :func:`blocking_key_rows` at the
+    variant's exact key budget (``ValueError`` where none exists), then
+    :func:`blocked_pairs`, length prefilter, kernel.  ``right=None`` is the
+    self-join (``tok_a < tok_b``, no diagonal); otherwise ``tok_a`` comes
+    from ``left``, ``tok_b`` from ``right``.  ``band`` receives the band
+    record."""
+    budget = variant_key_budget(variant, max_distance)
+
+    def keyed(vocab: DataFrame) -> DataFrame:
+        rows = vocab.select(F.col("token").alias("id"))
+        return blocking_key_rows(rows, "id", budget, variant)
+
+    raw, record = blocked_pairs(keyed(left), None if right is None else keyed(right))
+    if band is not None:
+        band.update(record)
+    pairs = raw.select(
+        F.col("left_id").alias("tok_a"), F.col("right_id").alias("tok_b")
+    ).where(length_prefilter(F.col("tok_a"), F.col("tok_b"), max_distance))
+    dist = edit_distance_udf(max_distance, variant)
+    scored = pairs.withColumn("distance", dist(F.col("tok_a"), F.col("tok_b")))
+    return scored.where(F.col("distance") >= 0)
 
 
 def sorted_neighborhood_pairs(

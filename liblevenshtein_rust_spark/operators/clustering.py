@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import conf_scope
+
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     return (
@@ -148,7 +150,7 @@ def connected_components(
     # (4× cores) a small graph schedules hundreds of near-empty tasks per
     # round — measured 16-22 s for a 200k-edge graph at 32 cores, pure
     # scheduling.  On a 10^12-doc graph n_part hits the session cap and the
-    # conf is unchanged.  Restored in ``finally`` (driver-controlled loop,
+    # conf is unchanged.  Restored on exit (driver-controlled loop,
     # same pattern as AQE's own runtime coalescing — but AQE can only
     # coalesce DOWN from the static number, paying planning cost each time).
     # AQE off inside the loop: the rounds are windows + a distinct — no
@@ -156,14 +158,9 @@ def connected_components(
     # data-sized above) — so adaptive execution only adds a driver
     # re-planning barrier and an extra job submission per query stage,
     # pure per-round latency in a driver-controlled fixpoint.
-    overrides = {
-        "spark.sql.shuffle.partitions": str(n_part),
-        "spark.sql.adaptive.enabled": "false",
-    }
-    saved = {k: spark.conf.get(k) for k in overrides}
-    for k, v in overrides.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(
+        spark, {"spark.sql.shuffle.partitions": n_part, "spark.sql.adaptive.enabled": "false"}
+    ):
         def _sig(df: DataFrame) -> tuple[int, int]:
             """(count, order-insensitive xxhash64 sum) in ONE agg job —
             the convergence signature.  Equal signatures ⇒ equal edge sets
@@ -213,9 +210,6 @@ def connected_components(
             if sig2 == sig_prev:
                 break
             sig_prev = sig2
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     # e is a star graph: v -> u = component root.  e's localCheckpoint blocks
     # back the returned (lazy) result — register them for release once the
     # caller has materialized it (pipeline: after the entities parquet write).

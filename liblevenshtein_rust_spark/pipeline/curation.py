@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup, text
+from ..session import conf_scope
 from .runstate import Runstate
 
 
@@ -85,15 +86,10 @@ def run_curation(
     DataFrame (doc_id, text, *cfg.passthrough_cols)."""
     cfg = cfg or CurationConfig()
     rs = Runstate(spark, run_dir, asdict(cfg))
-    if cfg.static_shuffle_partitions is not None:
-        key = "spark.sql.shuffle.partitions"
-        saved = spark.conf.get(key)
-        spark.conf.set(key, str(cfg.static_shuffle_partitions))
-        try:
-            return _run_stages(spark, docs, eval_docs, rs, cfg)
-        finally:
-            spark.conf.set(key, saved)
-    return _run_stages(spark, docs, eval_docs, rs, cfg)
+    with conf_scope(
+        spark, {"spark.sql.shuffle.partitions": cfg.static_shuffle_partitions}
+    ):
+        return _run_stages(spark, docs, eval_docs, rs, cfg)
 
 
 def _run_stages(

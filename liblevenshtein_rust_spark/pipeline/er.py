@@ -27,13 +27,14 @@ Scale design (each stage annotated for the 10^12-doc target):
   OSA-d<=2 pair shares a depth-2 deletion variant, and d=3 uses the
   length-banded hybrid, so blocking loses no recall — candidate
   generation mirrors automaton-guided trie intersection (bounded-error
-  neighborhood enumeration, not scans).  ``blocking_keys.blocking_key_rows``
-  picks the family and emits it as compiled ``(token, key: long)`` rows,
-  the same generator the linkage and fuzzy-query joins use.
-- **Skew**: the vocabulary self-join is ``blocking.blocked_pairs`` (the
-  skew policy is stated in that module); its band record is the
-  ``token_matches`` manifest's skew counters.  Evidence-join fan-out is
-  bounded by ``max_df`` per token by construction.
+  neighborhood enumeration, not scans).  The vocabulary match is
+  ``blocking.vocab_matches``' self-join — the same keys → blocked join →
+  length prefilter → kernel body linkage runs as its A × B cross join.
+- **Skew**: that join is ``blocking.blocked_pairs`` (the skew policy is
+  stated in that module); its band record is the ``token_matches``
+  manifest's skew counters.  Evidence-join fan-out is bounded by
+  ``max_df`` per token by construction.  ``doc_match_edges`` stays ER's
+  own: its canonical doc-pair fold serves only the self-join.
 - **Per-stage parquet checkpoints** (:mod:`.runstate`) give resumability +
   per-partition lineage; the CC loop additionally ``localCheckpoint``s per
   iteration (lineage truncation inside the fixpoint).
@@ -46,9 +47,9 @@ from dataclasses import asdict, dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.udfs import edit_distance_udf, length_prefilter
 from ..kernel.distances import TRANSPOSITION
 from ..operators import blocking, clustering
+from ..session import conf_scope
 from .runstate import Runstate
 
 
@@ -59,7 +60,6 @@ class ERConfig:
     min_token_len: int = 3
     max_df: int = 50                 # rare-token document-frequency cutoff
     min_token_matches: int = 2       # doc-pair evidence threshold
-    num_partitions: int | None = None
     # When set, the whole pipeline runs with exactly this many shuffle
     # partitions and AQE partition *coalescing* disabled (skew splitting
     # stays on): the cluster model is ~128 MB per shuffle partition sized to
@@ -76,54 +76,16 @@ def vocab_token_matches(
     toks: DataFrame, cfg: ERConfig, band: dict | None = None
 ) -> DataFrame:
     """All (tok_a <= tok_b, distance) pairs within ``max_distance`` over the
-    distinct token vocabulary, via key blocking + kernel.  The key family
-    is :func:`blocking_key_rows`'s exact choice for ``cfg.variant`` at
-    ``cfg.max_distance``; a combination without one raises ``ValueError``.
-
-    The d=0 diagonal (tok, tok, 0) is included without touching the kernel.
+    distinct token vocabulary: :func:`blocking.vocab_matches`' self-join
+    plus the d=0 diagonal (tok, tok, 0), which never touches the kernel.
     ``band``, when given, receives :func:`blocking.blocked_pairs`' band
     record (``hot_keys_salted``, ``extreme_keys_dropped``,
     ``key_pairs_dropped``).
     """
-    from ..functions.blocking_keys import blocking_key_rows, variant_key_budget
-
     vocab = toks.select("token").distinct()
-    budget = variant_key_budget(cfg.variant, cfg.max_distance)
-    keyed = blocking_key_rows(
-        vocab.select(F.col("token").alias("id")), "id", budget, cfg.variant
+    scored = blocking.vocab_matches(
+        vocab, max_distance=cfg.max_distance, variant=cfg.variant, band=band
     )
-    # The exploded key table feeds the band count and both self-join sides:
-    # persist once (pooled: run_pipeline releases after the stage checkpoint
-    # is written) instead of recomputing the deletion expression for each.
-    #
-    # Hash-partition by `key` BEFORE the persist: the self-join's two sides
-    # are alias-projections of this same table, which Spark treats as
-    # distinct plans — ReuseExchange can't collapse them, so each side paid
-    # its own full exchange and the join re-read both (measured at 1.2M
-    # docs: 2 x 2.2 GB shuffle writes + a 4.4 GB shuffle read — the
-    # pipeline's single largest cost center).  With the cache already
-    # HashPartitioning(key), the band count, the extreme anti-join probe
-    # side, and BOTH self-join sides satisfy the join's distribution
-    # requirement straight from cached partitions: one data-sized exchange
-    # total, paid at materialization.
-    #
-    # A token can reach one key through several deletion positions: the
-    # distinct makes the per-key counts count tokens, and it needs no
-    # exchange of its own on the key-partitioned rows.
-    from ..session import pooled_persist
-
-    keyed = pooled_persist(keyed.repartition("key").distinct())
-    raw, record = blocking.blocked_pairs(keyed)
-    if band is not None:
-        band.update(record)
-
-    pairs = (
-        raw.select(F.col("left_id").alias("tok_a"), F.col("right_id").alias("tok_b"))
-        .where(length_prefilter(F.col("tok_a"), F.col("tok_b"), cfg.max_distance))
-    )
-    dist = edit_distance_udf(cfg.max_distance, cfg.variant)
-    scored = pairs.withColumn("distance", dist(F.col("tok_a"), F.col("tok_b")))
-    scored = scored.where(F.col("distance") >= 0)
     diagonal = vocab.select(
         F.col("token").alias("tok_a"),
         F.col("token").alias("tok_b"),
@@ -215,22 +177,13 @@ def run_pipeline(
     cfg = cfg or ERConfig()
     rs = Runstate(spark, run_dir, asdict(cfg))
 
+    # data-sized static exchanges, identical at every cluster size — see the
+    # ERConfig field comment
+    overrides = {"spark.sql.shuffle.partitions": cfg.static_shuffle_partitions}
     if cfg.static_shuffle_partitions is not None:
-        # data-sized static exchanges, identical at every cluster size — see
-        # the ERConfig field comment.  Restored in the finally below.
-        overrides = {
-            "spark.sql.shuffle.partitions": str(cfg.static_shuffle_partitions),
-            "spark.sql.adaptive.coalescePartitions.enabled": "false",
-        }
-        saved = {k: spark.conf.get(k) for k in overrides}
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        try:
-            return _run_stages(spark, docs, rs, cfg)
-        finally:
-            for k, v in saved.items():
-                spark.conf.set(k, v)
-    return _run_stages(spark, docs, rs, cfg)
+        overrides["spark.sql.adaptive.coalescePartitions.enabled"] = "false"
+    with conf_scope(spark, overrides):
+        return _run_stages(spark, docs, rs, cfg)
 
 
 def _run_stages(
@@ -271,8 +224,8 @@ def _run_stages(
         },
         metrics=lambda: band,
     )
-    # the stage above is parquet-materialized — the pooled key cache inside
-    # vocab_token_matches is dead weight from here on
+    # the stage above is parquet-materialized — the pooled key cache that
+    # blocked_pairs persisted is dead weight from here on
     release_pooled()
 
     edges = rs.stage(
@@ -284,7 +237,7 @@ def _run_stages(
     # edge count from the stage manifest just written — sizes the CC
     # fixpoint's partitioning without a pre-loop count job over the edges
     edges_manifest = rs.manifest("match_edges") or {}
-    ent_partitions = cfg.num_partitions or clustering.fixpoint_partitions(
+    ent_partitions = clustering.fixpoint_partitions(
         spark, edges_manifest.get("rows") or 0
     )
     entities = rs.stage(

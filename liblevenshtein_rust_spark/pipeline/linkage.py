@@ -3,21 +3,18 @@ table B (customers ↔ suppliers, arrivals ↔ a master table), the classic
 two-corpus form of entity resolution that the self-join ER pipeline
 (`pipeline/er.py`) doesn't directly expose.
 
-Same engineering altitude as the ER pipeline, restated for two sides:
+Linkage runs ER's operators in their two-sided form:
 
-- **Vocabulary-level matching, cross form**: the two RARE-token
-  vocabularies are joined through shared deletion-neighborhood keys —
-  an A-vocab × B-vocab blocked join (no self-join, no canonicalization:
-  the sides are disjoint by construction).  Both
-  sides are keyed with ``blocking_keys.blocking_key_rows``'s compiled
-  ``(token, key: long)`` rows, shared with ER and ``operators/matching.py``
-  — deletion keys (exact for budget ≤ 2), the length-banded hybrids for
-  standard/OSA at distance 3 and MergeAndSplit at distance 2, and a RAISE
-  outside the exact envelope — so no recall is lost vs the reference's
+- **Rare tokens**: ``blocking.rare_tokens``, per (field, token) for the
+  field-wise paths.
+- **Vocabulary match, cross form**: ``blocking.vocab_matches(va, vb, …)``
+  — the A × B form of ER's blocked self-join, exact keys (a RAISE outside
+  the exact envelope), so no recall is lost vs the reference's
   trie-intersection traversal (``dictionary/dawg.rs``).
-- **Evidence join bounded by max_df per side**: each matched token pair
+- **One evidence join** (:func:`_evidence`): each matched token pair
   touches ≤ max_df_a × max_df_b doc pairs — linear in vocabulary, never
-  |A|×|B|.
+  |A|×|B|; one ``(a_id, b_id)`` aggregate and one EM fit (:func:`_fs_fit`)
+  on top.
 - **Deterministic best-match**: per A-record ranking on
   (rounded score DESC, n_matched DESC, b_id ASC) — reproducible across
   engines, which is what lets the DuckDB oracle replay the full linkage
@@ -26,7 +23,8 @@ Same engineering altitude as the ER pipeline, restated for two sides:
 Skew: both the edit and the phonetic channel join through
 ``operators.blocking.blocked_pairs``, whose module docstring states the
 one skew policy (per-key cost n_a·n_b; hot keys salted and kept, extreme
-keys dropped and counted).
+keys dropped and counted).  It persists both sides' key rows; a caller
+releases them with ``session.release_pooled`` once its result has run.
 """
 
 from __future__ import annotations
@@ -36,12 +34,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.blocking_keys import (
-    blocking_key_rows,
-    normalize_term,
-    variant_key_budget,
-)
-from ..functions.udfs import edit_distance_udf, length_prefilter
+from ..functions.blocking_keys import normalize_term
 from ..kernel.distances import TRANSPOSITION
 from ..operators import blocking
 
@@ -56,7 +49,8 @@ class LinkConfig:
     # second evidence channel: token pairs with EQUAL phonetic codes that
     # the edit channel missed (name-matching ER's classic OR-blocking —
     # reference analog: the phonetic rewrite engine feeding the transducer,
-    # phonetic/rules.rs) — scored at a fixed discounted weight
+    # phonetic/rules.rs) — scored at a fixed discounted weight; the
+    # field-wise paths raise on it
     use_phonetic: bool = False
     phonetic_ruleset: str = "skeleton"
     phonetic_weight: float = 0.5
@@ -86,47 +80,12 @@ def _tokens(docs: DataFrame, cfg: LinkConfig) -> DataFrame:
     return blocking.rare_tokens(toks, max_df=cfg.max_df)
 
 
-def cross_vocab_matches(
-    vocab_a: DataFrame, vocab_b: DataFrame, cfg: LinkConfig, band: dict | None = None
-) -> DataFrame:
-    """(tok_a, tok_b, distance) for every A-vocab × B-vocab pair within
-    ``max_distance`` — blocked through shared keys, kernel-scored.  Exact
-    A∩B tokens fall out of the same join (same keys, distance 0).
-
-    Keys are :func:`blocking_key_rows`'s exact family for the variant's key
-    budget (the same choice ER and ``operators/matching.py`` make).  A
-    combination without one RAISES rather than silently losing pairs — the
-    linkage contract promises every within-distance pair, and an incomplete
-    key family would bias the learned EM weights invisibly.  ``band``, when
-    given, receives :func:`blocking.blocked_pairs`' band record.
-    """
-    budget = variant_key_budget(cfg.variant, cfg.max_distance)
-
-    def keyed(vocab: DataFrame) -> DataFrame:
-        # distinct: the per-key counts count tokens, not the deletion
-        # positions that reach one key
-        rows = vocab.select(F.col("token").alias("id"))
-        return blocking_key_rows(rows, "id", budget, cfg.variant).distinct()
-
-    raw, record = blocking.blocked_pairs(keyed(vocab_a), keyed(vocab_b))
-    if band is not None:
-        band.update(record)
-    pairs = (
-        raw.select(F.col("left_id").alias("tok_a"), F.col("right_id").alias("tok_b"))
-        .where(length_prefilter(F.col("tok_a"), F.col("tok_b"), cfg.max_distance))
-    )
-    dist = edit_distance_udf(cfg.max_distance, cfg.variant)
-    return pairs.withColumn("distance", dist(F.col("tok_a"), F.col("tok_b"))).where(
-        F.col("distance") >= 0
-    )
-
-
 def phonetic_vocab_matches(
     vocab_a: DataFrame, vocab_b: DataFrame, cfg: LinkConfig, band: dict | None = None
 ) -> DataFrame:
     """(tok_a, tok_b) for every A × B vocabulary pair with EQUAL phonetic
-    codes (``cfg.phonetic_ruleset``); ``band`` as in
-    :func:`cross_vocab_matches`."""
+    codes (``cfg.phonetic_ruleset``); ``band``, when given, receives
+    :func:`blocking.blocked_pairs`' band record."""
     from ..functions.phonetic import phonetic_normalize
 
     def coded(vocab: DataFrame) -> DataFrame:
@@ -139,6 +98,64 @@ def phonetic_vocab_matches(
     if band is not None:
         band.update(record)
     return raw.select(F.col("left_id").alias("tok_a"), F.col("right_id").alias("tok_b"))
+
+
+def _evidence(ta: DataFrame, tb: DataFrame, cfg: LinkConfig) -> DataFrame:
+    """A tokens ⋈ token matches ⋈ B tokens → ``(a_id, b_id, [field,]
+    pair_id, w)``, one row per doc pair and matched token pair.
+
+    ``ta`` / ``tb``: rare ``(doc_id, [field,] token)`` rows; with ``field``
+    a pair counts only within one field.  Matches are
+    :func:`blocking.vocab_matches` at ``w = 1 − d / max_len``, plus the
+    phonetic pairs it missed at ``cfg.phonetic_weight`` when
+    ``cfg.use_phonetic``.  ``pair_id`` hashes ``([field,] tok_a, tok_b)``
+    first, so the second exchange carries a long, not ``tok_a``; both
+    joins build the sublinear side (``shuffle_hash``).
+    """
+    group = [c for c in ta.columns if c not in ("doc_id", "token")]
+    va = ta.select("token").distinct()
+    vb = tb.select("token").distinct()
+    tm = blocking.vocab_matches(
+        va, vb, max_distance=cfg.max_distance, variant=cfg.variant
+    ).select(
+        "tok_a",
+        "tok_b",
+        (
+            1.0 - F.col("distance") / F.greatest(F.length("tok_a"), F.length("tok_b"))
+        ).alias("w"),
+    )
+    if cfg.use_phonetic:
+        ph = (
+            phonetic_vocab_matches(va, vb, cfg)
+            # only pairs the edit channel MISSED: the union stays a set and
+            # an edit match never gets double-counted or down-weighted
+            .join(tm.select("tok_a", "tok_b"), ["tok_a", "tok_b"], "left_anti")
+            .withColumn("w", F.lit(float(cfg.phonetic_weight)))
+        )
+        tm = tm.unionByName(ph)
+    a = ta.select(F.col("doc_id").alias("a_id"), *group, F.col("token").alias("tok_a"))
+    b = tb.select(F.col("doc_id").alias("b_id"), *group, F.col("token").alias("tok_b"))
+    pair_id = F.xxhash64(*group, "tok_a", "tok_b").alias("pair_id")
+    return (
+        a.join(tm.hint("shuffle_hash"), "tok_a")
+        .select("a_id", *group, "tok_b", pair_id, "w")
+        .join(b.hint("shuffle_hash"), [*group, "tok_b"])
+    )
+
+
+def _aggregate(ev: DataFrame, cfg: LinkConfig) -> DataFrame:
+    """(a_id, b_id, n_matched, score) over :func:`_evidence` rows:
+    distinct matched token pairs and Σ w rounded to 6 (the cross-engine
+    determinism contract, applied BEFORE any ranking), kept at
+    >= ``cfg.min_token_matches``."""
+    return (
+        ev.groupBy("a_id", "b_id")
+        .agg(
+            F.countDistinct("pair_id").alias("n_matched"),
+            F.round(F.sum("w"), 6).alias("score"),
+        )
+        .where(F.col("n_matched") >= cfg.min_token_matches)
+    )
 
 
 def link_tables(
@@ -173,6 +190,15 @@ def _rank_window(part_col: str, tie_col: str):
     one-sided ordering change (round-4 review)."""
     return Window.partitionBy(part_col).orderBy(
         F.col("score").desc(), F.col("n_matched").desc(), F.col(tie_col)
+    )
+
+
+def _rank1(df: DataFrame, part_col: str, tie_col: str) -> DataFrame:
+    """The rows ranked first by :func:`_rank_window` within ``part_col``."""
+    return (
+        df.withColumn("_r1", F.row_number().over(_rank_window(part_col, tie_col)))
+        .where(F.col("_r1") == 1)
+        .drop("_r1")
     )
 
 
@@ -216,47 +242,8 @@ def score_pairs(
     differently.  Includes the phonetic evidence channel when
     ``cfg.use_phonetic`` is set."""
     cfg = cfg or LinkConfig()
-    ta = _tokens(a_docs, cfg)
-    tb = _tokens(b_docs, cfg)
-    va = ta.select("token").distinct()
-    vb = tb.select("token").distinct()
-    tm = cross_vocab_matches(va, vb, cfg).select(
-        "tok_a",
-        "tok_b",
-        (
-            1.0 - F.col("distance") / F.greatest(F.length("tok_a"), F.length("tok_b"))
-        ).alias("w"),
-    )
-    if cfg.use_phonetic:
-        ph = (
-            phonetic_vocab_matches(va, vb, cfg)
-            # only pairs the edit channel MISSED: the union stays a set and
-            # an edit match never gets double-counted or down-weighted
-            .join(tm.select("tok_a", "tok_b"), ["tok_a", "tok_b"], "left_anti")
-            .withColumn("w", F.lit(float(cfg.phonetic_weight)))
-        )
-        tm = tm.unionByName(ph)
-    tm = tm.select(
-        "tok_a", "tok_b", F.xxhash64("tok_a", "tok_b").alias("pair_id"), "w"
-    )
-    ev = (
-        ta.select(F.col("doc_id").alias("a_id"), F.col("token").alias("tok_a"))
-        .join(tm.hint("shuffle_hash"), "tok_a")
-        .select("a_id", "tok_b", "pair_id", "w")
-        .join(
-            tb.select(F.col("doc_id").alias("b_id"), F.col("token").alias("tok_b"))
-            .hint("shuffle_hash"),
-            "tok_b",
-        )
-    )
-    return (
-        ev.groupBy("a_id", "b_id")
-        .agg(
-            F.countDistinct("pair_id").alias("n_matched"),
-            F.round(F.sum("w"), 6).alias("score"),
-        )
-        .where(F.col("n_matched") >= cfg.min_token_matches)
-    )
+    ev = _evidence(_tokens(a_docs, cfg), _tokens(b_docs, cfg), cfg)
+    return _aggregate(ev, cfg)
 
 
 def update_assignments(
@@ -313,16 +300,7 @@ def _merge_standing(standing: DataFrame, delta_best: DataFrame) -> DataFrame:
     # assignments.  Enforce the invariant with the SAME deterministic order
     # the merge uses (score DESC, n_matched DESC, b_id ASC) — a no-op on
     # well-formed input, self-healing on a malformed one (ADVICE r3).
-    from pyspark.sql import Window
-
-    sw = Window.partitionBy("a_id").orderBy(
-        F.col("score").desc(), F.col("n_matched").desc(), F.col("b_id").asc()
-    )
-    standing = (
-        standing.withColumn("_sr", F.row_number().over(sw))
-        .where(F.col("_sr") == 1)
-        .drop("_sr")
-    )
+    standing = _rank1(standing, "a_id", "b_id")
     s = standing.select(
         "a_id",
         F.col("b_id").alias("s_b"),
@@ -363,14 +341,9 @@ def best_per_b(candidates: DataFrame, cfg: LinkConfig | None = None) -> DataFram
     honoring the same ``cfg.min_score`` floor.  This is the second
     standing table the MUTUAL incremental path maintains."""
     cfg = cfg or LinkConfig()
-    agg = candidates
     if cfg.min_score:
-        agg = agg.where(F.col("score") >= cfg.min_score)
-    return (
-        agg.withColumn("_rb", F.row_number().over(_rank_window("b_id", "a_id")))
-        .where(F.col("_rb") == 1)
-        .drop("_rb")
-    )
+        candidates = candidates.where(F.col("score") >= cfg.min_score)
+    return _rank1(candidates, "b_id", "a_id")
 
 
 def update_assignments_mutual(
@@ -560,18 +533,7 @@ def link_records_decisions(
     band rule over those rows — cost identical to the learned path's
     weight fit; the result is field-count-bounded, not data-bounded.
     """
-    cfg = cfg or LinkConfig()
-    if not fields:
-        raise ValueError("fields must be non-empty")
-    from ..session import pooled_persist
-
-    g = pooled_persist(field_agreements(a_recs, b_recs, fields, cfg))
-    gcols = [f"g_{f}" for f in fields]
-    counts = g.groupBy(*gcols).agg(F.count(F.lit(1)).alias("c")).collect()
-    pattern_counts = [
-        (tuple(int(r[c]) for c in gcols), int(r["c"])) for r in counts
-    ]
-    p_m, m, u = fellegi_sunter_em(pattern_counts, len(fields), n_iter=n_iter)
+    _, pattern_counts, (p_m, m, u) = _fs_fit(a_recs, b_recs, fields, cfg, n_iter)
     bands = fs_decision_bands(pattern_counts, m, u, mu=mu, lam=lam)
     # calibrated posterior P(M|gamma) = p*P(g|M) / (p*P(g|M)+(1-p)*P(g|U))
     # — the third leg of the FS triad (learned weights -> decision bands ->
@@ -591,17 +553,15 @@ def link_records_decisions(
         for gamma, c, llr, band in bands
     ]
     schema = (
-        ", ".join(f"{c} int" for c in gcols)
+        ", ".join(f"g_{f} int" for f in fields)
         + ", c bigint, llr double, band string, posterior double"
     )
     return spark.createDataFrame(rows, schema)
 
 
-def _field_tokens(
-    recs: DataFrame, fields: dict[str, float], cfg: LinkConfig, id_alias: str
-) -> DataFrame:
-    """Melt (doc_id, <field cols>) into distinct (id, field, token) rows,
-    rare-filtered per (field, token) — a token common WITHIN a field
+def _field_tokens(recs: DataFrame, fields, cfg: LinkConfig) -> DataFrame:
+    """Melt (doc_id, <field cols>) into distinct (doc_id, field, token)
+    rows, rare-filtered per (field, token) — a token common WITHIN a field
     (every record's city is "springfield") is stopword-grade evidence for
     that field even if globally rare."""
     stack = F.explode(
@@ -614,9 +574,9 @@ def _field_tokens(
         ])
     ).alias("fv")
     toks = (
-        recs.select(F.col("doc_id").alias(id_alias), stack)
+        recs.select("doc_id", stack)
         .select(
-            id_alias,
+            "doc_id",
             F.col("fv.field").alias("field"),
             F.explode(
                 F.split(normalize_term(F.col("fv.raw")), " ")
@@ -625,9 +585,24 @@ def _field_tokens(
         .where(F.length("token") >= cfg.min_token_len)
         .distinct()
     )
-    dfc = toks.groupBy("field", "token").agg(F.count("*").alias("df"))
-    frequent = dfc.where(F.col("df") > cfg.max_df).select("field", "token")
-    return toks.join(F.broadcast(frequent), ["field", "token"], "left_anti")
+    return blocking.rare_tokens(toks, max_df=cfg.max_df)
+
+
+def _field_evidence(
+    a_recs: DataFrame, b_recs: DataFrame, fields, cfg: LinkConfig
+) -> DataFrame:
+    """:func:`_evidence` over per-field tokens; no phonetic channel, so
+    ``cfg.use_phonetic`` raises instead of being ignored."""
+    if not fields:
+        raise ValueError("fields must be non-empty")
+    if cfg.use_phonetic:
+        raise ValueError(
+            "the field-wise linkage paths have no phonetic channel: "
+            "cfg.use_phonetic is read by score_pairs / link_tables only"
+        )
+    return _evidence(
+        _field_tokens(a_recs, fields, cfg), _field_tokens(b_recs, fields, cfg), cfg
+    )
 
 
 def link_records(
@@ -655,46 +630,12 @@ def link_records(
     (field, token) so one field's stopwords don't poison another's.
     """
     cfg = cfg or LinkConfig()
-    if not fields:
-        raise ValueError("fields must be non-empty")
-    ta = _field_tokens(a_recs, fields, cfg, "a_id")
-    tb = _field_tokens(b_recs, fields, cfg, "b_id")
-    va = ta.select("token").distinct()
-    vb = tb.select("token").distinct()
-    tm = cross_vocab_matches(va, vb, cfg).select(
-        "tok_a",
-        "tok_b",
-        (
-            1.0 - F.col("distance") / F.greatest(F.length("tok_a"), F.length("tok_b"))
-        ).alias("w_tok"),
-    )
+    ev = _field_evidence(a_recs, b_recs, fields, cfg)
     weight = F.create_map(
         *[x for name, w in sorted(fields.items()) for x in (F.lit(name), F.lit(float(w)))]
     )
-    ev = (
-        ta.select("a_id", "field", F.col("token").alias("tok_a"))
-        .join(tm.hint("shuffle_hash"), "tok_a")
-        .select("a_id", "field", "tok_a", "tok_b", "w_tok")
-        .join(
-            tb.select("b_id", "field", F.col("token").alias("tok_b"))
-            .hint("shuffle_hash"),
-            ["field", "tok_b"],
-        )
-        .select(
-            "a_id", "b_id",
-            F.xxhash64("field", "tok_a", "tok_b").alias("pair_id"),
-            (weight[F.col("field")] * F.col("w_tok")).alias("w"),
-        )
-    )
-    agg = (
-        ev.groupBy("a_id", "b_id")
-        .agg(
-            F.countDistinct("pair_id").alias("n_matched"),
-            F.round(F.sum("w"), 6).alias("score"),
-        )
-        .where(F.col("n_matched") >= cfg.min_token_matches)
-    )
-    return _assign(agg, cfg)
+    ev = ev.withColumn("w", weight[F.col("field")] * F.col("w"))
+    return _assign(_aggregate(ev, cfg), cfg)
 
 
 # ---------------------------------------------------------------------------
@@ -735,20 +676,8 @@ def field_agreements(
     estimated on the compared pairs, not the full cross product).
     """
     cfg = cfg or LinkConfig()
-    fw = {f: 1.0 for f in fields}
-    ta = _field_tokens(a_recs, fw, cfg, "a_id")
-    tb = _field_tokens(b_recs, fw, cfg, "b_id")
-    va = ta.select("token").distinct()
-    vb = tb.select("token").distinct()
-    tm = cross_vocab_matches(va, vb, cfg).select("tok_a", "tok_b")
     ag = (
-        ta.select("a_id", "field", F.col("token").alias("tok_a"))
-        .join(tm.hint("shuffle_hash"), "tok_a")
-        .join(
-            tb.select("b_id", "field", F.col("token").alias("tok_b"))
-            .hint("shuffle_hash"),
-            ["field", "tok_b"],
-        )
+        _field_evidence(a_recs, b_recs, fields, cfg)
         .select("a_id", "b_id", "field")
         .distinct()
     )
@@ -825,6 +754,33 @@ def fellegi_sunter_em(
     return p, m, u
 
 
+def _fs_fit(
+    a_recs: DataFrame,
+    b_recs: DataFrame,
+    fields: list[str],
+    cfg: LinkConfig | None,
+    n_iter: int,
+) -> tuple[DataFrame, list[tuple[tuple[int, ...], int]], tuple]:
+    """The Fellegi-Sunter fit both FS paths run: the persisted
+    :func:`field_agreements` table, its agreement-pattern counts (<= 2^F
+    rows collected) and :func:`fellegi_sunter_em` over them.  Returns
+    ``(g, pattern_counts, (p, m, u))``."""
+    from ..session import pooled_persist
+
+    # the agreement table feeds BOTH the EM sufficient statistics (an
+    # action) and the learned path's scoring projection — persist it or
+    # the whole blocked evidence join runs twice (measured ~2x on the
+    # oracle fixture)
+    g = pooled_persist(field_agreements(a_recs, b_recs, fields, cfg))
+    gcols = [f"g_{f}" for f in fields]
+    counts = g.groupBy(*gcols).agg(F.count(F.lit(1)).alias("c")).collect()
+    pattern_counts = [
+        (tuple(int(r[c]) for c in gcols), int(r["c"])) for r in counts
+    ]
+    fit = fellegi_sunter_em(pattern_counts, len(fields), n_iter=n_iter)
+    return g, pattern_counts, fit
+
+
 def link_records_learned(
     a_recs: DataFrame,
     b_recs: DataFrame,
@@ -854,20 +810,8 @@ def link_records_learned(
     import math
 
     cfg = cfg or LinkConfig()
-    if not fields:
-        raise ValueError("fields must be non-empty")
-    # the agreement table feeds BOTH the EM sufficient statistics (an
-    # action) and the scoring projection — persist it or the whole blocked
-    # evidence join runs twice (measured ~2x on the oracle fixture)
-    from ..session import pooled_persist
-
-    g = pooled_persist(field_agreements(a_recs, b_recs, fields, cfg))
+    g, _, (_, m, u) = _fs_fit(a_recs, b_recs, fields, cfg, n_iter)
     gcols = [f"g_{f}" for f in fields]
-    counts = g.groupBy(*gcols).agg(F.count(F.lit(1)).alias("c")).collect()
-    pattern_counts = [
-        (tuple(int(r[c]) for c in gcols), int(r["c"])) for r in counts
-    ]
-    _, m, u = fellegi_sunter_em(pattern_counts, len(fields), n_iter=n_iter)
     w_agree = [_round9(math.log2(m[f] / u[f])) for f in range(len(fields))]
     w_dis = [
         _round9(math.log2((1.0 - m[f]) / (1.0 - u[f])))

@@ -36,6 +36,10 @@ Spark job (a schema-less ``read.parquet`` runs one footer-merge job), so a
 fresh stage runs only its write's jobs and a resumed one runs none.  Run
 dirs written before manifests carried ``schema`` have no such field: their
 stages re-run, exactly as after a config change.
+
+The fingerprint hashes every field of the config, so adding or removing a
+field changes it even where no value changed: run dirs written before
+``ERConfig`` dropped ``num_partitions`` re-run every stage.
 """
 
 from __future__ import annotations
@@ -48,6 +52,8 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import conf_scope
 
 
 def _fingerprint(cfg: dict) -> str:
@@ -139,15 +145,8 @@ class Runstate:
                 dpath
             )
 
-        if shuffle_partitions is not None:
-            key = "spark.sql.shuffle.partitions"
-            saved = self.spark.conf.get(key)
-            self.spark.conf.set(key, str(shuffle_partitions))
-            try:
-                return self._run_stage(name, build, inputs, metrics, observe)
-            finally:
-                self.spark.conf.set(key, saved)
-        return self._run_stage(name, build, inputs, metrics, observe)
+        with conf_scope(self.spark, {"spark.sql.shuffle.partitions": shuffle_partitions}):
+            return self._run_stage(name, build, inputs, metrics, observe)
 
     def _run_stage(
         self,

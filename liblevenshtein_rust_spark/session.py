@@ -10,6 +10,7 @@ are comparable with the DuckDB oracle.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -87,6 +88,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, overrides: dict):
+    """Set the session conf ``overrides`` (a ``None`` value leaves its key
+    alone) for the ``with`` body, then restore each key to its prior value
+    (unset when it had none), also when the body raises.  Conf is read when
+    a plan executes, so the body must run the jobs it is meant for."""
+    overrides = {k: str(v) for k, v in overrides.items() if v is not None}
+    saved = {k: spark.conf.get(k, None) for k in overrides}
+    for k, v in overrides.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 # ---------------------------------------------------------------------------

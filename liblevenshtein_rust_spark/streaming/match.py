@@ -83,16 +83,13 @@ def run_stream_fuzzy_match(
             index_depth=index_depth,
             broadcast_probes=True,
         ).withColumn("batch_id", F.lit(batch_id))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                matched.write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(out_path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # dynamic: a replayed batch overwrites only its own partition
+        (
+            matched.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(out_path)
+        )
 
     writer = (
         stream.writeStream.foreachBatch(process)

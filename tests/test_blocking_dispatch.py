@@ -26,7 +26,7 @@ from liblevenshtein_rust_spark.kernel.distances import (
     TRANSPOSITION,
     distance,
 )
-from liblevenshtein_rust_spark.operators import matching
+from liblevenshtein_rust_spark.operators import blocking, matching
 from liblevenshtein_rust_spark.pipeline import er, linkage
 from liblevenshtein_rust_spark.session import get_spark
 
@@ -65,9 +65,9 @@ def _er(spark, variant, d):
 
 
 def _link(spark, variant, d):
-    cfg = linkage.LinkConfig(max_distance=d, variant=variant)
-    return linkage.cross_vocab_matches(
-        _vocab_df(spark, VOCAB_A), _vocab_df(spark, VOCAB_B), cfg
+    return blocking.vocab_matches(
+        _vocab_df(spark, VOCAB_A), _vocab_df(spark, VOCAB_B),
+        max_distance=d, variant=variant,
     )
 
 
@@ -243,8 +243,9 @@ def test_skew_bands_lose_only_counted_pairs(spark, monkeypatch, extreme):
     lcfg = linkage.LinkConfig(max_distance=SKEW_D, variant=SKEW_VARIANT)
     got = {
         (r["tok_a"], r["tok_b"])
-        for r in linkage.cross_vocab_matches(
-            _vocab_df(spark, SKEW_A), _vocab_df(spark, SKEW_B), lcfg, band
+        for r in blocking.vocab_matches(
+            _vocab_df(spark, SKEW_A), _vocab_df(spark, SKEW_B),
+            max_distance=SKEW_D, variant=SKEW_VARIANT, band=band,
         ).collect()
     }
     want = {

@@ -189,7 +189,6 @@ def test_cross_vocab_matches_d3_and_budget_guard(spark):
     import pytest as _pytest
 
     from liblevenshtein_rust_spark.kernel.distances import STANDARD
-    from liblevenshtein_rust_spark.pipeline import linkage
 
     va = spark.createDataFrame([("projection",)], "token string")
     vb = spark.createDataFrame(
@@ -198,15 +197,12 @@ def test_cross_vocab_matches_d3_and_budget_guard(spark):
         [("prujeftiom",)],
         "token string",
     )
-    cfg = linkage.LinkConfig(max_distance=3, variant=STANDARD)
-    got = linkage.cross_vocab_matches(va, vb, cfg).collect()
+    got = blocking.vocab_matches(va, vb, max_distance=3, variant=STANDARD).collect()
     assert [(r.tok_a, r.tok_b, r.distance) for r in got] == [
         ("projection", "prujeftiom", 3)
     ]
     with _pytest.raises(ValueError, match="key budget"):
-        linkage.cross_vocab_matches(
-            va, vb, linkage.LinkConfig(max_distance=4, variant=STANDARD)
-        )
+        blocking.vocab_matches(va, vb, max_distance=4, variant=STANDARD)
 
 
 def test_link_tables_phonetic_channel(spark):
@@ -349,6 +345,31 @@ def test_update_assignments_rejects_mutual(spark):
         linkage.update_assignments(
             standing, a, d, linkage.LinkConfig(mutual=True)
         )
+
+
+def test_field_paths_reject_use_phonetic(spark):
+    """The phonetic channel is read by score_pairs / link_tables only: the
+    field-wise paths raise on ``use_phonetic`` instead of ignoring it."""
+    from liblevenshtein_rust_spark.pipeline import linkage
+
+    recs = spark.createDataFrame(
+        [(1, "jonathan smith", "springfield")], "doc_id long, name string, city string"
+    )
+    cfg = linkage.LinkConfig(use_phonetic=True)
+    calls = {
+        "link_records": lambda: linkage.link_records(recs, recs, {"name": 1.0}, cfg),
+        "field_agreements": lambda: linkage.field_agreements(recs, recs, ["name"], cfg),
+        "link_records_learned": lambda: linkage.link_records_learned(
+            recs, recs, ["name"], cfg
+        ),
+        "link_records_decisions": lambda: linkage.link_records_decisions(
+            recs, recs, ["name"], cfg
+        ),
+    }
+    for name, call in calls.items():
+        with pytest.raises(ValueError, match="use_phonetic"):
+            call()
+            pytest.fail(name)
 
 
 def test_link_records_field_weights(spark):

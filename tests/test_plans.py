@@ -198,73 +198,123 @@ def test_vocab_self_join_consumes_one_cached_exchange(spark):
     release_pooled()
 
 
+def _join_sides(text: str, join: str) -> list[str]:
+    """The plan text of each side of the first ``join`` node, from the
+    side's root down to its first cached-plan reprint (InMemoryRelation)."""
+    lines = text.splitlines()
+    j = next(i for i, ln in enumerate(lines) if join in ln)
+    col = lines[j].rfind("- ", 0, lines[j].index(join)) + 2  # node name
+    first = next(i for i in range(j + 1, len(lines)) if lines[i][col:col + 3] == ":- ")
+    last = next(i for i in range(first + 1, len(lines)) if lines[i][col:col + 3] == "+- ")
+    sides = []
+    for start in (first, last):
+        side = "\n".join(lines[start:])
+        sides.append(side[: side.find("InMemoryRelation")])
+    return sides
+
+
 def test_band_free_vocab_join_has_no_skew_machinery(spark, monkeypatch):
-    """With no hot or extreme key, the ER vocabulary join is the band-free
-    plan: no LeftAnti join and no key Exchange beyond the persisted
-    ``repartition("key")`` (reprinted under each InMemoryRelation).  Forcing
+    """With no hot or extreme key, the blocked vocabulary join — ER's
+    self-join and linkage's A × B cross join — is the band-free plan: no
+    LeftAnti join and no key Exchange beyond the persisted
+    ``repartition("key")`` (reprinted under each InMemoryRelation).  Both
+    sides of the cross join read their key rows from the caches
+    ``blocked_pairs`` persists (InMemoryTableScan).  Forcing
     every key extreme brings the anti-join in, so the audit has teeth."""
+    from liblevenshtein_rust_spark.kernel.distances import TRANSPOSITION
     from liblevenshtein_rust_spark.pipeline import er
     from liblevenshtein_rust_spark.session import release_pooled
 
     words = ["batch", "bacth", "battch", "join", "jion", "joins", "merge",
              "mrege", "spark", "spork", "sparc", "window"]
     toks = spark.createDataFrame(list(enumerate(words)), "doc_id long, token string")
+    va = spark.createDataFrame([(w,) for w in words[::2]], "token string")
+    vb = spark.createDataFrame([(w,) for w in words[1::2]], "token string")
+    joins = {
+        "er": lambda band: er.vocab_token_matches(toks, er.ERConfig(max_df=100), band),
+        "linkage": lambda band: blocking.vocab_matches(
+            va, vb, max_distance=2, variant=TRANSPOSITION, band=band
+        ),
+    }
 
-    def plan():
+    def plan(join):
         band: dict = {}
-        tm = er.vocab_token_matches(toks, er.ERConfig(max_df=100), band)
+        tm = join(band)
         tm.count()
         out = _plan(tm)
         release_pooled()
         return out, band
 
-    text, band = plan()
-    assert band["hot_keys_salted"] == band["extreme_keys_dropped"] == 0
-    assert "LeftAnti" not in text
-    key_exchanges = [
-        ln for ln in text.splitlines() if "Exchange hashpartitioning(key#" in ln
-    ]
-    assert key_exchanges
-    assert all("REPARTITION_BY_COL" in ln for ln in key_exchanges)
-
-    from liblevenshtein_rust_spark.operators import blocking
+    for name, join in joins.items():
+        text, band = plan(join)
+        assert band["hot_keys_salted"] == band["extreme_keys_dropped"] == 0, name
+        assert "LeftAnti" not in text, name
+        key_exchanges = [
+            ln for ln in text.splitlines() if "Exchange hashpartitioning(key#" in ln
+        ]
+        assert key_exchanges, name
+        assert all("REPARTITION_BY_COL" in ln for ln in key_exchanges), name
+        if name == "linkage":
+            sides = _join_sides(text, "Join [key#")
+            assert all("InMemoryTableScan" in side for side in sides), sides
 
     monkeypatch.setattr(blocking, "EXTREME_KEY_PAIRS", 0)
-    text, band = plan()
-    assert band["extreme_keys_dropped"] > 0
-    assert "LeftAnti" in text
+    for name, join in joins.items():
+        text, band = plan(join)
+        assert band["extreme_keys_dropped"] > 0, name
+        assert "LeftAnti" in text, name
 
 
 def test_rare_tokens_window_matches_pandas_reference(spark):
     """The window-count filter keeps exactly the rows a DF group-by keeps,
     at the cutoff (df == max_df kept, df == max_df + 1 dropped), and its
-    Observation counts the dropped tokens and rows."""
+    Observation counts the dropped groups and rows.  The group is every
+    column but ``doc_id``: on ``(doc_id, field, token)`` rows a token
+    frequent in one field is dropped there and kept in another."""
     import random
 
     import pandas as pd
     from pyspark.sql import Observation
 
     max_df = 6
+
+    def check(pdf):
+        group = [c for c in pdf.columns if c != "doc_id"]
+        df_ = pdf.groupby(group)["doc_id"].transform("size")
+        kept, dropped = pdf[df_ <= max_df], pdf[df_ > max_df]
+        obs = Observation()
+        schema = ", ".join(f"{c} string" for c in group)
+        tok = spark.createDataFrame(pdf, f"doc_id long, {schema}").repartition(3)
+        got = blocking.rare_tokens(tok, max_df=max_df, dropped=obs).collect()
+        assert sorted(tuple(r) for r in got) == sorted(
+            kept.itertuples(index=False, name=None)
+        )
+        assert obs.get == {
+            "rare_tokens_dropped": len(dropped[group].drop_duplicates()),
+            "rare_token_rows_dropped": len(dropped),
+        }
+        return kept, dropped
+
     rng = random.Random(11)
     vocab = [f"w{i:03d}" for i in range(60)]
     rows = {(d, rng.choice(vocab)) for d in range(80) for _ in range(rng.randint(1, 8))}
     rows |= {(d, "atcutoff") for d in range(max_df)}
     rows |= {(d, "overcutoff") for d in range(10, 10 + max_df + 1)}
-    pdf = pd.DataFrame(sorted(rows), columns=["doc_id", "token"])
-    df_ = pdf.groupby("token")["doc_id"].transform("size")
-    kept, dropped = pdf[df_ <= max_df], pdf[df_ > max_df]
+    kept, dropped = check(pd.DataFrame(sorted(rows), columns=["doc_id", "token"]))
     assert "atcutoff" in set(kept["token"]) and "overcutoff" in set(dropped["token"])
 
-    obs = Observation()
-    tok = spark.createDataFrame(pdf, "doc_id long, token string").repartition(3)
-    got = blocking.rare_tokens(tok, max_df=max_df, dropped=obs).collect()
-    assert sorted(tuple(r) for r in got) == sorted(
-        kept.itertuples(index=False, name=None)
-    )
-    assert obs.get == {
-        "rare_tokens_dropped": dropped["token"].nunique(),
-        "rare_token_rows_dropped": len(dropped),
+    rows = {
+        (d, rng.choice(("name", "city")), rng.choice(vocab))
+        for d in range(80)
+        for _ in range(rng.randint(1, 8))
     }
+    rows |= {(d, "city", "springfield") for d in range(max_df + 1)}
+    rows |= {(d, "name", "springfield") for d in range(2)}
+    kept, dropped = check(
+        pd.DataFrame(sorted(rows), columns=["doc_id", "field", "token"])
+    )
+    assert ("name", "springfield") in set(zip(kept["field"], kept["token"]))
+    assert ("city", "springfield") in set(zip(dropped["field"], dropped["token"]))
 
 
 def test_tokens_stage_has_no_broadcast_or_cache(spark, tmp_path, monkeypatch):

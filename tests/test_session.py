@@ -49,3 +49,33 @@ def test_driver_memory_is_half_host_capped_at_48g(monkeypatch, tmp_path, phys_gi
 def test_driver_memory_respects_cgroup_limit(monkeypatch, tmp_path, limits, want):
     _host(monkeypatch, tmp_path, 64, limits)
     assert session.default_driver_memory() == want
+
+
+class _Conf:
+    """The ``spark.conf`` calls ``conf_scope`` makes, over a dict."""
+
+    def __init__(self, **kv):
+        self.kv = dict(kv)
+
+    def get(self, k, default):
+        return self.kv.get(k, default)
+
+    def set(self, k, v):
+        self.kv[k] = v
+
+    def unset(self, k):
+        self.kv.pop(k, None)
+
+
+def test_conf_scope_restores_set_and_unset_keys():
+    """Overrides hold inside the body; on exit, also by an exception, a set
+    key gets its prior value back and a key that had none is unset again.
+    A ``None`` override leaves its key alone."""
+    spark = type("S", (), {"conf": _Conf(a="1", keep="k")})()
+    with pytest.raises(RuntimeError):
+        with session.conf_scope(spark, {"a": 8, "b": "false", "keep": None}):
+            assert spark.conf.kv == {"a": "8", "b": "false", "keep": "k"}
+            raise RuntimeError
+    assert spark.conf.kv == {"a": "1", "keep": "k"}
+    with session.conf_scope(spark, {"a": None}):
+        assert spark.conf.kv == {"a": "1", "keep": "k"}
