@@ -32,8 +32,18 @@ Modes:
 - substring_mode  — unmatched query suffix is free
                     (``query.rs:146-156`` / ``state.min_distance``).
 
+Layout: the band is kept band-major, ``(W = 2n+1, rows)``, so each band
+offset ``k`` is one contiguous vector over the active rows and every step of
+the DP (the match test, the shifted neighbour reads, the deletion prefix-min
+scan along ``k``, the result capture) is a plain 1-D NumPy op.  Codepoints
+are band-major too: ``(L, rows)`` arrays whose row ``c`` is character ``c``
+of every string.  Cells use the narrowest signed dtype that holds
+``INF = n + 1`` — int8 for n <= 126, otherwise int16 — and every candidate
+is taken before its ``+1``, capped at ``INF - 1`` and incremented once, so
+``INF + 1`` is never formed and int8 cannot overflow.
+
 Cross-validated against both the scalar DP oracle (:mod:`.distances`) and the
-scalar automaton (:mod:`.automaton`) by ``tests/test_batch_kernel.py``.
+scalar automaton (:mod:`.automaton`) by ``tests/test_kernel_crossval.py``.
 """
 
 from __future__ import annotations
@@ -42,7 +52,16 @@ import numpy as np
 
 from .distances import MERGE_AND_SPLIT, STANDARD, TRANSPOSITION
 
-_PAD = np.uint32(0xFFFFFFFF)  # sentinel codepoint: never equal to a real char
+# Sentinel codepoints, never equal to a real char (all < 0x110000) or to
+# each other: queries pad with _PAD and terms with _TPAD, so one equality
+# test is the whole match test and a pad (or an embedded NUL) never matches.
+_PAD = np.uint32(0xFFFFFFFF)
+_TPAD = np.uint32(0xFFFFFFFE)
+
+
+def _cell_dtype(n: int):
+    """The narrowest signed dtype that holds INF = n + 1."""
+    return np.int8 if n + 1 <= np.iinfo(np.int8).max else np.int16
 
 
 class _ScratchPool:
@@ -58,6 +77,12 @@ class _ScratchPool:
     it).  Storage is ``threading.local`` so DRIVER-side callers (tests,
     notebooks, local-mode threads) can never alias each other's buffers —
     a second thread simply gets its own pool.
+
+    What the kernel keeps here: three rotating band rows, the result
+    capture and the match masks, each band-major ``(2n+1, rows)`` at the
+    cell dtype (int8 for n <= 126, else int16; bool for masks), and the
+    band-major ``(L, rows)`` uint32 codepoints of both columns.  Buffers are
+    keyed by name and dtype, so an int8 and an int16 batch never share one.
     """
 
     def __init__(self) -> None:
@@ -86,55 +111,54 @@ class _ScratchPool:
 _SCRATCH = _ScratchPool()
 
 
-def encode_strings(strings, max_len: int | None = None, scratch_key: str | None = None):
-    """Encode a sequence of python strings into a (batch, L) uint32 codepoint
-    matrix (padded with a sentinel) plus an int32 length vector.
+def _strings(strings):
+    """``strings`` as a 1-D object array of ``str`` (``None``/NaN read as
+    ``""``) plus their int32 codepoint lengths.
 
-    This is the per-batch columnarization step — the analog of the
-    reference's ``CharUnit`` decode (``dictionary/char_unit.rs``), done once
-    per Arrow batch instead of once per trie edge.  With ``scratch_key`` the
-    codepoint matrix lands in a pooled buffer (see :class:`_ScratchPool`);
-    the returned array is then only valid until the next call with the same
-    key.
+    Non-str guard: a map(len) probe is one C-speed pass (~3x cheaper than a
+    per-element type check) and raises TypeError on None/NaN, the only
+    shapes Arrow/pandas actually hand us; the lengths it yields are the
+    lengths we need anyway.
     """
-    n_rows = len(strings)
-    if n_rows == 0:
-        return (
-            np.full((0, max(max_len or 1, 1)), _PAD, dtype=np.uint32),
-            np.zeros(0, dtype=np.int32),
-        )
-    # NumPy's native UCS-4 representation IS the codepoint matrix: a single
-    # C-level conversion, zero per-row Python.  NUL (0) is the native pad;
-    # remap to the sentinel in one vectorized pass (real tokens never
-    # contain NUL — and if one did, its length below counts codepoints, so
-    # only the NUL cell itself degrades to a pad mismatch).
-    # Non-str guard: a map(len) probe is one C-speed pass (~3x cheaper than
-    # a per-element type check) and raises TypeError on None/NaN, the only
-    # shapes Arrow/pandas actually hand us; the lengths it yields are the
-    # lengths we need anyway.
+    objs = np.asarray(strings, dtype=object)
     try:
-        lengths = np.fromiter(map(len, strings), count=n_rows, dtype=np.int32)
+        lengths = np.fromiter(map(len, objs), count=objs.size, dtype=np.int32)
     except TypeError:
-        strings = [s if isinstance(s, str) else "" for s in strings]
-        lengths = np.fromiter(map(len, strings), count=n_rows, dtype=np.int32)
-    arr = np.asarray(strings, dtype="U")
-    L = max(arr.dtype.itemsize // 4, 1)
-    if max_len is not None and max_len > L:
-        arr = arr.astype(f"U{max_len}")
-        L = max_len
-    view = arr.view(np.uint32).reshape(n_rows, L)
-    if scratch_key is None:
-        mat = view.copy()
-    else:
-        mat = _SCRATCH.get(scratch_key, (n_rows, L), np.uint32)
-        np.copyto(mat, view)
-    zb = _SCRATCH.get("enc_zero", (n_rows, L), bool) if scratch_key else None
-    if zb is None:
-        mat[mat == 0] = _PAD
-    else:
-        np.equal(mat, 0, out=zb)
-        np.copyto(mat, _PAD, where=zb)
-    return mat, lengths
+        objs = np.array([s if isinstance(s, str) else "" for s in objs], dtype=object)
+        lengths = np.fromiter(map(len, objs), count=objs.size, dtype=np.int32)
+    return objs, lengths
+
+
+def _band_major(strings, lengths, pad, name: str, top: int, height: int) -> np.ndarray:
+    """Pooled ``(height, rows)`` uint32 codepoints: row ``top + c`` holds
+    codepoint ``c`` of every string (one column per string), every other
+    cell — and every embedded NUL — is ``pad``.
+
+    One UTF-32 encode of the joined batch and one masked scatter, zero
+    per-row Python: the analog of the reference's ``CharUnit`` decode
+    (``dictionary/char_unit.rs``), done once per Arrow batch.
+    """
+    out = _SCRATCH.get(name, (height, lengths.size), np.uint32)
+    out.fill(pad)
+    flat = np.frombuffer(
+        "".join(strings).encode("utf-32-le", "surrogatepass"), dtype=np.uint32
+    )
+    if flat.size:
+        L = int(lengths.max())
+        live = _SCRATCH.get("live", (L, lengths.size), bool)
+        np.less(np.arange(L)[:, None], lengths, out=live)
+        # the transposed views iterate string by string, the order of flat
+        out[top : top + L].T[live.T] = np.where(flat == 0, pad, flat)
+    return out
+
+
+def encode_strings(strings, max_len: int | None = None):
+    """Encode a sequence of python strings into a (batch, L) uint32 codepoint
+    matrix (padded with the ``_PAD`` sentinel) plus an int32 length vector.
+    """
+    objs, lengths = _strings(strings)
+    L = max(int(lengths.max()) if lengths.size else 0, max_len or 1, 1)
+    return _band_major(objs, lengths, _PAD, "enc", 0, L).T.copy(), lengths
 
 
 _IN_USE = False
@@ -193,29 +217,51 @@ def _batch_distance_impl(
     if variant not in (STANDARD, TRANSPOSITION, MERGE_AND_SPLIT):
         raise ValueError(f"unknown variant: {variant!r}")
 
-    Q, qlen = encode_strings(queries, scratch_key="enc_q")
-    T, tlen = encode_strings(terms, scratch_key="enc_t")
-    batch = Q.shape[0]
+    qs, qlen = _strings(queries)
+    ts, tlen = _strings(terms)
+    batch = qlen.size
     if batch == 0:
         return np.empty(0, dtype=np.int32)
 
     W = 2 * n + 1  # band width; offsets t = j - i in [-n, n], k = t + n
-    INF = np.int16(n + 1)
-    max_q = int(qlen.max()) if batch else 0
+    cell = _cell_dtype(n)
+    INF = cell(n + 1)
+    CAP = cell(n)  # INF - 1: the cap before the final +1 (no int8 overflow)
+    ones = cell(1)
+    max_q = int(qlen.max())
 
     # Active-row scheduling: sort rows by query length (desc) so band
     # iteration i runs only over the prefix of rows still inside their query
     # (a row's answer is captured at i == qlen and its band state is never
     # read after).  Saves sum(max_q - qlen) row-iterations — ~30% on natural
-    # length mixes — for two gathers; results are scattered back at the end.
+    # length mixes — for two object-array gathers before the encode; results
+    # are scattered back at the end.
     order = None
     if batch > 1 and int(qlen.min()) != max_q:
         order = np.argsort(-qlen, kind="stable")
-        Q = Q[order]
-        T = T[order]
+        qs = qs[order]
+        ts = ts[order]
         qlen = qlen[order]
         tlen = tlen[order]
     neg_qlen = -qlen
+
+    def n_active(i: int) -> int:
+        """Rows with qlen >= i: the sorted prefix [0, n_active(i))."""
+        return int(np.searchsorted(neg_qlen, -i, side="right"))
+
+    # Band-major codepoints: query char i-1 of every row is the contiguous
+    # row QT[i-1].  Terms are left-padded by P so the (W, rows) term-char
+    # block of band row i (term indices jc = i-1-n .. i-1+n) is the plain
+    # row slice TT[i-1-n+P : i+n+P].  Height covers the DEEPEST QUERY row,
+    # not just the term width: with queries much longer than every term
+    # (routine in substring mode) the slice at i = max_q reaches row
+    # max_q + n + P.  Query pads/NULs are _PAD and term pads/NULs _TPAD, so
+    # a plain equality never matches a pad on either side.
+    QT = _band_major(qs, qlen, _PAD, "qT", 0, max(max_q, 1))
+    P = n + 2
+    TT = _band_major(
+        ts, tlen, _TPAD, "tT", P, max(int(tlen.max()), max_q) + P + W + 2
+    )
 
     # Zero-cost substitution pairs (substitution_policy.rs): encoded as
     # q_char * 2^21 + t_char, membership via sorted search.
@@ -228,175 +274,105 @@ def _batch_distance_impl(
             )
         )
 
-    def char_eq_into(qc: np.ndarray, tc: np.ndarray, eq: np.ndarray, tb: np.ndarray):
-        """(batch,) query chars vs (batch, W) term-char block, into ``eq``."""
-        np.equal(tc, qc[:, None], out=eq)
-        np.not_equal(tc, _PAD, out=tb)
-        eq &= tb
-        eq &= (qc != _PAD)[:, None]
-        if subs_codes is not None:
-            codes = (qc.astype(np.int64)[:, None] << 21) | tc.astype(np.int64)
-            idx = np.searchsorted(subs_codes, codes)
-            allowed = (idx < subs_codes.size) & (
-                subs_codes[np.clip(idx, 0, subs_codes.size - 1)] == codes
-            )
-            allowed &= tb
-            allowed &= (qc != _PAD)[:, None]
-            eq |= allowed
-
-    # Left-pad T so the per-row (batch, W) term-char block is a plain slice:
-    # row i covers term indices jc = i-1-n .. i-1+n; with pad P the slice is
-    # T_pad[:, i-1-n+P : i-1+n+1+P], always in range for i >= 0.  Width must
-    # cover the DEEPEST QUERY row, not just the term width: with queries much
-    # longer than every term (routine in substring mode, where the unmatched
-    # query suffix is free) the slice at i = max_q reaches column
-    # max_q + n + P — size to max(term width, max_q) so it stays a plain
-    # in-range slice (the extra columns are _PAD and never match).
-    P = n + 2
-    T_pad = _SCRATCH.get(
-        "tpad", (batch, max(T.shape[1], max_q) + P + W + 2), np.uint32
-    )
-    # fill only the margins: the [P, P+Tw) block is fully overwritten by T
-    # (which carries its own _PAD tail), so padding it first is pure waste —
-    # the fill was ~15% of small-n batch wall at 200k rows
-    T_pad[:, :P].fill(_PAD)
-    T_pad[:, P + T.shape[1] :].fill(_PAD)
-    T_pad[:, P : P + T.shape[1]] = T
-
-    # absolute term column j per band cell k, row i:  j = i + (k - n)
-    k_off = np.arange(W, dtype=np.int32) - n  # (W,)
-
-    # rows: prev (i-1), two_ago (i-2), curr (i); each (batch, W), capped at
-    # INF — three rotating scratch buffers plus per-iteration work arrays,
-    # all pooled (see _ScratchPool: faulted once per worker, zero per-batch
-    # allocation in the hot loop)
-    sh = (batch, W)
-    two_ago = _SCRATCH.get("rowA", sh, np.int16)
-    prev = _SCRATCH.get("rowB", sh, np.int16)
-    curr = _SCRATCH.get("rowC", sh, np.int16)
-    best = _SCRATCH.get("best", sh, np.int16)
-    tmp = _SCRATCH.get("tmp", sh, np.int16)
-    cost = _SCRATCH.get("cost", sh, np.int16)
+    # band rows: prev (i-1), two_ago (i-2), curr (i); each (W, rows) in
+    # band-major order, capped at INF — three rotating buffers plus work
+    # arrays, all pooled (see _ScratchPool)
+    sh = (W, batch)
+    two_ago = _SCRATCH.get("rowA", sh, cell)
+    prev = _SCRATCH.get("rowB", sh, cell)
+    curr = _SCRATCH.get("rowC", sh, cell)
     eqb = _SCRATCH.get("eq", sh, bool)
-    tmpb = _SCRATCH.get("tmpb", sh, bool)
-    validb = _SCRATCH.get("valid", sh, bool)
     swapb = _SCRATCH.get("swap", sh, bool) if variant == TRANSPOSITION else None
-    run = _SCRATCH.get("run", (batch,), np.int16)
+    tmpb = _SCRATCH.get("tmpb", sh, bool) if variant == TRANSPOSITION else None
+    run = _SCRATCH.get("run", (batch,), cell)
     two_ago.fill(INF)
     prev.fill(INF)
     # Row 0: D[0][j] = j for 0 <= j <= n → k in [n, 2n]
-    for k in range(n, W):
-        prev[:, k] = k - n
+    prev[n:] = np.arange(n + 1, dtype=cell)[:, None]
 
-    # result capture
-    out_row = _SCRATCH.get("out_row", sh, np.int16)  # band row at i = qlen
-    out_row.fill(INF)
-    done0 = qlen == 0
-    if done0.any():
-        out_row[done0] = prev[done0]
+    # result capture: a row's band at i == qlen; every row is captured once
+    out_row = _SCRATCH.get("out_row", sh, cell)
+    na = n_active(1)
+    out_row[:, na:] = prev[:, na:]
     # substring mode: running min over rows i of D[i][tlen]
-    sub_min = np.full(batch, INF, dtype=np.int16)
-    if substring_mode:
-        k0 = tlen - 0 + n  # k index of j = tlen in row 0
-        valid = (k0 >= 0) & (k0 < W)
-        rr = np.where(valid, prev[np.arange(batch), np.clip(k0, 0, W - 1)], INF)
-        sub_min = np.minimum(sub_min, rr.astype(np.int16))
+    sub_min = np.full(batch, INF, dtype=cell)
 
-    col_idx = np.arange(batch)
-    ones = np.int16(1)
+    def substring_step(i: int, rows: int) -> None:
+        ki = tlen[:rows] - i + n  # k of j = tlen in band row i
+        valid = (ki >= 0) & (ki < W)
+        rr = prev[np.clip(ki, 0, W - 1), np.arange(rows)]
+        np.minimum(sub_min[:rows], np.where(valid, rr, INF), out=sub_min[:rows])
+
+    if substring_mode:
+        substring_step(0, batch)
 
     for i in range(1, max_q + 1):
         # rows with qlen >= i are exactly the sorted prefix [0, na); rows
         # past it were captured at i == their qlen and are never read again
-        na = (
-            int(np.searchsorted(neg_qlen, -i, side="right"))
-            if order is not None
-            else batch
-        )
-        if na == 0:
-            break
-        qc = Q[:na, i - 1] if i - 1 < Q.shape[1] else np.full(na, _PAD)
-        va, tb, eq = validb[:na], tmpb[:na], eqb[:na]
-        co, be, tm, ru = cost[:na], best[:na], tmp[:na], run[:na]
-        pv, ta, cu = prev[:na], two_ago[:na], curr[:na]
-        j_abs = i + k_off  # (W,) absolute term column per band cell
-        # cell validity: 1 <= j <= tlen (every sliced row is active;
-        # j == 0 handled below)
-        va[:] = (j_abs >= 1)[None, :]
-        np.less_equal(j_abs[None, :], tlen[:na, None], out=tb)
-        va &= tb
-        # term chars b[j-1] for the whole band row as one slice
-        tc = T_pad[:na, i - 1 - n + P : i - 1 + n + 1 + P]
-        char_eq_into(qc, tc, eq, tb)
-        np.subtract(ones, eq, out=co, casting="unsafe")
-        # diag D[i-1][j-1] (same k) and insert D[i-1][j] (k+1), both from prev
-        np.add(pv, co, out=be)
-        np.minimum(be, INF, out=be)
-        np.add(pv[:, 1:], ones, out=tm[:, :-1])
-        np.minimum(tm[:, :-1], INF, out=tm[:, :-1])
-        np.minimum(be[:, :-1], tm[:, :-1], out=be[:, :-1])
+        qc = QT[i - 1, :na]
+        tc = TT[i - 1 - n + P : i + n + P, :na]  # b[j-1] per band cell
+        eq = eqb[:, :na]
+        np.equal(tc, qc, out=eq)
+        if subs_codes is not None:
+            codes = (qc.astype(np.int64) << 21) | tc.astype(np.int64)
+            idx = np.searchsorted(subs_codes, codes)
+            allowed = subs_codes[np.clip(idx, 0, subs_codes.size - 1)] == codes
+            allowed &= idx < subs_codes.size
+            allowed &= tc != _TPAD
+            allowed &= qc != _PAD
+            eq |= allowed
+        pv, ta, cu = prev[:, :na], two_ago[:, :na], curr[:, :na]
+        # Every candidate is taken before its "+1", then capped at INF - 1
+        # and incremented once, so INF + 1 is never formed (int8 at n = 126).
+        # diag D[i-1][j-1] + (1 - eq), same k; insert D[i-1][j] + 1, k+1
+        np.subtract(pv, eq, out=cu)
+        np.minimum(cu[:-1], pv[1:], out=cu[:-1])
         if variant == TRANSPOSITION and i >= 2:
-            sw = swapb[:na]
-            qprev = Q[:na, i - 2]
-            tprev = T_pad[:na, i - 2 - n + P : i - 2 + n + 1 + P]  # b[j-2]
-            np.equal(tprev, qc[:, None], out=sw)
-            np.equal(tc, qprev[:, None], out=tb)
+            # D[i-2][j-2] + 1 (two_ago, same k) where a[i-1] == b[j-2] and
+            # a[i-2] == b[j-1]
+            sw, tb = swapb[:, :na], tmpb[:, :na]
+            np.equal(TT[i - 2 - n + P : i - 1 + n + P, :na], qc, out=sw)
+            np.equal(tc, QT[i - 2, :na], out=tb)
             sw &= tb
-            np.not_equal(tc, _PAD, out=tb)
-            sw &= tb
-            np.not_equal(tprev, _PAD, out=tb)
-            sw &= tb
-            # D[i-2][j-2]: two_ago at the same k
-            np.add(ta, ones, out=tm)
-            np.minimum(tm, INF, out=tm)
-            np.minimum(be, tm, out=be, where=sw)
+            np.minimum(cu, ta, out=cu, where=sw)
         if variant == MERGE_AND_SPLIT:
             if i >= 2:
-                # merge D[i-2][j-1] → two_ago at k+1
-                np.add(ta[:, 1:], ones, out=tm[:, :-1])
-                np.minimum(tm[:, :-1], INF, out=tm[:, :-1])
-                np.minimum(be[:, :-1], tm[:, :-1], out=be[:, :-1])
-            # split D[i-1][j-2] → prev at k-1
-            np.add(pv[:, :-1], ones, out=tm[:, 1:])
-            np.minimum(tm[:, 1:], INF, out=tm[:, 1:])
-            np.minimum(be[:, 1:], tm[:, 1:], out=be[:, 1:])
-        np.logical_not(va, out=tb)
-        np.copyto(be, INF, where=tb)
-        # j == 0 boundary: D[i][0] = i at k = n - i (a deletion-chain source)
-        if i <= n:
-            be[:, n - i] = np.int16(i)
-        # deletion D[i][j-1] → curr at k-1: prefix-min scan along k
-        cu[:, 0] = be[:, 0]
+                # merge D[i-2][j-1] + 1 → two_ago at k+1
+                np.minimum(cu[:-1], ta[1:], out=cu[:-1])
+            # split D[i-1][j-2] + 1 → prev at k-1
+            np.minimum(cu[1:], pv[:-1], out=cu[1:])
+        np.minimum(cu, CAP, out=cu)
+        # deletion D[i][j-1] + 1 → k-1: prefix-min scan along k, each step
+        # one contiguous band row
+        ru = run[:na]
         for k in range(1, W):
-            np.add(cu[:, k - 1], ones, out=ru)
-            np.minimum(ru, INF, out=ru)
-            np.minimum(be[:, k], ru, out=cu[:, k])
-        # keep curr only at valid cells or the j == 0 boundary column
-        va |= (j_abs == 0)[None, :]
-        np.logical_not(va, out=tb)
-        np.copyto(cu, INF, where=tb)
+            np.add(cu[k - 1], ones, out=ru)
+            np.minimum(cu[k], ru, out=cu[k])
+        np.add(cu, ones, out=cu)
+        # No cell is masked.  Cells with j < 0 read only cells with j' < 0
+        # (INF from row 0, and no term char there matches), so they stay
+        # INF and the j == 0 column comes out as D[i][0] = i by itself;
+        # cells past j = tlen feed only cells past it, none of which is read.
         two_ago, prev, curr = prev, curr, two_ago
-        hit = qlen == i
-        if hit.any():
-            out_row[hit] = prev[hit]
+        done = n_active(i + 1)
+        if done < na:
+            out_row[:, done:na] = prev[:, done:na]
         if substring_mode:
-            ki = tlen - i + n
-            valid = (ki >= 0) & (ki < W) & (qlen >= i)
-            rr = np.where(valid, prev[col_idx, np.clip(ki, 0, W - 1)], INF)
-            sub_min = np.minimum(sub_min, rr.astype(np.int16))
+            substring_step(i, na)
+        na = done
 
     # extract answers
     if substring_mode:
         res = sub_min
     elif prefix_mode:
         # min over k with 0 <= j = qlen + k - n <= tlen
-        j_abs = qlen[:, None] + (np.arange(W)[None, :] - n)
-        valid = (j_abs >= 0) & (j_abs <= tlen[:, None])
-        res = np.where(valid, out_row, INF).min(axis=1)
+        j_abs = qlen[None, :] + (np.arange(W) - n)[:, None]
+        valid = (j_abs >= 0) & (j_abs <= tlen[None, :])
+        res = np.where(valid, out_row, INF).min(axis=0)
     else:
         kf = tlen - qlen + n
         valid = (kf >= 0) & (kf < W)
-        res = np.where(valid, out_row[col_idx, np.clip(kf, 0, W - 1)], INF)
+        res = np.where(valid, out_row[np.clip(kf, 0, W - 1), np.arange(batch)], INF)
     res = res.astype(np.int32)
     res[res > n] = -1
     if order is not None:

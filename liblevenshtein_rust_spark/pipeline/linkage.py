@@ -125,14 +125,17 @@ def _evidence(ta: DataFrame, tb: DataFrame, cfg: LinkConfig) -> DataFrame:
         ).alias("w"),
     )
     if cfg.use_phonetic:
-        ph = (
-            phonetic_vocab_matches(va, vb, cfg)
-            # only pairs the edit channel MISSED: the union stays a set and
-            # an edit match never gets double-counted or down-weighted
-            .join(tm.select("tok_a", "tok_b"), ["tok_a", "tok_b"], "left_anti")
-            .withColumn("w", F.lit(float(cfg.phonetic_weight)))
+        # one full outer join reads the edit pairs once (a union plus a
+        # left_anti would run the blocked join and its kernel twice); the
+        # result stays a set, and an edit match keeps its own weight, so
+        # the phonetic weight lands only on pairs the edit channel MISSED
+        tm = tm.join(
+            phonetic_vocab_matches(va, vb, cfg), ["tok_a", "tok_b"], "full_outer"
+        ).select(
+            "tok_a",
+            "tok_b",
+            F.coalesce("w", F.lit(float(cfg.phonetic_weight))).alias("w"),
         )
-        tm = tm.unionByName(ph)
     a = ta.select(F.col("doc_id").alias("a_id"), *group, F.col("token").alias("tok_a"))
     b = tb.select(F.col("doc_id").alias("b_id"), *group, F.col("token").alias("tok_b"))
     pair_id = F.xxhash64(*group, "tok_a", "tok_b").alias("pair_id")
@@ -533,7 +536,8 @@ def link_records_decisions(
     band rule over those rows — cost identical to the learned path's
     weight fit; the result is field-count-bounded, not data-bounded.
     """
-    _, pattern_counts, (p_m, m, u) = _fs_fit(a_recs, b_recs, fields, cfg, n_iter)
+    g = field_agreements(a_recs, b_recs, fields, cfg)
+    pattern_counts, (p_m, m, u) = _fs_fit(g, fields, n_iter)
     bands = fs_decision_bands(pattern_counts, m, u, mu=mu, lam=lam)
     # calibrated posterior P(M|gamma) = p*P(g|M) / (p*P(g|M)+(1-p)*P(g|U))
     # — the third leg of the FS triad (learned weights -> decision bands ->
@@ -755,30 +759,18 @@ def fellegi_sunter_em(
 
 
 def _fs_fit(
-    a_recs: DataFrame,
-    b_recs: DataFrame,
-    fields: list[str],
-    cfg: LinkConfig | None,
-    n_iter: int,
-) -> tuple[DataFrame, list[tuple[tuple[int, ...], int]], tuple]:
-    """The Fellegi-Sunter fit both FS paths run: the persisted
-    :func:`field_agreements` table, its agreement-pattern counts (<= 2^F
-    rows collected) and :func:`fellegi_sunter_em` over them.  Returns
-    ``(g, pattern_counts, (p, m, u))``."""
-    from ..session import pooled_persist
-
-    # the agreement table feeds BOTH the EM sufficient statistics (an
-    # action) and the learned path's scoring projection — persist it or
-    # the whole blocked evidence join runs twice (measured ~2x on the
-    # oracle fixture)
-    g = pooled_persist(field_agreements(a_recs, b_recs, fields, cfg))
+    g: DataFrame, fields: list[str], n_iter: int
+) -> tuple[list[tuple[tuple[int, ...], int]], tuple]:
+    """The Fellegi-Sunter fit both FS paths run over a
+    :func:`field_agreements` table ``g``: its agreement-pattern counts
+    (<= 2^F rows collected) and :func:`fellegi_sunter_em` over them.
+    Returns ``(pattern_counts, (p, m, u))``."""
     gcols = [f"g_{f}" for f in fields]
     counts = g.groupBy(*gcols).agg(F.count(F.lit(1)).alias("c")).collect()
     pattern_counts = [
         (tuple(int(r[c]) for c in gcols), int(r["c"])) for r in counts
     ]
-    fit = fellegi_sunter_em(pattern_counts, len(fields), n_iter=n_iter)
-    return g, pattern_counts, fit
+    return pattern_counts, fellegi_sunter_em(pattern_counts, len(fields), n_iter=n_iter)
 
 
 def link_records_learned(
@@ -809,8 +801,14 @@ def link_records_learned(
     """
     import math
 
+    from ..session import pooled_persist
+
     cfg = cfg or LinkConfig()
-    g, _, (_, m, u) = _fs_fit(a_recs, b_recs, fields, cfg, n_iter)
+    # the agreement table feeds BOTH the EM sufficient statistics (an
+    # action) and the scoring projection below — persist it or the whole
+    # blocked evidence join runs twice (measured ~2x on the oracle fixture)
+    g = pooled_persist(field_agreements(a_recs, b_recs, fields, cfg))
+    _, (_, m, u) = _fs_fit(g, fields, n_iter)
     gcols = [f"g_{f}" for f in fields]
     w_agree = [_round9(math.log2(m[f] / u[f])) for f in range(len(fields))]
     w_dis = [

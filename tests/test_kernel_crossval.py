@@ -41,12 +41,34 @@ def test_scalar_automaton_matches_dp(variant, alpha):
         assert automaton_distance(q, c, n, variant) == expected, (q, c, n)
 
 
+def _mutate(rng, w, k, alpha):
+    """``w`` after ``k`` random insertions, deletions and substitutions."""
+    w = list(w)
+    for _ in range(k):
+        op = rng.randrange(3) if w else 0
+        if op == 0:
+            w.insert(rng.randint(0, len(w)), rng.choice(alpha))
+        elif op == 1:
+            del w[rng.randrange(len(w))]
+        else:
+            w[rng.randrange(len(w))] = rng.choice(alpha)
+    return "".join(w)
+
+
+# n = 126 is the widest int8 band (INF = 127); n = 127 the narrowest int16
 @pytest.mark.parametrize("variant", VARIANTS)
-@pytest.mark.parametrize("n", [0, 1, 2, 3])
+@pytest.mark.parametrize("n", [0, 1, 2, 3, 126, 127])
 def test_batch_kernel_matches_dp(variant, n):
     rng = random.Random(1234 + n)
-    qs = [_rand_word(rng, "abcde") for _ in range(1500)]
-    ts = [_rand_word(rng, "abcde") for _ in range(1500)]
+    short = 1500 if n <= 3 else 200
+    qs = [_rand_word(rng, "abcde") for _ in range(short)]
+    ts = [_rand_word(rng, "abcde") for _ in range(short)]
+    # words longer than the band (2n+1), edited around n times, so INF
+    # capping and the dead band (rows whose band has left the matrix) run
+    for _ in range(40 if n <= 3 else 8):
+        w = _rand_word(rng, "abcde", 2 * n + 2, 2 * n + 30)
+        qs.append(w)
+        ts.append(_mutate(rng, w, rng.randint(n // 2, 2 * n + 3), "abcde"))
     got = batch_distance(qs, ts, n, variant)
     exp = np.array(
         [(d if (d := distance(q, t, variant)) <= n else -1) for q, t in zip(qs, ts)],

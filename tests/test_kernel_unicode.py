@@ -20,6 +20,18 @@ CASES = [
     ("😀ab", "ab", 1),         # astral-plane emoji is one codepoint
     ("a😀b", "a😁b", 1),
     ("αβγ", "αβδ", 1),
+    # an embedded NUL on either side is an ordinary unmatched char
+    ("a\x00b", "ab", 1),
+    ("ab", "a\x00b", 1),
+    ("\x00", "a", 1),
+    ("é", "\x00", 1),
+    ("ab\x00", "ab", 1),
+    # empty and one-character rows
+    ("", "", 0),
+    ("", "é", 1),
+    ("😀", "", 1),
+    ("a", "a", 0),
+    ("😀", "😁", 1),
 ]
 
 

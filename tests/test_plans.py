@@ -13,6 +13,8 @@ Checks (via executedPlan/explain text):
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -351,3 +353,72 @@ def test_tokens_stage_has_no_broadcast_or_cache(spark, tmp_path, monkeypatch):
         "rare_tokens_dropped": dropped["token"].nunique(),
         "rare_token_rows_dropped": len(dropped),
     }
+
+
+def test_phonetic_linkage_scores_edit_join_once(spark):
+    """With the phonetic channel on, the edit-channel token pairs are read
+    once: the blocked edit join and its Arrow kernel appear in one
+    ArrowEvalPython node, and an edit match keeps its own weight."""
+    from liblevenshtein_rust_spark.pipeline import linkage
+    from liblevenshtein_rust_spark.session import release_pooled
+
+    a = spark.createDataFrame(
+        [(1, "brdgstn kramden fernsby"), (2, "holloway quinton marsh")],
+        "doc_id long, text string",
+    )
+    b = spark.createDataFrame(
+        [(101, "brdgstnaaa kramdan fernsby"), (102, "holloway quintin marsh")],
+        "doc_id long, text string",
+    )
+    cfg = linkage.LinkConfig(max_distance=1, use_phonetic=True)
+    scored = linkage.score_pairs(a, b, cfg)
+    got = {(r["a_id"], r["b_id"], r["n_matched"], r["score"]) for r in scored.collect()}
+    # kramden~kramdan and quinton~quintin are edit matches (1 - 1/7), not
+    # phonetic ones (0.5); brdgstn~brdgstnaaa matches only phonetically
+    w = round(1 - 1 / 7, 6)
+    assert got == {
+        (1, 101, 3, round(1.0 + w + 0.5, 6)),
+        (2, 102, 3, round(2.0 + w, 6)),
+    }
+    # after the run the text holds AQE's final and initial plans (and the
+    # cached inputs' own): count distinct kernel nodes by output attribute
+    nodes = re.findall(r"ArrowEvalPython \[.*?\], \[(pythonUDF\d+#\d+)\]", _plan(scored))
+    assert len(set(nodes)) == 1
+    release_pooled()
+
+
+def test_fs_decisions_cache_only_the_blocked_join_inputs(spark):
+    """``link_records_decisions`` reads its agreement table once (the
+    pattern-count collect), so it registers no cache beyond the ones the
+    blocked join itself persists; ``link_records_learned`` reads it twice
+    and adds exactly one."""
+    from liblevenshtein_rust_spark import session
+    from liblevenshtein_rust_spark.pipeline import linkage
+
+    a = spark.createDataFrame(
+        [(1, "jonathan smithers", "springfield"), (2, "margaret chalmers", "shelbyville")],
+        "doc_id long, name string, city string",
+    )
+    b = spark.createDataFrame(
+        [(11, "jonathon smithers", "springfield"), (12, "margaret chalmers", "ogdenville")],
+        "doc_id long, name string, city string",
+    )
+    fields = ["name", "city"]
+    cfg = linkage.LinkConfig(max_distance=1, min_token_len=3)
+
+    def registered(build) -> int:
+        session.release_pooled()
+        df = build()
+        n = len(session._POOLED)
+        df.collect()
+        session.release_pooled()
+        return n
+
+    blocked = registered(lambda: linkage.field_agreements(a, b, fields, cfg))
+    assert blocked > 0
+    assert registered(
+        lambda: linkage.link_records_decisions(a, b, fields, cfg)
+    ) == blocked
+    assert registered(
+        lambda: linkage.link_records_learned(a, b, fields, cfg)
+    ) == blocked + 1
