@@ -152,12 +152,12 @@ def _band_major(strings, lengths, pad, name: str, top: int, height: int) -> np.n
     return out
 
 
-def encode_strings(strings, max_len: int | None = None):
+def encode_strings(strings):
     """Encode a sequence of python strings into a (batch, L) uint32 codepoint
     matrix (padded with the ``_PAD`` sentinel) plus an int32 length vector.
     """
     objs, lengths = _strings(strings)
-    L = max(int(lengths.max()) if lengths.size else 0, max_len or 1, 1)
+    L = max(int(lengths.max()) if lengths.size else 0, 1)
     return _band_major(objs, lengths, _PAD, "enc", 0, L).T.copy(), lengths
 
 
@@ -180,7 +180,7 @@ def batch_distance(
     treated as empty).
 
     NOT REENTRANT — single-threaded callers only.  All working arrays
-    (including the encoded inputs via ``encode_strings(scratch_key=...)``)
+    (including the band-major encoded inputs)
     alias module-level pooled buffers (:class:`_ScratchPool`) that are
     clobbered by the next call; only the returned result array is freshly
     allocated and safe to retain.  This matches Spark's one-task-at-a-time
@@ -314,13 +314,10 @@ def _batch_distance_impl(
         eq = eqb[:, :na]
         np.equal(tc, qc, out=eq)
         if subs_codes is not None:
+            # a sentinel sets bits no real pair code has (chars < 2^21)
             codes = (qc.astype(np.int64) << 21) | tc.astype(np.int64)
-            idx = np.searchsorted(subs_codes, codes)
-            allowed = subs_codes[np.clip(idx, 0, subs_codes.size - 1)] == codes
-            allowed &= idx < subs_codes.size
-            allowed &= tc != _TPAD
-            allowed &= qc != _PAD
-            eq |= allowed
+            idx = np.minimum(np.searchsorted(subs_codes, codes), subs_codes.size - 1)
+            eq |= subs_codes[idx] == codes
         pv, ta, cu = prev[:, :na], two_ago[:, :na], curr[:, :na]
         # Every candidate is taken before its "+1", then capped at INF - 1
         # and incremented once, so INF + 1 is never formed (int8 at n = 126).
