@@ -27,7 +27,10 @@ for ER's vocabulary self-join (``pipeline/er.vocab_token_matches``) and
 linkage's A × B cross join.
 
 Skew policy — its one statement; :func:`blocked_pairs` implements it for
-ER's self-join and linkage's edit and phonetic cross joins.  A key's join
+ER's self-join, linkage's edit and phonetic cross joins, the dedup
+self-joins (``dedup.minhash_lsh_pairs``, ``simhash_near_pairs``,
+``ngram_jaccard_pairs``, ``lsh_embedding_near_pairs``) and the evaluation
+self-joins (:func:`blocking_quality`, ``er.pairwise_f1``).  A key's join
 cost is its pair count, n(n−1)/2 in a self-join and n_a·n_b in a cross
 join (the multiplicity estimate of the ICDE 2021 join-size paper,
 PAPERS.md).  Keys above ``HOT_KEY_PAIRS`` are salted into ``N_SALT``
@@ -36,8 +39,10 @@ are dropped and counted, ``key_pairs_dropped`` bounding the true pairs
 lost.  In a self-join the bands are n > 1,000 and n > 100,000.  With no
 hot or extreme key the join is the band-free plan (no anti-join).  It
 persists its own inputs; the caller releases them (``release_pooled``).
-``fuzzy_query``'s broadcast join and :func:`pair_block_weights` are
-outside this policy.
+Outside this policy: ``fuzzy_query``'s broadcast join,
+:func:`pair_block_weights`' ``hot_threshold`` (meta-blocking's block
+purging) and the ``max_df`` shingle cut of ``dedup.contamination_overlap``
+and ``bloom_contamination_overlap`` (documented semantics).
 """
 
 from __future__ import annotations
@@ -346,6 +351,8 @@ def blocking_quality(
     truth_pairs: DataFrame,
     keyed: DataFrame,
     id_col: str = "doc_id",
+    *,
+    band: dict | None = None,
 ) -> DataFrame:
     """Blocking-scheme evaluation: reduction ratio + pairs completeness —
     the two standard blocking metrics (how much of the O(n²) pair space the
@@ -366,21 +373,15 @@ def blocking_quality(
       (n_docs, n_candidates, n_truth, n_truth_in_candidates,
        reduction_ratio, pairs_completeness).
 
-    Scale: the distinct candidate-pair count is the SAME shuffle candidate
-    generation itself performs (so measuring costs what running costs — no
-    extra pass over the raw corpus); callers must hand in a `keyed` table
-    that already had hot-key policy applied, exactly as the pipeline does.
-    The four metric aggregates are single-row and combine via 1-row
-    broadcast joins — nothing returns to the driver.
+    Scale: the candidates are :func:`blocked_pairs` over ``keyed`` — the
+    skew policy candidate generation itself runs (so measuring costs what
+    running costs — no extra pass over the raw corpus); ``band`` receives
+    its band record.  The four metric aggregates are single-row and combine
+    via 1-row broadcast joins — nothing returns to the driver.
     """
-    a = keyed.select(F.col(id_col).alias("left_id"), "key")
-    b = keyed.select(F.col(id_col).alias("right_id"), "key")
-    cand = (
-        a.join(b, "key")
-        .where(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id")
-        .distinct()
-    )
+    cand, record = blocked_pairs(keyed.select(F.col(id_col).alias("id"), "key"))
+    if band is not None:
+        band.update(record)
     truth = truth_pairs.select("left_id", "right_id").distinct()
     # ONE pass over the candidate set: flag each candidate as truth/not via
     # a left join, then count + sum in a single aggregate — a separate

@@ -18,19 +18,22 @@ lexicographic min over a uniform hash is a valid min-hash family.
 Scale notes (10^12 docs):
 - exact dedup is one shuffle on a 16-byte digest — the cheapest possible
   global op; AQE coalesces the near-empty partitions.
-- minhash bands: band buckets are the blocking keys; bucket fan-out is
-  capped (`max_bucket`) with logged truncation, the same skew guard as the
-  ER blocker (hot buckets = boilerplate documents).
-- the signature build is `array_min(transform(...))` over the shingle
-  array — per-row columnar work, no explode, no shuffle.
-- pairwise verification joins on doc_id to fetch shingle arrays: two
-  broadcast-or-shuffle hash joins keyed on id, linear in candidate count.
+- every candidate self-join (minhash band buckets, simhash quarters,
+  shingles, hyperplane buckets) is ``blocking.blocked_pairs`` over
+  ``(id, key)`` rows: the ER blocker's skew policy (hot buckets =
+  boilerplate documents are salted, extreme ones dropped and counted in
+  the ``band`` record), then verification by id.
+- verification joins the payload (shingles, fingerprints, vectors) by id
+  after the pair ``distinct``: hash joins linear in candidate count; no
+  payload rides through the key join.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import blocking
 
 # ---------------------------------------------------------------------------
 # shared text canonicalization (must stay expressible in ANSI SQL)
@@ -145,11 +148,49 @@ def minhash_bands(sig_col, bands: int = 4, rows: int = 4):
     )
 
 
-def jaccard(a_col, b_col):
-    """|A ∩ B| / |A ∪ B| over two distinct-element arrays."""
-    inter = F.size(F.array_intersect(a_col, b_col))
-    union = F.size(F.array_union(a_col, b_col))
-    return F.when(union > 0, inter / union).otherwise(F.lit(1.0))
+def _blocked_pairs(rows: DataFrame, band: dict | None) -> DataFrame:
+    """``blocking.blocked_pairs`` self-join of ``(id, key)`` rows;
+    ``band`` receives its band record."""
+    pairs, record = blocking.blocked_pairs(rows)
+    if band is not None:
+        band.update(record)
+    return pairs
+
+
+def _jaccard_pairs(
+    rows: DataFrame, base: DataFrame, threshold: float, band: dict | None
+) -> DataFrame:
+    """(left_id, right_id, jaccard >= threshold) over the pairs of the
+    blocked ``(id, key)`` ``rows``, verified against the full ``(id, sh)``
+    shingle sets of ``base``: a key the skew policy drops can lose a pair
+    but never change a Jaccard value.
+
+    The exact intersection size is an exploded-shingle equi-join restricted
+    to the candidates, the set sizes come from a narrow side table: arrays
+    never leave the map side — at 10^12 docs the shuffle carries only
+    (id, id, count).
+    """
+    ex = base.select("id", F.explode("sh").alias("g"))
+    sizes = base.select("id", F.size("sh").alias("sz"))
+    inter = (
+        _blocked_pairs(rows, band)
+        .join(ex.toDF("left_id", "g"), "left_id")
+        .join(ex.toDF("right_id", "g"), ["right_id", "g"])
+        .groupBy("left_id", "right_id")
+        .agg(F.count("*").alias("inter"))
+    )
+    out = (
+        inter.join(sizes.toDF("left_id", "lsz"), "left_id")
+        .join(sizes.toDF("right_id", "rsz"), "right_id")
+        .select(
+            "left_id",
+            "right_id",
+            F.round(
+                F.col("inter") / (F.col("lsz") + F.col("rsz") - F.col("inter")), 6
+            ).alias("jaccard"),
+        )
+    )
+    return out.where(F.col("jaccard") >= threshold)
 
 
 def minhash_lsh_pairs(
@@ -160,15 +201,20 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    max_bucket: int = 1000,
+    *,
+    band: dict | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH, Jaccard-verified.
 
     Output: (left_id, right_id, jaccard) with jaccard >= threshold, among
-    pairs sharing at least one LSH band bucket.  ``max_bucket`` drops
-    pathological buckets (boilerplate) with the same logged-truncation
-    policy as ER blocking.
+    pairs sharing at least one LSH band bucket; the exact
+    ``struct(band, bucket)`` is the key of :func:`blocking.blocked_pairs`,
+    and ``band`` receives its band record.  ``bands`` must divide
+    ``num_hashes`` (``ValueError`` otherwise): an empty band would put every
+    document in one bucket.
     """
+    if not 0 < bands <= num_hashes or num_hashes % bands:
+        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     rows = num_hashes // bands
     base = _shingle_base(docs, text_col, id_col, k)
     # Signature via explode + 16 min-aggregates (whole-stage codegen; array
@@ -195,49 +241,10 @@ def minhash_lsh_pairs(
             *[F.col(f"_h{i}").cast("string") for i in range(num_hashes)]
         ).alias("sig"),
     )
-    banded = sig.select(
-        "id", F.explode(minhash_bands(F.col("sig"), bands, rows)).alias("bk")
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket"))
-
-    counts = banded.groupBy("band", "bucket").agg(F.count("*").alias("n"))
-    hot = counts.where(F.col("n") > max_bucket).select("band", "bucket")
-    # broadcast the (small) hot set, anti-join — never the huge cold set
-    b = banded.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
-
-    left = b.select("band", "bucket", F.col("id").alias("left_id"))
-    right = b.select("band", "bucket", F.col("id").alias("right_id"))
-    cand = (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id")
-        .distinct()
+    keyed = sig.select(
+        "id", F.explode(minhash_bands(F.col("sig"), bands, rows)).alias("key")
     )
-    # Jaccard verification WITHOUT shuffling shingle arrays: intersection
-    # size via an exploded-shingle equi-join restricted to the candidates,
-    # set sizes joined from a narrow side table.  Arrays never leave the
-    # map side — at 10^12 docs the shuffle carries only (id, id, count).
-    ex = base.select("id", F.explode("sh").alias("g"))
-    sizes = base.select("id", F.size("sh").alias("sz"))
-    el = ex.select(F.col("id").alias("left_id"), "g")
-    er = ex.select(F.col("id").alias("right_id"), "g")
-    inter = (
-        cand.join(el, "left_id")
-        .join(er, ["right_id", "g"])
-        .groupBy("left_id", "right_id")
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed("id", "left_id").withColumnRenamed("sz", "lsz"), "left_id")
-        .join(sizes.withColumnRenamed("id", "right_id").withColumnRenamed("sz", "rsz"), "right_id")
-        .select(
-            "left_id",
-            "right_id",
-            F.round(
-                F.col("inter") / (F.col("lsz") + F.col("rsz") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
-    )
-    return out.where(F.col("jaccard") >= threshold)
+    return _jaccard_pairs(keyed, base, threshold, band)
 
 
 # ---------------------------------------------------------------------------
@@ -308,10 +315,17 @@ def simhash_near_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
+    *,
+    band: dict | None = None,
 ) -> DataFrame:
     """Hamming-bounded pairs: block on the 4 16-bit quarters (pigeonhole —
     any pair within Hamming 3 of 64 bits agrees exactly on >=1 quarter),
-    verify with bit_count(xor)."""
+    verify with bit_count(xor).  The key is the exact long ``q << 16 | qv``
+    of :func:`blocking.blocked_pairs`; ``band`` receives its band record.
+    ``max_hamming > 3`` raises ``ValueError``: the pigeonhole no longer
+    guarantees recall."""
+    if max_hamming > 3:
+        raise ValueError("4-quarter blocking guarantees recall only for max_hamming <= 3")
     # compute-spreading width = core count (defaultParallelism), NOT the
     # shuffle-partition count: this repartition exists to parallelize an
     # expensive projection, and a cache wider than the core count makes
@@ -319,44 +333,28 @@ def simhash_near_pairs(
     n_part = docs.sparkSession.sparkContext.defaultParallelism
     # repartition the INPUT (small parquet arrives as 1-2 splits) so the
     # large 63-bit fingerprint expression runs wide — projecting before the
-    # exchange would evaluate it on those 2 splits; persist because both
-    # join sides below would recompute it otherwise
+    # exchange would evaluate it on those 2 splits; persist because the key
+    # rows and both verification joins below would recompute it otherwise
     from ..session import pooled_persist
 
     fp = pooled_persist(
         simhash_fingerprints(docs.repartition(n_part), text_col, id_col)
+    ).select(F.col(id_col).alias("id"), "simhash")
+    quarters = [
+        F.lit(q << 16).bitwiseOR(F.shiftright("simhash", 16 * q).bitwiseAND(F.lit(0xFFFF)))
+        for q in range(4)
+    ]
+    pairs = _blocked_pairs(
+        fp.select("id", F.explode(F.array(*quarters)).alias("key")), band
     )
-    quarters = fp.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(q).alias("q"),
-                        F.shiftright("simhash", 16 * q).bitwiseAND(F.lit(0xFFFF)).alias("qv"),
-                    )
-                    for q in range(4)
-                ]
-            )
-        ).alias("qk"),
-    ).select(id_col, "simhash", F.col("qk.q").alias("q"), F.col("qk.qv").alias("qv"))
-    left = quarters.select(
-        "q", "qv", F.col(id_col).alias("left_id"), F.col("simhash").alias("lh")
-    )
-    right = quarters.select(
-        "q", "qv", F.col(id_col).alias("right_id"), F.col("simhash").alias("rh")
-    )
-    cand = (
-        left.join(right, ["q", "qv"])
-        .where(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id", "lh", "rh")
-        .distinct()
-    )
-    out = cand.select(
-        "left_id",
-        "right_id",
-        F.bit_count(F.col("lh").bitwiseXOR(F.col("rh"))).alias("hamming"),
+    out = (
+        pairs.join(fp.toDF("left_id", "lh"), "left_id")
+        .join(fp.toDF("right_id", "rh"), "right_id")
+        .select(
+            "left_id",
+            "right_id",
+            F.bit_count(F.col("lh").bitwiseXOR(F.col("rh"))).alias("hamming"),
+        )
     )
     return out.where(F.col("hamming") <= max_hamming)
 
@@ -372,39 +370,22 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.5,
+    *,
+    band: dict | None = None,
 ) -> DataFrame:
     """Exact Jaccard-threshold pairs, blocked on shared shingles.
 
-    A pair with Jaccard >= t shares at least one shingle, so blocking on
-    individual shingles is recall-complete; document frequency caps the
-    fan-out exactly like ER's rare-token filter.
+    A pair with Jaccard >= t > 0 shares at least one shingle, so blocking
+    on individual shingles (:func:`blocking.blocked_pairs`, its band record
+    into ``band``) is recall-complete up to the keys its skew policy drops;
+    ``threshold <= 0`` raises ``ValueError`` (pairs sharing no shingle are
+    never blocked).
     """
+    if threshold <= 0:
+        raise ValueError("threshold must be > 0: Jaccard-0 pairs are never blocked")
     base = _shingle_base(docs, text_col, id_col, k)
-    # one exploded self-join computes BOTH the blocking and the intersection
-    # size (shingles are distinct per doc, so the match count per pair IS
-    # |A ∩ B|); no arrays cross the shuffle, no second pass
-    ex = base.select("id", F.explode("sh").alias("g"))
-    sizes = base.select("id", F.size("sh").alias("sz"))
-    left = ex.select("g", F.col("id").alias("left_id"))
-    right = ex.select("g", F.col("id").alias("right_id"))
-    inter = (
-        left.join(right, "g")
-        .where(F.col("left_id") < F.col("right_id"))
-        .groupBy("left_id", "right_id")
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed("id", "left_id").withColumnRenamed("sz", "lsz"), "left_id")
-        .join(sizes.withColumnRenamed("id", "right_id").withColumnRenamed("sz", "rsz"), "right_id")
-        .select(
-            "left_id",
-            "right_id",
-            F.round(
-                F.col("inter") / (F.col("lsz") + F.col("rsz") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
-    )
-    return out.where(F.col("jaccard") >= threshold)
+    keyed = base.select("id", F.explode("sh").alias("key"))
+    return _jaccard_pairs(keyed, base, threshold, band)
 
 
 # ---------------------------------------------------------------------------
@@ -533,6 +514,8 @@ def lsh_embedding_near_pairs(
     dim: int = 64,
     n_planes: int = 8,
     threshold: float = 0.95,
+    *,
+    band: dict | None = None,
 ) -> DataFrame:
     """Scale path: random-hyperplane LSH buckets, then exact cosine verify.
 
@@ -540,22 +523,26 @@ def lsh_embedding_near_pairs(
     (1 - θ/π)^n_planes, so high-cosine pairs collide with high probability.
     The verify step makes precision exact; recall is probabilistic (union
     multiple tables at scale — here a single table keeps the plan small).
+    The bucket string is the key of :func:`blocking.blocked_pairs` (its
+    band record into ``band``); the vectors are joined in by id afterwards.
     """
-    sig = emb.select(
+    keyed = emb.select(
         F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
         F.concat_ws(
             "",
             *[_hyperplane_sign(F.col(vec_col), p, dim).cast("string") for p in range(n_planes)],
-        ).alias("bucket"),
+        ).alias("key"),
     )
-    a = sig.select("bucket", F.col("id").alias("left_id"), F.col("v").alias("va"))
-    b = sig.select("bucket", F.col("id").alias("right_id"), F.col("v").alias("vb"))
-    cand = a.join(b, "bucket").where(F.col("left_id") < F.col("right_id"))
-    out = cand.select(
-        "left_id",
-        "right_id",
-        F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos"),
+    vecs = emb.select(id_col, vec_col)
+    out = (
+        _blocked_pairs(keyed, band)
+        .join(vecs.toDF("left_id", "va"), "left_id")
+        .join(vecs.toDF("right_id", "vb"), "right_id")
+        .select(
+            "left_id",
+            "right_id",
+            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos"),
+        )
     )
     return out.where(F.col("cos") >= threshold)
 
@@ -690,7 +677,7 @@ def contamination_overlap(
     Output: (eval_id, train_id, n_shared) for every cross-corpus doc pair
     sharing >= ``min_shared`` distinct shingles (shingle sets are distinct
     per doc, so the join match count IS the intersection size — no arrays
-    cross the shuffle, same shape as :func:`ngram_jaccard_pairs`).
+    cross the shuffle).
 
     ``max_df`` drops shingles present in more than that many TRAIN docs
     before the join — boilerplate k-grams ("terms of service", licence

@@ -277,19 +277,25 @@ def pairwise_f1(
 
     If ``toks`` is given, labels are restricted to pairs sharing >= 1 token
     blocking key ("labeled pairs at shared blocking keys", BASELINE.json) —
-    blocking recall is reported separately as ``blocked_fraction``.
+    blocking recall is reported separately as ``blocked_fraction``.  The
+    shared-key pairs are :func:`blocking.blocked_pairs` over the depth-2
+    deletion keys, and its band record is merged into the result.
     """
     lab = labels
     n_total = lab.count()
+    record: dict = {}
     if toks is not None:
         from ..functions.blocking_keys import deletion_key_rows
 
         keys = deletion_key_rows(toks.select("token").distinct(), "token", 2)
-        keyed = toks.join(keys, "token").select("doc_id", "key").distinct()
-        a = keyed.select(F.col("doc_id").alias("left_doc_id"), "key")
-        b = keyed.select(F.col("doc_id").alias("right_doc_id"), "key")
-        shared = a.join(b, "key").select("left_doc_id", "right_doc_id").distinct()
-        lab = lab.join(shared, ["left_doc_id", "right_doc_id"], "left_semi")
+        keyed = toks.join(keys, "token").select(F.col("doc_id").alias("id"), "key")
+        shared, record = blocking.blocked_pairs(keyed)
+        # labels come in either order; the blocked pairs have left < right
+        lo = F.least("left_doc_id", "right_doc_id")
+        hi = F.greatest("left_doc_id", "right_doc_id")
+        lab = lab.join(
+            shared, (lo == F.col("left_id")) & (hi == F.col("right_id")), "left_semi"
+        )
     n_blocked = lab.count()
 
     ea = entities.select(F.col("doc_id").alias("left_doc_id"), F.col("entity").alias("ea"))
@@ -316,4 +322,5 @@ def pairwise_f1(
         "recall": rec,
         "f1": f1,
         "blocked_fraction": n_blocked / n_total if n_total else 1.0,
+        **record,
     }

@@ -50,6 +50,9 @@ def test_minhash_lsh_finds_planted_near_dup(spark):
     }
     assert (1, 2) in pairs
     assert all(3 not in p for p in pairs)
+    for num_hashes, bands in [(16, 5), (4, 8), (0, 4)]:
+        with pytest.raises(ValueError):
+            dedup.minhash_lsh_pairs(docs, num_hashes=num_hashes, bands=bands)
 
 
 def test_ngram_jaccard_exact_value(spark):
@@ -59,6 +62,8 @@ def test_ngram_jaccard_exact_value(spark):
     rows = dedup.ngram_jaccard_pairs(docs, threshold=0.1).collect()
     assert len(rows) == 1
     assert rows[0]["jaccard"] == pytest.approx(1 / 3)
+    with pytest.raises(ValueError):
+        dedup.ngram_jaccard_pairs(docs, threshold=0)
 
 
 def test_simhash_identical_and_near(spark):
@@ -69,6 +74,8 @@ def test_simhash_identical_and_near(spark):
     pairs = {(r["left_id"], r["right_id"]): r["hamming"]
              for r in dedup.simhash_near_pairs(docs, max_hamming=3).collect()}
     assert pairs[(1, 2)] == 0
+    with pytest.raises(ValueError):
+        dedup.simhash_near_pairs(docs, max_hamming=4)
 
 
 def test_embedding_lsh_recall_vs_bruteforce(spark):
@@ -89,6 +96,106 @@ def test_embedding_lsh_recall_vs_bruteforce(spark):
                   emb, dim=16, n_planes=6, threshold=0.99).collect()}
     assert approx <= exact  # verify step → perfect precision
     assert len(approx) >= 0.5 * len(exact)  # single-table LSH recall
+
+
+def _hot_docs(spark):
+    """30 docs: six copies of one text, four of another, 20 distinct
+    fillers — every key of a copy group is a hot key."""
+    import random
+
+    rng = random.Random(3)
+
+    def text():
+        return " ".join(f"w{rng.randrange(300)}" for _ in range(12))
+
+    texts = [text()] * 6 + [text()] * 4 + [text() for _ in range(20)]
+    return _docs(spark, list(enumerate(texts)))
+
+
+def _hot_vectors(spark):
+    """The vector twin of :func:`_hot_docs`: 6 + 4 identical vectors and
+    20 distinct ones."""
+    import random
+
+    rng = random.Random(5)
+
+    def vec():
+        return [rng.gauss(0, 1) for _ in range(16)]
+
+    vecs = [vec()] * 6 + [vec()] * 4 + [vec() for _ in range(20)]
+    return spark.createDataFrame(list(enumerate(vecs)), "vec_id bigint, embedding array<float>")
+
+
+def _hot_blocking_quality(spark, band):
+    from liblevenshtein_rust_spark.operators import blocking
+
+    docs = _hot_docs(spark)
+    keyed = docs.select("doc_id", F.explode(dedup.word_shingles(F.col("text"))).alias("key"))
+    truth = spark.createDataFrame([(0, 1), (6, 7), (10, 11)], "left_id bigint, right_id bigint")
+    return blocking.blocking_quality(docs, truth, keyed, band=band)
+
+
+HOT_FAMILIES = {
+    "minhash": lambda spark, band: dedup.minhash_lsh_pairs(_hot_docs(spark), band=band),
+    "simhash": lambda spark, band: dedup.simhash_near_pairs(_hot_docs(spark), band=band),
+    "ngram": lambda spark, band: dedup.ngram_jaccard_pairs(_hot_docs(spark), band=band),
+    "lsh_embedding": lambda spark, band: dedup.lsh_embedding_near_pairs(
+        _hot_vectors(spark), dim=16, n_planes=6, band=band
+    ),
+    "blocking_quality": _hot_blocking_quality,
+}
+
+
+@pytest.mark.parametrize("family", sorted(HOT_FAMILIES))
+def test_hot_buckets_lose_only_counted_pairs(spark, monkeypatch, family):
+    """Each dedup and evaluation self-join runs ``blocking.blocked_pairs``:
+    with ``HOT_KEY_PAIRS`` patched to 3 the copy groups' keys are salted
+    and the output equals the default run's; with ``EXTREME_KEY_PAIRS``
+    patched to 10 the six-copy keys are dropped, every missing pair shares
+    only dropped keys, and no more pairs go missing than were counted."""
+    from collections import Counter, defaultdict
+
+    from liblevenshtein_rust_spark.operators import blocking
+
+    seen = []
+    real = blocking.blocked_pairs
+
+    def spy(left, right=None):
+        seen.append(left)
+        return real(left, right)
+
+    monkeypatch.setattr(blocking, "blocked_pairs", spy)
+
+    def run(**constants):
+        for name, value in constants.items():
+            monkeypatch.setattr(blocking, name, value)
+        band: dict = {}
+        return set(map(tuple, HOT_FAMILIES[family](spark, band).collect())), band
+
+    want, band = run()
+    assert band == {"hot_keys_salted": 0, "extreme_keys_dropped": 0, "key_pairs_dropped": 0}
+    got, band = run(HOT_KEY_PAIRS=3)
+    assert got == want
+    assert band["hot_keys_salted"] > 0 and band["extreme_keys_dropped"] == 0
+
+    got, band = run(EXTREME_KEY_PAIRS=10)
+    keys = defaultdict(set)
+    for r in seen[-1].collect():
+        keys[r["id"]].add(r["key"])
+    n = Counter(k for ks in keys.values() for k in ks)
+    dropped = {k for k, c in n.items() if c * (c - 1) // 2 > 10}
+    lost = {
+        (a, b) for a in keys for b in keys if a < b and keys[a] & keys[b] and keys[a] & keys[b] <= dropped
+    }
+    assert band["extreme_keys_dropped"] == len(dropped) > 0
+    assert 0 < len(lost) <= band["key_pairs_dropped"]
+    if family == "blocking_quality":
+        (w,), (g,) = want, got
+        assert w[1] - g[1] == len(lost)  # n_candidates
+    else:
+        assert got <= want
+        missing = {r[:2] for r in want - got}
+        assert missing and missing <= lost
 
 
 # ---------------------------------------------------------------------------

@@ -63,6 +63,7 @@ def test_pairwise_f1(spark, docs, run):
     assert m["precision"] >= 0.99, m
     assert m["recall"] >= 0.99, m
     assert m["f1"] >= 0.99, m
+    assert {"hot_keys_salted", "extreme_keys_dropped", "key_pairs_dropped"} <= m.keys()
 
 
 def test_entities_cover_all_docs(docs, run):
