@@ -373,10 +373,10 @@ def blocking_quality(
       (n_docs, n_candidates, n_truth, n_truth_in_candidates,
        reduction_ratio, pairs_completeness).
 
-    Scale: the candidates are :func:`blocked_pairs` over ``keyed`` — the
-    skew policy candidate generation itself runs (so measuring costs what
-    running costs — no extra pass over the raw corpus); ``band`` receives
-    its band record.  The four metric aggregates are single-row and combine
+    Scale: the candidates come from :func:`blocked_pairs` over ``keyed``,
+    the skew-guarded join candidate generation itself runs (so measuring
+    costs what running costs — no extra pass over the raw corpus);
+    ``band`` receives its band record.  The four metric aggregates are single-row and combine
     via 1-row broadcast joins — nothing returns to the driver.
     """
     cand, record = blocked_pairs(keyed.select(F.col(id_col).alias("id"), "key"))

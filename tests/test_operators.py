@@ -99,8 +99,9 @@ def test_embedding_lsh_recall_vs_bruteforce(spark):
 
 
 def _hot_docs(spark):
-    """30 docs: six copies of one text, four of another, 20 distinct
-    fillers — every key of a copy group is a hot key."""
+    """30 docs: six copies of one text, four of another that ends in the
+    first one's opening words, 20 distinct fillers — every key of a copy
+    group is a hot key, and the four copies share one key with the six."""
     import random
 
     rng = random.Random(3)
@@ -108,7 +109,9 @@ def _hot_docs(spark):
     def text():
         return " ".join(f"w{rng.randrange(300)}" for _ in range(12))
 
-    texts = [text()] * 6 + [text()] * 4 + [text() for _ in range(20)]
+    a = text()
+    b = text() + " " + " ".join(a.split()[:3])
+    texts = [a] * 6 + [b] * 4 + [text() for _ in range(20)]
     return _docs(spark, list(enumerate(texts)))
 
 
@@ -120,7 +123,7 @@ def _hot_vectors(spark):
     rng = random.Random(5)
 
     def vec():
-        return [rng.gauss(0, 1) for _ in range(16)]
+        return [rng.gauss(0, 1) for _ in range(8)]
 
     vecs = [vec()] * 6 + [vec()] * 4 + [vec() for _ in range(20)]
     return spark.createDataFrame(list(enumerate(vecs)), "vec_id bigint, embedding array<float>")
@@ -140,7 +143,7 @@ HOT_FAMILIES = {
     "simhash": lambda spark, band: dedup.simhash_near_pairs(_hot_docs(spark), band=band),
     "ngram": lambda spark, band: dedup.ngram_jaccard_pairs(_hot_docs(spark), band=band),
     "lsh_embedding": lambda spark, band: dedup.lsh_embedding_near_pairs(
-        _hot_vectors(spark), dim=16, n_planes=6, band=band
+        _hot_vectors(spark), dim=8, n_planes=4, band=band
     ),
     "blocking_quality": _hot_blocking_quality,
 }
@@ -185,7 +188,7 @@ def test_hot_buckets_lose_only_counted_pairs(spark, monkeypatch, family):
     n = Counter(k for ks in keys.values() for k in ks)
     dropped = {k for k, c in n.items() if c * (c - 1) // 2 > 10}
     lost = {
-        (a, b) for a in keys for b in keys if a < b and keys[a] & keys[b] and keys[a] & keys[b] <= dropped
+        (a, b) for a in keys for b in keys if a < b and (shared := keys[a] & keys[b]) <= dropped and shared
     }
     assert band["extreme_keys_dropped"] == len(dropped) > 0
     assert 0 < len(lost) <= band["key_pairs_dropped"]
