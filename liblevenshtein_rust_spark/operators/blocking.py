@@ -26,19 +26,25 @@ vocabulary match — keys, :func:`blocked_pairs`, length prefilter, kernel —
 for ER's vocabulary self-join (``pipeline/er.vocab_token_matches``) and
 linkage's A × B cross join.
 
-Skew policy — its one statement; :func:`blocked_pairs` implements it for
-ER's self-join, linkage's edit and phonetic cross joins, the dedup
-self-joins (``dedup.minhash_lsh_pairs``, ``simhash_near_pairs``,
-``ngram_jaccard_pairs``, ``lsh_embedding_near_pairs``) and the evaluation
-self-joins (:func:`blocking_quality`, ``er.pairwise_f1``).  A key's join
-cost is its pair count, n(n−1)/2 in a self-join and n_a·n_b in a cross
-join (the multiplicity estimate of the ICDE 2021 join-size paper,
-PAPERS.md).  Keys above ``HOT_KEY_PAIRS`` are salted into ``N_SALT``
-groups and kept (``plans.rewrites``); keys above ``EXTREME_KEY_PAIRS``
-are dropped and counted, ``key_pairs_dropped`` bounding the true pairs
-lost.  In a self-join the bands are n > 1,000 and n > 100,000.  With no
-hot or extreme key the join is the band-free plan (no anti-join).  It
-persists its own inputs; the caller releases them (``release_pooled``).
+Skew policy — its one statement and, in :func:`blocked_pairs`, its one
+implementation, for ER's self-join, linkage's edit and phonetic cross
+joins, the dedup self-joins (``dedup.minhash_lsh_pairs``,
+``simhash_near_pairs``, ``ngram_jaccard_pairs``,
+``lsh_embedding_near_pairs``) and the evaluation self-joins
+(:func:`blocking_quality`, ``er.pairwise_f1``).  A key's join cost is its
+pair count, n(n−1)/2 in a self-join and n_a·n_b in a cross join (the
+multiplicity estimate of the ICDE 2021 join-size paper, PAPERS.md).  Keys
+above ``HOT_KEY_PAIRS`` are salted into ``N_SALT`` groups and kept; keys
+above ``EXTREME_KEY_PAIRS`` are dropped and counted, ``key_pairs_dropped``
+bounding the true pairs lost.  In a self-join the bands are n > 1,000 and
+n > 100,000.  With no hot or extreme key the join is the band-free plan
+(no anti-join).  Otherwise a broadcast anti-join against the small set of
+banded keys leaves the cold rows to the same plain join, and the hot rows
+alone take a salted shape that still yields all their pairs, split before
+the shuffle (AQE's skew splitting acts only after it): the self-join is a
+triangle over salt groups, one task per unordered group pair i <= j, and
+the cross join splits the left side and replicates the right.  It persists
+its own inputs; the caller releases them (``release_pooled``).
 Outside this policy: ``fuzzy_query``'s broadcast join,
 :func:`pair_block_weights`' ``hot_threshold`` (meta-blocking's block
 purging) and the ``max_df`` shingle cut of ``dedup.contamination_overlap``
@@ -47,7 +53,7 @@ and ``bloom_contamination_overlap`` (documented semantics).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.blocking_keys import (
@@ -110,14 +116,17 @@ def reassemble_spans(docs: DataFrame) -> DataFrame:
     )
 
 
+def text_tokens(df: DataFrame, text: Column, min_len: int, *keys) -> DataFrame:
+    """Distinct ``(*keys, token)`` rows: ``text`` normalized, split on
+    spaces, tokens shorter than ``min_len`` dropped — the one tokenizer of
+    ER and linkage."""
+    toks = df.select(*keys, F.explode(F.split(normalize_term(text), " ")).alias("token"))
+    return toks.where(F.length("token") >= min_len).distinct()
+
+
 def doc_tokens(docs: DataFrame, min_len: int = 3) -> DataFrame:
     """(doc_id, token) distinct, normalized."""
-    txt = extract_span_text(docs)
-    toks = txt.select(
-        "doc_id",
-        F.explode(F.split(normalize_term(F.col("text")), " ")).alias("token"),
-    )
-    return toks.where(F.length("token") >= min_len).distinct()
+    return text_tokens(extract_span_text(docs), F.col("text"), min_len, "doc_id")
 
 
 def rare_tokens(
@@ -157,13 +166,63 @@ def rare_tokens(
     return counted.where(F.col("_df") <= max_df).select(*tok.columns)
 
 
+def _salt_group(id_col: str, n_salt: int) -> Column:
+    """The salt group of a row: ``pmod(xxhash64(id), n_salt)``."""
+    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salt))
+
+
+def _hot_self_pairs(hot: DataFrame, n_salt: int) -> DataFrame:
+    """All ``(left_id < right_id)`` pairs of the hot ``(key, id)`` rows,
+    one task per unordered salt-group pair (i <= j): the triangle
+    decomposition of one n(n−1)/2 bucket into s(s+1)/2 tasks."""
+    hot = hot.select("key", "id", _salt_group("id", n_salt).alias("_g"))
+    # the left side replicates each row to every (g, j >= g) task, the right
+    # side to every (i <= g, g) task: each group pair meets once on (key, i, j)
+    tasks_l = hot.select(
+        "key",
+        F.col("id").alias("left_id"),
+        F.col("_g").alias("_i"),
+        F.explode(F.sequence(F.col("_g"), F.lit(n_salt - 1))).alias("_j"),
+    )
+    tasks_r = hot.select(
+        "key",
+        F.col("id").alias("right_id"),
+        F.explode(F.sequence(F.lit(0), F.col("_g"))).alias("_i"),
+        F.col("_g").alias("_j"),
+    )
+    # the salt group, not the id, decides a row's side: canonicalize with
+    # least/greatest instead of filtering on order
+    joined = tasks_l.join(tasks_r, ["key", "_i", "_j"]).where(
+        F.col("left_id") != F.col("right_id")
+    )
+    return joined.select(
+        F.least("left_id", "right_id").alias("left_id"),
+        F.greatest("left_id", "right_id").alias("right_id"),
+    )
+
+
+def _hot_cross_pairs(left: DataFrame, right: DataFrame, n_salt: int) -> DataFrame:
+    """All ``(left_id, right_id)`` pairs of the hot ``(key, id)`` rows of
+    both sides: the left side split into salt groups, the right side
+    replicated to every group — s tasks per hot key."""
+    lk = left.select(
+        "key", F.col("id").alias("left_id"), _salt_group("id", n_salt).alias("_g")
+    )
+    rk = right.select(
+        "key",
+        F.col("id").alias("right_id"),
+        F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))).alias("_g"),
+    )
+    return lk.join(rk, ["key", "_g"]).select("left_id", "right_id")
+
+
 def blocked_pairs(
-    left: DataFrame, right: DataFrame | None = None
-) -> tuple[DataFrame, dict]:
+    left: DataFrame, right: DataFrame | None = None, *, band: dict | None = None
+) -> DataFrame:
     """Skew-guarded distinct ``(left_id, right_id)`` pairs of a blocked
-    join on ``key``, and the band record ``{hot_keys_salted,
-    extreme_keys_dropped, key_pairs_dropped}`` (policy in the module
-    docstring).
+    join on ``key`` (policy in the module docstring); ``band``, when given,
+    receives the band record ``{hot_keys_salted, extreme_keys_dropped,
+    key_pairs_dropped}``.
 
     ``left`` / ``right``: ``(id, key)`` rows; ``right=None`` is the
     self-join of ``left``, with ``left_id < right_id``.  The band count is
@@ -177,55 +236,61 @@ def blocked_pairs(
     # are alias-projections of one table, distinct plans to ReuseExchange,
     # so each paid its own full exchange (measured at 1.2M docs: 2 x 2.2 GB
     # shuffle writes + a 4.4 GB read, ER's largest cost center).  From a
-    # HashPartitioning(key) cache the band count, the extreme anti-join and
-    # both join sides read without another exchange.  The distinct (no
+    # HashPartitioning(key) cache the band count, the banded-key anti-join
+    # and both join sides read without another exchange.  The distinct (no
     # exchange of its own here) makes per-key counts count ids, not the
     # deletion positions that reach one key.
-    left = pooled_persist(left.repartition("key").distinct())
+    sides = [
+        pooled_persist(s.repartition("key").distinct())
+        for s in (left, right)
+        if s is not None
+    ]
     if right is None:
         n = F.count("*")
-        per_key = left.groupBy("key").agg(F.shiftright(n * (n - 1), 1).alias("pairs"))
+        per_key = sides[0].groupBy("key").agg(F.shiftright(n * (n - 1), 1).alias("pairs"))
     else:
-        right = pooled_persist(right.repartition("key").distinct())
-        sides = left.select("key", F.lit(True).alias("_l")).unionByName(
-            right.select("key", F.lit(False).alias("_l"))
+        keys = sides[0].select("key", F.lit(True).alias("_l")).unionByName(
+            sides[1].select("key", F.lit(False).alias("_l"))
         )
-        per_key = sides.groupBy("key").agg(
+        per_key = keys.groupBy("key").agg(
             (F.count_if("_l") * F.count_if(~F.col("_l"))).alias("pairs")
         )
     p = F.col("pairs")
     is_hot = (p > HOT_KEY_PAIRS) & (p <= EXTREME_KEY_PAIRS)
     is_extreme = p > EXTREME_KEY_PAIRS
-    band = per_key.agg(
+    counts = per_key.agg(
         F.count_if(is_hot).alias("hot_keys_salted"),
         F.count_if(is_extreme).alias("extreme_keys_dropped"),
         F.coalesce(F.sum(F.when(is_extreme, p)), F.lit(0)).alias("key_pairs_dropped"),
     ).first()
-    record = {k: int(v) for k, v in band.asDict().items()}
+    if band is not None:
+        band.update({k: int(v) for k, v in counts.asDict().items()})
 
-    if record["hot_keys_salted"] == record["extreme_keys_dropped"] == 0:
-        lk = left.select("key", F.col("id").alias("left_id"))
-        if right is None:
-            # shuffle_hash: the key-partitioned cache feeds both sides, so
-            # the hint only swaps the per-partition algorithm — a
-            # build-side hash map instead of sorting both sides
-            rk = left.select("key", F.col("id").alias("right_id")).hint("shuffle_hash")
-            pairs = lk.join(rk, "key").where(F.col("left_id") < F.col("right_id"))
-        else:
-            pairs = lk.join(right.select("key", F.col("id").alias("right_id")), "key")
+    banded = counts["hot_keys_salted"] or counts["extreme_keys_dropped"]
+    if banded:
+        # the banded key sets are small: broadcast them; the cold side is
+        # nearly the whole key table and must never be a broadcast build
+        hot_keys = F.broadcast(per_key.where(is_hot).select("key"))
+        hot = [s.join(hot_keys, "key", "left_semi") for s in sides]
+        skewed = F.broadcast(per_key.where(p > HOT_KEY_PAIRS).select("key"))
+        sides = [s.join(skewed, "key", "left_anti") for s in sides]
+
+    lk = sides[0].select("key", F.col("id").alias("left_id"))
+    if right is None:
+        # shuffle_hash: the key-partitioned cache feeds both sides, so the
+        # hint only swaps the per-partition algorithm — a build-side hash
+        # map instead of sorting both sides
+        rk = sides[0].select("key", F.col("id").alias("right_id")).hint("shuffle_hash")
+        pairs = lk.join(rk, "key").where(F.col("left_id") < F.col("right_id"))
     else:
-        from ..plans import rewrites
-
-        # hot and extreme key sets are small: broadcast them; the cold side
-        # is nearly the whole key table and must never be a broadcast build
-        hot = per_key.where(is_hot).select("key")
-        extreme = per_key.where(is_extreme).select("key")
-        kept = left.join(F.broadcast(extreme), "key", "left_anti")
+        pairs = lk.join(sides[1].select("key", F.col("id").alias("right_id")), "key")
+    pairs = pairs.select("left_id", "right_id")
+    if banded:
         if right is None:
-            pairs = rewrites.salted_self_join_pairs(kept, hot, N_SALT)
+            pairs = pairs.unionByName(_hot_self_pairs(hot[0], N_SALT))
         else:
-            pairs = rewrites.salted_cross_join_pairs(kept, right, hot, N_SALT)
-    return pairs.select("left_id", "right_id").distinct(), record
+            pairs = pairs.unionByName(_hot_cross_pairs(hot[0], hot[1], N_SALT))
+    return pairs.distinct()
 
 
 def vocab_matches(
@@ -249,9 +314,7 @@ def vocab_matches(
         rows = vocab.select(F.col("token").alias("id"))
         return blocking_key_rows(rows, "id", budget, variant)
 
-    raw, record = blocked_pairs(keyed(left), None if right is None else keyed(right))
-    if band is not None:
-        band.update(record)
+    raw = blocked_pairs(keyed(left), None if right is None else keyed(right), band=band)
     pairs = raw.select(
         F.col("left_id").alias("tok_a"), F.col("right_id").alias("tok_b")
     ).where(length_prefilter(F.col("tok_a"), F.col("tok_b"), max_distance))
@@ -379,9 +442,7 @@ def blocking_quality(
     ``band`` receives its band record.  The four metric aggregates are single-row and combine
     via 1-row broadcast joins — nothing returns to the driver.
     """
-    cand, record = blocked_pairs(keyed.select(F.col(id_col).alias("id"), "key"))
-    if band is not None:
-        band.update(record)
+    cand = blocked_pairs(keyed.select(F.col(id_col).alias("id"), "key"), band=band)
     truth = truth_pairs.select("left_id", "right_id").distinct()
     # ONE pass over the candidate set: flag each candidate as truth/not via
     # a left join, then count + sum in a single aggregate — a separate

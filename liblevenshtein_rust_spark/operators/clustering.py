@@ -115,35 +115,24 @@ def connected_components(
     dst: str = "dst",
     max_iterations: int = 20,
     num_partitions: int | None = None,
-    edge_count_hint: int | None = None,
 ) -> DataFrame:
     """(node, component) for every node appearing in `edges`.
 
     Isolated nodes don't appear (callers union them back with
     component = own id — see :func:`attach_singletons`).
-
-    ``edge_count_hint``: approximate |edges|, used only to size the
-    fixpoint's partitioning — callers that already know the row count (the
-    ER pipeline reads it from the upstream stage manifest) pass it to skip
-    the pre-loop sizing count job.
     """
     spark = edges.sparkSession
     e = _canonical_edges(edges, src, dst)
     sizing_cache = None
     if num_partitions is None:
-        if edge_count_hint is not None:
-            n_edges = edge_count_hint
-        else:
-            # The sizing count would otherwise evaluate the FULL upstream
-            # edge lineage (often an expensive candidate-pair join), and the
-            # first checkpoint materialization below would evaluate it a
-            # SECOND time.  Cache across the two so the join runs once —
-            # at 100 TB the extra pass over the pair join is the single
-            # biggest avoidable cost of an unhinted CC call.
-            sizing_cache = e.persist()
-            n_edges = sizing_cache.count()
-            e = sizing_cache
-        num_partitions = fixpoint_partitions(spark, n_edges)
+        # The sizing count would otherwise evaluate the FULL upstream edge
+        # lineage (often an expensive candidate-pair join), and the first
+        # checkpoint materialization below would evaluate it a SECOND time.
+        # Cache across the two so the join runs once — at 100 TB the extra
+        # pass over the pair join is the single biggest avoidable cost of a
+        # CC call without ``num_partitions``.
+        sizing_cache = e = e.persist()
+        num_partitions = fixpoint_partitions(spark, e.count())
     n_part = num_partitions
     # Size EVERY shuffle inside the fixpoint to the data: each iteration is
     # ~5 shuffles (groupBy/join ×2 + dedupe), and at the session default

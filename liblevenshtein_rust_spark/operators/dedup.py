@@ -148,15 +148,6 @@ def minhash_bands(sig_col, bands: int = 4, rows: int = 4):
     )
 
 
-def _blocked_pairs(rows: DataFrame, band: dict | None) -> DataFrame:
-    """``blocking.blocked_pairs`` self-join of ``(id, key)`` rows;
-    ``band`` receives its band record."""
-    pairs, record = blocking.blocked_pairs(rows)
-    if band is not None:
-        band.update(record)
-    return pairs
-
-
 def _jaccard_pairs(
     rows: DataFrame, base: DataFrame, threshold: float, band: dict | None
 ) -> DataFrame:
@@ -173,7 +164,7 @@ def _jaccard_pairs(
     ex = base.select("id", F.explode("sh").alias("g"))
     sizes = base.select("id", F.size("sh").alias("sz"))
     inter = (
-        _blocked_pairs(rows, band)
+        blocking.blocked_pairs(rows, band=band)
         .join(ex.toDF("left_id", "g"), "left_id")
         .join(ex.toDF("right_id", "g"), ["right_id", "g"])
         .groupBy("left_id", "right_id")
@@ -344,8 +335,8 @@ def simhash_near_pairs(
         F.lit(q << 16).bitwiseOR(F.shiftright("simhash", 16 * q).bitwiseAND(F.lit(0xFFFF)))
         for q in range(4)
     ]
-    pairs = _blocked_pairs(
-        fp.select("id", F.explode(F.array(*quarters)).alias("key")), band
+    pairs = blocking.blocked_pairs(
+        fp.select("id", F.explode(F.array(*quarters)).alias("key")), band=band
     )
     out = (
         pairs.join(fp.toDF("left_id", "lh"), "left_id")
@@ -535,7 +526,7 @@ def lsh_embedding_near_pairs(
     )
     vecs = emb.select(id_col, vec_col)
     out = (
-        _blocked_pairs(keyed, band)
+        blocking.blocked_pairs(keyed, band=band)
         .join(vecs.toDF("left_id", "va"), "left_id")
         .join(vecs.toDF("right_id", "vb"), "right_id")
         .select(
@@ -662,6 +653,37 @@ def golden_records(
 # ---------------------------------------------------------------------------
 
 
+def _shingle_rows(
+    docs: DataFrame, text_col: str, id_col: str, k: int, id_as: str
+) -> DataFrame:
+    """``(<id_as>, g)``: one row per distinct word ``k``-shingle of a doc."""
+    return _shingle_base(docs, text_col, id_col, k).select(
+        F.col("id").alias(id_as), F.explode("sh").alias("g")
+    )
+
+
+def _shared_shingles(
+    e: DataFrame, t: DataFrame, min_shared: int, max_df: int | None
+) -> DataFrame:
+    """The contamination tail: drop train shingles ``g`` in more than
+    ``max_df`` rows of ``t``, join ``e`` to ``t`` on ``g`` and keep the
+    ``(eval_id, train_id)`` pairs sharing >= ``min_shared`` shingles."""
+    if max_df is not None:
+        hot = (
+            t.groupBy("g")
+            .agg(F.count("*").alias("_df"))
+            .where(F.col("_df") > max_df)
+            .select("g")
+        )
+        t = t.join(F.broadcast(hot), "g", "left_anti")
+    return (
+        e.join(t, "g")
+        .groupBy("eval_id", "train_id")
+        .agg(F.count("*").alias("n_shared"))
+        .where(F.col("n_shared") >= min_shared)
+    )
+
+
 def contamination_overlap(
     train: DataFrame,
     eval_docs: DataFrame,
@@ -686,26 +708,9 @@ def contamination_overlap(
     reduce ``n_shared`` for boilerplate only; the count is exact over the
     kept shingle set (documented semantics, replayed by the oracle).
     """
-    t = _shingle_base(train, text_col, id_col, k).select(
-        F.col("id").alias("train_id"), F.explode("sh").alias("g")
-    )
-    e = _shingle_base(eval_docs, text_col, id_col, k).select(
-        F.col("id").alias("eval_id"), F.explode("sh").alias("g")
-    )
-    if max_df is not None:
-        hot = (
-            t.groupBy("g")
-            .agg(F.count("*").alias("_df"))
-            .where(F.col("_df") > max_df)
-            .select("g")
-        )
-        t = t.join(F.broadcast(hot), "g", "left_anti")
-    return (
-        e.join(t, "g")
-        .groupBy("eval_id", "train_id")
-        .agg(F.count("*").alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
-    )
+    t = _shingle_rows(train, text_col, id_col, k, "train_id")
+    e = _shingle_rows(eval_docs, text_col, id_col, k, "eval_id")
+    return _shared_shingles(e, t, min_shared, max_df)
 
 
 def bloom_contamination_overlap(
@@ -740,29 +745,12 @@ def bloom_contamination_overlap(
     """
     from ..functions.bloom import BroadcastBloom
 
-    e = _shingle_base(eval_docs, text_col, id_col, k).select(
-        F.col("id").alias("eval_id"), F.explode("sh").alias("g")
-    )
+    e = _shingle_rows(eval_docs, text_col, id_col, k, "eval_id")
     bloom = BroadcastBloom.from_column(e, "g", fpp=fpp)
-    t = (
-        _shingle_base(train, text_col, id_col, k)
-        .select(F.col("id").alias("train_id"), F.explode("sh").alias("g"))
-        .where(bloom.might_contain(F.col("g")))
+    t = _shingle_rows(train, text_col, id_col, k, "train_id").where(
+        bloom.might_contain(F.col("g"))
     )
-    if max_df is not None:
-        hot = (
-            t.groupBy("g")
-            .agg(F.count("*").alias("_df"))
-            .where(F.col("_df") > max_df)
-            .select("g")
-        )
-        t = t.join(F.broadcast(hot), "g", "left_anti")
-    return (
-        e.join(t, "g")
-        .groupBy("eval_id", "train_id")
-        .agg(F.count("*").alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
-    )
+    return _shared_shingles(e, t, min_shared, max_df)
 
 
 # ---------------------------------------------------------------------------

@@ -249,7 +249,6 @@ def _run_stages(
             left_col="left_id",
             right_col="right_id",
             num_partitions=ent_partitions,
-            edge_count_hint=edges_manifest.get("rows"),
         ),
         inputs=("match_edges", "docs"),
         # the whole stage (fixpoint + singleton attach + write) runs at the
@@ -283,13 +282,13 @@ def pairwise_f1(
     """
     lab = labels
     n_total = lab.count()
-    record: dict = {}
+    band: dict = {}
     if toks is not None:
         from ..functions.blocking_keys import deletion_key_rows
 
         keys = deletion_key_rows(toks.select("token").distinct(), "token", 2)
         keyed = toks.join(keys, "token").select(F.col("doc_id").alias("id"), "key")
-        shared, record = blocking.blocked_pairs(keyed)
+        shared = blocking.blocked_pairs(keyed, band=band)
         # labels come in either order; the blocked pairs have left < right
         lo = F.least("left_doc_id", "right_doc_id")
         hi = F.greatest("left_doc_id", "right_doc_id")
@@ -322,5 +321,5 @@ def pairwise_f1(
         "recall": rec,
         "f1": f1,
         "blocked_fraction": n_blocked / n_total if n_total else 1.0,
-        **record,
+        **band,
     }

@@ -34,7 +34,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.blocking_keys import normalize_term
 from ..kernel.distances import TRANSPOSITION
 from ..operators import blocking
 
@@ -67,16 +66,7 @@ def _tokens(docs: DataFrame, cfg: LinkConfig) -> DataFrame:
     if "spans" in docs.columns:
         toks = blocking.doc_tokens(docs, min_len=cfg.min_token_len)
     else:
-        toks = (
-            docs.select(
-                "doc_id",
-                F.explode(
-                    F.split(normalize_term(F.col("text")), " ")
-                ).alias("token"),
-            )
-            .where(F.length("token") >= cfg.min_token_len)
-            .distinct()
-        )
+        toks = blocking.text_tokens(docs, F.col("text"), cfg.min_token_len, "doc_id")
     return blocking.rare_tokens(toks, max_df=cfg.max_df)
 
 
@@ -94,9 +84,7 @@ def phonetic_vocab_matches(
             phonetic_normalize(F.col("token"), cfg.phonetic_ruleset).alias("key"),
         )
 
-    raw, record = blocking.blocked_pairs(coded(vocab_a), coded(vocab_b))
-    if band is not None:
-        band.update(record)
+    raw = blocking.blocked_pairs(coded(vocab_a), coded(vocab_b), band=band)
     return raw.select(F.col("left_id").alias("tok_a"), F.col("right_id").alias("tok_b"))
 
 
@@ -577,17 +565,12 @@ def _field_tokens(recs: DataFrame, fields, cfg: LinkConfig) -> DataFrame:
             for name in fields
         ])
     ).alias("fv")
-    toks = (
-        recs.select("doc_id", stack)
-        .select(
-            "doc_id",
-            F.col("fv.field").alias("field"),
-            F.explode(
-                F.split(normalize_term(F.col("fv.raw")), " ")
-            ).alias("token"),
-        )
-        .where(F.length("token") >= cfg.min_token_len)
-        .distinct()
+    toks = blocking.text_tokens(
+        recs.select("doc_id", stack),
+        F.col("fv.raw"),
+        cfg.min_token_len,
+        "doc_id",
+        F.col("fv.field").alias("field"),
     )
     return blocking.rare_tokens(toks, max_df=cfg.max_df)
 

@@ -272,3 +272,16 @@ def test_skew_bands_lose_only_counted_pairs(spark, monkeypatch, extreme):
     assert band["hot_keys_salted"] > 0
     missing = _check_loss(got, want, ca, cb, _dropped(ca, cb, extreme), band)
     assert bool(missing) == (extreme == 50)
+
+
+@pytest.mark.parametrize("cross", [False, True])
+def test_zero_key_rows_give_no_pairs(spark, tmp_path, cross):
+    """Self and cross joins over zero key rows read from an empty parquet
+    file: no pairs, and the band record counts nothing."""
+    path = str(tmp_path / "keys")
+    spark.createDataFrame([], "id string, key long").write.parquet(path)
+    rows = spark.read.parquet(path)
+    band: dict = {}
+    pairs = blocking.blocked_pairs(rows, rows if cross else None, band=band)
+    assert pairs.collect() == []
+    assert band == {"hot_keys_salted": 0, "extreme_keys_dropped": 0, "key_pairs_dropped": 0}

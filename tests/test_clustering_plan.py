@@ -92,16 +92,3 @@ def test_cc_star_graph_converges_in_one_round(spark):
         for r in connected_components(e, src="u", dst="v").collect()
     }
     assert got == {(i, 0) for i in range(8)}
-
-
-def test_edge_count_hint_skips_nothing_semantically(spark):
-    e = _edges(spark, [(5, 6), (6, 7), (1, 2)])
-    with_hint = {
-        (r["node"], r["component"])
-        for r in connected_components(e, "u", "v", edge_count_hint=3).collect()
-    }
-    without = {
-        (r["node"], r["component"])
-        for r in connected_components(e, "u", "v").collect()
-    }
-    assert with_hint == without == {(5, 5), (6, 5), (7, 5), (1, 1), (2, 1)}

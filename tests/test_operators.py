@@ -163,9 +163,9 @@ def test_hot_buckets_lose_only_counted_pairs(spark, monkeypatch, family):
     seen = []
     real = blocking.blocked_pairs
 
-    def spy(left, right=None):
+    def spy(left, right=None, *, band=None):
         seen.append(left)
-        return real(left, right)
+        return real(left, right, band=band)
 
     monkeypatch.setattr(blocking, "blocked_pairs", spy)
 
