@@ -3525,12 +3525,27 @@ _QUALITY_STOPWORDS_SQL = (
 )
 
 
-def _pii_redaction_sql() -> str:
-    """DuckDB twin of q_pii_redaction, generated from the operator's own
-    PII_PATTERNS so the regexes and ordering can never drift."""
+def _pii_chain_sql(t: str) -> tuple[list[tuple[str, str]], str]:
+    """DuckDB twin of text._pii_cols over the SQL expression ``t``,
+    generated from the operator's own PII_PATTERNS so the regexes and
+    ordering can never drift: the per-pattern count expressions in order,
+    each over the text after the earlier replacements, and the redacted
+    text expression."""
     from liblevenshtein_rust_spark.operators.text import PII_PATTERNS
 
-    sql = """
+    counts = []
+    for name, pat, tag in PII_PATTERNS:
+        lit = pat.replace("'", "''")
+        counts.append((name, f"len(regexp_extract_all({t}, '{lit}'))"))
+        t = f"regexp_replace({t}, '{lit}', '{tag}', 'g')"
+    return counts, t
+
+
+def _pii_redaction_sql() -> str:
+    """DuckDB twin of q_pii_redaction (the PII chain is `_pii_chain_sql`)."""
+    counts, clean = _pii_chain_sql("t")
+    cols = ",\n               ".join(f"{c}::INT AS n_{name}" for name, c in counts)
+    return f"""
         WITH s0 AS (
             SELECT doc_id,
                    text || ' contact u' || CAST(doc_id AS VARCHAR)
@@ -3539,26 +3554,12 @@ def _pii_redaction_sql() -> str:
                         || ' host 10.0.0.' || CAST(doc_id % 256 AS VARCHAR)
                         AS t
             FROM documents
-        )"""
-    prev = "s0"
-    carried: list[str] = []
-    for i, (name, pat, tag) in enumerate(PII_PATTERNS, start=1):
-        lit = pat.replace("'", "''")
-        keep = ", ".join(carried) + ", " if carried else ""
-        sql += f""",
-        s{i} AS (
-            SELECT doc_id, {keep}
-                   len(regexp_extract_all(t, '{lit}'))::INT AS n_{name},
-                   regexp_replace(t, '{lit}', '{tag}', 'g') AS t
-            FROM {prev}
-        )"""
-        prev = f"s{i}"
-        carried.append(f"n_{name}")
-    cols = ", ".join(carried)
-    sql += f"""
-        SELECT doc_id::BIGINT AS doc_id, {cols}, t AS clean_text FROM {prev}
+        )
+        SELECT doc_id::BIGINT AS doc_id,
+               {cols},
+               {clean} AS clean_text
+        FROM s0
     """
-    return sql
 
 
 def _curate_documents_sql(
@@ -3567,18 +3568,17 @@ def _curate_documents_sql(
     max_pii: int = 2,
 ) -> str:
     """DuckDB twin of q_curate_documents, generated from the operator's own
-    PII_PATTERNS / LANG_MARKERS / stopword list so no rule can drift.
+    PII_PATTERNS / LANG_MARKERS / stopword list so no rule can drift;
+    pii_hits sums the ordered count-then-replace chain of `_pii_chain_sql`,
+    the same counts q_pii_redaction replays.
 
     ``src_sql`` overrides the planted-text source CTE body — pass a
     ``SELECT doc_id, <expr> AS t FROM documents`` to replay the gate over
     different text (corpus_stats uses the raw column); default = the
     planted PII + repetition corpus of q_curate_documents."""
-    from liblevenshtein_rust_spark.operators.text import LANG_MARKERS, PII_PATTERNS
+    from liblevenshtein_rust_spark.operators.text import LANG_MARKERS
 
-    pii_terms = " + ".join(
-        "len(regexp_extract_all(t, '%s'))" % pat.replace("'", "''")
-        for _name, pat, _tag in PII_PATTERNS
-    )
+    pii_terms = " + ".join(c for _name, c in _pii_chain_sql("t")[0])
     langs = list(LANG_MARKERS)
     hit_cols = ",\n                   ".join(
         "len(list_filter(tl, x -> list_contains([%s], x))) AS %s_h"

@@ -60,13 +60,6 @@ def normalize_term(col: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
-def tokens(col: Column) -> Column:
-    """Split normalized text into alphanumeric tokens (array<string>)."""
-    return F.filter(
-        F.split(F.lower(col), r"[^a-z0-9]+"), lambda t: F.length(t) > 0
-    )
-
-
 # ---------------------------------------------------------------------------
 # column key generators
 # ---------------------------------------------------------------------------

@@ -10,6 +10,9 @@ parquet read with full column pruning.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import add
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -44,14 +47,13 @@ STOPWORDS = (
 ).split()
 
 
-def quality_features(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-doc quality features + a composite score in [0, 1].
-
-    Features follow the Gopher/C4-style filters: length band, mean word
-    length band, alpha ratio, stopword hit — each a cheap codegen
-    expression.
-    """
-    t = F.col(text_col)
+def _quality_cols(t, min_tokens: int = 5, max_tokens: int = 100_000):
+    """The one definition of the C4/Gopher quality features of text column
+    ``t``.  Returns ``(feats, bands)``: ``feats`` holds n_tokens,
+    alpha_ratio, mean_word_len, stop_hits and the composite score in
+    [0, 1]; ``bands`` holds the four pass conditions in the gate's rule
+    order (length, word_len, alpha, stopword), each worth 0.25 of the
+    score."""
     n_chars = F.length(t)
     toks = F.split(F.trim(t), r"\s+")
     n_tokens = whitespace_token_count(t)
@@ -62,20 +64,38 @@ def quality_features(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     )
     sw_arr = F.array(*[F.lit(w) for w in STOPWORDS])
     stop_hits = F.size(F.array_intersect(F.transform(toks, F.lower), sw_arr))
+    bands = {
+        "length": (n_tokens >= min_tokens) & (n_tokens <= max_tokens),
+        "word_len": (mean_word_len >= 2) & (mean_word_len <= 12),
+        "alpha": alpha_ratio >= 0.6,
+        "stopword": stop_hits >= 1,
+    }
+    score = reduce(add, [F.when(ok, 0.25).otherwise(0.0) for ok in bands.values()])
+    feats = {
+        "n_tokens": n_tokens,
+        "alpha_ratio": alpha_ratio,
+        "mean_word_len": mean_word_len,
+        "stop_hits": stop_hits,
+        "score": score,
+    }
+    return feats, bands
 
-    score = (
-        F.when((n_tokens >= 5) & (n_tokens <= 100000), 0.25).otherwise(0.0)
-        + F.when((mean_word_len >= 2) & (mean_word_len <= 12), 0.25).otherwise(0.0)
-        + F.when(alpha_ratio >= 0.6, 0.25).otherwise(0.0)
-        + F.when(stop_hits >= 1, 0.25).otherwise(0.0)
-    )
+
+def quality_features(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Per-doc quality features + a composite score in [0, 1].
+
+    Features follow the Gopher/C4-style filters: length band, mean word
+    length band, alpha ratio, stopword hit — each a cheap codegen
+    expression.
+    """
+    q, _ = _quality_cols(F.col(text_col))
     return docs.select(
         F.col(id_col),
-        n_tokens.cast("int").alias("n_tokens"),
-        F.round(alpha_ratio, 6).alias("alpha_ratio"),
-        F.round(mean_word_len, 6).alias("mean_word_len"),
-        stop_hits.cast("int").alias("stopword_hits"),
-        F.round(score, 2).alias("quality_score"),
+        q["n_tokens"].cast("int").alias("n_tokens"),
+        F.round(q["alpha_ratio"], 6).alias("alpha_ratio"),
+        F.round(q["mean_word_len"], 6).alias("mean_word_len"),
+        q["stop_hits"].cast("int").alias("stopword_hits"),
+        F.round(q["score"], 2).alias("quality_score"),
     )
 
 
@@ -91,14 +111,13 @@ LANG_MARKERS = {
 }
 
 
-def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Argmax of function-word hit counts; 'und' (undetermined) when no
-    marker hits.  A real system uses char-n-gram profiles; the operator
-    shape (per-row projection, broadcast-free) is identical.
-    """
+def _lang_pick(t):
+    """The one definition of the language pick of text column ``t``:
+    struct(pick, score) — the argmax of function-word hit counts, 'und'
+    when no marker hits."""
     from .dedup import let_bound
 
-    toks = F.transform(F.split(F.trim(F.col(text_col)), r"\s+"), F.lower)
+    toks = F.transform(F.split(F.trim(t), r"\s+"), F.lower)
 
     def build(tk):
         # tk is let-bound: the split/lower chain runs once per row, not once
@@ -106,7 +125,7 @@ def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         cols = []
         for lang, markers in LANG_MARKERS.items():
             arr = F.array(*[F.lit(m) for m in markers])
-            hits = F.size(F.filter(tk, lambda t: F.array_contains(arr, t)))
+            hits = F.size(F.filter(tk, lambda x: F.array_contains(arr, x)))
             cols.append((lang, hits))
         best_score = cols[0][1]
         for _, h in cols[1:]:
@@ -118,7 +137,15 @@ def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         pick = F.when(best_score == 0, F.lit("und")).otherwise(pick)
         return F.struct(pick.alias("pick"), best_score.cast("int").alias("score"))
 
-    out = let_bound(toks, build)
+    return let_bound(toks, build)
+
+
+def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Argmax of function-word hit counts; 'und' (undetermined) when no
+    marker hits.  A real system uses char-n-gram profiles; the operator
+    shape (per-row projection, broadcast-free) is identical.
+    """
+    out = _lang_pick(F.col(text_col))
     return docs.select(
         F.col(id_col),
         out["pick"].alias("lang_pred"),
@@ -172,6 +199,18 @@ PII_PATTERNS = (
 )
 
 
+def _pii_cols(t):
+    """The one definition of the PII pass over text column ``t``: returns
+    ``(counts, clean)`` — the per-pattern hit counts in PII_PATTERNS order,
+    keyed by name, each counted after the earlier replacements, and the
+    fully redacted text."""
+    counts = {}
+    for name, pat, tag in PII_PATTERNS:
+        counts[name] = F.regexp_count(t, F.lit(pat))
+        t = F.regexp_replace(t, pat, tag)
+    return counts, t
+
+
 def redact_pii(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Scrub PII spans from text before training — the privacy pass every
     production corpus pipeline runs (C4 and The Pile both ship redaction
@@ -182,17 +221,46 @@ def redact_pii(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     filters in the same pass.  Counts are emitted so downstream policy can
     drop PII-dense documents instead of just masking them.
     """
-    t = F.col(text_col)
-    counts = []
-    for name, pat, tag in PII_PATTERNS:
-        counts.append(F.regexp_count(t, F.lit(pat)).cast("int").alias(f"n_{name}"))
-        t = F.regexp_replace(t, pat, tag)
-    return docs.select(F.col(id_col), *counts, t.alias("clean_text"))
+    counts, clean = _pii_cols(F.col(text_col))
+    return docs.select(
+        F.col(id_col),
+        *[c.cast("int").alias(f"n_{name}") for name, c in counts.items()],
+        clean.alias("clean_text"),
+    )
 
 
 # ---------------------------------------------------------------------------
 # intra-document repetition (Gopher-style duplicate n-gram fraction)
 # ---------------------------------------------------------------------------
+
+
+def _dup_ngrams(t, n: int):
+    """The one definition of the duplicate word-``n``-gram fraction of text
+    column ``t``: struct(n_grams, n_distinct, dup_frac) over normalized
+    text, dup_frac = 1 - n_distinct/n_grams (0.0 with fewer than ``n``
+    tokens)."""
+    from .dedup import let_bound, normalize_text
+
+    toks = F.split(normalize_text(t), " ")
+
+    def build(tk):
+        cnt = F.size(tk)
+        idx = F.sequence(F.lit(1), F.greatest(cnt - (n - 1), F.lit(1)))
+        grams = F.when(cnt < n, F.array().cast("array<string>")).otherwise(
+            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tk, i, n)))
+        )
+        total = F.size(grams)
+        distinct = F.size(F.array_distinct(grams))
+        dup = F.when(total > 0, F.round(1.0 - distinct / total, 6)).otherwise(
+            F.lit(0.0)
+        )
+        return F.struct(
+            total.cast("int").alias("n_grams"),
+            distinct.cast("int").alias("n_distinct"),
+            dup.alias("dup_frac"),
+        )
+
+    return let_bound(toks, build)
 
 
 def repetition_stats(
@@ -214,29 +282,8 @@ def repetition_stats(
     array_distinct), whole-stage codegen, zero shuffle — composes with
     `quality_features` in the same scan pass.
     """
-    from .dedup import let_bound, normalize_text
-
-    toks = F.split(normalize_text(F.col(text_col)), " ")
-
-    def build(tk):
-        cnt = F.size(tk)
-        idx = F.sequence(F.lit(1), F.greatest(cnt - (n - 1), F.lit(1)))
-        grams = F.when(cnt < n, F.array().cast("array<string>")).otherwise(
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tk, i, n)))
-        )
-        total = F.size(grams)
-        distinct = F.size(F.array_distinct(grams))
-        dup = F.when(total > 0, F.round(1.0 - distinct / total, 6)).otherwise(
-            F.lit(0.0)
-        )
-        return F.struct(
-            total.cast("int").alias("n_grams"),
-            distinct.cast("int").alias("n_distinct"),
-            dup.alias("dup_frac"),
-        )
-
     return (
-        docs.select(F.col(id_col), let_bound(toks, build).alias("_s"))
+        docs.select(F.col(id_col), _dup_ngrams(F.col(text_col), n).alias("_s"))
         .select(
             id_col,
             F.col("_s.n_grams").alias("n_grams"),
@@ -502,76 +549,31 @@ def curate_documents(
     pipelines keep the reason ledger so filter changes can be diffed
     corpus-wide without re-reading text.
 
+    The gate composes the private column functions of its signal
+    operators, so each signal equals that operator's output on the same
+    text: quality_score is `quality_features`' (at the gate's token band),
+    lang_pred is `lang_id`'s, dup_frac is `repetition_stats(n=2)`'s and
+    pii_hits is the sum of `redact_pii`'s three ordered counts.  The gate
+    itself holds only the rule list, the reason ledger and the projection.
+
     Scale: this is the operator that touches ALL 100 TB, so its shape is
     the strictest in the repo — a single narrow projection fused into the
-    scan (zero shuffle, zero Python, zero joins; the individual signal
-    operators it composes are each themselves projection-only, so the
-    composite is too).  Filters that need corpus-level state (near-dup
-    clusters, contamination) run as separate blocked joins and AND their
-    verdicts downstream; this gate deliberately contains only the
-    row-local rules.
+    scan (zero shuffle, zero Python, zero joins; the signal columns are
+    each projection-only, so the composite is too).  Filters that need
+    corpus-level state (near-dup clusters, contamination) run as separate
+    blocked joins and AND their verdicts downstream; this gate
+    deliberately contains only the row-local rules.
     """
     t = F.col(text_col)
-    n_chars = F.length(t)
-    toks = F.split(F.trim(t), r"\s+")
-    n_tokens = whitespace_token_count(t)
-    alpha = F.length(F.regexp_replace(t, r"[^a-zA-Z]", ""))
-    alpha_ratio = F.when(n_chars > 0, alpha / n_chars).otherwise(F.lit(0.0))
-    mean_word_len = F.when(
-        n_tokens > 0, (n_chars - (n_tokens - 1)) / n_tokens
-    ).otherwise(F.lit(0.0))
-    sw_arr = F.array(*[F.lit(w) for w in STOPWORDS])
-    stop_hits = F.size(F.array_intersect(F.transform(toks, F.lower), sw_arr))
-    quality_score = (
-        F.when((n_tokens >= min_tokens) & (n_tokens <= max_tokens), 0.25).otherwise(0.0)
-        + F.when((mean_word_len >= 2) & (mean_word_len <= 12), 0.25).otherwise(0.0)
-        + F.when(alpha_ratio >= 0.6, 0.25).otherwise(0.0)
-        + F.when(stop_hits >= 1, 0.25).otherwise(0.0)
-    )
-
-    # language argmax (same markers/tie-break as lang_id)
-    tl = F.transform(toks, F.lower)
-
-    def _marker_hits(markers):
-        arr = F.array(*[F.lit(m) for m in markers])
-        return F.size(F.filter(tl, lambda x: F.array_contains(arr, x)))
-
-    hits = {lang: _marker_hits(m) for lang, m in LANG_MARKERS.items()}
-    best = None
-    for h in hits.values():
-        best = h if best is None else F.greatest(best, h)
-    lang_pred = F.lit("und")
-    for lang in reversed(list(hits)):
-        lang_pred = F.when(hits[lang] == best, F.lit(lang)).otherwise(lang_pred)
-    lang_pred = F.when(best == 0, F.lit("und")).otherwise(lang_pred)
-
-    # duplicate-bigram fraction (same construction as repetition_stats n=2)
-    from .dedup import normalize_text
-
-    ntk = F.split(normalize_text(t), " ")
-    cnt = F.size(ntk)
-    idx = F.sequence(F.lit(1), F.greatest(cnt - 1, F.lit(1)))
-    grams = F.when(cnt < 2, F.array().cast("array<string>")).otherwise(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(ntk, i, 2)))
-    )
-    dup_frac = F.when(
-        F.size(grams) > 0,
-        F.round(1.0 - F.size(F.array_distinct(grams)) / F.size(grams), 6),
-    ).otherwise(F.lit(0.0))
-
-    pii_hits = None
-    for _name, pat, _tag in PII_PATTERNS:
-        c = F.regexp_count(t, F.lit(pat))
-        pii_hits = c if pii_hits is None else pii_hits + c
+    q, bands = _quality_cols(t, min_tokens, max_tokens)
+    lang_pred = _lang_pick(t)["pick"]
+    dup_frac = _dup_ngrams(t, 2)["dup_frac"]
+    pii_hits = reduce(add, _pii_cols(t)[0].values())
 
     lang_arr = F.array(*[F.lit(x) for x in allowed_langs])
     # fixed rule order; concat_ws skips NULLs, so `reasons` is the ordered
     # comma-joined failure list and '' means every rule passed
-    rules = [
-        ("length", (n_tokens < min_tokens) | (n_tokens > max_tokens)),
-        ("word_len", (mean_word_len < 2) | (mean_word_len > 12)),
-        ("alpha", alpha_ratio < 0.6),
-        ("stopword", stop_hits < 1),
+    rules = [(name, ~ok) for name, ok in bands.items()] + [
         ("lang", ~F.array_contains(lang_arr, lang_pred)),
         ("repetition", dup_frac > max_dup_frac),
         ("pii", pii_hits > max_pii),
@@ -588,7 +590,7 @@ def curate_documents(
         *lead_cols,
         (reasons == "").alias("keep"),
         reasons.alias("reasons"),
-        F.round(quality_score, 2).alias("quality_score"),
+        F.round(q["score"], 2).alias("quality_score"),
         lang_pred.alias("lang_pred"),
         dup_frac.alias("dup_frac"),
         pii_hits.cast("int").alias("pii_hits"),
@@ -716,20 +718,7 @@ def url_domain(col):
     suffixes and conservative (over-groups) for ccSLDs like .co.uk.
     Inputs with no extractable host yield NULL.
     """
-    host = F.lower(
-        F.coalesce(
-            # absolute URL: authority between :// and the next delimiter
-            F.nullif(
-                F.regexp_extract(col, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#:]+)", 1),
-                F.lit(""),
-            ),
-            # bare host[/path] (no scheme) — must look like a dotted name
-            F.nullif(
-                F.regexp_extract(col, r"^([A-Za-z0-9-]+(?:\.[A-Za-z0-9-]+)+)", 1),
-                F.lit(""),
-            ),
-        )
-    )
+    host = _url_host(col)
     parts = F.split(host, r"\.")
     n = F.size(parts)
     return F.when(
@@ -788,10 +777,12 @@ def _url_host(col):
     """Lowercased host from an absolute URL or a bare dotted host."""
     return F.lower(
         F.coalesce(
+            # absolute URL: authority between :// and the next delimiter
             F.nullif(
                 F.regexp_extract(col, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#:]+)", 1),
                 F.lit(""),
             ),
+            # bare host[/path] (no scheme) — must look like a dotted name
             F.nullif(
                 F.regexp_extract(col, r"^([A-Za-z0-9-]+(?:\.[A-Za-z0-9-]+)+)", 1),
                 F.lit(""),

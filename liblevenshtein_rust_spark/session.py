@@ -128,11 +128,9 @@ def conf_scope(spark: SparkSession, overrides: dict):
 _POOLED: list = []
 
 
-def pooled_persist(df, eager: bool = False):
+def pooled_persist(df):
     """persist() + register for a later release_pooled()."""
     out = df.persist()
-    if eager:
-        out.count()
     _POOLED.append(out)
     return out
 

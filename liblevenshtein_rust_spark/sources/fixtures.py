@@ -94,25 +94,6 @@ def apply_typos(word: str, n_edits: int, rng: random.Random) -> str:
     return "".join(w)
 
 
-def all_distance_1(word: str) -> set[str]:
-    """Exhaustive distance-1 neighborhood (del/ins/sub/transpose) —
-    ``TypoGenerator::all_distance_1`` semantics."""
-    out: set[str] = set()
-    for i in range(len(word)):
-        out.add(word[:i] + word[i + 1 :])
-        for c in ALPHABET:
-            if c != word[i]:
-                out.add(word[:i] + c + word[i + 1 :])
-    for i in range(len(word) + 1):
-        for c in ALPHABET:
-            out.add(word[:i] + c + word[i:])
-    for i in range(len(word) - 1):
-        if word[i] != word[i + 1]:
-            out.add(word[: i] + word[i + 1] + word[i] + word[i + 2 :])
-    out.discard(word)
-    return out
-
-
 # ---------------------------------------------------------------------------
 # interleaved documents (T1)
 # ---------------------------------------------------------------------------

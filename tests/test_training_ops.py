@@ -533,6 +533,10 @@ def test_curate_documents_rules_fire(spark):
         (3, "le chat est dans la maison et il est pour une des"),  # fr -> lang
         (4, good + " " + ("repeat token " * 30).strip()),  # repetition
         (5, good + " a@b.com c@d.org e@f.net g@h.io i@j.co k@l.us"),  # pii > 5
+        # overlapping PII: a phone inside an email's local part, an IPv4
+        # inside an email's domain — one span each after the email is masked
+        (6, "mail 555-010-0001@example.com now"),
+        (7, "mail admin@10.0.0.1.example.com now"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
@@ -541,6 +545,21 @@ def test_curate_documents_rules_fire(spark):
             docs, allowed_langs=("en",), max_pii=5
         ).collect()
     }
+    # every gate signal equals its signal operator on the same text
+    def by_id(df):
+        return {r["doc_id"]: r for r in df.collect()}
+
+    quality = by_id(text.quality_features(docs))
+    lang = by_id(text.lang_id(docs))
+    rep = by_id(text.repetition_stats(docs, n=2))
+    pii = by_id(text.redact_pii(docs))
+    for i, r in out.items():
+        assert r["quality_score"] == quality[i]["quality_score"], i
+        assert r["lang_pred"] == lang[i]["lang_pred"], i
+        assert r["dup_frac"] == rep[i]["dup_frac"], i
+        p = pii[i]
+        assert r["pii_hits"] == p["n_email"] + p["n_phone"] + p["n_ipv4"], i
+    assert out[6]["pii_hits"] == 1 and out[7]["pii_hits"] == 1
     assert out[1]["keep"] and out[1]["reasons"] == ""
     assert not out[2]["keep"] and "length" in out[2]["reasons"].split(",")
     # the English-stopword band legitimately also misses on a French doc
